@@ -12,6 +12,12 @@ object Plans {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None
+    only.foreach { names =>
+      val known = SparkEntry.queries.keySet
+      val unknown = names.filterNot(known.contains).toSeq.sorted
+      require(unknown.isEmpty,
+        s"unknown query name(s): ${unknown.mkString(", ")} (not in SparkEntry.queries)")
+    }
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -95,8 +101,7 @@ object Plans {
     // an explicit name list dumps exactly those queries (they need not
     // be in the curated audit list); no list = the curated audit set
     val picked = only match {
-      case Some(names) => SparkEntry.queries.keys.filter(names.contains)
-        .toSeq.sorted
+      case Some(names) => names.toSeq.sorted
       case None => interesting
     }
     picked.foreach { name =>

@@ -14,8 +14,13 @@ import org.apache.spark.sql.SparkSession
   *   sbt "runMain graft.Probe q_name[,q_name2,...] [sfDir] [reps]"
   *
   * Reads SPARK_GRAFT_CPUS like the contract mains (default 32 here:
-  * probing is about the bench configuration). Never writes any
-  * committed artifact.
+  * probing is about the bench configuration).
+  *
+  * Optional machine-readable evidence: with SPARK_GRAFT_PROBE_OUT=<suffix>
+  * each query's reps are written as one JSON object to
+  * `<dir>/<query>_probe_<suffix>.json`, where `<dir>` is
+  * SPARK_GRAFT_PROBE_DIR (default `plans/probe`, relative to the
+  * working directory).
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -53,10 +58,8 @@ object Probe {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    // optional machine-readable evidence: SPARK_GRAFT_PROBE_OUT=<suffix>
-    // writes plans/r19/<query>_probe_<suffix>.json (one JSON object per
-    // query, all reps) so the round's claims are checkable offline.
     val probeOut = sys.env.get("SPARK_GRAFT_PROBE_OUT")
+    val probeDir = sys.env.getOrElse("SPARK_GRAFT_PROBE_DIR", "plans/probe")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       val repJson = new StringBuilder
@@ -79,7 +82,7 @@ object Probe {
           f""""shuffle_read_mb":${shufRead / 1e6}%.2f}""")
       }
       probeOut.foreach { suffix =>
-        val dir = java.nio.file.Paths.get("plans/r19")
+        val dir = java.nio.file.Paths.get(probeDir)
         java.nio.file.Files.createDirectories(dir)
         java.nio.file.Files.write(dir.resolve(s"${name}_probe_$suffix.json"),
           (s"""{"query":"$name","sf":"$sfDir","cpus":$cpus,""" +

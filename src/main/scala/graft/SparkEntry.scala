@@ -1052,7 +1052,7 @@ object SparkEntry {
 
     // weighted BINOMIAL at coefficient-killing lambda: the weighted
     // IRLS fixed point is the intercept-only weighted logistic MLE
-    // a0 = logit(sum(w y)/sum(w)) — exact oracle for fitWeightedGlm
+    // a0 = logit(sum(w y)/sum(w)) — exact oracle for SgdNet.fitWeighted
     "q_weighted_binom" ->
       """WITH s AS (SELECT sum(l_linenumber)::DOUBLE AS w,
         |  sum(l_linenumber *

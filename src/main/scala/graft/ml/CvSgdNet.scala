@@ -533,7 +533,7 @@ object CvSgdNet {
     *
     * The fused full model is numerically the same fixed point as
     * `SgdNet.fit` (identical per-row IRLS arithmetic — see
-    * `SgdNet.weightedGram`); its stats aggregate in per-fold-then-merge
+    * `SgdNet.DenseRows.gram` with the `SgdNet.Binomial` family); its stats aggregate in per-fold-then-merge
     * order, so last-ulp drift from a standalone fit is possible. Fold
     * scores match the unfused implementation within the convergence
     * tolerance: the gram-reuse free step below declares convergence
@@ -547,11 +547,7 @@ object CvSgdNet {
                                measure: String = "deviance"): CvPath = {
     SgdNet.requireNoZeroPf(params, "shared binomial CV")
     val p = featureCols.size
-    val classes = df.select(col(labelCol).cast("string")).distinct()
-      .limit(3).collect().map(_.getString(0)).sorted
-    require(classes.length == 2,
-      if (classes.length > 2) "more than two classes in response. Are you looking for family = 'multinomial'?"
-      else "only one class in response.")
+    val classes = SgdNet.binomialClasses(df, labelCol)
     val positive = classes(1)
 
     val hashCols = (featureCols :+ labelCol).map(col)
@@ -733,9 +729,10 @@ object CvSgdNet {
       val nullP = if (params.intercept) pBar else 0.5
       val nulldev = -2.0 * total.n *
         (SgdNet.safeXLog(pBar, nullP) + SgdNet.safeXLog(1 - pBar, 1 - nullP))
-      val devs = SgdNet.pathDeviance(
-        rows.map(t => (t._2, Array(t._3))), a0Full, betaFull)
-      val devRatio = devs.map(d => if (nulldev > 0) 1.0 - d / nulldev else 0.0)
+      val devs = SgdNet.DenseRows(
+          rows.map(t => SgdNet.GlmRow(t._2, t._3, 0.0, 1.0)), p)
+        .deviance(SgdNet.Binomial, a0Full, betaFull)
+      val devRatio = devs.map(d => SgdNetModel.devRatio(d, nulldev))
       val full = new SgdNetModel("binomial", featureCols.toArray,
         Array(labelCol), classes, lambdas, a0Full, betaFull, nulldev,
         devRatio, total.n, sharedPasses + 2, params)
@@ -847,7 +844,7 @@ object CvSgdNet {
     * unconverged fold's weighted Gram (a row contributes to all train
     * sets except its own fold), with the FULL-data model riding as
     * virtual fold k. Per-row IRLS arithmetic is identical to
-    * `SgdNet.fitPoisson`'s `poissonGram` (eta clamped to ±30,
+    * `SgdNet.DenseRows.gram` with `SgdNet.Poisson` (eta clamped to ±30,
     * mu = exp(eta), w = max(mu, 1e-5), z = eta + (y − mu)/w), so each
     * fold's path matches a standalone poisson fit on its train subset
     * within the convergence tolerance. Held-out deviance/mse/mae for
@@ -1012,11 +1009,13 @@ object CvSgdNet {
       val a0Full = Array.tabulate(L)(l => Array(a0Out(nfolds)(l)))
       val betaFull = Array.tabulate(L)(l => Array(betaOut(nfolds)(l).clone()))
       val muNull = if (params.intercept) trainStats(nfolds).yMean(0) else 1.0
-      val devs = SgdNet.poissonDeviance(
-        rows.map(t => (t._2, Array(t._3))), a0Full, betaFull, muNull)
+      val devs = SgdNet.DenseRows(
+          rows.map(t => SgdNet.GlmRow(t._2, t._3, 0.0, 1.0)), p)
+        .deviance(SgdNet.Poisson, a0Full :+ Array(math.log(muNull)),
+          betaFull :+ Array(new Array[Double](p)))
       val nulldev = devs.last
       val devRatio = Array.tabulate(L)(l =>
-        if (nulldev > 0) 1.0 - devs(l) / nulldev else 0.0)
+        SgdNetModel.devRatio(devs(l), nulldev))
       val full = new SgdNetModel("poisson", featureCols.toArray,
         Array(labelCol), Array.empty, lambdas, a0Full, betaFull, nulldev,
         devRatio, total.n, sharedPasses + 2, params)
@@ -1061,13 +1060,13 @@ object CvSgdNet {
   /** Shared-pass WEIGHTED binomial/poisson CV: the [[cvBinomialShared]]
     * chassis with the frequency weight v folded into every IRLS
     * accumulation — each row contributes w·v·norm_f to fold f's gram,
-    * exactly `SgdNet.fitWeightedGlm`'s per-row arithmetic tiled per
+    * exactly `SgdNet.DenseRows.gram`'s per-row arithmetic tiled per
     * fold. Each fold's weights renormalize to sum to ITS train-row
     * count via a driver-side multiplier (v moments are linear), so each
     * fold-model matches a standalone `SgdNet.fitWeighted` on its train
     * rows within the convergence tolerance; the full-data model rides
-    * as the virtual fold and finishes with `fitWeightedGlm`'s
-    * v-weighted deviance pass. Held-out scores are Σv·err/Σv with raw
+    * as the virtual fold and finishes with the v-weighted deviance
+    * pass of `SgdNet.fitIrls`. Held-out scores are Σv·err/Σv with raw
     * v; binomial supports deviance|mse|mae|class|auc (auc via the
     * continuous-mass weighted rank), poisson deviance|mse|mae. */
   private def cvWeightedGlmShared(df: DataFrame, featureCols: Seq[String],
@@ -1078,14 +1077,7 @@ object CvSgdNet {
     val p = featureCols.size
     val binomial = params.family == "binomial"
     val classes: Array[String] =
-      if (binomial) {
-        val cs = df.select(col(labelCol).cast("string")).distinct()
-          .limit(3).collect().map(_.getString(0)).sorted
-        require(cs.length == 2,
-          if (cs.length > 2) "more than two classes in response. Are you looking for family = 'multinomial'?"
-          else "only one class in response.")
-        cs
-      } else Array.empty
+      if (binomial) SgdNet.binomialClasses(df, labelCol) else Array.empty
     val yCol =
       if (binomial) (col(labelCol).cast("string") === classes(1)).cast("double")
       else col(labelCol).cast("double")
@@ -1232,7 +1224,7 @@ object CvSgdNet {
                     z = etaC + (y - mu) / w
                   }
                   // frequency weight (fold-normalized) folds into the
-                  // IRLS weight — fitWeightedGlm's wv = w·v·norm
+                  // IRLS weight — SgdNet.DenseRows.gram's w·v
                   acc(f).add(xs, w * v * bNorms.value(f), z)
                 }
                 f += 1
@@ -1273,7 +1265,7 @@ object CvSgdNet {
       }
 
       // full-data model from the virtual fold's path, finished with the
-      // same v·norm-weighted deviance pass as SgdNet.fitWeightedGlm
+      // same v·norm-weighted deviance pass as SgdNet.fitIrls
       val a0Full = Array.tabulate(L)(l => Array(a0Out(nfolds)(l)))
       val betaFull = Array.tabulate(L)(l => Array(betaOut(nfolds)(l).clone()))
       val yBarFull = trainStats(nfolds).yMean(0)
@@ -1313,7 +1305,7 @@ object CvSgdNet {
         depth = 2)
       val nulldev = devs(L)
       val devRatio = Array.tabulate(L)(l =>
-        if (nulldev > 0) 1.0 - devs(l) / nulldev else 0.0)
+        SgdNetModel.devRatio(devs(l), nulldev))
       val full = new SgdNetModel(params.family, featureCols.toArray,
         Array(labelCol), classes, lambdas, a0Full, betaFull, nulldev,
         devRatio, total.n, sharedPasses + 2, params)
@@ -1408,8 +1400,8 @@ object CvSgdNet {
     *    [[fitWeighted]], one-pass moment CV included.
     *  - binomial / poisson: SHARED offset-IRLS chassis — all folds
     *    advance through ONE treeAggregate per Newton round at
-    *    η = off + a0_f + xs·β_f (the fitPoissonOffset /
-    *    fitBinomialOffset algebra, fold-tiled), per-fold offset null
+    *    η = off + a0_f + xs·β_f (the `SgdNet.fitIrls` offset
+    *    algebra, fold-tiled), per-fold offset null
     *    intercepts from subtracted train sums (poisson closed-form
     *    ln(Σv·y/Σv·e^off); binomial via a fold-tiled Newton loop — the
     *    offset null has no closed form), the offset-corrected
@@ -1511,14 +1503,7 @@ object CvSgdNet {
     val p = featureCols.size
     val binomial = params.family == "binomial"
     val classes: Array[String] =
-      if (binomial) {
-        val cs = df.select(col(labelCol).cast("string")).distinct()
-          .limit(3).collect().map(_.getString(0)).sorted
-        require(cs.length == 2,
-          if (cs.length > 2) "more than two classes in response. Are you looking for family = 'multinomial'?"
-          else "only one class in response.")
-        cs
-      } else Array.empty
+      if (binomial) SgdNet.binomialClasses(df, labelCol) else Array.empty
     val yCol =
       if (binomial) (col(labelCol).cast("string") === classes(1)).cast("double")
       else col(labelCol).cast("double")
@@ -1657,7 +1642,7 @@ object CvSgdNet {
         if (params.lambda != null) params.lambda
         else {
           // offset-corrected lambda_max on the full data (the
-          // fitPoissonOffset pathB pass): the null-model mean varies
+          // SgdNet.IrlsRows.nullGradient pass): the null-model mean varies
           // per row, so the offset-ignoring covariance would misplace
           // the path start
           val minRatio = if (params.lambdaMinRatio.isNaN)
@@ -1820,7 +1805,7 @@ object CvSgdNet {
         depth = 2)
       val nulldev = devs(L)
       val devRatio = Array.tabulate(L)(l =>
-        if (nulldev > 0) 1.0 - devs(l) / nulldev else 0.0)
+        SgdNetModel.devRatio(devs(l), nulldev))
       val full = new SgdNetModel(params.family, names, Array(labelCol),
         classes, lambdas, a0Full, betaFull, nulldev, devRatio, total.n,
         sharedPasses + 2, params)
@@ -2176,7 +2161,7 @@ object CvSgdNet {
         val y = new Array[Double](k); y(t._3) = 1.0; (t._2, y)
       }
       val devs = SgdNet.multinomDeviance(onehotRows, a0Full, betaFull, k)
-      val devRatio = devs.map(d => if (nulldev > 0) 1.0 - d / nulldev else 0.0)
+      val devRatio = devs.map(d => SgdNetModel.devRatio(d, nulldev))
       val full = new SgdNetModel("multinomial", featureCols.toArray,
         Array(labelCol), classes, lambdas, a0Full, betaFull, nulldev,
         devRatio, total.n, sharedPasses + 2, params)
@@ -2681,7 +2666,7 @@ object CvSgdNet {
         depth = 2)
       val nulldev = devs(L)
       val devRatio = Array.tabulate(L)(l =>
-        if (nulldev > 0) 1.0 - devs(l) / nulldev else 0.0)
+        SgdNetModel.devRatio(devs(l), nulldev))
       val full = new SgdNetModel("multinomial", featureCols.toArray,
         Array(labelCol), classes, lambdas, a0Full, betaFull, nulldev,
         devRatio, total.n, sharedPasses + 2, params)
@@ -3013,7 +2998,7 @@ object CvSgdNet {
         val y = new Array[Double](k); y(t._3) = t._4 * normFull; (t._2, y)
       }
       val devs = SgdNet.multinomDeviance(onehotRows, a0Full, betaFull, k)
-      val devRatio = devs.map(d => if (nulldev > 0) 1.0 - d / nulldev else 0.0)
+      val devRatio = devs.map(d => SgdNetModel.devRatio(d, nulldev))
       val full = new SgdNetModel("multinomial", featureCols.toArray,
         Array(labelCol), classes, lambdas, a0Full, betaFull, nulldev,
         devRatio, total.n, sharedPasses + 2, params)
@@ -3096,8 +3081,8 @@ object CvSgdNet {
     *  - binomial / poisson: SHARED sparse IRLS — all folds advance in
     *    one treeAggregate per Newton round accumulating the sparse
     *    route's UNCENTERED nonzero moments per fold, with the
-    *    centering/standardization correction applied algebraically on
-    *    the driver per fold (the `fitSparseGlm` algebra, fold-tiled);
+    *    centering/standardization correction applied algebraically per
+    *    fold after each pass (the `SgdNet.CsrRows` algebra, fold-tiled);
     *    the full-data model rides as the virtual fold. Measures
     *    deviance|mse|mae + class/auc for binomial.
     *  - multinomial: SHARED sparse FISTA — all folds advance together
@@ -3420,14 +3405,7 @@ object CvSgdNet {
     val weighted = weightCol != null
     val binomial = params.family == "binomial"
     val classes: Array[String] =
-      if (binomial) {
-        val cs = df.select(col(labelCol).cast("string")).distinct()
-          .limit(3).collect().map(_.getString(0)).sorted
-        require(cs.length == 2,
-          if (cs.length > 2) "more than two classes in response. Are you looking for family = 'multinomial'?"
-          else "only one class in response.")
-        cs
-      } else Array.empty
+      if (binomial) SgdNet.binomialClasses(df, labelCol) else Array.empty
     val yCol =
       if (binomial) (col(labelCol).cast("string") === classes(1)).cast("double")
       else col(labelCol).cast("double")
@@ -3508,7 +3486,7 @@ object CvSgdNet {
       var sharedPasses = 0
 
       // per-fold CENTERED solve from an uncentered gram — the
-      // fitSparseGlm centering algebra, shared by the free step and
+      // SgdNet.CsrRows centering algebra, shared by the free step and
       // the in-loop step
       def solveFold(f: Int, g: BinWGram, l: Int): (Array[Double], Double) = {
         val mean = means(f); val scale = scales(f)
@@ -3573,7 +3551,7 @@ object CvSgdNet {
           sharedPasses += 1
           // ONE pass: uncentered v-weighted sparse IRLS moments for all
           // active folds (frequency weight folds into the IRLS weight
-          // as v·norm_f — fitWeightedGlm's wv = w·v·norm)
+          // as v·norm_f — SgdNet.CsrRows.gram's w·v)
           val grams = rows.treeAggregate(Array.fill(F)(new BinWGram(p)))(
             (acc, t) => {
               val (rowFold, idx, vals, y, v) = t
@@ -3641,7 +3619,7 @@ object CvSgdNet {
         }
       }
 
-      // full-data model from the virtual fold + the fitSparseGlm
+      // full-data model from the virtual fold + the SgdNet.CsrRows
       // deviance forms (sparse eta, never densified; v·norm-weighted
       // when a weight column rides along)
       val a0Full = Array.tabulate(L)(l => Array(a0Out(nfolds)(l)))
@@ -3686,7 +3664,7 @@ object CvSgdNet {
             else -2.0 * total.n *
               (SgdNet.safeXLog(pBar, nullP) + SgdNet.safeXLog(1 - pBar, 1 - nullP))
           val devRatio = devs.take(L).map(d =>
-            if (nulldev > 0) 1.0 - d / nulldev else 0.0)
+            SgdNetModel.devRatio(d, nulldev))
           new SgdNetModel("binomial", names, Array(labelCol), classes,
             lambdas, a0Full, betaFull, nulldev, devRatio, total.n,
             sharedPasses + 2, params)
@@ -3716,7 +3694,7 @@ object CvSgdNet {
             depth = 2)
           val nulldev = devs.last
           val devRatio = Array.tabulate(L)(l =>
-            if (nulldev > 0) 1.0 - devs(l) / nulldev else 0.0)
+            SgdNetModel.devRatio(devs(l), nulldev))
           new SgdNetModel("poisson", names, Array(labelCol), Array.empty,
             lambdas, a0Full, betaFull, nulldev, devRatio, total.n,
             sharedPasses + 2, params)
@@ -3820,14 +3798,7 @@ object CvSgdNet {
     val weighted = weightCol != null
     val binomial = params.family == "binomial"
     val classes: Array[String] =
-      if (binomial) {
-        val cs = df.select(col(labelCol).cast("string")).distinct()
-          .limit(3).collect().map(_.getString(0)).sorted
-        require(cs.length == 2,
-          if (cs.length > 2) "more than two classes in response. Are you looking for family = 'multinomial'?"
-          else "only one class in response.")
-        cs
-      } else Array.empty
+      if (binomial) SgdNet.binomialClasses(df, labelCol) else Array.empty
     val yCol =
       if (binomial) (col(labelCol).cast("string") === classes(1)).cast("double")
       else col(labelCol).cast("double")
@@ -4159,7 +4130,7 @@ object CvSgdNet {
         depth = 2)
       val nulldev = devs(L)
       val devRatio = Array.tabulate(L)(l =>
-        if (nulldev > 0) 1.0 - devs(l) / nulldev else 0.0)
+        SgdNetModel.devRatio(devs(l), nulldev))
       val full = new SgdNetModel(params.family, names, Array(labelCol),
         classes, lambdas, a0Full, betaFull, nulldev, devRatio, total.n,
         sharedPasses + 2, params)
@@ -4527,7 +4498,7 @@ object CvSgdNet {
         (t._2, t._3, y)
       }
       val devs = SgdNet.sparseMultinomDeviance(onehotRows, a0Full, betaFull, k)
-      val devRatio = devs.map(d => if (nulldev > 0) 1.0 - d / nulldev else 0.0)
+      val devRatio = devs.map(d => SgdNetModel.devRatio(d, nulldev))
       val names = (0 until p).map(j => s"V$j").toArray
       val full = new SgdNetModel("multinomial", names,
         Array(labelCol), classes, lambdas, a0Full, betaFull, nulldev,
@@ -5039,7 +5010,7 @@ object CvSgdNet {
         depth = 2)
       val nulldev = devs(L)
       val devRatio = Array.tabulate(L)(l =>
-        if (nulldev > 0) 1.0 - devs(l) / nulldev else 0.0)
+        SgdNetModel.devRatio(devs(l), nulldev))
       val names = (0 until p).map(j => s"V$j").toArray
       val full = new SgdNetModel("multinomial", names,
         Array(labelCol), classes, lambdas, a0Full, betaFull, nulldev,
@@ -5154,7 +5125,7 @@ object CvSgdNet {
     *  - binomial / poisson: shared IRLS on the [[cvBinomialShared]]
     *    chassis — all folds advance in one treeAggregate per Newton
     *    round with v·norm_f folded into each fold's IRLS weight
-    *    (exactly `SgdNet.fitWeightedGlm`'s per-row accumulation, tiled
+    *    (exactly `SgdNet.DenseRows.gram`'s per-row accumulation, tiled
     *    per fold), the full-data fit riding as the virtual fold.
     *
     *  - multinomial: shared FISTA on the [[cvMultinomialShared]]
@@ -5938,7 +5909,7 @@ object CvSgdNet {
           gq += bstd * s2
         }
         val rss = ySecond - 2 * bb + gq
-        if (nulldev > 0) 1.0 - totScaled.n * rss / nulldev else 0.0
+        SgdNetModel.devRatio(totScaled.n * rss, nulldev)
       }
       val model = new SgdNetModel("gaussian", featureCols.toArray,
         Array(labelCol), Array.empty, lambdas, a0B, bB, nulldev, devRatio,
@@ -6164,7 +6135,7 @@ object CvSgdNet {
           gq += bstd * s2
         }
         val rss = ySecond - 2 * bb + gq
-        if (nulldev > 0) 1.0 - totScaled.n * rss / nulldev else 0.0
+        SgdNetModel.devRatio(totScaled.n * rss, nulldev)
       }
       val model = new SgdNetModel("gaussian", names.toArray,
         Array(labelCol), Array.empty, lambdas, a0B, bB, nulldev, devRatio,
@@ -6206,14 +6177,7 @@ object CvSgdNet {
     val weighted = weightCol != null
     val hasOffset = offsetCol != null
     val classes: Array[String] =
-      if (binomial) {
-        val cs = df.select(col(labelCol).cast("string")).distinct()
-          .limit(3).collect().map(_.getString(0)).sorted
-        require(cs.length == 2,
-          if (cs.length > 2) "more than two classes in response. Are you looking for family = 'multinomial'?"
-          else "only one class in response.")
-        cs
-      } else Array.empty
+      if (binomial) SgdNet.binomialClasses(df, labelCol) else Array.empty
     val yCol =
       if (binomial) (col(labelCol).cast("string") === classes(1)).cast("double")
       else col(labelCol).cast("double")
@@ -6713,7 +6677,7 @@ object CvSgdNet {
         val bB = Array.tabulate(L)(l => Array(Array.tabulate(p)(j =>
           gm * betaFullP(l)(0)(j) + (1 - gm) * bFull(nfolds)(l)(j))))
         val devRatio = Array.tabulate(L)(l =>
-          if (nulldev > 0) 1.0 - devs(g * L + l) / nulldev else 0.0)
+          SgdNetModel.devRatio(devs(g * L + l), nulldev))
         val model = new SgdNetModel(params.family, names, Array(labelCol),
           classes, lambdas, a0B, bB, nulldev, devRatio, total.n,
           sharedPasses, params)
@@ -6738,7 +6702,7 @@ object CvSgdNet {
             // is in the grid; otherwise recompute is skipped — dev.ratio
             // of the penalized full model is informational here
             val g1 = gArr.indexWhere(_ == 1.0)
-            if (g1 >= 0) 1.0 - devs(g1 * L + l) / nulldev else Double.NaN
+            if (g1 >= 0) SgdNetModel.devRatio(devs(g1 * L + l), nulldev) else Double.NaN
           } else 0.0),
         total.n, sharedPasses, params)
       val relaxedFull = SgdNet.RelaxedPath(fullPenalized, a0R(nfolds),
@@ -6781,14 +6745,7 @@ object CvSgdNet {
     val weighted = weightCol != null
     val hasOffset = offsetCol != null
     val classes: Array[String] =
-      if (binomial) {
-        val cs = df.select(col(labelCol).cast("string")).distinct()
-          .limit(3).collect().map(_.getString(0)).sorted
-        require(cs.length == 2,
-          if (cs.length > 2) "more than two classes in response. Are you looking for family = 'multinomial'?"
-          else "only one class in response.")
-        cs
-      } else Array.empty
+      if (binomial) SgdNet.binomialClasses(df, labelCol) else Array.empty
     val yCol =
       if (binomial) (col(labelCol).cast("string") === classes(1)).cast("double")
       else col(labelCol).cast("double")
@@ -7334,7 +7291,7 @@ object CvSgdNet {
         val bB = Array.tabulate(L)(l => Array(Array.tabulate(p)(j =>
           gm * betaFullP(l)(0)(j) + (1 - gm) * bFull(nfolds)(l)(j))))
         val devRatio = Array.tabulate(L)(l =>
-          if (nulldev > 0) 1.0 - devs(g * L + l) / nulldev else 0.0)
+          SgdNetModel.devRatio(devs(g * L + l), nulldev))
         val model = new SgdNetModel(params.family, names, Array(labelCol),
           classes, lambdas, a0B, bB, nulldev, devRatio, total.n,
           sharedPasses, params)
@@ -7356,7 +7313,7 @@ object CvSgdNet {
         Array.tabulate(L)(l =>
           if (nulldev > 0) {
             val g1 = gArr.indexWhere(_ == 1.0)
-            if (g1 >= 0) 1.0 - devs(g1 * L + l) / nulldev else Double.NaN
+            if (g1 >= 0) SgdNetModel.devRatio(devs(g1 * L + l), nulldev) else Double.NaN
           } else 0.0),
         total.n, sharedPasses, params)
       val relaxedFull = SgdNet.RelaxedPath(fullPenalized, a0R(nfolds),

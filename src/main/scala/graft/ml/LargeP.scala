@@ -305,7 +305,7 @@ object LargeP {
             gq += beta(j) * s
           }
           val rssOverN = ySecond - 2 * bb + gq
-          devRatio(l) = if (nulldev > 0) 1.0 - nRows * rssOverN / nulldev else 0.0
+          devRatio(l) = SgdNetModel.devRatio(nRows * rssOverN, nulldev)
           for (j <- 0 until p) betaOut(l)(0)(j) = beta(j) / scale(j)
           a0Out(l)(0) = if (params.intercept)
             yMean - (0 until p).map(j => betaOut(l)(0)(j) * mean(j)).sum
@@ -608,7 +608,7 @@ object LargeP {
             gq += beta(j) * s
           }
           val rssOverN = ySecond - 2 * bb + gq
-          devRatio(l) = if (nulldev > 0) 1.0 - nD * rssOverN / nulldev else 0.0
+          devRatio(l) = SgdNetModel.devRatio(nD * rssOverN, nulldev)
           for (j <- 0 until p) betaOut(l)(0)(j) = beta(j) / scale(j)
           a0Out(l)(0) = if (params.intercept)
             yMean - (0 until p).map(j => betaOut(l)(0)(j) * mean(j)).sum
@@ -2057,14 +2057,7 @@ object LargeP {
     val M = nfolds + 1 // models: 0..nfolds-1 exclude that fold; nfolds = full
 
     val classes: Array[String] =
-      if (binom) {
-        val cs = df.select(col(labelCol).cast("string")).distinct()
-          .limit(3).collect().map(_.getString(0)).sorted
-        require(cs.length == 2,
-          if (cs.length > 2) "more than two classes in response. Are you looking for family = 'multinomial'?"
-          else "only one class in response.")
-        cs
-      } else Array.empty
+      if (binom) SgdNet.binomialClasses(df, labelCol) else Array.empty
     val yExpr =
       if (binom) (col(labelCol).cast("string") === classes(1)).cast("double")
       else col(labelCol).cast("double")
@@ -2584,7 +2577,7 @@ object LargeP {
               SgdNet.safeXLog(1 - pBar, 1 - nullP))
           } else acc(nfolds * Lc + Lc)
         val devRatio = Array.tabulate(Lc)(l2 =>
-          if (nulldev > 0) 1.0 - acc(nfolds * Lc + l2) / nulldev else 0.0)
+          SgdNetModel.devRatio(acc(nfolds * Lc + l2), nulldev))
         val a0Full = Array.tabulate(Lc)(l2 => Array(a0Out(nfolds)(l2)))
         val betaFull = Array.tabulate(Lc) { l2 =>
           val b = new Array[Double](p)
@@ -2658,7 +2651,8 @@ object LargeP {
     * penalty factors / box limits / compat), plus the dense route's
     * IRLS conventions bit-for-bit: w = max(mu(1−mu), 1e-5),
     * z = eta + (y − mu)/w, Newton cap 25, stop at
-    * max|Δcoef| < max(thresh·1e-2, 1e-8) (SgdNet.fitBinomialImpl). */
+    * max|Δcoef| < max(thresh·1e-2, 1e-8) (SgdNet.fitIrls with the
+    * SgdNet.Binomial family). */
   def fitBinomial(df: DataFrame, featureCols: Seq[String], labelCol: String,
                   params: SgdNetParams = SgdNetParams(family = "binomial"),
                   weightCol: String = null,
@@ -2667,14 +2661,10 @@ object LargeP {
     require(params.family == "binomial",
       s"LargeP.fitBinomial supports binomial, not ${params.family}")
     requireGlmContract(params, featureCols)
-    val classes = df.select(col(labelCol).cast("string")).distinct()
-      .limit(3).collect().map(_.getString(0)).sorted
-    require(classes.length == 2,
-      if (classes.length > 2) "more than two classes in response. Are you looking for family = 'multinomial'?"
-      else "only one class in response.")
+    val classes = SgdNet.binomialClasses(df, labelCol)
     val positive = classes(1)
     val yCol = (col(labelCol).cast("string") === positive).cast("double")
-    val rows = glmRows(df, featureCols, yCol, weightCol, offsetCol)
+    val rows = SgdNet.glmRows(df, featureCols, yCol, weightCol, offsetCol)
     try fitGlmImpl(rows, featureCols, labelCol, classes, "binomial",
       params, hasOffset = offsetCol != null, weighted = weightCol != null)
     finally rows.unpersist(blocking = false)
@@ -2682,7 +2672,7 @@ object LargeP {
 
   /** Screened-Gram IRLS for LARGE p — the poisson (log link) twin of
     * [[fitBinomial]], with the dense route's link conventions
-    * (eta clamped to ±30, w = max(mu, 1e-5) — SgdNet.poissonGram). */
+    * (eta clamped to ±30, w = max(mu, 1e-5) — SgdNet.Poisson). */
   def fitPoisson(df: DataFrame, featureCols: Seq[String], labelCol: String,
                  params: SgdNetParams = SgdNetParams(family = "poisson"),
                  weightCol: String = null,
@@ -2691,52 +2681,11 @@ object LargeP {
     require(params.family == "poisson",
       s"LargeP.fitPoisson supports poisson, not ${params.family}")
     requireGlmContract(params, featureCols)
-    val rows = glmRows(df, featureCols, col(labelCol).cast("double"),
+    val rows = SgdNet.glmRows(df, featureCols, col(labelCol).cast("double"),
       weightCol, offsetCol)
     try fitGlmImpl(rows, featureCols, labelCol, Array.empty, "poisson",
       params, hasOffset = offsetCol != null, weighted = weightCol != null)
     finally rows.unpersist(blocking = false)
-  }
-
-  /** (x, y, offset, vn) rows for the dense GLM routes: offset defaults
-    * to 0.0, vn to 1.0; with a `weightCol` the glmnet conventions
-    * apply — w must be non-negative, w = 0 drops the observation, and
-    * the kept rows' weights renormalize to sum to their count (one
-    * count/sum pre-pass), so every downstream moment is a pure ratio
-    * form over n. The returned RDD is persisted MEMORY_AND_DISK. */
-  private def glmRows(df: DataFrame, featureCols: Seq[String],
-                      yCol: org.apache.spark.sql.Column,
-                      weightCol: String,
-                      offsetCol: String): RDD[(Array[Double], Double, Double, Double)] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val p = featureCols.size
-    val offC = if (offsetCol == null) lit(0.0) else col(offsetCol).cast("double")
-    val wC = if (weightCol == null) lit(1.0) else col(weightCol).cast("double")
-    // NOT spread (unlike the batched-CV prep): the single-fit IRLS
-    // routes run few enough passes that the extra exchange measured as
-    // a net loss (bench: q_binom_largep 1.05x, q_relaxed_glm_largep
-    // 1.24x with a spread here)
-    val raw = df.select((featureCols.map(c => col(c).cast("double")) ++
-        Seq(yCol, offC, wC)): _*)
-      .rdd.map { row =>
-        val x = new Array[Double](p)
-        var j = 0
-        while (j < p) { x(j) = row.getDouble(j); j += 1 }
-        (x, row.getDouble(p), row.getDouble(p + 1), row.getDouble(p + 2))
-      }
-    if (weightCol == null) raw.persist(StorageLevel.MEMORY_AND_DISK)
-    else {
-      val (nRows, wSum) = raw.treeAggregate((0L, 0.0))(
-        seqOp = (s, r) => {
-          require(r._4 >= 0, "weights must be non-negative")
-          if (r._4 > 0) (s._1 + 1, s._2 + r._4) else s
-        },
-        combOp = (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
-      require(nRows > 0, "the response (y) is empty.")
-      val norm = nRows.toDouble / wSum
-      raw.filter(_._4 > 0).map(r => (r._1, r._2, r._3, r._4 * norm))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
   }
 
   /** Screened-Gram IRLS for LARGE-DIM SPARSE (CSR) input — the
@@ -2763,11 +2712,7 @@ object LargeP {
     require(params.family == "binomial",
       s"LargeP.fitSparseBinomial supports binomial, not ${params.family}")
     requireGlmContract(params, (0 until dim).map(j => s"V$j"))
-    val classes = df.select(col(labelCol).cast("string")).distinct()
-      .limit(3).collect().map(_.getString(0)).sorted
-    require(classes.length == 2,
-      if (classes.length > 2) "more than two classes in response. Are you looking for family = 'multinomial'?"
-      else "only one class in response.")
+    val classes = SgdNet.binomialClasses(df, labelCol)
     val positive = classes(1)
     val rows = df.select(col(idxCol), col(valCol).cast("array<double>"),
         (col(labelCol).cast("string") === positive).cast("double"))
@@ -3209,7 +3154,7 @@ object LargeP {
           SgdNet.safeXLog(1 - yBar, 1 - nullP))
       } else devAcc(Lc)
     val devRatio = Array.tabulate(Lc)(l2 =>
-      if (nulldev > 0) 1.0 - devAcc(l2) / nulldev else 0.0)
+      SgdNetModel.devRatio(devAcc(l2), nulldev))
 
     new SgdNetModel(family, (0 until p).map(j => s"V$j").toArray,
       Array(labelCol), classes, lambdasT, a0OutT, betaOutT, nulldev,
@@ -3244,8 +3189,8 @@ object LargeP {
     * ratio forms below then run the identical per-row arithmetic,
     * 1.0·x ≡ x), `offset` the per-row link-level offset (0.0 without
     * one — every eta below is a0 + off + xs·β and every WLS target is
-    * z − off, the dense fitBinomialOffset/fitPoissonOffset shape). */
-  private def fitGlmImpl(rows: RDD[(Array[Double], Double, Double, Double)],
+    * z − off, the dense SgdNet.fitIrls shape). */
+  private def fitGlmImpl(rows: RDD[SgdNet.GlmRow],
                          featureCols: Seq[String], labelCol: String,
                          classes: Array[String], family: String,
                          params: SgdNetParams,
@@ -3258,7 +3203,7 @@ object LargeP {
     // ------------------- pass A: O(p) weighted moments (+ offset sums)
     val accA = rows.treeAggregate(new Array[Double](3 * p + 5))(
       seqOp = (a, r) => {
-        val x = r._1; val y = r._2; val off = r._3; val vn = r._4
+        val x = r.x; val y = r.y; val off = r.off; val vn = r.w
         var j = 0
         while (j < p) {
           val xj = vn * x(j)
@@ -3303,9 +3248,9 @@ object LargeP {
     // closed forms at the weighted yBar without an offset; with one,
     // binomial+intercept solves Σvn·σ(a0+off) = Σvn·y by a driver
     // Newton loop over scalar-pair passes (quadratic; the mean-offset-
-    // shifted logit start is exact for a constant offset —
-    // fitBinomialOffset), poisson+intercept is the exposure-weighted
-    // closed form ln(Σvn·y / Σvn·e^off) (fitPoissonOffset)
+    // shifted logit start is exact for a constant offset), poisson+
+    // intercept is the exposure-weighted closed form
+    // ln(Σvn·y / Σvn·e^off) — both as SgdNet.nullIntercept
     val a0Null: Double =
       if (!params.intercept) 0.0
       else if (binom) {
@@ -3320,9 +3265,9 @@ object LargeP {
           while (it < 25 && !done) {
             val (s1, s2) = rows.treeAggregate((0.0, 0.0))(
               (s, r) => {
-                val mu = 1.0 / (1.0 + math.exp(-(a0N + r._3)))
-                (s._1 + r._4 * (r._2 - mu),
-                  s._2 + r._4 * math.max(mu * (1.0 - mu), 1e-10))
+                val mu = 1.0 / (1.0 + math.exp(-(a0N + r.off)))
+                (s._1 + r.w * (r.y - mu),
+                  s._2 + r.w * math.max(mu * (1.0 - mu), 1e-10))
               },
               (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
             passes += 1
@@ -3351,7 +3296,7 @@ object LargeP {
       val bc = sc.broadcast((eArr, actIdx, actVal))
       val acc = rows.treeAggregate(new Array[Double](sz))(
         seqOp = (a, r) => {
-          val x = r._1; val y = r._2; val off = r._3; val vn = r._4
+          val x = r.x; val y = r.y; val off = r.off; val vn = r.w
           val (eL, aI, aV) = bc.value
           val (ctr, scl) = bCS.value
           var eta = a0w + off
@@ -3414,7 +3359,7 @@ object LargeP {
       val bc = sc.broadcast((eArr, wIdx, wVal, nIdx, nVal))
       val acc = rows.treeAggregate(new Array[Double](p + szE))(
         seqOp = (a, r) => {
-          val x = r._1; val y = r._2; val off = r._3; val vn = r._4
+          val x = r.x; val y = r.y; val off = r.off; val vn = r.w
           val (eL, wI, wV, nI, nV) = bc.value
           val (ctr, scl) = bCS.value
           var etaW = a0w + off
@@ -3500,7 +3445,7 @@ object LargeP {
     def initGrad(a0i: Double): Array[Double] = {
       val acc = rows.treeAggregate(new Array[Double](p))(
         seqOp = (a, r) => {
-          val x = r._1; val y = r._2; val off = r._3; val vn = r._4
+          val x = r.x; val y = r.y; val off = r.off; val vn = r.w
           val (ctr, scl) = bCS.value
           val eta = a0i + off
           val mu = if (binom) 1.0 / (1.0 + math.exp(-eta))
@@ -3656,7 +3601,7 @@ object LargeP {
     val betaOutT = betaOut.take(cutL)
 
     // ------------------------- deviance: ONE sparse-coefficient scan
-    // (active-only per path point — the dense pathDeviance is O(L·p)
+    // (active-only per path point — the dense deviance pass is O(L·p)
     // per row, unaffordable at large p)
     val actIdxL = betaOutT.map(bl => (0 until p).filter(bl(0)(_) != 0.0).toArray)
     val actValL = actIdxL.zip(betaOutT).map { case (ix, bl) => ix.map(bl(0)) }
@@ -3664,7 +3609,7 @@ object LargeP {
     val muNull = if (params.intercept) yBar else 1.0
     // binomial keeps its closed-form nulldev in the plain regime; any
     // weights/offset make the null a per-row quantity (binDev(a0Null +
-    // off)·vn — the dense fitWeightedGlm/fitBinomialOffset forms), so
+    // off)·vn — the dense SgdNet.fitIrls forms), so
     // the scan accumulates it in slot Lc like poisson always has
     val binNullScan = binom && (weighted || hasOffset)
     val a0NullD = a0Null
@@ -3672,7 +3617,7 @@ object LargeP {
     val Lc = cutL
     val devAcc = rows.treeAggregate(new Array[Double](Lc + 1))(
       seqOp = (acc, r) => {
-        val x = r._1; val y = r._2; val off = r._3; val vn = r._4
+        val x = r.x; val y = r.y; val off = r.off; val vn = r.w
         val (a0s, ixs, vls) = bcPath.value
         var l2 = 0
         while (l2 < Lc) {
@@ -3717,7 +3662,7 @@ object LargeP {
           SgdNet.safeXLog(1 - yBar, 1 - nullP))
       } else devAcc(Lc)
     val devRatio = Array.tabulate(Lc)(l2 =>
-      if (nulldev > 0) 1.0 - devAcc(l2) / nulldev else 0.0)
+      SgdNetModel.devRatio(devAcc(l2), nulldev))
 
     bCS.destroy()
     new SgdNetModel(family, featureCols.toArray, Array(labelCol),

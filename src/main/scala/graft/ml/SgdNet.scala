@@ -45,8 +45,7 @@ final case class SgdNetParams(
     // scale the whole cross-response group j by pf_j. Contract
     // (requireNoZeroPf): pf = 0 entries need an EXPLICIT lambda
     // sequence on the paths without the unpenalized-coordinate
-    // lambda_max projection (sparse GLM, group solvers, multinomial,
-    // offset poisson, shared CV).
+    // lambda_max projection (group solvers, multinomial, shared CV).
     penaltyFactor: Array[Double] = null,
     // glmnet lower.limits / upper.limits: per-coefficient box
     // constraints on the ORIGINAL coefficient scale (the working
@@ -73,7 +72,7 @@ final case class SgdNetParams(
     // pmax bounds the EVER-ACTIVE feature count along the path. The
     // first path point that violates either is dropped and the path
     // stops there (glmnet returns the shorter sequence); -1 = no
-    // bound. Enforced by [[SgdNet.dfTruncate]] in the dense/sparse/
+    // bound. Enforced by [[SgdNet.DfGate]] in the dense/sparse/
     // weighted gaussian-family solver and the binomial/poisson/
     // multinomial path cores.
     dfmax: Int = -1,
@@ -119,30 +118,6 @@ object SgdNet {
       (params.dfmax < 0 || df <= params.dfmax) &&
         (params.pmax < 0 || everCount <= params.pmax)
     }
-  }
-
-  /** Post-hoc `dfmax`/`pmax` truncation for the secondary path routes
-    * (sparse/weighted/offset GLM IRLS): the primary cores stop the
-    * path early at the first violation; these routes solve their path
-    * and slice to the same returned surface — first violating point
-    * dropped, path ends there (nonzero patterns are scale-invariant,
-    * so gating the original-scale coefficients is exact). */
-  private[ml] def dfTruncate(m: SgdNetModel, params: SgdNetParams): SgdNetModel = {
-    if (params.dfmax < 0 && params.pmax < 0) return m
-    val p = m.nFeatures
-    val gate = new DfGate(params, p)
-    var cut = 0
-    var stopped = false
-    while (cut < m.lambda.length && !stopped) {
-      val bl = m.beta(cut)
-      if (gate.admit(j => bl.exists(bt => bt(j) != 0.0))) cut += 1
-      else stopped = true
-    }
-    require(cut > 0, "dfmax/pmax exclude every path point")
-    if (cut == m.lambda.length) m
-    else new SgdNetModel(m.family, m.featureNames, m.responseNames,
-      m.classLabels, m.lambda.take(cut), m.a0.take(cut), m.beta.take(cut),
-      m.nulldev, m.devRatio.take(cut), m.nobs, m.npasses, m.params)
   }
 
   def fit(df: DataFrame, featureCols: Seq[String], labelCol: String,
@@ -240,10 +215,8 @@ object SgdNet {
         fitGaussianLike(df, featureCols, labelCols, params)
       case "mgaussian" =>
         fitGaussianLike(df, featureCols, labelCols, params)
-      case "binomial" =>
-        fitBinomial(df, featureCols, labelCols.head, params)
-      case "poisson" =>
-        fitPoisson(df, featureCols, labelCols.head, params)
+      case "binomial" | "poisson" =>
+        fitDenseGlm(df, featureCols, labelCols.head, params)
       case "multinomial" =>
         fitMultinomial(df, featureCols, labelCols.head, params)
       case f => throw new IllegalArgumentException(s"unsupported family: $f")
@@ -302,7 +275,7 @@ object SgdNet {
           combOp = (a, b) => a.merge(b), depth = 2)
         solveGaussianFromStats(g, (0 until dim).map(j => s"V$j"), Seq(labelCol), params)
       case "binomial" | "poisson" =>
-        fitSparseGlm(df, idxCol, valCol, dim, labelCol, params)
+        fitCsrGlm(df, idxCol, valCol, dim, labelCol, params)
       case "multinomial" =>
         fitSparseMultinomial(df, idxCol, valCol, dim, labelCol, params)
       case f => throw new IllegalArgumentException(s"unsupported family: $f")
@@ -423,7 +396,8 @@ object SgdNet {
             Seq(labelCol), params)
         } finally { raw.unpersist(blocking = false); () }
       case "binomial" | "poisson" =>
-        fitSparseGlm(df, idxCol, valCol, dim, labelCol, params, weightCol)
+        fitCsrGlm(df, idxCol, valCol, dim, labelCol, params,
+          weightCol = weightCol)
       case "multinomial" =>
         fitSparseMultinomial(df, idxCol, valCol, dim, labelCol, params,
           weightCol)
@@ -437,10 +411,9 @@ object SgdNet {
     * closes the sparse × offset cells; glmnet accepts offset with a
     * dgCMatrix x): gaussian reduces exactly to [[fitSparse]] /
     * [[fitSparseWeighted]] on y − offset; binomial/poisson run the
-    * [[fitSparseGlm]] uncentered-moment IRLS with the per-row offset in
-    * every linear predictor and the WLS target z − off (the
-    * fitPoissonOffset / fitBinomialOffset algebra over CSR rows —
-    * never densified). Null intercepts: poisson closed-form
+    * shared IRLS path ([[fitIrls]]) over CSR rows — never densified —
+    * with the per-row offset in every linear predictor and the WLS
+    * target z − off. Null intercepts: poisson closed-form
     * ln(Σv·y/Σv·e^off); binomial via the driver Newton loop (exact at
     * the mean-offset-shifted logit start for constant offsets). The
     * lambda path uses the offset-corrected null gradient. `weightCol`
@@ -461,566 +434,10 @@ object SgdNet {
         else fitSparseWeighted(adj, idxCol, valCol, dim, labelCol, weightCol,
           params)
       case "binomial" | "poisson" =>
-        fitSparseGlmOffset(df, idxCol, valCol, dim, labelCol, offsetCol,
-          params, weightCol)
+        fitCsrGlm(df, idxCol, valCol, dim, labelCol, params, weightCol,
+          offsetCol)
       case f => throw new IllegalArgumentException(
         s"fitSparseWithOffset supports gaussian, binomial, poisson, not $f")
-    }
-  }
-
-  /** The binomial/poisson half of [[fitSparseWithOffset]]. */
-  private def fitSparseGlmOffset(df: DataFrame, idxCol: String,
-                                 valCol: String, dim: Int, labelCol: String,
-                                 offsetCol: String, params: SgdNetParams,
-                                 weightCol: String): SgdNetModel = {
-    import org.apache.spark.sql.functions.{col, lit}
-    requireNoZeroPf(params, "sparse offset GLM")
-    val p = dim
-    val binomial = params.family == "binomial"
-    val classes: Array[String] =
-      if (binomial) {
-        val cs = df.select(col(labelCol).cast("string")).distinct()
-          .limit(3).collect().map(_.getString(0)).sorted
-        require(cs.length == 2,
-          if (cs.length > 2) "more than two classes in response. Are you looking for family = 'multinomial'?"
-          else "only one class in response.")
-        cs
-      } else Array.empty
-    val yCol =
-      if (binomial) (col(labelCol).cast("string") === classes(1)).cast("double")
-      else col(labelCol).cast("double")
-    val wCol = if (weightCol == null) lit(1.0) else col(weightCol).cast("double")
-    val raw = df.select(col(idxCol), col(valCol).cast("array<double>"), yCol,
-        col(offsetCol).cast("double"), wCol)
-      .rdd.map { r =>
-        (r.getSeq[Int](0).toArray, r.getSeq[Double](1).toArray,
-          r.getDouble(2), r.getDouble(3), r.getDouble(4))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val rows =
-        if (weightCol == null) raw
-        else {
-          val (nRows, wSum) = raw.treeAggregate((0L, 0.0))(
-            seqOp = (s, r) => {
-              require(r._5 >= 0, "weights must be non-negative")
-              if (r._5 > 0) (s._1 + 1, s._2 + r._5) else s
-            },
-            combOp = (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
-          require(nRows > 0, "the response (y) is empty.")
-          val norm = nRows.toDouble / wSum
-          raw.filter(_._5 > 0).map(r => (r._1, r._2, r._3, r._4, r._5 * norm))
-        }
-      // ONE stats pass: weighted sparse moments + Σvn·e^off + Σvn·off
-      val (g, sumExpOff, sumOff) =
-        rows.treeAggregate((new GramStats(p, 1), 0.0, 0.0))(
-          seqOp = (s, r) =>
-            (s._1.addSparseWeighted(r._1, r._2, Array(r._3), r._5),
-              s._2 + r._5 * math.exp(math.max(math.min(r._4, 30.0), -30.0)),
-              s._3 + r._5 * r._4),
-          combOp = (a, b) => (a._1.merge(b._1), a._2 + b._2, a._3 + b._3),
-          depth = 2)
-      val st = SufficientStats.standardize(g, params.standardize, params.intercept)
-      val n = g.n.toDouble
-      val yBar = st.yMean(0)
-      var passes = 1
-
-      // offset null intercept
-      var a0Null =
-        if (!params.intercept) 0.0
-        else if (binomial) {
-          require(yBar > 0 && yBar < 1,
-            "binomial response must contain both classes")
-          math.log(yBar / (1 - yBar)) - sumOff / n
-        } else {
-          require(yBar > 0, "poisson response must contain positive counts")
-          math.log(yBar * n / sumExpOff)
-        }
-      if (binomial && params.intercept) {
-        // Newton on a0 with μ = σ(a0 + off) — the fitBinomialOffset loop
-        var it = 0
-        var done = false
-        while (it < 25 && !done) {
-          val (s1, s2) = rows.treeAggregate((0.0, 0.0))(
-            (s, r) => {
-              val mu = 1.0 / (1.0 + math.exp(-(a0Null + r._4)))
-              (s._1 + r._5 * (r._3 - mu),
-                s._2 + r._5 * math.max(mu * (1.0 - mu), 1e-10))
-            },
-            (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
-          passes += 1
-          val step = s1 / s2
-          a0Null += step
-          it += 1
-          if (math.abs(step) < 1e-12) done = true
-        }
-      }
-
-      val mean = if (params.intercept) st.xMean else new Array[Double](p)
-      val scale = if (params.standardize) st.xSd else Array.fill(p)(1.0)
-      val minRatio = if (params.lambdaMinRatio.isNaN)
-        LambdaPath.defaultMinRatio(g.n, p) else params.lambdaMinRatio
-      val lambdas = if (params.lambda != null) params.lambda
-        else {
-          // offset-corrected lambda_max: one SPARSE gradient pass at the
-          // null (uncentered sums + algebraic centering)
-          val a0N = a0Null
-          val acc = rows.treeAggregate(new Array[Double](p + 1))(
-            seqOp = (s, r) => {
-              val mu =
-                if (binomial) 1.0 / (1.0 + math.exp(-(a0N + r._4)))
-                else math.exp(math.max(math.min(a0N + r._4, 30.0), -30.0))
-              val res = r._5 * (r._3 - mu)
-              var i = 0
-              while (i < r._1.length) { s(r._1(i)) += res * r._2(i); i += 1 }
-              s(p) += res
-              s
-            },
-            combOp = (a, b) => {
-              var i = 0; while (i <= p) { a(i) += b(i); i += 1 }; a
-            }, depth = 2)
-          passes += 1
-          val bOff = Array.tabulate(p)(j =>
-            (acc(j) - mean(j) * acc(p)) / scale(j) / n)
-          LambdaPath.build(Array(bOff), params.alpha, params.nlambda,
-            minRatio, params.penaltyFactor)
-        }
-      val (loStd, upStd) = boundsStd(params, scale, 1.0)
-      val sc = rows.sparkContext
-
-      val L = lambdas.length
-      val a0Out = Array.ofDim[Double](L, 1)
-      val betaOut = Array.ofDim[Double](L, 1, p)
-      var beta = new Array[Double](p) // standardized scale
-      var a0 = a0Null
-      val newtonTol = math.max(params.thresh * 1e-4, 1e-10)
-
-      // round 17: TRUE dfmax/pmax early stopping on this route — the
-      // first violating path point stops the remaining lambdas' IRLS
-      // cluster passes; the violating point carries forward so the
-      // post-hoc dfTruncate slices the path at it (identical surface)
-      val dfGate = new DfGate(params, p)
-      var dfStop = -1
-      for (l <- 0 until L) if (dfStop >= 0) {
-        a0Out(l)(0) = a0Out(dfStop)(0)
-        betaOut(l)(0) = betaOut(dfStop)(0)
-      } else {
-        var iter = 0
-        var done = false
-        while (iter < 25 && !done) {
-          // linear-predictor form on the ORIGINAL sparse scale:
-          // η = off_row + cOff + Σ vals·(β/scale)(idx); the WLS target
-          // is z − off_row so the solver fits a0 + xs·β exactly
-          val bOverS = Array.tabulate(p)(j => beta(j) / scale(j))
-          var cOff = a0
-          var j0 = 0
-          while (j0 < p) { cOff -= mean(j0) * bOverS(j0); j0 += 1 }
-          val bc = sc.broadcast(bOverS)
-          val wg = rows.treeAggregate(new SpWGram(p))(
-            seqOp = (s, r) => {
-              val (idx, vals, y, off, vn) = r
-              val bos = bc.value
-              var eta = cOff + off
-              var i = 0
-              while (i < idx.length) { eta += vals(i) * bos(idx(i)); i += 1 }
-              var w = 0.0
-              var z = 0.0
-              if (binomial) {
-                val mu = 1.0 / (1.0 + math.exp(-eta))
-                w = math.max(mu * (1.0 - mu), 1e-5)
-                z = eta + (y - mu) / w - off
-              } else {
-                val etaC = math.max(math.min(eta, 30.0), -30.0)
-                val mu = math.exp(etaC)
-                w = math.max(mu, 1e-5)
-                z = etaC + (y - mu) / w - off
-              }
-              w = w * vn
-              s.sw += w; s.swz += w * z
-              i = 0
-              while (i < idx.length) {
-                val j = idx(i)
-                val wxj = w * vals(i)
-                s.swx(j) += wxj
-                s.swxz(j) += wxj * z
-                var m = 0
-                while (m <= i) {
-                  s.swxx(LinAlg.triIdx(idx(m), j)) += wxj * vals(m)
-                  m += 1
-                }
-                i += 1
-              }
-              s
-            },
-            combOp = (a, b) => a.merge(b), depth = 2)
-          passes += 1
-          // center + standardize algebraically, then the SAME driver CD
-          val ninv = 1.0 / n
-          val swxStd = Array.tabulate(p)(j =>
-            (wg.swx(j) - mean(j) * wg.sw) / scale(j))
-          val swxzStd = Array.tabulate(p)(j =>
-            (wg.swxz(j) - mean(j) * wg.swz) / scale(j))
-          val aM = Array.ofDim[Double](p, p)
-          var j = 0
-          while (j < p) {
-            var i = 0
-            while (i <= j) {
-              val v = (wg.swxx(LinAlg.triIdx(i, j)) - mean(i) * wg.swx(j) -
-                mean(j) * wg.swx(i) + mean(i) * mean(j) * wg.sw) /
-                (scale(i) * scale(j)) * ninv
-              aM(i)(j) = v; aM(j)(i) = v
-              i += 1
-            }
-            j += 1
-          }
-          // round 18: the sparse IRLS working-response solves take the
-          // same per-Newton strong-rule screen as the dense routes
-          // (round 17) — exact by KKT backcheck, same gates; the
-          // centered/standardized Gram algebra above is unchanged
-          val r =
-            if (screenGlm && params.alpha > 0 && p >= ScreenMinP && l > 0)
-              CoordinateDescent.solveScreened(aM, swxzStd.map(_ * ninv),
-                swxStd.map(_ * ninv), wg.swz * ninv, wg.sw * ninv,
-                lambdas(l), lambdas(l - 1), params.alpha, params.intercept,
-                beta, thresh = newtonTol, maxIter = params.maxit,
-                penaltyFactor = params.penaltyFactor,
-                lower = loStd, upper = upStd)
-            else CoordinateDescent.solve(aM, swxzStd.map(_ * ninv),
-              swxStd.map(_ * ninv), wg.swz * ninv, wg.sw * ninv,
-              lambdas(l), params.alpha, params.intercept, beta,
-              thresh = newtonTol, maxIter = params.maxit,
-              penaltyFactor = params.penaltyFactor,
-              lower = loStd, upper = upStd)
-          var maxD = math.abs(r.a0 - a0)
-          j = 0
-          while (j < p) {
-            val d = math.abs(r.beta(j) - beta(j)); if (d > maxD) maxD = d; j += 1
-          }
-          beta = r.beta; a0 = r.a0
-          iter += 1
-          if (maxD < math.max(params.thresh * 1e-2, 1e-8)) done = true
-        }
-        for (j <- 0 until p) betaOut(l)(0)(j) = beta(j) / scale(j)
-        a0Out(l)(0) =
-          if (params.intercept) a0 - (0 until p).map(j => betaOut(l)(0)(j) * mean(j)).sum
-          else a0
-        if (!dfGate.admit(j => betaOut(l)(0)(j) != 0.0)) dfStop = l
-      }
-
-      // deviance with per-row offset (sparse eta); the null model is the
-      // converged offset null intercept
-      val featureNames = (0 until p).map(j => s"V$j").toArray
-      val devs = rows.treeAggregate(new Array[Double](L + 1))(
-        seqOp = (acc, r) => {
-          val (idx, vals, y, off, vn) = r
-          def binDev(eta: Double): Double = {
-            val m = math.max(eta, 0.0)
-            2.0 * (m + math.log(math.exp(-m) + math.exp(eta - m)) - y * eta)
-          }
-          def poisDev(mu: Double): Double = {
-            val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-            2.0 * (ylog - (y - mu))
-          }
-          var l = 0
-          while (l < L) {
-            var eta = a0Out(l)(0) + off
-            val bl = betaOut(l)(0)
-            var i = 0
-            while (i < idx.length) { eta += bl(idx(i)) * vals(i); i += 1 }
-            acc(l) += vn * (if (binomial) binDev(eta)
-              else poisDev(math.exp(math.max(math.min(eta, 30.0), -30.0))))
-            l += 1
-          }
-          acc(L) += vn * (if (binomial) binDev(a0Null + off)
-            else poisDev(math.exp(
-              math.max(math.min(a0Null + off, 30.0), -30.0))))
-          acc
-        },
-        combOp = (a, b) => { var i = 0; while (i <= L) { a(i) += b(i); i += 1 }; a },
-        depth = 2)
-      passes += 1
-      val nulldev = devs(L)
-      val devRatio = Array.tabulate(L)(l =>
-        if (nulldev > 0) 1.0 - devs(l) / nulldev else 0.0)
-      dfTruncate(new SgdNetModel(params.family, featureNames, Array(labelCol),
-        classes, lambdas, a0Out, betaOut, nulldev, devRatio, g.n, passes,
-        params), params)
-    } finally { raw.unpersist(blocking = false); () }
-  }
-
-  /** Sparse-input binomial/poisson IRLS (reference supports dgCMatrix for
-    * every family — src/saga-sparse.h): the same distributed Newton shape
-    * as the dense path, but each pass accumulates UNCENTERED weighted
-    * moments over only each row's nonzeros (O(nnz^2) per row), and the
-    * centering + standardization correction is applied ALGEBRAICALLY on
-    * the driver:
-    *   sum w xs_i xs_j = (sum w x_i x_j - m_i sum w x_j - m_j sum w x_i
-    *                       + m_i m_j sum w) / (s_i s_j)
-    * so the sparse matrix is never densified — the linear predictor uses
-    * a per-pass scalar offset a0 - sum_j m_j beta_j / s_j, O(nnz) per
-    * row. Produces bitwise the same solve inputs as the dense path. */
-  private def fitSparseGlm(df: DataFrame, idxCol: String, valCol: String,
-                           dim: Int, labelCol: String,
-                           params: SgdNetParams,
-                           weightCol: String = null): SgdNetModel = {
-    import org.apache.spark.sql.functions.{col, lit}
-    requireNoZeroPf(params, "sparse GLM")
-    val p = dim
-    val binomial = params.family == "binomial"
-    val classes: Array[String] =
-      if (binomial) {
-        val cs = df.select(col(labelCol).cast("string")).distinct()
-          .limit(3).collect().map(_.getString(0)).sorted
-        require(cs.length == 2,
-          if (cs.length > 2) "more than two classes in response. Are you looking for family = 'multinomial'?"
-          else "only one class in response.")
-        cs
-      } else Array.empty
-    val yCol =
-      if (binomial) (col(labelCol).cast("string") === classes(1)).cast("double")
-      else col(labelCol).cast("double")
-    val wCol = if (weightCol == null) lit(1.0) else col(weightCol).cast("double")
-    val raw = df.select(col(idxCol), col(valCol).cast("array<double>"), yCol,
-        wCol)
-      .rdd.map { r =>
-        (r.getSeq[Int](0).toArray, r.getSeq[Double](1).toArray,
-          r.getDouble(2), r.getDouble(3))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // weights normalize to sum to the kept-row count (w == 0 drops
-      // the observation); vn = 1.0 everywhere for the unweighted call,
-      // which is bit-identical to the pre-weights arithmetic
-      val rows =
-        if (weightCol == null) raw
-        else {
-          val (nRows, wSum) = raw.treeAggregate((0L, 0.0))(
-            seqOp = (s, r) => {
-              require(r._4 >= 0, "weights must be non-negative")
-              if (r._4 > 0) (s._1 + 1, s._2 + r._4) else s
-            },
-            combOp = (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
-          require(nRows > 0, "the response (y) is empty.")
-          val norm = nRows.toDouble / wSum
-          raw.filter(_._4 > 0).map(r => (r._1, r._2, r._3, r._4 * norm))
-        }
-      val g = rows.treeAggregate(new GramStats(p, 1))(
-        seqOp = (s, r) => s.addSparseWeighted(r._1, r._2, Array(r._3), r._4),
-        combOp = (a, b) => a.merge(b), depth = 2)
-      val st = SufficientStats.standardize(g, params.standardize, params.intercept)
-      val n = g.n.toDouble
-      val yBar = st.yMean(0)
-      if (!binomial) require(yBar > 0, "poisson response must contain positive counts")
-
-      val minRatio = if (params.lambdaMinRatio.isNaN)
-        LambdaPath.defaultMinRatio(g.n, p) else params.lambdaMinRatio
-      val lambdas = if (params.lambda != null) params.lambda
-        else LambdaPath.build(st.b, params.alpha, params.nlambda, minRatio,
-          params.penaltyFactor)
-
-      val mean = if (params.intercept) st.xMean else new Array[Double](p)
-      val scale = if (params.standardize) st.xSd else Array.fill(p)(1.0)
-      // glmnet box limits on the sparse IRLS route: the algebraic
-      // centering feeds the SAME driver CD as the dense path, so the
-      // clipped 1-D prox applies unchanged on standardized coordinates
-      val (loStd, upStd) = boundsStd(params, scale, 1.0)
-      val sc = rows.sparkContext
-
-      val L = lambdas.length
-      val a0Out = Array.ofDim[Double](L, 1)
-      val betaOut = Array.ofDim[Double](L, 1, p)
-      var beta = new Array[Double](p) // standardized scale
-      var a0 =
-        if (binomial) {
-          if (params.intercept && yBar > 0 && yBar < 1) math.log(yBar / (1 - yBar)) else 0.0
-        } else if (params.intercept) math.log(yBar) else 0.0
-      var passes = 0
-      val newtonTol = math.max(params.thresh * 1e-4, 1e-10)
-
-      // round 17: TRUE dfmax/pmax early stopping on this route — the
-      // first violating path point stops the remaining lambdas' IRLS
-      // cluster passes; the violating point carries forward so the
-      // post-hoc dfTruncate slices the path at it (identical surface)
-      val dfGate = new DfGate(params, p)
-      var dfStop = -1
-      for (l <- 0 until L) if (dfStop >= 0) {
-        a0Out(l)(0) = a0Out(dfStop)(0)
-        betaOut(l)(0) = betaOut(dfStop)(0)
-      } else {
-        var iter = 0
-        var done = false
-        while (iter < 25 && !done) {
-          val bOverS = Array.tabulate(p)(j => beta(j) / scale(j))
-          var offset = a0
-          var j0 = 0
-          while (j0 < p) { offset -= mean(j0) * bOverS(j0); j0 += 1 }
-          val bc = sc.broadcast(bOverS)
-          val wg = rows.treeAggregate(new SpWGram(p))(
-            seqOp = (s, r) => {
-              val (idx, vals, y, vn) = r
-              val bos = bc.value
-              var eta = offset
-              var i = 0
-              while (i < idx.length) { eta += vals(i) * bos(idx(i)); i += 1 }
-              var w = 0.0
-              var z = 0.0
-              if (binomial) {
-                val mu = 1.0 / (1.0 + math.exp(-eta))
-                w = math.max(mu * (1.0 - mu), 1e-5)
-                z = eta + (y - mu) / w
-              } else {
-                val etaC = math.max(math.min(eta, 30.0), -30.0)
-                val mu = math.exp(etaC)
-                w = math.max(mu, 1e-5)
-                z = etaC + (y - mu) / w
-              }
-              w = w * vn // frequency weight folds into the IRLS weight
-              s.sw += w; s.swz += w * z
-              i = 0
-              while (i < idx.length) {
-                val j = idx(i)
-                val wxj = w * vals(i)
-                s.swx(j) += wxj
-                s.swxz(j) += wxj * z
-                var m = 0
-                while (m <= i) {
-                  s.swxx(LinAlg.triIdx(idx(m), j)) += wxj * vals(m)
-                  m += 1
-                }
-                i += 1
-              }
-              s
-            },
-            combOp = (a, b) => a.merge(b), depth = 2)
-          passes += 1
-          // center + standardize algebraically, then the SAME driver CD
-          val ninv = 1.0 / n
-          val swxStd = Array.tabulate(p)(j =>
-            (wg.swx(j) - mean(j) * wg.sw) / scale(j))
-          val swxzStd = Array.tabulate(p)(j =>
-            (wg.swxz(j) - mean(j) * wg.swz) / scale(j))
-          val aM = Array.ofDim[Double](p, p)
-          var j = 0
-          while (j < p) {
-            var i = 0
-            while (i <= j) {
-              val v = (wg.swxx(LinAlg.triIdx(i, j)) - mean(i) * wg.swx(j) -
-                mean(j) * wg.swx(i) + mean(i) * mean(j) * wg.sw) /
-                (scale(i) * scale(j)) * ninv
-              aM(i)(j) = v; aM(j)(i) = v
-              i += 1
-            }
-            j += 1
-          }
-          // round 18: the sparse IRLS working-response solves take the
-          // same per-Newton strong-rule screen as the dense routes
-          // (round 17) — exact by KKT backcheck, same gates; the
-          // centered/standardized Gram algebra above is unchanged
-          val r =
-            if (screenGlm && params.alpha > 0 && p >= ScreenMinP && l > 0)
-              CoordinateDescent.solveScreened(aM, swxzStd.map(_ * ninv),
-                swxStd.map(_ * ninv), wg.swz * ninv, wg.sw * ninv,
-                lambdas(l), lambdas(l - 1), params.alpha, params.intercept,
-                beta, thresh = newtonTol, maxIter = params.maxit,
-                penaltyFactor = params.penaltyFactor,
-                lower = loStd, upper = upStd)
-            else CoordinateDescent.solve(aM, swxzStd.map(_ * ninv),
-              swxStd.map(_ * ninv), wg.swz * ninv, wg.sw * ninv,
-              lambdas(l), params.alpha, params.intercept, beta,
-              thresh = newtonTol, maxIter = params.maxit,
-              penaltyFactor = params.penaltyFactor,
-              lower = loStd, upper = upStd)
-          var maxD = math.abs(r.a0 - a0)
-          j = 0
-          while (j < p) {
-            val d = math.abs(r.beta(j) - beta(j)); if (d > maxD) maxD = d; j += 1
-          }
-          beta = r.beta; a0 = r.a0
-          iter += 1
-          if (maxD < math.max(params.thresh * 1e-2, 1e-8)) done = true
-        }
-        for (j <- 0 until p) betaOut(l)(0)(j) = beta(j) / scale(j)
-        a0Out(l)(0) =
-          if (params.intercept) a0 - (0 until p).map(j => betaOut(l)(0)(j) * mean(j)).sum
-          else a0
-        if (!dfGate.admit(j => betaOut(l)(0)(j) != 0.0)) dfStop = l
-      }
-
-      // deviance pass on original-scale coefficients (sparse eta)
-      val featureNames = (0 until p).map(j => s"V$j").toArray
-      if (binomial) {
-        val pBar = yBar
-        val nullP = if (params.intercept) pBar else 0.5
-        val nulldev = -2.0 * n * (safeXLog(pBar, nullP) + safeXLog(1 - pBar, 1 - nullP))
-        val devs = rows.treeAggregate(new Array[Double](L))(
-          seqOp = (acc, r) => {
-            val (idx, vals, y, vn) = r
-            var l = 0
-            while (l < L) {
-              var eta = a0Out(l)(0)
-              val bl = betaOut(l)(0)
-              var i = 0
-              while (i < idx.length) { eta += bl(idx(i)) * vals(i); i += 1 }
-              val m = math.max(eta, 0.0)
-              acc(l) += vn *
-                (2.0 * (m + math.log(math.exp(-m) + math.exp(eta - m)) - y * eta))
-              l += 1
-            }
-            acc
-          },
-          combOp = (a, b) => { var i = 0; while (i < L) { a(i) += b(i); i += 1 }; a },
-          depth = 2)
-        passes += 1
-        val devRatio = devs.map(d => if (nulldev > 0) 1.0 - d / nulldev else 0.0)
-        dfTruncate(new SgdNetModel("binomial", featureNames, Array(labelCol),
-          classes, lambdas, a0Out, betaOut, nulldev, devRatio, g.n, passes,
-          params), params)
-      } else {
-        val muNull = if (params.intercept) yBar else 1.0
-        val devs = rows.treeAggregate(new Array[Double](L + 1))(
-          seqOp = (acc, r) => {
-            val (idx, vals, y, vn) = r
-            def devTerm(mu: Double): Double = {
-              val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-              2.0 * (ylog - (y - mu))
-            }
-            var l = 0
-            while (l < L) {
-              var eta = a0Out(l)(0)
-              val bl = betaOut(l)(0)
-              var i = 0
-              while (i < idx.length) { eta += bl(idx(i)) * vals(i); i += 1 }
-              acc(l) += vn *
-                devTerm(math.exp(math.max(math.min(eta, 30.0), -30.0)))
-              l += 1
-            }
-            acc(L) += vn * devTerm(muNull)
-            acc
-          },
-          combOp = (a, b) => { var i = 0; while (i <= L) { a(i) += b(i); i += 1 }; a },
-          depth = 2)
-        passes += 1
-        val nulldev = devs.last
-        val devRatio = Array.tabulate(L)(l =>
-          if (nulldev > 0) 1.0 - devs(l) / nulldev else 0.0)
-        dfTruncate(new SgdNetModel("poisson", featureNames, Array(labelCol),
-          Array.empty, lambdas, a0Out, betaOut, nulldev, devRatio, g.n,
-          passes, params), params)
-      }
-    } finally raw.unpersist(blocking = false)
-  }
-
-  /** Uncentered weighted-moment accumulator for the sparse IRLS pass. */
-  private final class SpWGram(p: Int) extends Serializable {
-    var sw = 0.0; var swz = 0.0
-    val swx = new Array[Double](p)
-    val swxz = new Array[Double](p)
-    val swxx = new Array[Double](LinAlg.triSize(p))
-    def merge(o: SpWGram): SpWGram = {
-      sw += o.sw; swz += o.swz
-      var i = 0
-      while (i < swx.length) { swx(i) += o.swx(i); swxz(i) += o.swxz(i); i += 1 }
-      i = 0
-      while (i < swxx.length) { swxx(i) += o.swxx(i); i += 1 }
-      this
     }
   }
 
@@ -1314,7 +731,7 @@ object SgdNet {
             st.yMean(t) * yScale(t) - (0 until p).map(j3 => beta(l)(t)(j3) * st.xMean(j3)).sum
           else 0.0
         }
-        devRatio(l) = if (nulldev > 0) 1.0 - g.n * rss / nulldev else 0.0
+        devRatio(l) = SgdNetModel.devRatio(g.n * rss, nulldev)
         l += 1
       }
     }
@@ -1344,7 +761,7 @@ object SgdNet {
       case "gaussian" =>
         fitWeightedMulti(df, featureCols, Seq(labelCol), weightCol, params)
       case "binomial" | "poisson" =>
-        fitWeightedGlm(df, featureCols, labelCol, weightCol, params)
+        fitDenseGlm(df, featureCols, labelCol, params, weightCol = weightCol)
       case "multinomial" =>
         fitWeightedMultinomial(df, featureCols, labelCol, weightCol, params)
       case f => throw new IllegalArgumentException(
@@ -1405,225 +822,6 @@ object SgdNet {
           if (r._3 > 0) s.addWeighted(r._1, r._2, r._3 * norm) else s,
         combOp = (a, b) => a.merge(b), depth = 2)
     } finally { rows.unpersist(blocking = false); () }
-  }
-
-  /** Weighted binomial/poisson elastic-net path (glmnet `weights` for
-    * the IRLS families): frequency weights v_i (normalized to sum to n,
-    * the glmnet convention) FOLD INTO the IRLS working weights — every
-    * gram accumulation uses v_i·w_i where w_i is the family's IRLS
-    * weight at the current linear predictor, the working response
-    * z_i = eta_i + (y_i − mu_i)/w_i is unchanged, and every deviance
-    * term is scaled by v_i. Standardization, the lambda path, penalty
-    * factors, and box limits all apply on the WEIGHTED moments, so
-    * integer weights reproduce row duplication exactly
-    * (spec-verified), and the same distributed shape holds: one
-    * `treeAggregate` per Newton step, driver CD on p² moments. */
-  private def fitWeightedGlm(df: DataFrame, featureCols: Seq[String],
-                             labelCol: String, weightCol: String,
-                             params: SgdNetParams): SgdNetModel = {
-    import org.apache.spark.sql.functions.col
-    val p = featureCols.size
-    val binomial = params.family == "binomial"
-    val classes: Array[String] =
-      if (binomial) {
-        val cs = df.select(col(labelCol).cast("string")).distinct()
-          .limit(3).collect().map(_.getString(0)).sorted
-        require(cs.length == 2,
-          if (cs.length > 2) "more than two classes in response. Are you looking for family = 'multinomial'?"
-          else "only one class in response.")
-        cs
-      } else Array.empty
-    val yCol =
-      if (binomial) (col(labelCol).cast("string") === classes(1)).cast("double")
-      else col(labelCol).cast("double")
-    val raw = df.select((featureCols.map(c => col(c).cast("double")) ++
-        Seq(yCol, col(weightCol).cast("double"))): _*)
-      .rdd.map { r =>
-        val x = new Array[Double](p)
-        var j = 0
-        while (j < p) { x(j) = r.getDouble(j); j += 1 }
-        (x, r.getDouble(p), r.getDouble(p + 1))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // w == 0 drops the observation (glmnet accepts it); n counts the
-      // kept rows so the sum-to-n normalization runs over them only
-      val (nRows, wSum) = raw.treeAggregate((0L, 0.0))(
-        seqOp = (s, r) => {
-          require(r._3 >= 0, "weights must be non-negative")
-          if (r._3 > 0) (s._1 + 1, s._2 + r._3) else s
-        },
-        combOp = (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
-      require(nRows > 0, "the response (y) is empty.")
-      val norm = nRows.toDouble / wSum
-      // rows carry the PRE-normalized weight: moments divide by n below
-      val rows = raw.filter(_._3 > 0).map(r => (r._1, r._2, r._3 * norm))
-      val g = rows.treeAggregate(new GramStats(p, 1))(
-        seqOp = (s, r) => s.addWeighted(r._1, Array(r._2), r._3),
-        combOp = (a, b) => a.merge(b), depth = 2)
-      val st = SufficientStats.standardize(g, params.standardize, params.intercept)
-      val n = g.n.toDouble
-      val yBar = st.yMean(0) // weighted mean of y
-      if (!binomial) require(yBar > 0, "poisson response must contain positive counts")
-
-      require(params.penaltyFactor == null ||
-        (params.penaltyFactor.length == p && params.penaltyFactor.forall(_ >= 0)),
-        "penaltyFactor must have one non-negative entry per feature")
-      val mean = if (params.intercept) st.xMean else new Array[Double](p)
-      val scale = if (params.standardize) st.xSd else Array.fill(p)(1.0)
-      val a0Null =
-        if (!params.intercept) 0.0
-        else if (binomial) {
-          if (yBar > 0 && yBar < 1) math.log(yBar / (1 - yBar)) else 0.0
-        } else math.log(yBar)
-
-      // one weighted IRLS gram pass at (beta, a0) — shared by the path
-      // solve, the pf==0 projection, and the per-lambda Newton loop
-      def gramAt(beta: Array[Double], a0: Double): WGram =
-        rows.treeAggregate(new WGram(p))(
-          seqOp = (s, xyv) => {
-            val (xr, y, v) = xyv
-            val xs = new Array[Double](p)
-            var j = 0
-            var eta = a0
-            while (j < p) {
-              xs(j) = (xr(j) - mean(j)) / scale(j)
-              eta += xs(j) * beta(j)
-              j += 1
-            }
-            var w = 0.0
-            var z = 0.0
-            if (binomial) {
-              val mu = 1.0 / (1.0 + math.exp(-eta))
-              w = math.max(mu * (1.0 - mu), 1e-5)
-              z = eta + (y - mu) / w
-            } else {
-              val etaC = math.max(math.min(eta, 30.0), -30.0)
-              val mu = math.exp(etaC)
-              w = math.max(mu, 1e-5)
-              z = etaC + (y - mu) / w
-            }
-            val wv = w * v // frequency weight folds into the IRLS weight
-            s.sw += wv; s.swz += wv * z
-            j = 0
-            while (j < p) {
-              val wxj = wv * xs(j)
-              s.swx(j) += wxj
-              s.swxz(j) += wxj * z
-              var i = 0
-              val base = j * (j + 1) / 2
-              while (i <= j) { s.swxx(base + i) += xs(i) * wxj; i += 1 }
-              j += 1
-            }
-            s
-          },
-          combOp = (a, b) => {
-            a.sw += b.sw; a.swz += b.swz
-            var i = 0
-            while (i < a.swx.length) {
-              a.swx(i) += b.swx(i); a.swxz(i) += b.swxz(i); i += 1
-            }
-            i = 0
-            while (i < a.swxx.length) { a.swxx(i) += b.swxx(i); i += 1 }
-            a
-          }, depth = 2)
-
-      val minRatio = if (params.lambdaMinRatio.isNaN)
-        LambdaPath.defaultMinRatio(g.n, p) else params.lambdaMinRatio
-      val (loStd, upStd) = boundsStd(params, scale, 1.0)
-      val lambdas = if (params.lambda != null) params.lambda
-        else {
-          val pf = params.penaltyFactor
-          val pathB =
-            if (pf == null || !pf.contains(0.0)) st.b
-            else Array(pfZeroPathGradient(p, n, pf, params.intercept,
-              a0Init = a0Null, thresh = params.thresh, maxit = params.maxit,
-              gramAt = gramAt, userLo = loStd, userUp = upStd))
-          LambdaPath.build(pathB, params.alpha, params.nlambda, minRatio, pf)
-        }
-
-      val L = lambdas.length
-      val a0Out = Array.ofDim[Double](L, 1)
-      val betaOut = Array.ofDim[Double](L, 1, p)
-      var beta = new Array[Double](p)
-      var a0 = a0Null
-      var passes = 0
-      val newtonTol = math.max(params.thresh * 1e-4, 1e-10)
-
-      // round 17: TRUE dfmax/pmax early stopping on this route — the
-      // first violating path point stops the remaining lambdas' IRLS
-      // cluster passes; the violating point carries forward so the
-      // post-hoc dfTruncate slices the path at it (identical surface)
-      val dfGate = new DfGate(params, p)
-      var dfStop = -1
-      for (l <- 0 until L) if (dfStop >= 0) {
-        a0Out(l)(0) = a0Out(dfStop)(0)
-        betaOut(l)(0) = betaOut(dfStop)(0)
-      } else {
-        var iter = 0
-        var done = false
-        while (iter < 25 && !done) {
-          val wg = gramAt(beta, a0)
-          passes += 1
-          val ninv = 1.0 / n
-          val aM = LinAlg.unpackSym(wg.swxx, p).map(_.map(_ * ninv))
-          val r = CoordinateDescent.solve(aM, wg.swxz.map(_ * ninv),
-            wg.swx.map(_ * ninv), wg.swz * ninv, wg.sw * ninv,
-            lambdas(l), params.alpha, params.intercept, beta,
-            thresh = newtonTol, maxIter = params.maxit,
-            penaltyFactor = params.penaltyFactor,
-            lower = loStd, upper = upStd)
-          var maxD = math.abs(r.a0 - a0)
-          var j = 0
-          while (j < p) {
-            val d = math.abs(r.beta(j) - beta(j)); if (d > maxD) maxD = d; j += 1
-          }
-          beta = r.beta; a0 = r.a0
-          iter += 1
-          if (maxD < math.max(params.thresh * 1e-2, 1e-8)) done = true
-        }
-        for (j <- 0 until p) betaOut(l)(0)(j) = beta(j) / scale(j)
-        a0Out(l)(0) =
-          if (params.intercept) a0 - (0 until p).map(j => betaOut(l)(0)(j) * mean(j)).sum
-          else a0
-        if (!dfGate.admit(j => betaOut(l)(0)(j) != 0.0)) dfStop = l
-      }
-
-      // v-weighted deviance pass for every lambda + the null model
-      val devs = rows.treeAggregate(new Array[Double](L + 1))(
-        seqOp = (acc, xyv) => {
-          val (x, y, v) = xyv
-          def binDev(eta: Double): Double = {
-            val m = math.max(eta, 0.0)
-            2.0 * (m + math.log(math.exp(-m) + math.exp(eta - m)) - y * eta)
-          }
-          def poisDev(mu: Double): Double = {
-            val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-            2.0 * (ylog - (y - mu))
-          }
-          var l = 0
-          while (l < L) {
-            var eta = a0Out(l)(0)
-            val bl = betaOut(l)(0)
-            var j = 0
-            while (j < p) { eta += bl(j) * x(j); j += 1 }
-            acc(l) += v * (if (binomial) binDev(eta)
-              else poisDev(math.exp(math.max(math.min(eta, 30.0), -30.0))))
-            l += 1
-          }
-          acc(L) += v * (if (binomial) binDev(a0Null)
-            else poisDev(if (params.intercept) yBar else 1.0))
-          acc
-        },
-        combOp = (a, b) => { var i = 0; while (i <= L) { a(i) += b(i); i += 1 }; a },
-        depth = 2)
-      passes += 1
-      val nulldev = devs(L)
-      val devRatio = Array.tabulate(L)(l =>
-        if (nulldev > 0) 1.0 - devs(l) / nulldev else 0.0)
-      dfTruncate(new SgdNetModel(params.family, featureCols.toArray,
-        Array(labelCol), classes, lambdas, a0Out, betaOut, nulldev, devRatio,
-        g.n, passes, params), params)
-    } finally { raw.unpersist(blocking = false); () }
   }
 
   /** Relaxed elastic-net path (glmnet `relax = TRUE`): for each lambda,
@@ -2054,343 +1252,612 @@ object SgdNet {
     RelaxedPath(model, olsA0, olsBeta, gamma)
   }
 
-  // ---------------------------------------------------------------- binomial
+  // ------------------------------------------------------- binomial / poisson
 
-  private def fitBinomial(df: DataFrame, featureCols: Seq[String],
-                          labelCol: String, params: SgdNetParams): SgdNetModel = {
-    import org.apache.spark.sql.functions.col
-    require(params.penaltyFactor == null ||
-      (params.penaltyFactor.length == featureCols.size &&
-        params.penaltyFactor.forall(_ >= 0)),
-      "penaltyFactor must have one non-negative entry per feature")
+  /** The two IRLS families: mean, floored IRLS weight and unit deviance
+    * as functions of the linear predictor. Poisson clamps η to ±30
+    * before the mean and the working response; binomial reads η as is. */
+  private[ml] sealed abstract class IrlsFamily(val name: String) extends Serializable {
+    def clampEta(eta: Double): Double
+    def mean(eta: Double): Double
+    def weight(mu: Double): Double
+    /** Deviance of one unit-weight row at linear predictor `eta`. */
+    def unitDeviance(y: Double, eta: Double): Double
+  }
+
+  private[ml] case object Binomial extends IrlsFamily("binomial") {
+    def clampEta(eta: Double): Double = eta
+    def mean(eta: Double): Double = 1.0 / (1.0 + math.exp(-eta))
+    def weight(mu: Double): Double = math.max(mu * (1.0 - mu), 1e-5)
+    // -2 * [y*eta - log(1+e^eta)] in a numerically stable form
+    def unitDeviance(y: Double, eta: Double): Double = {
+      val m = math.max(eta, 0.0)
+      2.0 * (m + math.log(math.exp(-m) + math.exp(eta - m)) - y * eta)
+    }
+  }
+
+  private[ml] case object Poisson extends IrlsFamily("poisson") {
+    def clampEta(eta: Double): Double = math.max(math.min(eta, 30.0), -30.0)
+    def mean(eta: Double): Double = math.exp(eta)
+    def weight(mu: Double): Double = math.max(mu, 1e-5)
+    // 2 [y ln(y/mu) - (y - mu)], 0 ln 0 = 0
+    def unitDeviance(y: Double, eta: Double): Double = {
+      val mu = math.exp(clampEta(eta))
+      val ylog = if (y > 0) y * math.log(y / mu) else 0.0
+      2.0 * (ylog - (y - mu))
+    }
+  }
+
+  /** Weighted IRLS moments of the working response z: Σw, Σwz, Σw·x,
+    * Σw·x·z and the packed Σw·x·x'. */
+  private[ml] final class WGram(p: Int) extends Serializable {
+    var sw = 0.0; var swz = 0.0
+    val swx = new Array[Double](p)
+    val swxz = new Array[Double](p)
+    val swxx = new Array[Double](LinAlg.triSize(p))
+    def merge(o: WGram): WGram = {
+      sw += o.sw; swz += o.swz
+      var i = 0
+      while (i < swx.length) { swx(i) += o.swx(i); swxz(i) += o.swxz(i); i += 1 }
+      i = 0
+      while (i < swxx.length) { swxx(i) += o.swxx(i); i += 1 }
+      this
+    }
+  }
+
+  /** One dense GLM row: features, response, offset (0.0 without one)
+    * and weight (1.0 without one, else rescaled to sum to n). Primitive
+    * fields: a cached row is one object and one array, nothing boxed. */
+  private[ml] final case class GlmRow(x: Array[Double], y: Double,
+                                      off: Double, w: Double)
+
+  /** The CSR twin of [[GlmRow]]: nonzero indices and values of x. */
+  private[ml] final case class CsrRow(idx: Array[Int], vals: Array[Double],
+                                      y: Double, off: Double, w: Double)
+
+  /** The rows of one binomial/poisson fit. Every row carries
+    * (x, y, offset, weight): offset 0.0 and weight 1.0 when the caller
+    * gives none, weights already rescaled to sum to n. A zero offset
+    * and a unit weight leave every pass bit-identical to one that never
+    * read them. One pass kernel per statistic for each row kind. */
+  private[ml] sealed trait IrlsRows {
+    def p: Int
+    def unpersist(): Unit
+    /** (y, offset, weight) of every row. */
+    def yow: RDD[(Double, Double, Double)]
+    /** Weighted moments of (x, y) and, with `offsetSums`, Σv·e^off and
+      * Σv·off (else 0.0) in one pass. */
+    def moments(offsetSums: Boolean): (GramStats, Double, Double)
+    /** One IRLS pass at η = off + a0 + xs·β: the moments of the working
+      * response z − off on the standardized scale, so the solve fits
+      * exactly a0 + xs·β. */
+    def gram(fam: IrlsFamily, mean: Array[Double], scale: Array[Double],
+             beta: Array[Double], a0: Double): WGram
+    /** (1/n)·Σ xs_j·v·(y − μ) at the null η = off + a0: the gradient
+      * λ_max reads when the null mean varies with the offset. */
+    def nullGradient(fam: IrlsFamily, mean: Array[Double],
+                     scale: Array[Double], a0: Double, n: Double): Array[Double]
+    /** One pass: the v-weighted deviance at η = off + a0 + x·β of every
+      * path point (ORIGINAL scale coefficients, [L][1] and [L][1][p]). */
+    def deviance(fam: IrlsFamily, a0: Array[Array[Double]],
+                 beta: Array[Array[Array[Double]]]): Array[Double]
+  }
+
+  private[ml] final case class DenseRows(
+      rdd: RDD[GlmRow], p: Int) extends IrlsRows {
+    def unpersist(): Unit = { rdd.unpersist(blocking = false); () }
+    def yow: RDD[(Double, Double, Double)] = rdd.map(r => (r.y, r.off, r.w))
+
+    def moments(offsetSums: Boolean): (GramStats, Double, Double) = {
+      val p = this.p
+      rdd.treeAggregate((new GramStats(p, 1), 0.0, 0.0))(
+        seqOp = (s, r) => {
+          s._1.addWeighted(r.x, Array(r.y), r.w)
+          if (!offsetSums) s
+          else (s._1, s._2 + r.w * math.exp(math.max(math.min(r.off, 30.0), -30.0)),
+            s._3 + r.w * r.off)
+        },
+        combOp = (a, b) => (a._1.merge(b._1), a._2 + b._2, a._3 + b._3),
+        depth = 2)
+    }
+
+    def gram(fam: IrlsFamily, mean: Array[Double], scale: Array[Double],
+             beta: Array[Double], a0: Double): WGram = {
+      val p = this.p
+      rdd.treeAggregate(new WGram(p))(
+        seqOp = (s, r) => {
+          val xr = r.x; val y = r.y; val off = r.off; val v = r.w
+          val xs = new Array[Double](p)
+          var j = 0
+          var eta = a0 + off
+          while (j < p) {
+            xs(j) = (xr(j) - mean(j)) / scale(j)
+            eta += xs(j) * beta(j)
+            j += 1
+          }
+          val e = fam.clampEta(eta)
+          val mu = fam.mean(e)
+          val w0 = fam.weight(mu)
+          val z = e + (y - mu) / w0 - off
+          val w = w0 * v // the frequency weight folds into the IRLS weight
+          s.sw += w; s.swz += w * z
+          j = 0
+          while (j < p) {
+            val wxj = w * xs(j)
+            s.swx(j) += wxj
+            s.swxz(j) += wxj * z
+            var i = 0
+            val base = j * (j + 1) / 2
+            while (i <= j) { s.swxx(base + i) += xs(i) * wxj; i += 1 }
+            j += 1
+          }
+          s
+        },
+        combOp = (a, b) => a.merge(b), depth = 2)
+    }
+
+    def nullGradient(fam: IrlsFamily, mean: Array[Double],
+                     scale: Array[Double], a0: Double, n: Double): Array[Double] = {
+      val p = this.p
+      rdd.treeAggregate(new Array[Double](p))(
+        seqOp = (acc, r) => {
+          val xr = r.x; val y = r.y; val off = r.off; val v = r.w
+          val res = v * (y - fam.mean(fam.clampEta(a0 + off)))
+          var j = 0
+          while (j < p) { acc(j) += (xr(j) - mean(j)) / scale(j) * res; j += 1 }
+          acc
+        },
+        combOp = (a, b) => { var i = 0; while (i < p) { a(i) += b(i); i += 1 }; a },
+        depth = 2).map(_ / n)
+    }
+
+    def deviance(fam: IrlsFamily, a0: Array[Array[Double]],
+                 beta: Array[Array[Array[Double]]]): Array[Double] = {
+      val p = this.p
+      val L = a0.length
+      rdd.treeAggregate(new Array[Double](L))(
+        seqOp = (acc, r) => {
+          val x = r.x; val y = r.y; val off = r.off; val v = r.w
+          var l = 0
+          while (l < L) {
+            var eta = a0(l)(0) + off
+            val bl = beta(l)(0)
+            var j = 0
+            while (j < p) { eta += bl(j) * x(j); j += 1 }
+            acc(l) += v * fam.unitDeviance(y, eta)
+            l += 1
+          }
+          acc
+        },
+        combOp = (a, b) => { var i = 0; while (i < L) { a(i) += b(i); i += 1 }; a },
+        depth = 2)
+    }
+  }
+
+  /** CSR rows (idx, vals, y, offset, weight). Every pass accumulates
+    * UNCENTERED sums over each row's nonzeros only (O(nnz²) per row for
+    * the gram) and centers and standardizes algebraically after the
+    * pass, so the sparse matrix is never densified:
+    *   Σw·xs_i·xs_j = (Σw·x_i·x_j − m_i·Σw·x_j − m_j·Σw·x_i + m_i·m_j·Σw)/(s_i·s_j)
+    * and the linear predictor takes the per-pass scalar
+    * a0 − Σ_j m_j·β_j/s_j, O(nnz) per row. */
+  private[ml] final case class CsrRows(
+      rdd: RDD[CsrRow], p: Int) extends IrlsRows {
+    def unpersist(): Unit = { rdd.unpersist(blocking = false); () }
+    def yow: RDD[(Double, Double, Double)] = rdd.map(r => (r.y, r.off, r.w))
+
+    def moments(offsetSums: Boolean): (GramStats, Double, Double) = {
+      val p = this.p
+      rdd.treeAggregate((new GramStats(p, 1), 0.0, 0.0))(
+        seqOp = (s, r) => {
+          s._1.addSparseWeighted(r.idx, r.vals, Array(r.y), r.w)
+          if (!offsetSums) s
+          else (s._1, s._2 + r.w * math.exp(math.max(math.min(r.off, 30.0), -30.0)),
+            s._3 + r.w * r.off)
+        },
+        combOp = (a, b) => (a._1.merge(b._1), a._2 + b._2, a._3 + b._3),
+        depth = 2)
+    }
+
+    def gram(fam: IrlsFamily, mean: Array[Double], scale: Array[Double],
+             beta: Array[Double], a0: Double): WGram = {
+      val p = this.p
+      val bOverS = Array.tabulate(p)(j => beta(j) / scale(j))
+      var cOff = a0
+      var j0 = 0
+      while (j0 < p) { cOff -= mean(j0) * bOverS(j0); j0 += 1 }
+      val c0 = cOff
+      val bc = rdd.sparkContext.broadcast(bOverS)
+      val wg = rdd.treeAggregate(new WGram(p))(
+        seqOp = (s, r) => {
+          val idx = r.idx; val vals = r.vals; val y = r.y; val off = r.off; val v = r.w
+          val bos = bc.value
+          var eta = c0 + off
+          var i = 0
+          while (i < idx.length) { eta += vals(i) * bos(idx(i)); i += 1 }
+          val e = fam.clampEta(eta)
+          val mu = fam.mean(e)
+          val w0 = fam.weight(mu)
+          val z = e + (y - mu) / w0 - off
+          val w = w0 * v
+          s.sw += w; s.swz += w * z
+          i = 0
+          while (i < idx.length) {
+            val j = idx(i)
+            val wxj = w * vals(i)
+            s.swx(j) += wxj
+            s.swxz(j) += wxj * z
+            var m = 0
+            while (m <= i) {
+              s.swxx(LinAlg.triIdx(idx(m), j)) += wxj * vals(m)
+              m += 1
+            }
+            i += 1
+          }
+          s
+        },
+        combOp = (a, b) => a.merge(b), depth = 2)
+      val std = new WGram(p)
+      std.sw = wg.sw; std.swz = wg.swz
+      var j = 0
+      while (j < p) {
+        std.swx(j) = (wg.swx(j) - mean(j) * wg.sw) / scale(j)
+        std.swxz(j) = (wg.swxz(j) - mean(j) * wg.swz) / scale(j)
+        var i = 0
+        while (i <= j) {
+          val t = LinAlg.triIdx(i, j)
+          std.swxx(t) = (wg.swxx(t) - mean(i) * wg.swx(j) -
+            mean(j) * wg.swx(i) + mean(i) * mean(j) * wg.sw) /
+            (scale(i) * scale(j))
+          i += 1
+        }
+        j += 1
+      }
+      std
+    }
+
+    def nullGradient(fam: IrlsFamily, mean: Array[Double],
+                     scale: Array[Double], a0: Double, n: Double): Array[Double] = {
+      val p = this.p
+      val acc = rdd.treeAggregate(new Array[Double](p + 1))(
+        seqOp = (s, r) => {
+          val idx = r.idx; val vals = r.vals; val y = r.y; val off = r.off; val v = r.w
+          val res = v * (y - fam.mean(fam.clampEta(a0 + off)))
+          var i = 0
+          while (i < idx.length) { s(idx(i)) += res * vals(i); i += 1 }
+          s(p) += res
+          s
+        },
+        combOp = (a, b) => { var i = 0; while (i <= p) { a(i) += b(i); i += 1 }; a },
+        depth = 2)
+      Array.tabulate(p)(j => (acc(j) - mean(j) * acc(p)) / scale(j) / n)
+    }
+
+    def deviance(fam: IrlsFamily, a0: Array[Array[Double]],
+                 beta: Array[Array[Array[Double]]]): Array[Double] = {
+      val L = a0.length
+      rdd.treeAggregate(new Array[Double](L))(
+        seqOp = (acc, r) => {
+          val idx = r.idx; val vals = r.vals; val y = r.y; val off = r.off; val v = r.w
+          var l = 0
+          while (l < L) {
+            var eta = a0(l)(0) + off
+            val bl = beta(l)(0)
+            var i = 0
+            while (i < idx.length) { eta += bl(idx(i)) * vals(i); i += 1 }
+            acc(l) += v * fam.unitDeviance(y, eta)
+            l += 1
+          }
+          acc
+        },
+        combOp = (a, b) => { var i = 0; while (i < L) { a(i) += b(i); i += 1 }; a },
+        depth = 2)
+    }
+  }
+
+  /** The glmnet weight rules, shared by both row kinds: with a
+    * weight column, w must be non-negative, w = 0 drops the row, and the
+    * kept rows' weights rescale to sum to their count (one count/sum
+    * pre-pass), so every downstream moment is a pure ratio form over n.
+    * Without one the rows pass through (w ≡ 1, no pre-pass). The
+    * returned RDD is persisted MEMORY_AND_DISK. */
+  private def keptRows[R: scala.reflect.ClassTag](raw: RDD[R],
+      weighted: Boolean, w: R => Double,
+      rescale: (R, Double) => R): RDD[R] =
+    if (!weighted) raw.persist(StorageLevel.MEMORY_AND_DISK)
+    else {
+      val (nRows, wSum) = raw.treeAggregate((0L, 0.0))(
+        seqOp = (s, r) => {
+          val v = w(r)
+          require(v >= 0, "weights must be non-negative")
+          if (v > 0) (s._1 + 1, s._2 + v) else s
+        },
+        combOp = (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
+      require(nRows > 0, "the response (y) is empty.")
+      val norm = nRows.toDouble / wSum
+      raw.filter(w(_) > 0).map(rescale(_, norm))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
+
+  /** (x, y, offset, weight) rows for the dense GLM routes: offset
+    * defaults to 0.0, weight to 1.0; [[keptRows]] applies the weight
+    * rules. */
+  private[ml] def glmRows(df: DataFrame, featureCols: Seq[String],
+                          yCol: org.apache.spark.sql.Column,
+                          weightCol: String,
+                          offsetCol: String): RDD[GlmRow] = {
+    import org.apache.spark.sql.functions.{col, lit}
     val p = featureCols.size
-    val classes = df.select(col(labelCol).cast("string")).distinct()
-      .limit(3).collect().map(_.getString(0)).sorted
-    require(classes.length == 2,
-      if (classes.length > 2) "more than two classes in response. Are you looking for family = 'multinomial'?"
-      else "only one class in response.")
-    val positive = classes(1)
-
-    val rows = df.selectExpr(
-        (featureCols.map(c => s"cast(`$c` as double)") :+
-          s"cast(cast(`$labelCol` as string) = '$positive' as double)"): _*)
+    val offC = if (offsetCol == null) lit(0.0) else col(offsetCol).cast("double")
+    val wC = if (weightCol == null) lit(1.0) else col(weightCol).cast("double")
+    // NOT spread (unlike the batched-CV prep): the single-fit IRLS
+    // routes run few enough passes that the extra exchange measured as
+    // a net loss (bench: q_binom_largep 1.05x, q_relaxed_glm_largep
+    // 1.24x with a spread here)
+    val raw = df.select((featureCols.map(c => col(c).cast("double")) ++
+        Seq(yCol, offC, wC)): _*)
       .rdd.map { row =>
         val x = new Array[Double](p)
         var j = 0
         while (j < p) { x(j) = row.getDouble(j); j += 1 }
-        (x, Array(row.getDouble(p)))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-
-    try fitBinomialImpl(rows, featureCols, labelCol, classes, params)
-    finally rows.unpersist(blocking = false)
+        GlmRow(x, row.getDouble(p), row.getDouble(p + 1), row.getDouble(p + 2))
+      }
+    keptRows[GlmRow](raw, weightCol != null, _.w, (r, norm) => r.copy(w = r.w * norm))
   }
 
-  private def fitBinomialImpl(rows: RDD[(Array[Double], Array[Double])],
-                              featureCols: Seq[String], labelCol: String,
-                              classes: Array[String], params: SgdNetParams): SgdNetModel = {
-    val p = featureCols.size
-    val g = SufficientStats.compute(rows, p, 1)
+  /** The CSR twin of [[glmRows]]: (idx, vals, y, offset, weight). */
+  private def csrRows(df: DataFrame, idxCol: String, valCol: String,
+                      yCol: org.apache.spark.sql.Column, weightCol: String,
+                      offsetCol: String): RDD[CsrRow] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val offC = if (offsetCol == null) lit(0.0) else col(offsetCol).cast("double")
+    val wC = if (weightCol == null) lit(1.0) else col(weightCol).cast("double")
+    val raw = df.select(col(idxCol), col(valCol).cast("array<double>"), yCol,
+        offC, wC)
+      .rdd.map { r =>
+        CsrRow(r.getSeq[Int](0).toArray, r.getSeq[Double](1).toArray,
+          r.getDouble(2), r.getDouble(3), r.getDouble(4))
+      }
+    keptRows[CsrRow](raw, weightCol != null, _.w, (r, norm) => r.copy(w = r.w * norm))
+  }
+
+  /** The two sorted class labels of a binomial response; fails on one
+    * class or more than two. */
+  private[ml] def binomialClasses(df: DataFrame, labelCol: String): Array[String] = {
+    import org.apache.spark.sql.functions.col
+    val cs = df.select(col(labelCol).cast("string")).distinct()
+      .limit(3).collect().map(_.getString(0)).sorted
+    require(cs.length == 2,
+      if (cs.length > 2) "more than two classes in response. Are you looking for family = 'multinomial'?"
+      else "only one class in response.")
+    cs
+  }
+
+  /** Family, class labels and response column of a binomial/poisson fit:
+    * binomial models P(label == classes(1)) as a 0/1 column, poisson
+    * reads the label as a count. */
+  private def glmResponse(df: DataFrame, labelCol: String, family: String):
+      (IrlsFamily, Array[String], org.apache.spark.sql.Column) = {
+    import org.apache.spark.sql.functions.col
+    family match {
+      case "binomial" =>
+        val cs = binomialClasses(df, labelCol)
+        (Binomial, cs, (col(labelCol).cast("string") === cs(1)).cast("double"))
+      case "poisson" => (Poisson, Array.empty[String], col(labelCol).cast("double"))
+      case f => throw new IllegalArgumentException(s"not an IRLS family: $f")
+    }
+  }
+
+  /** Dense binomial/poisson fit: every dense entry ([[fit]],
+    * [[fitWeighted]], [[fitWithOffset]], [[fitWithOffsetWeighted]])
+    * lands here, with a null `weightCol` / `offsetCol` when absent. */
+  private def fitDenseGlm(df: DataFrame, featureCols: Seq[String],
+                          labelCol: String, params: SgdNetParams,
+                          weightCol: String = null,
+                          offsetCol: String = null): SgdNetModel = {
+    val (fam, classes, yCol) = glmResponse(df, labelCol, params.family)
+    val rows = DenseRows(glmRows(df, featureCols, yCol, weightCol, offsetCol),
+      featureCols.size)
+    try fitIrls(rows, fam, featureCols.toArray, labelCol, classes, params,
+      weighted = weightCol != null, hasOffset = offsetCol != null)
+    finally rows.unpersist()
+  }
+
+  /** Sparse (CSR) binomial/poisson fit behind [[fitSparse]],
+    * [[fitSparseWeighted]] and [[fitSparseWithOffset]]; feature names
+    * are `V$j`. */
+  private def fitCsrGlm(df: DataFrame, idxCol: String, valCol: String,
+                        dim: Int, labelCol: String, params: SgdNetParams,
+                        weightCol: String = null,
+                        offsetCol: String = null): SgdNetModel = {
+    val (fam, classes, yCol) = glmResponse(df, labelCol, params.family)
+    val rows = CsrRows(csrRows(df, idxCol, valCol, yCol, weightCol, offsetCol),
+      dim)
+    try fitIrls(rows, fam, Array.tabulate(dim)(j => s"V$j"), labelCol, classes,
+      params, weighted = weightCol != null, hasOffset = offsetCol != null)
+    finally rows.unpersist()
+  }
+
+  /** Null-model intercept. Without an offset it is the closed form
+    * logit(ȳ) / ln(ȳ). With one, poisson takes the exposure MLE
+    * ln(Σv·y / Σv·e^off); binomial has no closed form — a0 solves
+    * Σv·σ(a0 + off) = Σv·y — so a Newton loop over
+    * one-scalar-pair passes converges it from logit(ȳ) − mean(off),
+    * which is already the root for a constant offset. */
+  private def nullIntercept(rows: IrlsRows, fam: IrlsFamily, yBar: Double,
+                            n: Double, sumExpOff: Double, sumOff: Double,
+                            hasOffset: Boolean, intercept: Boolean): Double =
+    if (!intercept) 0.0
+    else fam match {
+      case Poisson =>
+        if (hasOffset) math.log(yBar * n / sumExpOff) else math.log(yBar)
+      case Binomial if !hasOffset =>
+        if (yBar > 0 && yBar < 1) math.log(yBar / (1 - yBar)) else 0.0
+      case Binomial =>
+        val yow = rows.yow
+        var a0 = math.log(yBar / (1 - yBar)) - sumOff / n
+        var it = 0
+        var done = false
+        while (it < 25 && !done) {
+          val a = a0
+          val (s1, s2) = yow.treeAggregate((0.0, 0.0))(
+            (s, r) => {
+              val mu = 1.0 / (1.0 + math.exp(-(a + r._2)))
+              (s._1 + r._3 * (r._1 - mu),
+                s._2 + r._3 * math.max(mu * (1.0 - mu), 1e-10))
+            },
+            (u, w) => (u._1 + w._1, u._2 + w._2), depth = 2)
+          val step = s1 / s2
+          a0 += step
+          it += 1
+          if (math.abs(step) < 1e-12) done = true
+        }
+        a0
+    }
+
+  /** Newton (IRLS) steps at one λ from (β, a0): one gram pass per step,
+    * then `solve(A, c, xw, z̄, w̄, warm)` — the penalized WLS subproblem
+    * on the moments divided by n — locally. At most 25 steps,
+    * stopping at max|Δcoef| < max(thresh·1e-2, 1e-8). Returns the final
+    * (β, a0) and the number of passes. */
+  private def newtonSteps(p: Int, n: Double, thresh: Double,
+      gramAt: (Array[Double], Double) => WGram, beta0: Array[Double],
+      a00: Double)(solve: (Array[Array[Double]], Array[Double], Array[Double],
+        Double, Double, Array[Double]) => CoordinateDescent.Result)
+      : (Array[Double], Double, Int) = {
+    var beta = beta0
+    var a0 = a00
+    var iter = 0
+    var done = false
+    while (iter < 25 && !done) {
+      val wg = gramAt(beta, a0)
+      val ninv = 1.0 / n
+      val r = solve(LinAlg.unpackSym(wg.swxx, p).map(_.map(_ * ninv)),
+        wg.swxz.map(_ * ninv), wg.swx.map(_ * ninv), wg.swz * ninv,
+        wg.sw * ninv, beta)
+      var maxD = math.abs(r.a0 - a0)
+      var j = 0
+      while (j < p) {
+        val d = math.abs(r.beta(j) - beta(j)); if (d > maxD) maxD = d; j += 1
+      }
+      beta = r.beta; a0 = r.a0
+      iter += 1
+      if (maxD < math.max(thresh * 1e-2, 1e-8)) done = true
+    }
+    (beta, a0, iter)
+  }
+
+  /** The one binomial/poisson IRLS path, for dense and CSR rows alike:
+    * one `treeAggregate` per Newton step, the penalized WLS solved
+    * locally by CD (strong-rule screened at p ≥ [[ScreenMinP]],
+    * exact by KKT backcheck), warm starts along the path. Every row's
+    * offset enters each linear predictor and its weight folds into each
+    * IRLS weight and deviance term, so standardization, the lambda path,
+    * penalty factors and box limits all apply on the weighted moments.
+    *
+    * λ_max: with penalty-factor zeros the gradient at the unpenalized
+    * sub-fit ([[pfZeroPathGradient]]); else with an offset one gradient
+    * pass at the offset null; else the null covariance of the moments.
+    * A `dfmax`/`pmax` violation stops the path and drops that point.
+    * `npasses` counts the Newton passes plus the deviance pass; the
+    * moments, weight, null-intercept and λ_max passes are setup.
+    * The null deviance is closed form for unweighted binomial without
+    * an offset (reference families.h Binomial::NullDeviance) and read
+    * from the deviance pass otherwise. */
+  private def fitIrls(rows: IrlsRows, fam: IrlsFamily,
+                      featureNames: Array[String], labelCol: String,
+                      classes: Array[String], params: SgdNetParams,
+                      weighted: Boolean, hasOffset: Boolean): SgdNetModel = {
+    val p = rows.p
+    require(params.penaltyFactor == null ||
+      (params.penaltyFactor.length == p && params.penaltyFactor.forall(_ >= 0)),
+      "penaltyFactor must have one non-negative entry per feature")
+    val (g, sumExpOff, sumOff) = rows.moments(offsetSums = hasOffset)
     val st = SufficientStats.standardize(g, params.standardize, params.intercept)
     val n = g.n.toDouble
-    val pBar = st.yMean(0)
+    val yBar = st.yMean(0) // weighted mean of y
+    if (fam == Poisson) require(yBar > 0, "poisson response must contain positive counts")
+    if (fam == Binomial && hasOffset)
+      require(yBar > 0 && yBar < 1, "binomial response must contain both classes")
+    val a0Null = nullIntercept(rows, fam, yBar, n, sumExpOff, sumOff,
+      hasOffset, params.intercept)
 
     val mean = if (params.intercept) st.xMean else new Array[Double](p)
     val scale = if (params.standardize) st.xSd else Array.fill(p)(1.0)
-    // lambda_max from the gradient of the *unpenalized logistic* loss at the
-    // null model: (1/n)|<xs_j, y - pbar>| (glmnet convention). With
-    // penaltyFactor entries of 0 the null model is the UNPENALIZED
-    // sub-fit on those coordinates (same projection the gaussian
-    // pathB applies) — a few extra IRLS passes, only on that edge.
+    val (loStd, upStd) = boundsStd(params, scale, 1.0)
+    def gramAt(beta: Array[Double], a0: Double): WGram =
+      rows.gram(fam, mean, scale, beta, a0)
     val minRatio = if (params.lambdaMinRatio.isNaN)
       LambdaPath.defaultMinRatio(g.n, p) else params.lambdaMinRatio
-    val (loStd0, upStd0) = boundsStd(params, scale, 1.0)
     val lambdas = if (params.lambda != null) params.lambda
       else {
         val pf = params.penaltyFactor
         val pathB =
-          if (pf == null || !pf.contains(0.0)) st.b
-          else Array(pfZeroPathGradient(p, n, pf, params.intercept,
-            a0Init = if (params.intercept && pBar > 0 && pBar < 1)
-              math.log(pBar / (1 - pBar)) else 0.0,
-            thresh = params.thresh, maxit = params.maxit,
-            gramAt = (b, a) => weightedGram(rows, mean, scale, b, a)._1,
-            userLo = loStd0, userUp = upStd0))
+          if (pf != null && pf.contains(0.0))
+            Array(pfZeroPathGradient(p, n, pf, params.intercept,
+              a0Init = a0Null, thresh = params.thresh, maxit = params.maxit,
+              gramAt = gramAt, userLo = loStd, userUp = upStd))
+          else if (hasOffset) Array(rows.nullGradient(fam, mean, scale, a0Null, n))
+          else st.b
         LambdaPath.build(pathB, params.alpha, params.nlambda, minRatio, pf)
       }
-    val sc = rows.sparkContext
-    val bMean = sc.broadcast(mean)
-    val bScale = sc.broadcast(scale)
 
     val L = lambdas.length
     val a0Out = Array.ofDim[Double](L, 1)
     val betaOut = Array.ofDim[Double](L, 1, p)
     var beta = new Array[Double](p) // standardized scale
-    var a0 = if (params.intercept && pBar > 0 && pBar < 1)
-      math.log(pBar / (1 - pBar)) else 0.0
+    var a0 = a0Null
     var passes = 0
-
     val newtonTol = math.max(params.thresh * 1e-4, 1e-10)
-    val (loStd, upStd) = (loStd0, upStd0)
     val dfGate = new DfGate(params, p)
     var cutL = L
     var l = 0
     while (l < L) {
       val lam = lambdas(l)
-      var iter = 0
-      var done = false
-      while (iter < 25 && !done) {
-        val (wg, _) = weightedGram(rows, bMean.value, bScale.value, beta, a0)
-        passes += 1
-        val ninv = 1.0 / n
-        val a = LinAlg.unpackSym(wg.swxx, p).map(_.map(_ * ninv))
-        val c = wg.swxz.map(_ * ninv)
-        val xw = wg.swx.map(_ * ninv)
-        // round 17: strong-rule screen on the per-Newton WLS subproblem
-        // at scale (exact by KKT backcheck — same gate as the gaussian
-        // driver solve; first path point has no lamPrev)
-        val r =
-          if (screenGlm && params.alpha > 0 && p >= ScreenMinP && l > 0)
-            CoordinateDescent.solveScreened(a, c, xw, wg.swz * ninv,
-              wg.sw * ninv, lam, lambdas(l - 1), params.alpha,
-              params.intercept, beta, thresh = newtonTol,
+      val lamPrev = if (l > 0) lambdas(l - 1) else Double.NaN
+      // first path point has no lamPrev to screen from
+      val screen = screenGlm && params.alpha > 0 && p >= ScreenMinP && l > 0
+      val (b, a, steps) = newtonSteps(p, n, params.thresh, gramAt, beta, a0) {
+        (aM, c, xw, zBar, wBar, warm) =>
+          if (screen)
+            CoordinateDescent.solveScreened(aM, c, xw, zBar, wBar, lam, lamPrev,
+              params.alpha, params.intercept, warm, thresh = newtonTol,
               maxIter = params.maxit, penaltyFactor = params.penaltyFactor,
               lower = loStd, upper = upStd)
-          else CoordinateDescent.solve(a, c, xw, wg.swz * ninv, wg.sw * ninv,
-            lam, params.alpha, params.intercept, beta,
-            thresh = newtonTol, maxIter = params.maxit,
-            penaltyFactor = params.penaltyFactor,
-            lower = loStd, upper = upStd)
-        var maxD = math.abs(r.a0 - a0)
-        var j = 0
-        while (j < p) {
-          val d = math.abs(r.beta(j) - beta(j)); if (d > maxD) maxD = d; j += 1
-        }
-        beta = r.beta; a0 = r.a0
-        iter += 1
-        if (maxD < math.max(params.thresh * 1e-2, 1e-8)) done = true
+          else CoordinateDescent.solve(aM, c, xw, zBar, wBar, lam, params.alpha,
+            params.intercept, warm, thresh = newtonTol, maxIter = params.maxit,
+            penaltyFactor = params.penaltyFactor, lower = loStd, upper = upStd)
       }
+      beta = b; a0 = a; passes += steps
+      for (j <- 0 until p) betaOut(l)(0)(j) = beta(j) / scale(j)
+      a0Out(l)(0) =
+        if (params.intercept) a0 - (0 until p).map(j => betaOut(l)(0)(j) * mean(j)).sum
+        else a0
       // glmnet dfmax/pmax: drop the violating point and stop the path
-      if (!dfGate.admit(j => beta(j) != 0.0)) { cutL = l; l = L }
-      else {
-        for (j <- 0 until p) betaOut(l)(0)(j) = beta(j) / scale(j)
-        a0Out(l)(0) =
-          if (params.intercept) a0 - (0 until p).map(j => betaOut(l)(0)(j) * mean(j)).sum
-          else a0
-        l += 1
-      }
+      if (!dfGate.admit(j => betaOut(l)(0)(j) != 0.0)) { cutL = l; l = L }
+      else l += 1
     }
     require(cutL > 0, "dfmax/pmax exclude every path point")
     val lambdasT = lambdas.take(cutL)
     val a0OutT = a0Out.take(cutL)
     val betaOutT = betaOut.take(cutL)
 
-    // null deviance (reference families.h Binomial::NullDeviance):
-    // 2 * sum of logistic losses at the null linear predictor
-    val nullP = if (params.intercept) pBar else 0.5
-    val nulldev = -2.0 * n * (safeXLog(pBar, nullP) + safeXLog(1 - pBar, 1 - nullP))
-
-    // one scoring pass for the whole path -> deviance ratios
-    val devs = pathDeviance(rows, a0OutT, betaOutT)
+    // the null model rides the deviance pass as one more point
+    // (β = 0) unless its deviance has a closed form
+    val closedNull = fam == Binomial && !weighted && !hasOffset
+    val devs =
+      if (closedNull) rows.deviance(fam, a0OutT, betaOutT)
+      else rows.deviance(fam, a0OutT :+ Array(a0Null),
+        betaOutT :+ Array(new Array[Double](p)))
     passes += 1
-    val devRatio = devs.map(d => if (nulldev > 0) 1.0 - d / nulldev else 0.0)
-
-    new SgdNetModel("binomial", featureCols.toArray, Array(labelCol),
-      classes, lambdasT, a0OutT, betaOutT, nulldev, devRatio, g.n, passes, params)
-  }
-
-  // ---------------------------------------------------------------- poisson
-
-  /** Poisson regression with log link — a graft extension beyond the
-    * reference's four families, using the same distributed IRLS shape as
-    * binomial: one `treeAggregate` per Newton step, penalized WLS solved
-    * driver-side by CD. y must be a nonnegative count-like column.
-    */
-  private def fitPoisson(df: DataFrame, featureCols: Seq[String],
-                         labelCol: String, params: SgdNetParams): SgdNetModel = {
-    import org.apache.spark.sql.functions.col
-    val p = featureCols.size
-    val rows = df.select(
-        (featureCols.map(c => col(c).cast("double")) :+ col(labelCol).cast("double")): _*)
-      .rdd.map { row =>
-        val x = new Array[Double](p)
-        var j = 0
-        while (j < p) { x(j) = row.getDouble(j); j += 1 }
-        (x, Array(row.getDouble(p)))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val g = SufficientStats.compute(rows, p, 1)
-      val st = SufficientStats.standardize(g, params.standardize, params.intercept)
-      val n = g.n.toDouble
-      val yBar = st.yMean(0)
-      require(yBar > 0, "poisson response must contain positive counts")
-
-      val mean = if (params.intercept) st.xMean else new Array[Double](p)
-      val scale = if (params.standardize) st.xSd else Array.fill(p)(1.0)
-      val minRatio = if (params.lambdaMinRatio.isNaN)
-        LambdaPath.defaultMinRatio(g.n, p) else params.lambdaMinRatio
-      // penaltyFactor entries of 0: lambda_max comes from the gradient
-      // at the unpenalized sub-fit (glmnet semantics, same projection
-      // the gaussian pathB applies), not the raw null covariance
-      val (loStd, upStd) = boundsStd(params, scale, 1.0)
-      val lambdas = if (params.lambda != null) params.lambda
-        else {
-          val pf = params.penaltyFactor
-          val pathB =
-            if (pf == null || !pf.contains(0.0)) st.b
-            else Array(pfZeroPathGradient(p, n, pf, params.intercept,
-              a0Init = if (params.intercept) math.log(yBar) else 0.0,
-              thresh = params.thresh, maxit = params.maxit,
-              gramAt = (b, a) => poissonGram(rows, mean, scale, b, a),
-              userLo = loStd, userUp = upStd))
-          LambdaPath.build(pathB, params.alpha, params.nlambda, minRatio, pf)
-        }
-      val sc = rows.sparkContext
-      val bMean = sc.broadcast(mean)
-      val bScale = sc.broadcast(scale)
-
-      val L = lambdas.length
-      val a0Out = Array.ofDim[Double](L, 1)
-      val betaOut = Array.ofDim[Double](L, 1, p)
-      var beta = new Array[Double](p)
-      var a0 = if (params.intercept) math.log(yBar) else 0.0
-      var passes = 0
-      val newtonTol = math.max(params.thresh * 1e-4, 1e-10)
-
-      val dfGate = new DfGate(params, p)
-      var cutL = L
-      var l = 0
-      while (l < L) {
-        var iter = 0
-        var done = false
-        while (iter < 25 && !done) {
-          val wg = poissonGram(rows, bMean.value, bScale.value, beta, a0)
-          passes += 1
-          val ninv = 1.0 / n
-          val a = LinAlg.unpackSym(wg.swxx, p).map(_.map(_ * ninv))
-          // round 17: strong-rule screen on the per-Newton WLS
-          // subproblem at scale (exact by KKT backcheck)
-          val r =
-            if (screenGlm && params.alpha > 0 && p >= ScreenMinP && l > 0)
-              CoordinateDescent.solveScreened(a, wg.swxz.map(_ * ninv),
-                wg.swx.map(_ * ninv), wg.swz * ninv, wg.sw * ninv,
-                lambdas(l), lambdas(l - 1), params.alpha, params.intercept,
-                beta, thresh = newtonTol, maxIter = params.maxit,
-                penaltyFactor = params.penaltyFactor,
-                lower = loStd, upper = upStd)
-            else CoordinateDescent.solve(a, wg.swxz.map(_ * ninv),
-              wg.swx.map(_ * ninv), wg.swz * ninv, wg.sw * ninv,
-              lambdas(l), params.alpha, params.intercept, beta,
-              thresh = newtonTol, maxIter = params.maxit,
-              penaltyFactor = params.penaltyFactor,
-              lower = loStd, upper = upStd)
-          var maxD = math.abs(r.a0 - a0)
-          var j = 0
-          while (j < p) {
-            val d = math.abs(r.beta(j) - beta(j)); if (d > maxD) maxD = d; j += 1
-          }
-          beta = r.beta; a0 = r.a0
-          iter += 1
-          if (maxD < math.max(params.thresh * 1e-2, 1e-8)) done = true
-        }
-        // glmnet dfmax/pmax: drop the violating point and stop the path
-        if (!dfGate.admit(j => beta(j) != 0.0)) { cutL = l; l = L }
-        else {
-          for (j <- 0 until p) betaOut(l)(0)(j) = beta(j) / scale(j)
-          a0Out(l)(0) =
-            if (params.intercept) a0 - (0 until p).map(j => betaOut(l)(0)(j) * mean(j)).sum
-            else a0
-          l += 1
-        }
-      }
-      require(cutL > 0, "dfmax/pmax exclude every path point")
-      val lambdasT = lambdas.take(cutL)
-      val a0OutT = a0Out.take(cutL)
-      val betaOutT = betaOut.take(cutL)
-
-      // null deviance: 2 sum[y log(y/muNull) - (y - muNull)], muNull = yBar
-      // (intercept) or 1 (eta = 0)
-      val muNull = if (params.intercept) yBar else 1.0
-      val devs = poissonDeviance(rows, a0OutT, betaOutT, muNull)
-      passes += 1
-      val nulldev = devs.last // last slot carries the null-model deviance
-      val devRatio = Array.tabulate(cutL)(l =>
-        if (nulldev > 0) 1.0 - devs(l) / nulldev else 0.0)
-
-      new SgdNetModel("poisson", featureCols.toArray, Array(labelCol),
-        Array.empty, lambdasT, a0OutT, betaOutT, nulldev, devRatio, g.n, passes, params)
-    } finally rows.unpersist(blocking = false)
-  }
-
-  private def poissonGram(rows: RDD[(Array[Double], Array[Double])],
-                          mean: Array[Double], scale: Array[Double],
-                          beta: Array[Double], a0: Double): WGram = {
-    val p = mean.length
-    rows.treeAggregate(new WGram(p))(
-      seqOp = (s, xy) => {
-        val (xr, y) = xy
-        val xs = new Array[Double](p)
-        var j = 0
-        var eta = a0
-        while (j < p) {
-          xs(j) = (xr(j) - mean(j)) / scale(j)
-          eta += xs(j) * beta(j)
-          j += 1
-        }
-        val etaC = math.max(math.min(eta, 30.0), -30.0)
-        val mu = math.exp(etaC)
-        val w = math.max(mu, 1e-5)
-        val z = etaC + (y(0) - mu) / w
-        s.sw += w; s.swz += w * z
-        j = 0
-        while (j < p) {
-          val wxj = w * xs(j)
-          s.swx(j) += wxj
-          s.swxz(j) += wxj * z
-          var i = 0
-          val base = j * (j + 1) / 2
-          while (i <= j) { s.swxx(base + i) += xs(i) * wxj; i += 1 }
-          j += 1
-        }
-        s
-      },
-      combOp = (a, b) => {
-        a.sw += b.sw; a.swz += b.swz
-        var i = 0
-        while (i < a.swx.length) { a.swx(i) += b.swx(i); a.swxz(i) += b.swxz(i); i += 1 }
-        i = 0
-        while (i < a.swxx.length) { a.swxx(i) += b.swxx(i); i += 1 }
-        a
-      }, depth = 2)
-  }
-
-  /** One pass: deviance for every lambda plus the null model (last slot). */
-  private[ml] def poissonDeviance(rows: RDD[(Array[Double], Array[Double])],
-                              a0: Array[Array[Double]],
-                              beta: Array[Array[Array[Double]]],
-                              muNull: Double): Array[Double] = {
-    val L = a0.length
-    rows.treeAggregate(new Array[Double](L + 1))(
-      seqOp = (acc, xy) => {
-        val (x, y) = xy
-        val p = x.length
-        def devTerm(mu: Double): Double = {
-          val ylog = if (y(0) > 0) y(0) * math.log(y(0) / mu) else 0.0
-          2.0 * (ylog - (y(0) - mu))
-        }
-        var l = 0
-        while (l < L) {
-          var eta = a0(l)(0)
-          var j = 0
-          val bl = beta(l)(0)
-          while (j < p) { eta += bl(j) * x(j); j += 1 }
-          acc(l) += devTerm(math.exp(math.max(math.min(eta, 30.0), -30.0)))
-          l += 1
-        }
-        acc(L) += devTerm(muNull)
-        acc
-      },
-      combOp = (a, b) => { var i = 0; while (i <= L) { a(i) += b(i); i += 1 }; a },
-      depth = 2)
+    val nulldev =
+      if (closedNull) {
+        val nullP = if (params.intercept) yBar else 0.5
+        -2.0 * n * (safeXLog(yBar, nullP) + safeXLog(1 - yBar, 1 - nullP))
+      } else devs(cutL)
+    val devRatio = Array.tabulate(cutL)(l => SgdNetModel.devRatio(devs(l), nulldev))
+    new SgdNetModel(fam.name, featureNames, Array(labelCol), classes, lambdasT,
+      a0OutT, betaOutT, nulldev, devRatio, g.n, passes, params)
   }
 
   private[ml] def safeXLog(x: Double, q: Double): Double =
@@ -2423,27 +1890,11 @@ object SgdNet {
       if (pf(j) == 0.0) {
         if (userUp != null) userUp(j) else Double.PositiveInfinity
       } else 0.0)
-    var beta = new Array[Double](p)
-    var a0 = a0Init
-    var iter = 0
-    var done = false
     val newtonTol = math.max(thresh * 1e-4, 1e-10)
-    while (iter < 25 && !done) {
-      val wg = gramAt(beta, a0)
-      val ninv = 1.0 / n
-      val aM = LinAlg.unpackSym(wg.swxx, p).map(_.map(_ * ninv))
-      val r = CoordinateDescent.solve(aM, wg.swxz.map(_ * ninv),
-        wg.swx.map(_ * ninv), wg.swz * ninv, wg.sw * ninv,
-        0.0, 1.0, intercept, beta, thresh = newtonTol, maxIter = maxit,
-        lower = lo, upper = up)
-      var maxD = math.abs(r.a0 - a0)
-      var j = 0
-      while (j < p) {
-        val d = math.abs(r.beta(j) - beta(j)); if (d > maxD) maxD = d; j += 1
-      }
-      beta = r.beta; a0 = r.a0
-      iter += 1
-      if (maxD < math.max(thresh * 1e-2, 1e-8)) done = true
+    val (beta, a0, _) = newtonSteps(p, n, thresh, gramAt, new Array[Double](p),
+      a0Init) { (aM, c, xw, zBar, wBar, warm) =>
+      CoordinateDescent.solve(aM, c, xw, zBar, wBar, 0.0, 1.0, intercept, warm,
+        thresh = newtonTol, maxIter = maxit, lower = lo, upper = up)
     }
     val wg = gramAt(beta, a0)
     Array.tabulate(p) { j =>
@@ -2568,10 +2019,8 @@ object SgdNet {
           (col(labelCol).cast("double") - col(offsetCol).cast("double"))
             .as(labelCol)): _*)
         fit(adj, featureCols, labelCol, params)
-      case "poisson" => fitPoissonOffset(df, featureCols, labelCol,
-        offsetCol, params)
-      case "binomial" => fitBinomialOffset(df, featureCols, labelCol,
-        offsetCol, params)
+      case "binomial" | "poisson" => fitDenseGlm(df, featureCols, labelCol,
+        params, offsetCol = offsetCol)
       case "multinomial" | "mgaussian" => throw new IllegalArgumentException(
         s"${params.family} takes a MATRIX offset (one column per " +
           "class/response) - use fitMultinomialWithOffset / fitMultiWithOffset")
@@ -2600,10 +2049,8 @@ object SgdNet {
           (col(labelCol).cast("double") - col(offsetCol).cast("double"))
             .as(labelCol) :+ col(weightCol)): _*)
         fitWeighted(adj, featureCols, labelCol, weightCol, params)
-      case "poisson" => fitPoissonOffset(df, featureCols, labelCol,
-        offsetCol, params, weightCol)
-      case "binomial" => fitBinomialOffset(df, featureCols, labelCol,
-        offsetCol, params, weightCol)
+      case "binomial" | "poisson" => fitDenseGlm(df, featureCols, labelCol,
+        params, weightCol, offsetCol)
       case "multinomial" | "mgaussian" => throw new IllegalArgumentException(
         s"${params.family} takes a MATRIX offset (one column per " +
           "class/response) - use fitMultinomialWithOffset / fitMultiWithOffset")
@@ -2642,529 +2089,6 @@ object SgdNet {
       val adj = df.select((featureCols.map(col) ++ adjusted :+ col(weightCol)): _*)
       fitWeightedMulti(adj, featureCols, labelCols, weightCol, params)
     }
-  }
-
-  /** Poisson offset fit; `weightCol` non-null folds frequency weights
-    * v (sum-to-n normalized over kept rows) into every accumulation —
-    * the unweighted call passes vn = 1.0 everywhere, which is
-    * bit-identical to the pre-weights arithmetic. */
-  private def fitPoissonOffset(df: DataFrame, featureCols: Seq[String],
-                               labelCol: String, offsetCol: String,
-                               params: SgdNetParams,
-                               weightCol: String = null): SgdNetModel = {
-    import org.apache.spark.sql.functions.{col, lit}
-    requireNoZeroPf(params, "poisson offset")
-    val p = featureCols.size
-    val wCol = if (weightCol == null) lit(1.0) else col(weightCol).cast("double")
-    val raw = df.select((featureCols.map(c => col(c).cast("double")) ++
-        Seq(col(labelCol).cast("double"), col(offsetCol).cast("double"),
-          wCol)): _*)
-      .rdd.map { row =>
-        val x = Array.tabulate(p)(j => row.getDouble(j))
-        (x, Array(row.getDouble(p), row.getDouble(p + 1), row.getDouble(p + 2)))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val rows =
-        if (weightCol == null) raw
-        else {
-          // w == 0 drops the observation; weights renormalize to sum
-          // to the kept-row count (the fitWeighted convention)
-          val (nRows, wSum) = raw.treeAggregate((0L, 0.0))(
-            seqOp = (s, r) => {
-              require(r._2(2) >= 0, "weights must be non-negative")
-              if (r._2(2) > 0) (s._1 + 1, s._2 + r._2(2)) else s
-            },
-            combOp = (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
-          require(nRows > 0, "the response (y) is empty.")
-          val norm = nRows.toDouble / wSum
-          raw.filter(_._2(2) > 0)
-            .map(r => (r._1, Array(r._2(0), r._2(1), r._2(2) * norm)))
-        }
-      // weighted moments over (x, y) for standardization/lambda;
-      // v-weighted exposure sum for the null intercept
-      val g = rows.treeAggregate(new GramStats(p, 1))(
-        seqOp = (s, r) => s.addWeighted(r._1, Array(r._2(0)), r._2(2)),
-        combOp = (a, b) => a.merge(b), depth = 2)
-      val st = SufficientStats.standardize(g, params.standardize, params.intercept)
-      val n = g.n.toDouble
-      val sumExpOff = rows.treeAggregate(0.0)(
-        (s, r) => s + r._2(2) *
-          math.exp(math.max(math.min(r._2(1), 30.0), -30.0)),
-        _ + _, depth = 2)
-      val sumY = st.yMean(0) * n
-      require(sumY > 0, "poisson response must contain positive counts")
-
-      val mean = if (params.intercept) st.xMean else new Array[Double](p)
-      val scale = if (params.standardize) st.xSd else Array.fill(p)(1.0)
-      val minRatio = if (params.lambdaMinRatio.isNaN)
-        LambdaPath.defaultMinRatio(g.n, p) else params.lambdaMinRatio
-      val lambdas = if (params.lambda != null) params.lambda
-        else {
-          // With a non-constant offset the null-model mean
-          // mu_i = exp(a0Null + off_i) varies per row, so the glmnet
-          // lambda_max is max_j |(1/n) Σ xs_ij (y_i − mu_i)| — st.b (the
-          // offset-IGNORING covariance) would start the path at a lambda
-          // where coefficients are already nonzero. One extra gradient
-          // pass, mirroring the pathB correction on the gaussian path.
-          val a0Null0 = if (params.intercept) math.log(sumY / sumExpOff) else 0.0
-          val bOff = rows.treeAggregate(new Array[Double](p))(
-            seqOp = (acc, xy) => {
-              val (xr, yo) = xy
-              val mu = math.exp(
-                math.max(math.min(a0Null0 + yo(1), 30.0), -30.0))
-              val r = yo(2) * (yo(0) - mu)
-              var j = 0
-              while (j < p) {
-                acc(j) += (xr(j) - mean(j)) / scale(j) * r; j += 1
-              }
-              acc
-            },
-            combOp = (a, b) => {
-              var i = 0; while (i < p) { a(i) += b(i); i += 1 }; a
-            }, depth = 2)
-          LambdaPath.build(Array(bOff.map(_ / n)), params.alpha,
-            params.nlambda, minRatio, params.penaltyFactor)
-        }
-      val sc = rows.sparkContext
-      val bMean = sc.broadcast(mean)
-      val bScale = sc.broadcast(scale)
-
-      val L = lambdas.length
-      val a0Out = Array.ofDim[Double](L, 1)
-      val betaOut = Array.ofDim[Double](L, 1, p)
-      var beta = new Array[Double](p)
-      var a0 = if (params.intercept) math.log(sumY / sumExpOff) else 0.0
-      var passes = 0
-      val newtonTol = math.max(params.thresh * 1e-4, 1e-10)
-      val (loStd, upStd) = boundsStd(params, scale, 1.0)
-
-      // round 17: TRUE dfmax/pmax early stopping on this route — the
-      // first violating path point stops the remaining lambdas' IRLS
-      // cluster passes; the violating point carries forward so the
-      // post-hoc dfTruncate slices the path at it (identical surface)
-      val dfGate = new DfGate(params, p)
-      var dfStop = -1
-      for (l <- 0 until L) if (dfStop >= 0) {
-        a0Out(l)(0) = a0Out(dfStop)(0)
-        betaOut(l)(0) = betaOut(dfStop)(0)
-      } else {
-        var iter = 0
-        var done = false
-        while (iter < 25 && !done) {
-          // IRLS pass at η = off + a0 + xs·β; the WLS target is z − off
-          // so the solver fits exactly a0 + xs·β
-          val wg = rows.treeAggregate(new WGram(p))(
-            seqOp = (s, xy) => {
-              val (xr, yo) = xy
-              val off = yo(1)
-              val xs = new Array[Double](p)
-              var j = 0
-              var eta = a0 + off
-              while (j < p) {
-                xs(j) = (xr(j) - bMean.value(j)) / bScale.value(j)
-                eta += xs(j) * beta(j)
-                j += 1
-              }
-              val etaC = math.max(math.min(eta, 30.0), -30.0)
-              val mu = math.exp(etaC)
-              val w = math.max(mu, 1e-5) * yo(2) // frequency weight folds in
-              val z = etaC + (yo(0) - mu) / math.max(mu, 1e-5) - off
-              s.sw += w; s.swz += w * z
-              j = 0
-              while (j < p) {
-                val wxj = w * xs(j)
-                s.swx(j) += wxj
-                s.swxz(j) += wxj * z
-                var i = 0
-                val base = j * (j + 1) / 2
-                while (i <= j) { s.swxx(base + i) += xs(i) * wxj; i += 1 }
-                j += 1
-              }
-              s
-            },
-            combOp = (a, b) => {
-              a.sw += b.sw; a.swz += b.swz
-              var i = 0
-              while (i < a.swx.length) {
-                a.swx(i) += b.swx(i); a.swxz(i) += b.swxz(i); i += 1
-              }
-              i = 0
-              while (i < a.swxx.length) { a.swxx(i) += b.swxx(i); i += 1 }
-              a
-            }, depth = 2)
-          passes += 1
-          val ninv = 1.0 / n
-          val aM = LinAlg.unpackSym(wg.swxx, p).map(_.map(_ * ninv))
-          val r = CoordinateDescent.solve(aM, wg.swxz.map(_ * ninv),
-            wg.swx.map(_ * ninv), wg.swz * ninv, wg.sw * ninv,
-            lambdas(l), params.alpha, params.intercept, beta,
-            thresh = newtonTol, maxIter = params.maxit,
-            penaltyFactor = params.penaltyFactor,
-            lower = loStd, upper = upStd)
-          var maxD = math.abs(r.a0 - a0)
-          var j = 0
-          while (j < p) {
-            val d = math.abs(r.beta(j) - beta(j)); if (d > maxD) maxD = d; j += 1
-          }
-          beta = r.beta; a0 = r.a0
-          iter += 1
-          if (maxD < math.max(params.thresh * 1e-2, 1e-8)) done = true
-        }
-        for (j <- 0 until p) betaOut(l)(0)(j) = beta(j) / scale(j)
-        a0Out(l)(0) =
-          if (params.intercept) a0 - (0 until p).map(j => betaOut(l)(0)(j) * mean(j)).sum
-          else a0
-        if (!dfGate.admit(j => betaOut(l)(0)(j) != 0.0)) dfStop = l
-      }
-
-      // deviance with per-row offset; null model uses the
-      // exposure-weighted intercept (or bare offset without intercept)
-      val a0Null = if (params.intercept) math.log(sumY / sumExpOff) else 0.0
-      val devs = rows.treeAggregate(new Array[Double](L + 1))(
-        seqOp = (acc, xy) => {
-          val (x, yo) = xy
-          val off = yo(1)
-          def devTerm(mu: Double): Double = {
-            val ylog = if (yo(0) > 0) yo(0) * math.log(yo(0) / mu) else 0.0
-            2.0 * (ylog - (yo(0) - mu))
-          }
-          var l = 0
-          while (l < L) {
-            var eta = a0Out(l)(0) + off
-            var j = 0
-            val bl = betaOut(l)(0)
-            while (j < p) { eta += bl(j) * x(j); j += 1 }
-            acc(l) += yo(2) *
-              devTerm(math.exp(math.max(math.min(eta, 30.0), -30.0)))
-            l += 1
-          }
-          acc(L) += yo(2) * devTerm(math.exp(
-            math.max(math.min(a0Null + off, 30.0), -30.0)))
-          acc
-        },
-        combOp = (a, b) => { var i = 0; while (i <= L) { a(i) += b(i); i += 1 }; a },
-        depth = 2)
-      passes += 1
-      val nulldev = devs(L)
-      val devRatio = Array.tabulate(L)(l =>
-        if (nulldev > 0) 1.0 - devs(l) / nulldev else 0.0)
-
-      dfTruncate(new SgdNetModel("poisson", featureCols.toArray,
-        Array(labelCol), Array.empty, lambdas, a0Out, betaOut, nulldev,
-        devRatio, g.n, passes, params), params)
-    } finally { raw.unpersist(blocking = false); () }
-  }
-
-  /** Binomial offset fit (round 16 — glmnet supports `offset` for
-    * every family; gaussian/poisson shipped earlier, this closes
-    * binomial): the [[fitPoissonOffset]] IRLS shape with sigmoid
-    * forms. The null intercept with a per-row offset has no closed
-    * form — a0Null solves Σv·sigmoid(a0 + off) = Σv·y — so a driver
-    * Newton loop over one-scalar-pair data passes converges it
-    * (quadratic; with a CONSTANT offset the start
-    * logit(ȳ) − mean(off) is already the exact root). `weightCol`
-    * folds v (sum-to-n normalized over kept rows) into every
-    * accumulation; the unweighted call passes vn = 1.0 everywhere. */
-  private def fitBinomialOffset(df: DataFrame, featureCols: Seq[String],
-                                labelCol: String, offsetCol: String,
-                                params: SgdNetParams,
-                                weightCol: String = null): SgdNetModel = {
-    import org.apache.spark.sql.functions.{col, lit}
-    requireNoZeroPf(params, "binomial offset")
-    val p = featureCols.size
-    val classes = df.select(col(labelCol).cast("string")).distinct()
-      .limit(3).collect().map(_.getString(0)).sorted
-    require(classes.length == 2,
-      if (classes.length > 2) "more than two classes in response. Are you looking for family = 'multinomial'?"
-      else "only one class in response.")
-    val yCol = (col(labelCol).cast("string") === classes(1)).cast("double")
-    val wCol = if (weightCol == null) lit(1.0) else col(weightCol).cast("double")
-    val raw = df.select((featureCols.map(c => col(c).cast("double")) ++
-        Seq(yCol, col(offsetCol).cast("double"), wCol)): _*)
-      .rdd.map { row =>
-        val x = Array.tabulate(p)(j => row.getDouble(j))
-        (x, Array(row.getDouble(p), row.getDouble(p + 1), row.getDouble(p + 2)))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val rows =
-        if (weightCol == null) raw
-        else {
-          val (nRows, wSum) = raw.treeAggregate((0L, 0.0))(
-            seqOp = (s, r) => {
-              require(r._2(2) >= 0, "weights must be non-negative")
-              if (r._2(2) > 0) (s._1 + 1, s._2 + r._2(2)) else s
-            },
-            combOp = (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
-          require(nRows > 0, "the response (y) is empty.")
-          val norm = nRows.toDouble / wSum
-          raw.filter(_._2(2) > 0)
-            .map(r => (r._1, Array(r._2(0), r._2(1), r._2(2) * norm)))
-        }
-      // weighted moments + Σvn·off in ONE pass (off rides slot p of a
-      // widened stats row is overkill — a paired aggregate suffices)
-      val (g, sumOff) = rows.treeAggregate((new GramStats(p, 1), 0.0))(
-        seqOp = (s, r) =>
-          (s._1.addWeighted(r._1, Array(r._2(0)), r._2(2)),
-            s._2 + r._2(2) * r._2(1)),
-        combOp = (a, b) => (a._1.merge(b._1), a._2 + b._2), depth = 2)
-      val st = SufficientStats.standardize(g, params.standardize, params.intercept)
-      val n = g.n.toDouble
-      val ybar = st.yMean(0)
-      require(ybar > 0 && ybar < 1, "binomial response must contain both classes")
-      var passes = 1
-
-      // null intercept: Newton on a0 with μ = σ(a0 + off_i); the
-      // mean-offset-shifted logit start is exact for a constant offset
-      var a0Null = if (params.intercept)
-        math.log(ybar / (1 - ybar)) - sumOff / n else 0.0
-      if (params.intercept) {
-        var it = 0
-        var done = false
-        while (it < 25 && !done) {
-          val (s1, s2) = rows.treeAggregate((0.0, 0.0))(
-            (s, r) => {
-              val mu = 1.0 / (1.0 + math.exp(-(a0Null + r._2(1))))
-              (s._1 + r._2(2) * (r._2(0) - mu),
-                s._2 + r._2(2) * math.max(mu * (1.0 - mu), 1e-10))
-            },
-            (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
-          passes += 1
-          val step = s1 / s2
-          a0Null += step
-          it += 1
-          if (math.abs(step) < 1e-12) done = true
-        }
-      }
-
-      val mean = if (params.intercept) st.xMean else new Array[Double](p)
-      val scale = if (params.standardize) st.xSd else Array.fill(p)(1.0)
-      val minRatio = if (params.lambdaMinRatio.isNaN)
-        LambdaPath.defaultMinRatio(g.n, p) else params.lambdaMinRatio
-      val lambdas = if (params.lambda != null) params.lambda
-        else {
-          // offset-corrected lambda_max: gradient at the offset null
-          val a0N = a0Null
-          val bOff = rows.treeAggregate(new Array[Double](p))(
-            seqOp = (acc, xy) => {
-              val (xr, yo) = xy
-              val mu = 1.0 / (1.0 + math.exp(-(a0N + yo(1))))
-              val r = yo(2) * (yo(0) - mu)
-              var j = 0
-              while (j < p) {
-                acc(j) += (xr(j) - mean(j)) / scale(j) * r; j += 1
-              }
-              acc
-            },
-            combOp = (a, b) => {
-              var i = 0; while (i < p) { a(i) += b(i); i += 1 }; a
-            }, depth = 2)
-          passes += 1
-          LambdaPath.build(Array(bOff.map(_ / n)), params.alpha,
-            params.nlambda, minRatio, params.penaltyFactor)
-        }
-      val sc = rows.sparkContext
-      val bMean = sc.broadcast(mean)
-      val bScale = sc.broadcast(scale)
-
-      val L = lambdas.length
-      val a0Out = Array.ofDim[Double](L, 1)
-      val betaOut = Array.ofDim[Double](L, 1, p)
-      var beta = new Array[Double](p)
-      var a0 = a0Null
-      val newtonTol = math.max(params.thresh * 1e-4, 1e-10)
-      val (loStd, upStd) = boundsStd(params, scale, 1.0)
-
-      // round 17: TRUE dfmax/pmax early stopping on this route — the
-      // first violating path point stops the remaining lambdas' IRLS
-      // cluster passes; the violating point carries forward so the
-      // post-hoc dfTruncate slices the path at it (identical surface)
-      val dfGate = new DfGate(params, p)
-      var dfStop = -1
-      for (l <- 0 until L) if (dfStop >= 0) {
-        a0Out(l)(0) = a0Out(dfStop)(0)
-        betaOut(l)(0) = betaOut(dfStop)(0)
-      } else {
-        var iter = 0
-        var done = false
-        while (iter < 25 && !done) {
-          // IRLS pass at η = off + a0 + xs·β; the WLS target is z − off
-          val wg = rows.treeAggregate(new WGram(p))(
-            seqOp = (s, xy) => {
-              val (xr, yo) = xy
-              val off = yo(1)
-              val xs = new Array[Double](p)
-              var j = 0
-              var eta = a0 + off
-              while (j < p) {
-                xs(j) = (xr(j) - bMean.value(j)) / bScale.value(j)
-                eta += xs(j) * beta(j)
-                j += 1
-              }
-              val mu = 1.0 / (1.0 + math.exp(-eta))
-              val wr = math.max(mu * (1.0 - mu), 1e-5)
-              val w = wr * yo(2) // frequency weight folds in
-              val z = eta + (yo(0) - mu) / wr - off
-              s.sw += w; s.swz += w * z
-              j = 0
-              while (j < p) {
-                val wxj = w * xs(j)
-                s.swx(j) += wxj
-                s.swxz(j) += wxj * z
-                var i = 0
-                val base = j * (j + 1) / 2
-                while (i <= j) { s.swxx(base + i) += xs(i) * wxj; i += 1 }
-                j += 1
-              }
-              s
-            },
-            combOp = (a, b) => {
-              a.sw += b.sw; a.swz += b.swz
-              var i = 0
-              while (i < a.swx.length) {
-                a.swx(i) += b.swx(i); a.swxz(i) += b.swxz(i); i += 1
-              }
-              i = 0
-              while (i < a.swxx.length) { a.swxx(i) += b.swxx(i); i += 1 }
-              a
-            }, depth = 2)
-          passes += 1
-          val ninv = 1.0 / n
-          val aM = LinAlg.unpackSym(wg.swxx, p).map(_.map(_ * ninv))
-          val r = CoordinateDescent.solve(aM, wg.swxz.map(_ * ninv),
-            wg.swx.map(_ * ninv), wg.swz * ninv, wg.sw * ninv,
-            lambdas(l), params.alpha, params.intercept, beta,
-            thresh = newtonTol, maxIter = params.maxit,
-            penaltyFactor = params.penaltyFactor,
-            lower = loStd, upper = upStd)
-          var maxD = math.abs(r.a0 - a0)
-          var j = 0
-          while (j < p) {
-            val d = math.abs(r.beta(j) - beta(j)); if (d > maxD) maxD = d; j += 1
-          }
-          beta = r.beta; a0 = r.a0
-          iter += 1
-          if (maxD < math.max(params.thresh * 1e-2, 1e-8)) done = true
-        }
-        for (j <- 0 until p) betaOut(l)(0)(j) = beta(j) / scale(j)
-        a0Out(l)(0) =
-          if (params.intercept) a0 - (0 until p).map(j => betaOut(l)(0)(j) * mean(j)).sum
-          else a0
-        if (!dfGate.admit(j => betaOut(l)(0)(j) != 0.0)) dfStop = l
-      }
-
-      // deviance with per-row offset; the null model is the converged
-      // offset null intercept (or the bare offset without intercept)
-      val devs = rows.treeAggregate(new Array[Double](L + 1))(
-        seqOp = (acc, xy) => {
-          val (x, yo) = xy
-          val off = yo(1)
-          def binDev(eta: Double): Double = {
-            val m = math.max(eta, 0.0)
-            2.0 * (m + math.log(math.exp(-m) + math.exp(eta - m)) - yo(0) * eta)
-          }
-          var l = 0
-          while (l < L) {
-            var eta = a0Out(l)(0) + off
-            var j = 0
-            val bl = betaOut(l)(0)
-            while (j < p) { eta += bl(j) * x(j); j += 1 }
-            acc(l) += yo(2) * binDev(eta)
-            l += 1
-          }
-          acc(L) += yo(2) * binDev(a0Null + off)
-          acc
-        },
-        combOp = (a, b) => {
-          var i = 0; while (i <= L) { a(i) += b(i); i += 1 }; a
-        },
-        depth = 2)
-      passes += 1
-      val nulldev = devs(L)
-      val devRatio = Array.tabulate(L)(l =>
-        if (nulldev > 0) 1.0 - devs(l) / nulldev else 0.0)
-
-      dfTruncate(new SgdNetModel("binomial", featureCols.toArray,
-        Array(labelCol), classes, lambdas, a0Out, betaOut, nulldev, devRatio,
-        g.n, passes, params), params)
-    } finally { raw.unpersist(blocking = false); () }
-  }
-
-  private final class WGram(p: Int) extends Serializable {
-    var sw = 0.0; var swz = 0.0; var loglik = 0.0
-    val swx = new Array[Double](p)
-    val swxz = new Array[Double](p)
-    val swxx = new Array[Double](LinAlg.triSize(p))
-  }
-
-  /** One IRLS pass: weighted moments of the working response at (a0, beta). */
-  private def weightedGram(rows: RDD[(Array[Double], Array[Double])],
-                           mean: Array[Double], scale: Array[Double],
-                           beta: Array[Double], a0: Double): (WGram, Long) = {
-    val p = mean.length
-    val acc = rows.treeAggregate(new WGram(p))(
-      seqOp = (s, xy) => {
-        val (xr, y) = xy
-        val xs = new Array[Double](p)
-        var j = 0
-        var eta = a0
-        while (j < p) {
-          xs(j) = (xr(j) - mean(j)) / scale(j)
-          eta += xs(j) * beta(j)
-          j += 1
-        }
-        val mu = 1.0 / (1.0 + math.exp(-eta))
-        val w = math.max(mu * (1.0 - mu), 1e-5)
-        val z = eta + (y(0) - mu) / w
-        s.sw += w; s.swz += w * z
-        j = 0
-        while (j < p) {
-          val wxj = w * xs(j)
-          s.swx(j) += wxj
-          s.swxz(j) += wxj * z
-          var i = 0
-          val base = j * (j + 1) / 2
-          while (i <= j) { s.swxx(base + i) += xs(i) * wxj; i += 1 }
-          j += 1
-        }
-        s
-      },
-      combOp = (a, b) => {
-        a.sw += b.sw; a.swz += b.swz; a.loglik += b.loglik
-        var i = 0
-        while (i < a.swx.length) { a.swx(i) += b.swx(i); a.swxz(i) += b.swxz(i); i += 1 }
-        i = 0
-        while (i < a.swxx.length) { a.swxx(i) += b.swxx(i); i += 1 }
-        a
-      }, depth = 2)
-    (acc, 0L)
-  }
-
-  /** One pass scoring deviance (=-2 loglik) for EVERY lambda at once.
-    * Coefficients are on the ORIGINAL feature scale (a0Out/betaOut), so no
-    * standardization is needed in the scan.
-    */
-  private[ml] def pathDeviance(rows: RDD[(Array[Double], Array[Double])],
-                           a0: Array[Array[Double]],
-                           beta: Array[Array[Array[Double]]]): Array[Double] = {
-    val L = a0.length
-    rows.treeAggregate(new Array[Double](L))(
-      seqOp = (acc, xy) => {
-        val (x, y) = xy
-        var l = 0
-        while (l < L) {
-          var eta = a0(l)(0)
-          var j = 0
-          val bl = beta(l)(0)
-          while (j < x.length) { eta += bl(j) * x(j); j += 1 }
-          // -2 * [y*eta - log(1+e^eta)] in a numerically stable form
-          val m = math.max(eta, 0.0)
-          acc(l) += 2.0 * (m + math.log(math.exp(-m) + math.exp(eta - m)) - y(0) * eta)
-          l += 1
-        }
-        acc
-      },
-      combOp = (a, b) => { var i = 0; while (i < L) { a(i) += b(i); i += 1 }; a },
-      depth = 2)
   }
 
   // ------------------------------------------------------------- multinomial
@@ -3937,7 +2861,7 @@ object SgdNet {
       else -2.0 * n * priors.map(pr => safeXLog(pr, pr)).sum
     val devs = devFn(a0OutT, betaOutT)
     passes += 1
-    val devRatio = devs.map(d => if (nulldev > 0) 1.0 - d / nulldev else 0.0)
+    val devRatio = devs.map(d => SgdNetModel.devRatio(d, nulldev))
 
     new SgdNetModel("multinomial", featureNames, Array(labelCol),
       classes, lambdasT, a0OutT, betaOutT, nulldev, devRatio, nRows, passes, params)

@@ -526,6 +526,15 @@ final class SgdNetModel(
 
 object SgdNetModel {
 
+  /** dev.ratio = 1 − dev / nulldev, floored at 0 (and 0 when the null
+    * deviance is). β = 0 is feasible at every λ (box limits must
+    * straddle 0) and every path starts from the null model, so a fitted
+    * deviance never exceeds the null one: a negative ratio can only be
+    * round-off between two ways of computing one deviance (−6.9e-13
+    * binomial and −2.9e-13 multinomial were seen at λ max). */
+  private[ml] def devRatio(dev: Double, nulldev: Double): Double =
+    if (nulldev > 0) math.max(0.0, 1.0 - dev / nulldev) else 0.0
+
   /** One root-path existence check (the MLlib writer convention):
     * refuse BEFORE anything is written, so a failed save never leaves
     * a partially updated directory. */

@@ -58,7 +58,7 @@ object Drift {
       var nd = 0; var p0 = 0
       while (p0 < m) {
         var q = p0
-        while (q < m && sorted(q) == sorted(p0)) q += 1
+        while (q < m && Stats.sameRankValue(sorted(q), sorted(p0))) q += 1
         dv(nd) = sorted(p0); nd += 1; p0 = q
       }
       val caV = new Array[Double](nd); val cbV = new Array[Double](nd)
@@ -187,7 +187,7 @@ object Drift {
       var nd = 0; var p0 = 0
       while (p0 < m) {
         var q = p0
-        while (q < m && sorted(q) == sorted(p0)) q += 1
+        while (q < m && Stats.sameRankValue(sorted(q), sorted(p0))) q += 1
         dv(nd) = sorted(p0); nd += 1; p0 = q
       }
       val caV = new Array[Long](nd); val cbV = new Array[Long](nd)

@@ -247,7 +247,7 @@ object Quantiles {
       var nd = 0; var p0 = 0
       while (p0 < m) {
         var q = p0
-        while (q < m && sorted(q) == sorted(p0)) q += 1
+        while (q < m && Stats.sameRankValue(sorted(q), sorted(p0))) q += 1
         dv(nd) = sorted(p0); nd += 1; p0 = q
       }
       val wV = new Array[Long](nd)
@@ -365,6 +365,27 @@ object Quantiles {
         col("v").cast("double").as("value"))
   }
 
+  /** Rows grouped on their first column the way Spark's aggregation
+    * keys groups: -0.0 joins 0.0 and every NaN is one group. A java map,
+    * because its boxed-Double equals holds for NaN where Scala's == does
+    * not; groups keep first-seen order. */
+  private def groupRows[V](rows: Array[org.apache.spark.sql.Row])(
+      value: org.apache.spark.sql.Row => V)
+      : java.util.LinkedHashMap[Any, scala.collection.mutable.ArrayBuffer[V]] = {
+    val byG = new java.util.LinkedHashMap[Any,
+      scala.collection.mutable.ArrayBuffer[V]]()
+    rows.foreach { r =>
+      val key = r.get(0) match {
+        case d: Double => if (d == 0.0) 0.0 else if (d.isNaN) Double.NaN else d
+        case f: Float => if (f == 0.0f) 0.0f else if (f.isNaN) Float.NaN else f
+        case k => k
+      }
+      byG.computeIfAbsent(key,
+        _ => scala.collection.mutable.ArrayBuffer.empty[V]) += value(r)
+    }
+    byG
+  }
+
   /** EXACT interpolated grouped quantiles with BOUNDED aggregation
     * state — the 100 TB twin of [[exactByGroup]] (whose `percentile`
     * aggregate buffers every row value per group). The
@@ -393,16 +414,12 @@ object Quantiles {
     // shared interpolation expression — bit-identical rows
     if (Spread.smallByStats(gv, 128L << 20) && gv.count() <= maxLocalRows) {
       val raw = gv.collect()
-      val byG = scala.collection.mutable.LinkedHashMap
-        .empty[Any, scala.collection.mutable.ArrayBuffer[Double]]
-      raw.foreach { r =>
+      val byG = groupRows(raw) { r =>
         val x = r.getDouble(1)
-        byG.getOrElseUpdate(r.get(0),
-          scala.collection.mutable.ArrayBuffer.empty[Double]) +=
-          (if (x == 0.0) 0.0 else x)
+        if (x == 0.0) 0.0 else x
       }
       val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-      byG.foreach { case (g, buf) =>
+      byG.forEach { (g, buf) =>
         val sorted = buf.toArray
         java.util.Arrays.sort(sorted)
         val n = sorted.length.toLong
@@ -442,14 +459,8 @@ object Quantiles {
       val rows = cellsRdd.collect()
       cellsRdd.unpersist(blocking = false)
       val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-      val byG = scala.collection.mutable.HashMap
-        .empty[Any, scala.collection.mutable.ArrayBuffer[(Double, Long)]]
-      rows.foreach { r =>
-        byG.getOrElseUpdate(r.get(0),
-          scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]) +=
-          ((r.getDouble(1), r.getLong(2)))
-      }
-      byG.foreach { case (g, buf) =>
+      val byG = groupRows(rows)(r => (r.getDouble(1), r.getLong(2)))
+      byG.forEach { (g, buf) =>
         val cells = buf.toArray.sortBy(_._1)
         var n = 0L
         cells.foreach(n += _._2)

@@ -46,6 +46,14 @@ object Stats {
     }.toDF("v", "rank2")
   }
 
+  /** Tie test of the local-tier value walks over sorted doubles: NaN != NaN,
+    * so without the second clause a NaN never joins its own run, the
+    * walk stops advancing and either spins or overruns its value array.
+    * Every NaN (sorted last) is ONE tie, the way Spark's grouping and
+    * ranking treat NaN on the distributed tiers. */
+  private[ops] def sameRankValue(x: Double, y: Double): Boolean =
+    x == y || (x.isNaN && y.isNaN)
+
   /** Spearman rank correlation between `colA` and `colB` with exact
     * average-rank tie handling: midranks (×2, integral) per column via
     * the distributed distinct-value prefix scan, joined back by value,
@@ -98,7 +106,7 @@ object Stats {
         var nd = 0; var p0 = 0; var cum = 0L
         while (p0 < m) {
           var q = p0
-          while (q < m && sorted(q) == sorted(p0)) q += 1
+          while (q < m && sameRankValue(sorted(q), sorted(p0))) q += 1
           val t = (q - p0).toLong
           dv(nd) = sorted(p0); r2(nd) = 2 * cum + t + 1
           cum += t; nd += 1; p0 = q
@@ -182,7 +190,9 @@ object Stats {
           var cum = 0L; var p = 0
           while (p < m) {
             var q = p; var t = 0L
-            while (q < m && v(idx(q)) == v(idx(p))) { t += cn(idx(q)); q += 1 }
+            while (q < m && sameRankValue(v(idx(q)), v(idx(p)))) {
+              t += cn(idx(q)); q += 1
+            }
             val r2 = 2 * cum + t + 1
             var k = p
             while (k < q) { out(idx(k)) = r2; k += 1 }

@@ -112,7 +112,7 @@ object MlQueries {
     * end-to-end against the closed form: at lambda large enough to zero
     * the coefficient, the weighted IRLS must land EXACTLY on the
     * intercept-only weighted logistic MLE a0 = logit(sum(w y)/sum(w)) —
-    * the q_binom_null_fit technique through the `fitWeightedGlm` route
+    * the q_binom_null_fit technique through the `SgdNet.fitWeighted` route
     * (one treeAggregate of v-weighted IRLS moments per Newton step). */
   def weightedBinom(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

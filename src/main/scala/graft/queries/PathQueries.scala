@@ -531,7 +531,7 @@ object PathQueries {
   }
 
   /** Binomial fit with a CONSTANT offset, one IRLS step from the
-    * closed-form offset null (round 16 — `SgdNet.fitBinomialOffset`;
+    * closed-form offset null (`SgdNet.fitWithOffset`;
     * glmnet supports offset for every family): with a constant offset
     * c the null intercept is logit(p) − c exactly (the driver Newton
     * null solve starts there and its first step is a zero-gradient

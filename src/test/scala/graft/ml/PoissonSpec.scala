@@ -48,6 +48,9 @@ class PoissonSpec extends SparkSpec {
     assert(m.beta(0)(0).forall(b => math.abs(b) < 1e-9), "null model at lambda_max")
     assert(m.devRatio.last > m.devRatio.head)
     assert(m.nulldev > 0)
+    // every ratio lies in [0, 1], round-off at lambda_max included
+    assert(m.devRatio.forall(r => r >= 0.0 && r <= 1.0),
+      s"devRatio outside [0, 1]: ${m.devRatio.mkString(", ")}")
     // response prediction is exp(link) and nonnegative
     val preds = df.select(m.responseCol(m.nLambda - 1)).collect()
     assert(preds.forall(_.getDouble(0) > 0))

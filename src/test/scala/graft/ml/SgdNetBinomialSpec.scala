@@ -64,6 +64,9 @@ class SgdNetBinomialSpec extends SparkSpec {
     assert(math.abs(m.nulldev - expected) < 1e-6)
     assert(m.devRatio.last > m.devRatio.head)
     assert(m.devRatio.head < 0.02, "lambda_max fit explains ~no deviance")
+    // every ratio lies in [0, 1], round-off at lambda_max included
+    assert(m.devRatio.forall(r => r >= 0.0 && r <= 1.0),
+      s"devRatio outside [0, 1]: ${m.devRatio.mkString(", ")}")
   }
 
   test("binomial rejects >2 or <2 classes") {
@@ -141,7 +144,7 @@ class SgdNetBinomialSpec extends SparkSpec {
   test("sparse IRLS screen: screened == unscreened through the sparse " +
       "chassis (round 18)") {
     // Round 18 put the per-Newton strong rule on the SPARSE GLM routes
-    // (fitSparseGlm / fitSparseGlmOffset) behind the same gates as the
+    // (SgdNet.fitSparse / fitSparseWithOffset) behind the same gates as the
     // dense ones. Chassis-level equality: fit the SAME CSR data with
     // the screen on and off (the screenGlm test seam) — every
     // coefficient and intercept along the path must agree to 1e-9
@@ -184,7 +187,7 @@ class SgdNetBinomialSpec extends SparkSpec {
     assertSame(bOn, bOff, "binomial")
     assert(bOn.beta.exists(_. head.count(_ != 0.0) * 2 < p),
       "path sparse enough to exercise the screen")
-    // poisson + offset: the fitSparseGlmOffset screened site
+    // poisson + offset: the sparse offset screened site
     val pp = SgdNetParams(family = "poisson", alpha = 1.0, nlambda = 6,
       thresh = 1e-9, maxit = 100000)
     val (pOn, pOff) = runBoth(() => SgdNet.fitSparseWithOffset(df, "sidx",

@@ -123,6 +123,9 @@ class SgdNetMultiSpec extends SparkSpec {
       assert(zeros == 0 || zeros == 3,
         s"grouped sparsity violated at lambda $l feature $j ($zeros/3 zero)")
     }
+    // every ratio lies in [0, 1], round-off at lambda_max included
+    assert(m.devRatio.forall(r => r >= 0.0 && r <= 1.0),
+      s"devRatio outside [0, 1]: ${m.devRatio.mkString(", ")}")
     // informative features enter before the noise feature
     val firstEntry = (j: Int) => m.beta.indexWhere(bl => bl.exists(bt => bt(j) != 0.0)) match {
       case -1 => Int.MaxValue

@@ -21,6 +21,11 @@ class LocalCutoverSpec extends SparkSpec {
   private val ys = Seq(2.0, 7.0, 1.0, 8.0, 2.0, 8.0, 1.0, 8.0, 2.0, 8.0,
     4.0, 5.0, 9.0, 0.0, 4.0)
 
+  // xs with NaN at every fifth row: the local-tier value walks must treat
+  // all NaNs as one value, as the Spark tiers do
+  private val xsNaN = xs.zipWithIndex.map { case (v, i) =>
+    if (i % 5 == 1) Double.NaN else v }
+
   private def sortedRows(d: org.apache.spark.sql.DataFrame) =
     d.collect().map(_.toSeq.map(String.valueOf(_)).mkString("|")).sorted.toSeq
 
@@ -37,16 +42,18 @@ class LocalCutoverSpec extends SparkSpec {
   }
 
   test("weightedExactScale: raw tier == cell tier == forced distributed") {
-    val d = xs.zip(ys).zipWithIndex
-      .map { case ((v, w), i) => (i.toLong, v, math.max(w, 1.0).toLong) }
-      .toDF("id", "x", "w")
-    val pm = Seq(100, 500, 900, 1000)
-    val a = Quantiles.weightedExactScale(d, "x", "w", pm)
-    val c = Quantiles.weightedExactScale(d, "x", "w", pm, maxLocalRows = 0L)
-    val b = Quantiles.weightedExactScale(d, "x", "w", pm,
-      maxLocalCells = 0L, maxLocalRows = 0L)
-    assert(sortedRows(a) === sortedRows(c))
-    assert(sortedRows(a) === sortedRows(b))
+    for (vs <- Seq(xs, xsNaN)) {
+      val d = vs.zip(ys).zipWithIndex
+        .map { case ((v, w), i) => (i.toLong, v, math.max(w, 1.0).toLong) }
+        .toDF("id", "x", "w")
+      val pm = Seq(100, 500, 900, 1000)
+      val a = Quantiles.weightedExactScale(d, "x", "w", pm)
+      val c = Quantiles.weightedExactScale(d, "x", "w", pm, maxLocalRows = 0L)
+      val b = Quantiles.weightedExactScale(d, "x", "w", pm,
+        maxLocalCells = 0L, maxLocalRows = 0L)
+      assert(sortedRows(a) === sortedRows(c))
+      assert(sortedRows(a) === sortedRows(b))
+    }
   }
 
   test("exactByGroupScale: raw tier == cell tier == forced distributed") {
@@ -61,21 +68,34 @@ class LocalCutoverSpec extends SparkSpec {
       maxLocalCells = 0L, maxLocalRows = 0L)
     assert(sortedRows(a) === sortedRows(c))
     assert(sortedRows(a) === sortedRows(b))
+    // a DOUBLE group column holding 0.0, -0.0 and NaN: every tier keys
+    // -0.0 with 0.0 and all NaNs as one group, as Spark's grouping does
+    val gd = xs.zipWithIndex
+      .map { case (v, i) => (i.toLong, Seq(0.0, -0.0, Double.NaN, 1.5)(i % 4), v) }
+      .toDF("id", "g", "x")
+    val ra = sortedRows(Quantiles.exactByGroupScale(gd, "g", "x", probs))
+    assert(ra === sortedRows(Quantiles.exactByGroupScale(gd, "g", "x", probs,
+      maxLocalRows = 0L)))
+    assert(ra === sortedRows(Quantiles.exactByGroupScale(gd, "g", "x", probs,
+      maxLocalCells = 0L, maxLocalRows = 0L)))
+    assert(ra.map(_.split('|')(0)).distinct.sorted === Seq("0.0", "1.5", "NaN"))
   }
 
   test("ksStatistic / cvmStatistic / mannWhitneyU / emd1d: path equality") {
     val a = df(xs); val b = df(ys)
     // ks/cvm: raw tier (default), cell tier (maxLocalRows = 0),
-    // distributed (both 0) — r19 added the raw tier
-    assert(Drift.ksStatistic(a, b, "x") ===
-      Drift.ksStatistic(a, b, "x", maxLocalRows = 0L))
-    assert(Drift.ksStatistic(a, b, "x") ===
-      Drift.ksStatistic(a, b, "x", maxLocalCells = 0L, maxLocalRows = 0L))
-    assert(sortedRows(Drift.cvmStatistic(a, b, "x")) ===
-      sortedRows(Drift.cvmStatistic(a, b, "x", maxLocalRows = 0L)))
-    assert(sortedRows(Drift.cvmStatistic(a, b, "x")) ===
-      sortedRows(Drift.cvmStatistic(a, b, "x", maxLocalCells = 0L,
-        maxLocalRows = 0L)))
+    // distributed (both 0); also with NaNs
+    for (an <- Seq(a, df(xsNaN))) {
+      assert(Drift.ksStatistic(an, b, "x") ===
+        Drift.ksStatistic(an, b, "x", maxLocalRows = 0L))
+      assert(Drift.ksStatistic(an, b, "x") ===
+        Drift.ksStatistic(an, b, "x", maxLocalCells = 0L, maxLocalRows = 0L))
+      assert(sortedRows(Drift.cvmStatistic(an, b, "x")) ===
+        sortedRows(Drift.cvmStatistic(an, b, "x", maxLocalRows = 0L)))
+      assert(sortedRows(Drift.cvmStatistic(an, b, "x")) ===
+        sortedRows(Drift.cvmStatistic(an, b, "x", maxLocalCells = 0L,
+          maxLocalRows = 0L)))
+    }
     assert(sortedRows(Drift.mannWhitneyU(a, b, "x")) ===
       sortedRows(Drift.mannWhitneyU(a, b, "x", maxLocalCells = 0L)))
     assert(sortedRows(Drift.emd1d(a, b, "x")) ===
@@ -93,6 +113,15 @@ class LocalCutoverSpec extends SparkSpec {
     assert(sortedRows(Stats.spearman(d, "x", "y")) ===
       sortedRows(Stats.spearman(d, "x", "y", maxLocalCells = 0L,
         maxLocalRows = 0L)))
+    // a column with several NaNs: every NaN is ONE tie (ranked last) on
+    // every tier
+    val dn = xsNaN.zip(ys).zipWithIndex
+      .map { case ((x, y), i) => (i.toLong, x, y) }.toDF("id", "x", "y")
+    val rawNaN = sortedRows(Stats.spearman(dn, "x", "y"))
+    assert(rawNaN === sortedRows(Stats.spearman(dn, "x", "y",
+      maxLocalRows = 0L)))
+    assert(rawNaN === sortedRows(Stats.spearman(dn, "x", "y",
+      maxLocalCells = 0L, maxLocalRows = 0L)))
     val g = xs.zip(ys).zipWithIndex
       .map { case ((x, y), i) => (i.toLong, s"g${(y % 3).toInt}", x) }
       .toDF("id", "g", "x")
