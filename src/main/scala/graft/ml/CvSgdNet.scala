@@ -301,18 +301,16 @@ object CvSgdNet {
             cvMgaussianFromStats(withFold, perFold, total, featureCols,
               labelCols, params.copy(alpha = a), nfolds, measure)
         }
-      } else alphaGrid.map { a =>
+      } else if (params.family == "binomial" || (params.family == "poisson" &&
+          (measure == "deviance" || measure == "mse" || measure == "mae")))
+        cvIrls(df, labelCols.head, params, nfolds, alphaGrid, measure,
+          weighted = false, hasOffset = false, featureCols.toArray,
+          denseIrlsRows(df, featureCols, labelCols.head, nfolds, foldCol, null, null))
+      else alphaGrid.map { a =>
         val p = params.copy(alpha = a)
-        if (params.family == "binomial")
-          cvBinomialShared(df, featureCols, labelCols.head, p, nfolds, foldCol,
-            measure)
-        else if (params.family == "multinomial")
+        if (params.family == "multinomial")
           cvMultinomialShared(df, featureCols, labelCols.head, p, nfolds,
             foldCol, measure)
-        else if (params.family == "poisson" &&
-            (measure == "deviance" || measure == "mse" || measure == "mae"))
-          cvPoissonShared(df, featureCols, labelCols.head, p, nfolds, foldCol,
-            measure)
         else cvGeneric(df, featureCols, labelCols, p, nfolds, measure, foldCol)
       }
     // best path: smallest cvm at its lambdaMin
@@ -519,870 +517,213 @@ object CvSgdNet {
     summarize(params.alpha, lambdas, foldScores, full)
   }
 
-  // --------------------------------------------- binomial, shared-pass CV
+  // -------------------------------- binomial / poisson, fold-tiled IRLS CV
 
-  /** All k fold-models advance TOGETHER: each IRLS round is ONE
-    * `treeAggregate` computing every unconverged fold's weighted Gram
-    * (a row contributes to all train sets except its own fold). The
-    * FULL-data model rides the same passes as virtual fold k (every row
-    * contributes — "train = total minus an empty fold"), so CV costs
-    * ~one binomial fit's worth of data passes INCLUDING the full path
-    * fit, not k+1 of them — the shape that holds at 100 TB. Held-out
-    * deviance for all (fold, lambda) comes from one final scoring pass.
-    * Driver state: (k+1) x p^2.
-    *
-    * The fused full model is numerically the same fixed point as
-    * `SgdNet.fit` (identical per-row IRLS arithmetic — see
-    * `SgdNet.DenseRows.gram` with the `SgdNet.Binomial` family); its stats aggregate in per-fold-then-merge
-    * order, so last-ulp drift from a standalone fit is possible. Fold
-    * scores match the unfused implementation within the convergence
-    * tolerance: the gram-reuse free step below declares convergence
-    * against a gram computed within `thresh`-tolerance of the current
-    * coefficients — the same optimality slack a fresh-pass declaration
-    * carries (its gram is also one sub-`thresh` solve behind the
-    * returned iterate), not a bit-exactness guarantee. */
-  private def cvBinomialShared(df: DataFrame, featureCols: Seq[String],
-                               labelCol: String, params: SgdNetParams,
-                               nfolds: Int, foldCol: Column = null,
-                               measure: String = "deviance"): CvPath = {
-    SgdNet.requireNoZeroPf(params, "shared binomial CV")
-    val p = featureCols.size
-    val classes = SgdNet.binomialClasses(df, labelCol)
-    val positive = classes(1)
+  /** The per-fold paths of one IRLS CV at one alpha: the λ grid, every
+    * model's ORIGINAL-scale coefficients ([F][L] and [F][L][p]; model
+    * `nfolds` is the full data) and the Newton passes spent. */
+  private final case class FoldPaths(lambdas: Array[Double],
+                                     a0: Array[Array[Double]],
+                                     beta: Array[Array[Array[Double]]],
+                                     passes: Int)
 
-    val hashCols = (featureCols :+ labelCol).map(col)
-    // spread a thin (single-file) input before the pass loop: every
-    // shared IRLS round re-scans these persisted blocks, so a one-
-    // partition scan serializes EVERY pass; modest target (the
-    // minhash-kernel lesson: full parallelism floods the per-pass jobs
-    // with tiny tasks). No-op at scale — see graft.ops.Spread.
-    val rows = graft.ops.Spread.thin(df
-      .withColumn("__fold", foldExpr(foldCol, hashCols, nfolds).cast("int"))
-      .select((featureCols.map(c => col(c).cast("double")) :+
-        (col(labelCol).cast("string") === positive).cast("double") :+ col("__fold")): _*),
-      target = math.min(df.sparkSession.sparkContext.defaultParallelism, 8))
-      .rdd.map { r =>
-        val x = new Array[Double](p)
-        var j = 0
-        while (j < p) { x(j) = r.getDouble(j); j += 1 }
-        (r.getInt(p + 1), x, r.getDouble(p))
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    try {
-      // fold count INCLUDING the virtual full-data fold (index nfolds)
-      val F = nfolds + 1
-      // per-fold standardization stats from per-fold moment subtraction
-      val zero = Array.fill(nfolds)(new GramStats(p, 1))
-      val perFold = rows.treeAggregate(zero)(
-        (acc, t) => { acc(t._1).add(t._2, Array(t._3)); acc },
-        (a, b) => { var i = 0; while (i < nfolds) { a(i).merge(b(i)); i += 1 }; a },
-        depth = 2)
-      requireNonEmptyFolds(perFold.map(_.n), nfolds)
-      val total = new GramStats(p, 1)
-      perFold.foreach(total.merge)
-      // index nfolds subtracts an EMPTY fold: train = all rows
-      val perFoldExt = perFold :+ new GramStats(p, 1)
-      val trainStats = Array.tabulate(F) { f =>
-        val tr = new GramStats(p, 1).merge(total).subtract(perFoldExt(f))
-        SufficientStats.standardize(tr, params.standardize, params.intercept)
-      }
-      // lambda grid: user-supplied, or the path from the FULL-data
-      // standardized gradient (what a standalone fit would build)
-      val lambdas =
-        if (params.lambda != null) params.lambda
-        else {
-          val minRatio = if (params.lambdaMinRatio.isNaN)
-            LambdaPath.defaultMinRatio(total.n, p) else params.lambdaMinRatio
-          LambdaPath.build(trainStats(nfolds).b, params.alpha, params.nlambda,
-            minRatio, params.penaltyFactor)
-        }
-      val nTrain = Array.tabulate(F)(f => (total.n - perFoldExt(f).n).toDouble)
-      val means = trainStats.map(st => if (params.intercept) st.xMean else new Array[Double](p))
-      val scales = trainStats.map(st => if (params.standardize) st.xSd else Array.fill(p)(1.0))
-      // per-fold box limits on each fold's own standardized scale
-      val boundsF = scales.map(s => SgdNet.boundsStd(params, s, 1.0))
-      val sc = rows.sparkContext
-      val bMeans = sc.broadcast(means)
-      val bScales = sc.broadcast(scales)
-
-      val L = lambdas.length
-      val beta = Array.fill(F)(new Array[Double](p))
-      val a0 = Array.tabulate(F) { f =>
-        val pb = trainStats(f).yMean(0)
-        if (params.intercept && pb > 0 && pb < 1) math.log(pb / (1 - pb)) else 0.0
-      }
-      // original-scale coefficients per fold per lambda (for scoring pass)
-      val a0Out = Array.ofDim[Double](F, L)
-      val betaOut = Array.ofDim[Double](F, L, p)
-      var sharedPasses = 0
-      // per-fold weighted gram from the fold's most recent data pass —
-      // the gram depends on the coefficients, NOT on lambda, so the
-      // previous lambda's final gram (computed at the warm-start point)
-      // serves as the next lambda's first-iteration gram for free
-      val lastGram = Array.fill[BinWGram](F)(null)
-
-      for (l <- 0 until L) {
-        val active = Array.fill(F)(true)
-        // Free first Newton step (no data pass) against the carried
-        // grams. A fold whose solve does not move AT ALL (maxD == 0 —
-        // typical while beta stays 0 near the top of the path) is
-        // declared converged. The carried gram sits within the
-        // convergence tolerance of the current coefficients (it was
-        // computed at the previous lambda's pre-final-solve iterate,
-        // < thresh away), so this declaration carries the same O(thresh)
-        // optimality slack as a fresh-pass one — coefficients within
-        // thresh of a soft-threshold activation boundary could resolve
-        // differently than an unfused run, which is inside the accuracy
-        // contract already implied by `thresh`. Moving folds proceed to
-        // fresh passes.
-        if (lastGram.forall(_ != null)) {
-          for (f <- 0 until F) {
-            val g = lastGram(f)
-            val ninv = 1.0 / nTrain(f)
-            val aM = LinAlg.unpackSym(g.swxx, p).map(_.map(_ * ninv))
-            val r = CoordinateDescent.solve(aM, g.swxz.map(_ * ninv),
-              g.swx.map(_ * ninv), g.swz * ninv, g.sw * ninv,
-              lambdas(l), params.alpha, params.intercept, beta(f),
-              thresh = math.max(params.thresh * 1e-4, 1e-10),
-              maxIter = params.maxit,
-              penaltyFactor = params.penaltyFactor,
-              lower = boundsF(f)._1, upper = boundsF(f)._2)
-            var maxD = math.abs(r.a0 - a0(f))
-            var j = 0
-            while (j < p) {
-              val d = math.abs(r.beta(j) - beta(f)(j)); if (d > maxD) maxD = d; j += 1
-            }
-            beta(f) = r.beta; a0(f) = r.a0
-            if (maxD == 0.0) active(f) = false
-          }
-        }
-        var iter = 0
-        while (iter < 25 && active.exists(identity)) {
-          val betaSnap = beta.map(_.clone())
-          val a0Snap = a0.clone()
-          val activeSnap = active.clone()
-          sharedPasses += 1
-          // ONE pass: weighted grams for all active folds (the virtual
-          // full-data fold never matches rowFold, so every row feeds it)
-          val grams = rows.treeAggregate(
-            Array.fill(F)(new BinWGram(p)))(
-            (acc, t) => {
-              val (rowFold, xr, y) = t
-              var f = 0
-              while (f < F) {
-                if (f != rowFold && activeSnap(f)) {
-                  val m = bMeans.value(f); val s = bScales.value(f)
-                  val bf = betaSnap(f)
-                  var eta = a0Snap(f)
-                  val xs = new Array[Double](p)
-                  var j = 0
-                  while (j < p) {
-                    xs(j) = (xr(j) - m(j)) / s(j); eta += xs(j) * bf(j); j += 1
-                  }
-                  val mu = 1.0 / (1.0 + math.exp(-eta))
-                  val w = math.max(mu * (1.0 - mu), 1e-5)
-                  val z = eta + (y - mu) / w
-                  acc(f).add(xs, w, z)
-                }
-                f += 1
-              }
-              acc
-            },
-            (a, b) => { var i = 0; while (i < F) { a(i).merge(b(i)); i += 1 }; a },
-            depth = 2)
-          for (f <- 0 until F if active(f)) {
-            val g = grams(f)
-            lastGram(f) = g // fresh gram at betaSnap(f) — carried forward
-            val ninv = 1.0 / nTrain(f)
-            val aM = LinAlg.unpackSym(g.swxx, p).map(_.map(_ * ninv))
-            val r = CoordinateDescent.solve(aM, g.swxz.map(_ * ninv),
-              g.swx.map(_ * ninv), g.swz * ninv, g.sw * ninv,
-              lambdas(l), params.alpha, params.intercept, beta(f),
-              thresh = math.max(params.thresh * 1e-4, 1e-10),
-              maxIter = params.maxit,
-              penaltyFactor = params.penaltyFactor,
-              lower = boundsF(f)._1, upper = boundsF(f)._2)
-            var maxD = math.abs(r.a0 - a0(f))
-            var j = 0
-            while (j < p) {
-              val d = math.abs(r.beta(j) - beta(f)(j)); if (d > maxD) maxD = d; j += 1
-            }
-            beta(f) = r.beta; a0(f) = r.a0
-            if (maxD < math.max(params.thresh * 1e-2, 1e-8)) active(f) = false
-          }
-          iter += 1
-        }
-        for (f <- 0 until F) {
-          for (j <- 0 until p) betaOut(f)(l)(j) = beta(f)(j) / scales(f)(j)
-          a0Out(f)(l) =
-            if (params.intercept)
-              a0(f) - (0 until p).map(j => betaOut(f)(l)(j) * means(f)(j)).sum
-            else a0(f)
-        }
-      }
-
-      // the full-data model assembled from the virtual fold's path — one
-      // extra scoring pass for its deviance ratios, nothing else
-      val a0Full = Array.tabulate(L)(l => Array(a0Out(nfolds)(l)))
-      val betaFull = Array.tabulate(L)(l => Array(betaOut(nfolds)(l).clone()))
-      val pBar = trainStats(nfolds).yMean(0)
-      val nullP = if (params.intercept) pBar else 0.5
-      val nulldev = -2.0 * total.n *
-        (SgdNet.safeXLog(pBar, nullP) + SgdNet.safeXLog(1 - pBar, 1 - nullP))
-      val devs = SgdNet.DenseRows(
-          rows.map(t => SgdNet.GlmRow(t._2, t._3, 0.0, 1.0)), p)
-        .deviance(SgdNet.Binomial, a0Full, betaFull)
-      val devRatio = devs.map(d => SgdNetModel.devRatio(d, nulldev))
-      val full = new SgdNetModel("binomial", featureCols.toArray,
-        Array(labelCol), classes, lambdas, a0Full, betaFull, nulldev,
-        devRatio, total.n, sharedPasses + 2, params)
-
-      // held-out scoring per (fold, lambda) — every row is scored by its
-      // OWN fold's model (trained without it)
-      val bA0 = sc.broadcast(a0Out)
-      val bBeta = sc.broadcast(betaOut)
-      val foldScores = measure match {
-        case "auc" =>
-          // AUC is invariant to the monotone sigmoid, so the linear
-          // predictor ranks directly (and never saturates). ONE typed
-          // projection pass materializes per-row etas for all lambdas;
-          // each lambda then costs one fold-partitioned rank pass over
-          // the (small) distinct-score aggregation.
-          val spark = df.sparkSession
-          import spark.implicits._
-          val scored = spark.createDataFrame(rows.map { t =>
-            val (f, x, y) = t
-            val etas = new Array[Double](L)
-            var l = 0
-            while (l < L) {
-              var eta = bA0.value(f)(l)
-              val bl = bBeta.value(f)(l)
-              var j = 0
-              while (j < p) { eta += bl(j) * x(j); j += 1 }
-              etas(l) = eta
-              l += 1
-            }
-            (f, y, etas)
-          }).toDF("__fold", "__y", "__etas")
-          // ONE rank chain for every (lambda, fold) cell: explode the
-          // eta array and rank group (lambda*nfolds + fold) — 4 jobs
-          // total instead of 4 per lambda
-          val exploded = scored
-            .select(col("__fold"), col("__y"),
-              posexplode(col("__etas")).as(Seq("__l", "__s")))
-            .select((col("__l") * nfolds + col("__fold")).as("__g"),
-              col("__s"), col("__y"))
-          val aucs = aucPerGroup(exploded, L * nfolds)
-          Array.tabulate(nfolds, L)((f, l) => aucs(l * nfolds + f))
-        case _ =>
-          // deviance / mse / mae / class share one accumulation pass
-          val sums = rows.treeAggregate(new Array[Double](nfolds * L))(
-            (acc, t) => {
-              val (f, x, y) = t
-              var l = 0
-              while (l < L) {
-                var eta = bA0.value(f)(l)
-                val bl = bBeta.value(f)(l)
-                var j = 0
-                while (j < p) { eta += bl(j) * x(j); j += 1 }
-                val mu = 1.0 / (1.0 + math.exp(-eta))
-                acc(f * L + l) += (measure match {
-                  case "mse" => 2.0 * (mu - y) * (mu - y)
-                  case "mae" => 2.0 * math.abs(mu - y)
-                  case "class" => if ((if (mu > 0.5) 1.0 else 0.0) != y) 1.0 else 0.0
-                  case "deviance" => // clamped log-loss
-                    val mc = math.min(math.max(mu, 1e-5), 1.0 - 1e-5)
-                    -2.0 * (y * math.log(mc) + (1 - y) * math.log(1 - mc))
-                  case other => // unreachable: fit() validates measures
-                    throw new IllegalArgumentException(s"unknown measure $other")
-                })
-                l += 1
-              }
-              acc
-            },
-            (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
-            depth = 2)
-          Array.tabulate(nfolds, L)((f, l) =>
-            sums(f * L + l) / perFold(f).n.toDouble)
-      }
-      summarize(params.alpha, lambdas, foldScores, full)
-    } finally rows.unpersist(blocking = false)
+  /** Rows of a dense IRLS CV, given the response column: the
+    * `SgdNet.glmRows` rows plus the fold (content hash of features and
+    * label unless `foldCol` is given). */
+  private def denseIrlsRows(df: DataFrame, featureCols: Seq[String],
+                            labelCol: String, nfolds: Int, foldCol: Column,
+                            weightCol: String, offsetCol: String): Column => SgdNet.IrlsRows = {
+    val fold = foldExpr(foldCol, (featureCols :+ labelCol).map(col), nfolds)
+    y => SgdNet.DenseRows(SgdNet.glmRows(df, featureCols, y, weightCol,
+      offsetCol, fold), featureCols.size)
   }
 
-  /** Mutable weighted-gram accumulator used by the shared CV pass. */
-  private final class BinWGram(p: Int) extends Serializable {
-    var sw = 0.0; var swz = 0.0
-    val swx = new Array[Double](p)
-    val swxz = new Array[Double](p)
-    val swxx = new Array[Double](LinAlg.triSize(p))
-    def add(xs: Array[Double], w: Double, z: Double): Unit = {
-      sw += w; swz += w * z
-      var j = 0
-      while (j < p) {
-        val wxj = w * xs(j)
-        swx(j) += wxj
-        swxz(j) += wxj * z
-        var i = 0
-        val base = j * (j + 1) / 2
-        while (i <= j) { swxx(base + i) += xs(i) * wxj; i += 1 }
-        j += 1
-      }
-    }
-    def merge(o: BinWGram): Unit = {
-      sw += o.sw; swz += o.swz
-      var i = 0
-      while (i < swx.length) { swx(i) += o.swx(i); swxz(i) += o.swxz(i); i += 1 }
-      i = 0
-      while (i < swxx.length) { swxx(i) += o.swxx(i); i += 1 }
-    }
+  /** The CSR twin of [[denseIrlsRows]] (fold hash of idx, vals, label). */
+  private def csrIrlsRows(df: DataFrame, idxCol: String, valCol: String,
+                          dim: Int, labelCol: String, nfolds: Int,
+                          foldCol: Column, weightCol: String,
+                          offsetCol: String): Column => SgdNet.IrlsRows = {
+    val fold = foldExpr(foldCol, Seq(col(idxCol), col(valCol), col(labelCol)), nfolds)
+    y => SgdNet.CsrRows(SgdNet.csrRows(df, idxCol, valCol, y, weightCol,
+      offsetCol, fold), dim)
   }
 
-  // ---------------------------------------------- poisson, shared-pass CV
+  /** Builds the rows and the `SgdNet.IrlsSetup` of an IRLS CV (one
+    * moments pass for every fold model and the full-data model), runs
+    * `body` on them with the class labels, and releases the rows. */
+  private def withIrlsSetup[T](df: DataFrame, labelCol: String,
+                               params: SgdNetParams, nfolds: Int,
+                               weighted: Boolean, hasOffset: Boolean,
+                               rowsOf: Column => SgdNet.IrlsRows)(
+      body: (SgdNet.IrlsSetup, Array[String]) => T): T = {
+    val (fam, classes, yCol) = SgdNet.glmResponse(df, labelCol, params.family)
+    val rows = rowsOf(yCol)
+    try body(new SgdNet.IrlsSetup(rows, fam, params, nfolds, weighted, hasOffset), classes)
+    finally rows.unpersist()
+  }
 
-  /** Poisson CV on the [[cvBinomialShared]] chassis: all k fold-models
-    * advance TOGETHER — each IRLS round is ONE `treeAggregate` of every
-    * unconverged fold's weighted Gram (a row contributes to all train
-    * sets except its own fold), with the FULL-data model riding as
-    * virtual fold k. Per-row IRLS arithmetic is identical to
-    * `SgdNet.DenseRows.gram` with `SgdNet.Poisson` (eta clamped to ±30,
-    * mu = exp(eta), w = max(mu, 1e-5), z = eta + (y − mu)/w), so each
-    * fold's path matches a standalone poisson fit on its train subset
-    * within the convergence tolerance. Held-out deviance/mse/mae for
-    * all (fold, lambda) come from one final scoring pass with
-    * [[scoreAllLambdas]] semantics (mu = exp(eta), UNclamped;
-    * deviance = 2[y ln(y/mu) − (y − mu)], 0 ln 0 = 0). */
-  private def cvPoissonShared(df: DataFrame, featureCols: Seq[String],
-                              labelCol: String, params: SgdNetParams,
-                              nfolds: Int, foldCol: Column = null,
-                              measure: String = "deviance"): CvPath = {
-    SgdNet.requireNoZeroPf(params, "shared poisson CV")
-    val p = featureCols.size
-    val hashCols = (featureCols :+ labelCol).map(col)
-    val rows = df
-      .withColumn("__fold", foldExpr(foldCol, hashCols, nfolds).cast("int"))
-      .select((featureCols.map(c => col(c).cast("double")) :+
-        col(labelCol).cast("double") :+ col("__fold")): _*)
-      .rdd.map { r =>
-        val x = new Array[Double](p)
-        var j = 0
-        while (j < p) { x(j) = r.getDouble(j); j += 1 }
-        (r.getInt(p + 1), x, r.getDouble(p))
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  /** The one binomial/poisson CV path, behind [[fit]],
+    * [[fitWeighted]]/[[fitWeightedMulti]], [[fitWithOffset]],
+    * [[fitSparse]] and [[fitSparseWithOffset]], with or without weights
+    * and offset, dense or CSR. All k fold-models advance TOGETHER: each
+    * IRLS round is ONE fold-tiled `IrlsRows.gram` pass for every
+    * unconverged model (a row trains every model but its own fold's),
+    * and the FULL-data model rides the same passes as virtual fold k,
+    * so CV costs about one fit's worth of data passes, not k+1 of them.
+    * Setup, null intercepts, per-fold box limits and the λ grid are
+    * `SgdNet.IrlsSetup`'s — the code `SgdNet.fitIrls` runs on the full
+    * data, penalty-factor zeros included — and one moments pass serves
+    * every alpha. The full model finishes with `IrlsSetup.model`'s
+    * deviance pass; held-out scores take one more pass
+    * ([[heldOutScores]]). Driver state: (k+1) × p². */
+  private def cvIrls(df: DataFrame, labelCol: String, params: SgdNetParams,
+                     nfolds: Int, alphas: Seq[Double], measure: String,
+                     weighted: Boolean, hasOffset: Boolean,
+                     featureNames: Array[String],
+                     rowsOf: Column => SgdNet.IrlsRows): Seq[CvPath] =
+    withIrlsSetup(df, labelCol, params, nfolds, weighted, hasOffset, rowsOf) {
+      (s, classes) =>
+        alphas.map { a =>
+          val pa = params.copy(alpha = a)
+          val fp = foldPaths(s, pa)
+          val L = fp.lambdas.length
+          val full = s.model(featureNames, labelCol, classes, pa, fp.lambdas,
+            Array.tabulate(L)(l => Array(fp.a0(nfolds)(l))),
+            Array.tabulate(L)(l => Array(fp.beta(nfolds)(l))), fp.passes)
+          summarize(a, fp.lambdas,
+            heldOutScores(df.sparkSession, s, measure, fp.a0, fp.beta), full)
+        }
+    }
 
-    try {
-      // fold count INCLUDING the virtual full-data fold (index nfolds)
-      val F = nfolds + 1
-      val zero = Array.fill(nfolds)(new GramStats(p, 1))
-      val perFold = rows.treeAggregate(zero)(
-        (acc, t) => { acc(t._1).add(t._2, Array(t._3)); acc },
-        (a, b) => { var i = 0; while (i < nfolds) { a(i).merge(b(i)); i += 1 }; a },
-        depth = 2)
-      requireNonEmptyFolds(perFold.map(_.n), nfolds)
-      val total = new GramStats(p, 1)
-      perFold.foreach(total.merge)
-      // index nfolds subtracts an EMPTY fold: train = all rows
-      val perFoldExt = perFold :+ new GramStats(p, 1)
-      val trainStats = Array.tabulate(F) { f =>
-        val tr = new GramStats(p, 1).merge(total).subtract(perFoldExt(f))
-        SufficientStats.standardize(tr, params.standardize, params.intercept)
+  /** Stage 1 of every IRLS CV: the penalized path of every model of `s`
+    * at `params.alpha`, warm-started along the λ grid. Per λ, each model
+    * first takes a free Newton step (no data pass) against its gram
+    * carried from the previous λ — the gram depends on the coefficients,
+    * not on λ. A model whose solve does not move AT ALL (typical while β
+    * stays 0 near the top of the path) is converged; the carried gram
+    * sits within the convergence tolerance of the current coefficients,
+    * so this declaration carries the same O(thresh) optimality slack as
+    * a fresh-pass one. Moving models then take fresh passes, one
+    * fold-tiled gram pass per round for all of them, each solve the
+    * penalized WLS of `SgdNet.fitIrls` (at most 25 rounds, stop at
+    * max|Δcoef| < max(thresh·1e-2, 1e-8)). */
+  private def foldPaths(s: SgdNet.IrlsSetup, params: SgdNetParams): FoldPaths = {
+    val p = s.p
+    val F = s.full + 1
+    val lambdas = s.lambdas(params.alpha)
+    val L = lambdas.length
+    val beta = Array.fill(F)(new Array[Double](p)) // standardized scale
+    val a0 = s.a0Null.clone()
+    val a0Out = Array.ofDim[Double](F, L)
+    val betaOut = Array.ofDim[Double](F, L, p)
+    val newtonTol = math.max(params.thresh * 1e-4, 1e-10)
+    val tol = math.max(params.thresh * 1e-2, 1e-8)
+    val lastGram = new Array[SgdNet.WGram](F)
+    var passes = 0
+    for (l <- 0 until L) {
+      // one penalized WLS step of model f on gram g; returns max|Δcoef|
+      def step(f: Int, g: SgdNet.WGram): Double = {
+        val (r, maxD) = SgdNet.wlsStep(g, s.n(f), beta(f), a0(f)) {
+          (aM, c, xw, zBar, wBar, warm) =>
+            CoordinateDescent.solve(aM, c, xw, zBar, wBar, lambdas(l),
+              params.alpha, params.intercept, warm, thresh = newtonTol,
+              maxIter = params.maxit, penaltyFactor = params.penaltyFactor,
+              lower = s.bounds(f)._1, upper = s.bounds(f)._2)
+        }
+        beta(f) = r.beta; a0(f) = r.a0
+        maxD
       }
-      trainStats.foreach(st => require(st.yMean(0) > 0,
-        "poisson response must contain positive counts in every train fold"))
-      val lambdas =
-        if (params.lambda != null) params.lambda
-        else {
-          val minRatio = if (params.lambdaMinRatio.isNaN)
-            LambdaPath.defaultMinRatio(total.n, p) else params.lambdaMinRatio
-          LambdaPath.build(trainStats(nfolds).b, params.alpha, params.nlambda,
-            minRatio, params.penaltyFactor)
+      val active = Array.fill(F)(true)
+      if (lastGram.forall(_ != null))
+        for (f <- 0 until F) if (step(f, lastGram(f)) == 0.0) active(f) = false
+      var iter = 0
+      while (iter < 25 && active.exists(identity)) {
+        val grams = s.gram(beta.clone(), a0.clone(), active.clone())
+        passes += 1
+        for (f <- 0 until F if active(f)) {
+          lastGram(f) = grams(f)
+          if (step(f, grams(f)) < tol) active(f) = false
         }
-      val nTrain = Array.tabulate(F)(f => (total.n - perFoldExt(f).n).toDouble)
-      val means = trainStats.map(st => if (params.intercept) st.xMean else new Array[Double](p))
-      val scales = trainStats.map(st => if (params.standardize) st.xSd else Array.fill(p)(1.0))
-      // per-fold box limits on each fold's own standardized scale
-      val boundsF = scales.map(s => SgdNet.boundsStd(params, s, 1.0))
-      val sc = rows.sparkContext
-      val bMeans = sc.broadcast(means)
-      val bScales = sc.broadcast(scales)
-
-      val L = lambdas.length
-      val beta = Array.fill(F)(new Array[Double](p))
-      val a0 = Array.tabulate(F) { f =>
-        if (params.intercept) math.log(trainStats(f).yMean(0)) else 0.0
+        iter += 1
       }
-      val a0Out = Array.ofDim[Double](F, L)
-      val betaOut = Array.ofDim[Double](F, L, p)
-      var sharedPasses = 0
-      val lastGram = Array.fill[BinWGram](F)(null)
-
-      for (l <- 0 until L) {
-        val active = Array.fill(F)(true)
-        // free first Newton step against the carried grams (see
-        // cvBinomialShared for the optimality-slack argument)
-        if (lastGram.forall(_ != null)) {
-          for (f <- 0 until F) {
-            val g = lastGram(f)
-            val ninv = 1.0 / nTrain(f)
-            val aM = LinAlg.unpackSym(g.swxx, p).map(_.map(_ * ninv))
-            val r = CoordinateDescent.solve(aM, g.swxz.map(_ * ninv),
-              g.swx.map(_ * ninv), g.swz * ninv, g.sw * ninv,
-              lambdas(l), params.alpha, params.intercept, beta(f),
-              thresh = math.max(params.thresh * 1e-4, 1e-10),
-              maxIter = params.maxit,
-              penaltyFactor = params.penaltyFactor,
-              lower = boundsF(f)._1, upper = boundsF(f)._2)
-            var maxD = math.abs(r.a0 - a0(f))
-            var j = 0
-            while (j < p) {
-              val d = math.abs(r.beta(j) - beta(f)(j)); if (d > maxD) maxD = d; j += 1
-            }
-            beta(f) = r.beta; a0(f) = r.a0
-            if (maxD == 0.0) active(f) = false
-          }
-        }
-        var iter = 0
-        while (iter < 25 && active.exists(identity)) {
-          val betaSnap = beta.map(_.clone())
-          val a0Snap = a0.clone()
-          val activeSnap = active.clone()
-          sharedPasses += 1
-          // ONE pass: poisson weighted grams for all active folds
-          val grams = rows.treeAggregate(
-            Array.fill(F)(new BinWGram(p)))(
-            (acc, t) => {
-              val (rowFold, xr, y) = t
-              var f = 0
-              while (f < F) {
-                if (f != rowFold && activeSnap(f)) {
-                  val m = bMeans.value(f); val s = bScales.value(f)
-                  val bf = betaSnap(f)
-                  var eta = a0Snap(f)
-                  val xs = new Array[Double](p)
-                  var j = 0
-                  while (j < p) {
-                    xs(j) = (xr(j) - m(j)) / s(j); eta += xs(j) * bf(j); j += 1
-                  }
-                  val etaC = math.max(math.min(eta, 30.0), -30.0)
-                  val mu = math.exp(etaC)
-                  val w = math.max(mu, 1e-5)
-                  val z = etaC + (y - mu) / w
-                  acc(f).add(xs, w, z)
-                }
-                f += 1
-              }
-              acc
-            },
-            (a, b) => { var i = 0; while (i < F) { a(i).merge(b(i)); i += 1 }; a },
-            depth = 2)
-          for (f <- 0 until F if active(f)) {
-            val g = grams(f)
-            lastGram(f) = g
-            val ninv = 1.0 / nTrain(f)
-            val aM = LinAlg.unpackSym(g.swxx, p).map(_.map(_ * ninv))
-            val r = CoordinateDescent.solve(aM, g.swxz.map(_ * ninv),
-              g.swx.map(_ * ninv), g.swz * ninv, g.sw * ninv,
-              lambdas(l), params.alpha, params.intercept, beta(f),
-              thresh = math.max(params.thresh * 1e-4, 1e-10),
-              maxIter = params.maxit,
-              penaltyFactor = params.penaltyFactor,
-              lower = boundsF(f)._1, upper = boundsF(f)._2)
-            var maxD = math.abs(r.a0 - a0(f))
-            var j = 0
-            while (j < p) {
-              val d = math.abs(r.beta(j) - beta(f)(j)); if (d > maxD) maxD = d; j += 1
-            }
-            beta(f) = r.beta; a0(f) = r.a0
-            if (maxD < math.max(params.thresh * 1e-2, 1e-8)) active(f) = false
-          }
-          iter += 1
-        }
-        for (f <- 0 until F) {
-          for (j <- 0 until p) betaOut(f)(l)(j) = beta(f)(j) / scales(f)(j)
-          a0Out(f)(l) =
-            if (params.intercept)
-              a0(f) - (0 until p).map(j => betaOut(f)(l)(j) * means(f)(j)).sum
-            else a0(f)
-        }
+      for (f <- 0 until F) {
+        val (b, a) = s.original(f, beta(f), a0(f))
+        betaOut(f)(l) = b; a0Out(f)(l) = a
       }
+    }
+    FoldPaths(lambdas, a0Out, betaOut, passes)
+  }
 
-      // full-data model from the virtual fold's path + its deviance pass
-      val a0Full = Array.tabulate(L)(l => Array(a0Out(nfolds)(l)))
-      val betaFull = Array.tabulate(L)(l => Array(betaOut(nfolds)(l).clone()))
-      val muNull = if (params.intercept) trainStats(nfolds).yMean(0) else 1.0
-      val devs = SgdNet.DenseRows(
-          rows.map(t => SgdNet.GlmRow(t._2, t._3, 0.0, 1.0)), p)
-        .deviance(SgdNet.Poisson, a0Full :+ Array(math.log(muNull)),
-          betaFull :+ Array(new Array[Double](p)))
-      val nulldev = devs.last
-      val devRatio = Array.tabulate(L)(l =>
-        SgdNetModel.devRatio(devs(l), nulldev))
-      val full = new SgdNetModel("poisson", featureCols.toArray,
-        Array(labelCol), Array.empty, lambdas, a0Full, betaFull, nulldev,
-        devRatio, total.n, sharedPasses + 2, params)
-
-      // held-out scoring per (fold, lambda): one accumulation pass,
-      // scoreAllLambdas poisson semantics (mu unclamped)
-      val bA0 = sc.broadcast(a0Out)
-      val bBeta = sc.broadcast(betaOut)
-      val sums = rows.treeAggregate(new Array[Double](nfolds * L))(
-        (acc, t) => {
-          val (f, x, y) = t
-          var l = 0
-          while (l < L) {
-            var eta = bA0.value(f)(l)
-            val bl = bBeta.value(f)(l)
-            var j = 0
-            while (j < p) { eta += bl(j) * x(j); j += 1 }
-            val mu = math.exp(eta)
-            acc(f * L + l) += (measure match {
-              case "mse" => (y - mu) * (y - mu)
-              case "mae" => math.abs(y - mu)
-              case "deviance" =>
-                val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-                2.0 * (ylog - (y - mu))
-              case other => // unreachable: fit() routes class/auc away
-                throw new IllegalArgumentException(s"unknown measure $other")
-            })
-            l += 1
+  /** Held-out scores of per-fold coefficient sets: a row of fold f is
+    * scored at η = a0(f)(c) + off + x·β(f)(c) for every column c, by the
+    * model trained without it, the row's own offset included (glmnet
+    * newoffset). One pass for Σv·err/Σv with raw weights, or the rank
+    * AUC per (fold, column) through [[aucPerGroup]] (v-weighted when
+    * weighted; AUC is invariant to the monotone link, so η ranks
+    * directly and never saturates). Returns [nfolds][columns]. */
+  private def heldOutScores(spark: SparkSession, s: SgdNet.IrlsSetup,
+                            measure: String, a0: Array[Array[Double]],
+                            beta: Array[Array[Array[Double]]]): Array[Array[Double]] = {
+    val nfolds = s.nfolds
+    val C = a0(0).length
+    val sc = spark.sparkContext
+    val bA0 = sc.broadcast(a0)
+    val bBeta = sc.broadcast(beta)
+    if (measure == "auc") {
+      val scored = spark.createDataFrame(s.rows.rdd.map { r =>
+        val a = bA0.value(r.fold); val b = bBeta.value(r.fold)
+        (r.fold, r.y, r.w, Array.tabulate(C)(c => r.eta(a(c) + r.off, b(c))))
+      }).toDF("__fold", "__y", "__v", "__etas")
+      // ONE rank chain for every (column, fold) cell: explode the eta
+      // array and rank group column·nfolds + fold
+      val exploded = scored
+        .select(col("__fold"), col("__y"), col("__v"),
+          posexplode(col("__etas")).as(Seq("__c", "__s")))
+        .select((col("__c") * nfolds + col("__fold")).as("__g"),
+          col("__s"), col("__y"), col("__v"))
+      val aucs = aucPerGroup(exploded, C * nfolds,
+        weightCol = if (s.weighted) "__v" else null)
+      Array.tabulate(nfolds, C)((f, c) => aucs(c * nfolds + f))
+    } else {
+      val loss = heldOutLoss(s.fam, measure)
+      val sums = s.rows.rdd.treeAggregate(new Array[Double](nfolds * C))(
+        (acc, r) => {
+          val a = bA0.value(r.fold); val b = bBeta.value(r.fold)
+          val base = r.fold * C
+          var c = 0
+          while (c < C) {
+            acc(base + c) += r.w * loss(r.y, r.eta(a(c) + r.off, b(c)))
+            c += 1
           }
           acc
         },
         (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
         depth = 2)
-      val foldScores = Array.tabulate(nfolds, L)((f, l) =>
-        sums(f * L + l) / perFold(f).n.toDouble)
-      summarize(params.alpha, lambdas, foldScores, full)
-    } finally rows.unpersist(blocking = false)
+      Array.tabulate(nfolds, C)((f, c) => sums(f * C + c) / s.folds(f).sw)
+    }
   }
 
-  // ----------------------------------- weighted binomial/poisson, shared CV
-
-  /** Shared-pass WEIGHTED binomial/poisson CV: the [[cvBinomialShared]]
-    * chassis with the frequency weight v folded into every IRLS
-    * accumulation — each row contributes w·v·norm_f to fold f's gram,
-    * exactly `SgdNet.DenseRows.gram`'s per-row arithmetic tiled per
-    * fold. Each fold's weights renormalize to sum to ITS train-row
-    * count via a driver-side multiplier (v moments are linear), so each
-    * fold-model matches a standalone `SgdNet.fitWeighted` on its train
-    * rows within the convergence tolerance; the full-data model rides
-    * as the virtual fold and finishes with the v-weighted deviance
-    * pass of `SgdNet.fitIrls`. Held-out scores are Σv·err/Σv with raw
-    * v; binomial supports deviance|mse|mae|class|auc (auc via the
-    * continuous-mass weighted rank), poisson deviance|mse|mae. */
-  private def cvWeightedGlmShared(df: DataFrame, featureCols: Seq[String],
-                                  labelCol: String, weightCol: String,
-                                  params: SgdNetParams, nfolds: Int,
-                                  foldCol: Column, measure: String): CvPath = {
-    SgdNet.requireNoZeroPf(params, "shared weighted CV")
-    val p = featureCols.size
-    val binomial = params.family == "binomial"
-    val classes: Array[String] =
-      if (binomial) SgdNet.binomialClasses(df, labelCol) else Array.empty
-    val yCol =
-      if (binomial) (col(labelCol).cast("string") === classes(1)).cast("double")
-      else col(labelCol).cast("double")
-    val hashCols = (featureCols :+ labelCol).map(col)
-    val rows = df
-      .withColumn("__fold", foldExpr(foldCol, hashCols, nfolds).cast("int"))
-      .select((featureCols.map(c => col(c).cast("double")) :+
-        yCol :+ col(weightCol).cast("double") :+ col("__fold")): _*)
-      .rdd.map { r =>
-        val x = new Array[Double](p)
-        var j = 0
-        while (j < p) { x(j) = r.getDouble(j); j += 1 }
-        (r.getInt(p + 2), x, r.getDouble(p), r.getDouble(p + 1))
+  /** Held-out error of one row with response y at linear predictor η:
+    * deviance (binomial: log-loss with μ clamped to [1e-5, 1 − 1e-5];
+    * poisson: the unit deviance), mse and mae (binomial on the one-hot
+    * form, 2(μ − y)² and 2|μ − y|), class (binomial, μ > 0.5). */
+  private def heldOutLoss(fam: SgdNet.IrlsFamily,
+                          measure: String): (Double, Double) => Double = {
+    def mu(eta: Double): Double = fam.mean(fam.clampEta(eta))
+    val k = if (fam == SgdNet.Binomial) 2.0 else 1.0
+    (measure, fam) match {
+      case ("deviance", SgdNet.Binomial) => (y, eta) => {
+        val mc = math.min(math.max(mu(eta), 1e-5), 1.0 - 1e-5)
+        -2.0 * (y * math.log(mc) + (1 - y) * math.log(1 - mc))
       }
-      // v == 0 drops the observation everywhere: from training (glmnet)
-      // AND from the held-out ratio (zero mass in both sums)
-      .map { t => require(t._4 >= 0, "weights must be non-negative"); t }
-      .filter(_._4 > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    try {
-      // fold count INCLUDING the virtual full-data fold (index nfolds)
-      val F = nfolds + 1
-      // ONE pass: per-fold RAW-v weighted moments + per-fold Σv
-      val zero = (Array.fill(nfolds)(new GramStats(p, 1)),
-        new Array[Double](nfolds))
-      val (perFold, wFold) = rows.treeAggregate(zero)(
-        (acc, t) => {
-          acc._1(t._1).addWeighted(t._2, Array(t._3), t._4)
-          acc._2(t._1) += t._4
-          acc
-        },
-        (a, b) => {
-          var i = 0
-          while (i < nfolds) { a._1(i).merge(b._1(i)); a._2(i) += b._2(i); i += 1 }
-          a
-        }, depth = 2)
-      requireNonEmptyFolds(perFold.map(_.n), nfolds)
-      val total = new GramStats(p, 1)
-      perFold.foreach(total.merge)
-      val wTotal = wFold.sum
-      // index nfolds subtracts an EMPTY fold: train = all rows
-      val perFoldExt = perFold :+ new GramStats(p, 1)
-      val wFoldExt = wFold :+ 0.0
-      val nTrain = Array.tabulate(F)(f => (total.n - perFoldExt(f).n).toDouble)
-      // per-fold sum-to-n_train weight normalization (glmnet convention,
-      // per fold — a standalone weighted fit on the train rows uses it)
-      val norms = Array.tabulate(F)(f => nTrain(f) / (wTotal - wFoldExt(f)))
-      val trainStats = Array.tabulate(F) { f =>
-        val tr = new GramStats(p, 1).merge(total).subtract(perFoldExt(f))
-          .scaleWeights(norms(f))
-        SufficientStats.standardize(tr, params.standardize, params.intercept)
-      }
-      if (!binomial) trainStats.foreach(st => require(st.yMean(0) > 0,
-        "poisson response must contain positive counts in every train fold"))
-      val lambdas =
-        if (params.lambda != null) params.lambda
-        else {
-          val minRatio = if (params.lambdaMinRatio.isNaN)
-            LambdaPath.defaultMinRatio(total.n, p) else params.lambdaMinRatio
-          LambdaPath.build(trainStats(nfolds).b, params.alpha, params.nlambda,
-            minRatio, params.penaltyFactor)
-        }
-      val means = trainStats.map(st => if (params.intercept) st.xMean else new Array[Double](p))
-      val scales = trainStats.map(st => if (params.standardize) st.xSd else Array.fill(p)(1.0))
-      // per-fold box limits on each fold's own standardized scale
-      val boundsF = scales.map(s => SgdNet.boundsStd(params, s, 1.0))
-      val sc = rows.sparkContext
-      val bMeans = sc.broadcast(means)
-      val bScales = sc.broadcast(scales)
-      val bNorms = sc.broadcast(norms)
-
-      val L = lambdas.length
-      val beta = Array.fill(F)(new Array[Double](p))
-      val a0 = Array.tabulate(F) { f =>
-        val yb = trainStats(f).yMean(0) // weighted mean of y
-        if (!params.intercept) 0.0
-        else if (binomial) {
-          if (yb > 0 && yb < 1) math.log(yb / (1 - yb)) else 0.0
-        } else math.log(yb)
-      }
-      val a0Out = Array.ofDim[Double](F, L)
-      val betaOut = Array.ofDim[Double](F, L, p)
-      var sharedPasses = 0
-      val lastGram = Array.fill[BinWGram](F)(null)
-
-      for (l <- 0 until L) {
-        val active = Array.fill(F)(true)
-        // free first Newton step against the carried grams (see
-        // cvBinomialShared for the optimality-slack argument)
-        if (lastGram.forall(_ != null)) {
-          for (f <- 0 until F) {
-            val g = lastGram(f)
-            val ninv = 1.0 / nTrain(f)
-            val aM = LinAlg.unpackSym(g.swxx, p).map(_.map(_ * ninv))
-            val r = CoordinateDescent.solve(aM, g.swxz.map(_ * ninv),
-              g.swx.map(_ * ninv), g.swz * ninv, g.sw * ninv,
-              lambdas(l), params.alpha, params.intercept, beta(f),
-              thresh = math.max(params.thresh * 1e-4, 1e-10),
-              maxIter = params.maxit,
-              penaltyFactor = params.penaltyFactor,
-              lower = boundsF(f)._1, upper = boundsF(f)._2)
-            var maxD = math.abs(r.a0 - a0(f))
-            var j = 0
-            while (j < p) {
-              val d = math.abs(r.beta(j) - beta(f)(j)); if (d > maxD) maxD = d; j += 1
-            }
-            beta(f) = r.beta; a0(f) = r.a0
-            if (maxD == 0.0) active(f) = false
-          }
-        }
-        var iter = 0
-        while (iter < 25 && active.exists(identity)) {
-          val betaSnap = beta.map(_.clone())
-          val a0Snap = a0.clone()
-          val activeSnap = active.clone()
-          sharedPasses += 1
-          // ONE pass: v-weighted IRLS grams for all active folds
-          val grams = rows.treeAggregate(
-            Array.fill(F)(new BinWGram(p)))(
-            (acc, t) => {
-              val (rowFold, xr, y, v) = t
-              var f = 0
-              while (f < F) {
-                if (f != rowFold && activeSnap(f)) {
-                  val m = bMeans.value(f); val s = bScales.value(f)
-                  val bf = betaSnap(f)
-                  var eta = a0Snap(f)
-                  val xs = new Array[Double](p)
-                  var j = 0
-                  while (j < p) {
-                    xs(j) = (xr(j) - m(j)) / s(j); eta += xs(j) * bf(j); j += 1
-                  }
-                  var w = 0.0
-                  var z = 0.0
-                  if (binomial) {
-                    val mu = 1.0 / (1.0 + math.exp(-eta))
-                    w = math.max(mu * (1.0 - mu), 1e-5)
-                    z = eta + (y - mu) / w
-                  } else {
-                    val etaC = math.max(math.min(eta, 30.0), -30.0)
-                    val mu = math.exp(etaC)
-                    w = math.max(mu, 1e-5)
-                    z = etaC + (y - mu) / w
-                  }
-                  // frequency weight (fold-normalized) folds into the
-                  // IRLS weight — SgdNet.DenseRows.gram's w·v
-                  acc(f).add(xs, w * v * bNorms.value(f), z)
-                }
-                f += 1
-              }
-              acc
-            },
-            (a, b) => { var i = 0; while (i < F) { a(i).merge(b(i)); i += 1 }; a },
-            depth = 2)
-          for (f <- 0 until F if active(f)) {
-            val g = grams(f)
-            lastGram(f) = g
-            val ninv = 1.0 / nTrain(f)
-            val aM = LinAlg.unpackSym(g.swxx, p).map(_.map(_ * ninv))
-            val r = CoordinateDescent.solve(aM, g.swxz.map(_ * ninv),
-              g.swx.map(_ * ninv), g.swz * ninv, g.sw * ninv,
-              lambdas(l), params.alpha, params.intercept, beta(f),
-              thresh = math.max(params.thresh * 1e-4, 1e-10),
-              maxIter = params.maxit,
-              penaltyFactor = params.penaltyFactor,
-              lower = boundsF(f)._1, upper = boundsF(f)._2)
-            var maxD = math.abs(r.a0 - a0(f))
-            var j = 0
-            while (j < p) {
-              val d = math.abs(r.beta(j) - beta(f)(j)); if (d > maxD) maxD = d; j += 1
-            }
-            beta(f) = r.beta; a0(f) = r.a0
-            if (maxD < math.max(params.thresh * 1e-2, 1e-8)) active(f) = false
-          }
-          iter += 1
-        }
-        for (f <- 0 until F) {
-          for (j <- 0 until p) betaOut(f)(l)(j) = beta(f)(j) / scales(f)(j)
-          a0Out(f)(l) =
-            if (params.intercept)
-              a0(f) - (0 until p).map(j => betaOut(f)(l)(j) * means(f)(j)).sum
-            else a0(f)
-        }
-      }
-
-      // full-data model from the virtual fold's path, finished with the
-      // same v·norm-weighted deviance pass as SgdNet.fitIrls
-      val a0Full = Array.tabulate(L)(l => Array(a0Out(nfolds)(l)))
-      val betaFull = Array.tabulate(L)(l => Array(betaOut(nfolds)(l).clone()))
-      val yBarFull = trainStats(nfolds).yMean(0)
-      val a0NullFull =
-        if (!params.intercept) 0.0
-        else if (binomial) {
-          if (yBarFull > 0 && yBarFull < 1) math.log(yBarFull / (1 - yBarFull)) else 0.0
-        } else math.log(yBarFull)
-      val normFull = norms(nfolds)
-      val devs = rows.treeAggregate(new Array[Double](L + 1))(
-        (acc, t) => {
-          val (_, x, y, v) = t
-          def binDev(eta: Double): Double = {
-            val m = math.max(eta, 0.0)
-            2.0 * (m + math.log(math.exp(-m) + math.exp(eta - m)) - y * eta)
-          }
-          def poisDev(mu: Double): Double = {
-            val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-            2.0 * (ylog - (y - mu))
-          }
-          val vn = v * normFull
-          var l = 0
-          while (l < L) {
-            var eta = a0Full(l)(0)
-            val bl = betaFull(l)(0)
-            var j = 0
-            while (j < p) { eta += bl(j) * x(j); j += 1 }
-            acc(l) += vn * (if (binomial) binDev(eta)
-              else poisDev(math.exp(math.max(math.min(eta, 30.0), -30.0))))
-            l += 1
-          }
-          acc(L) += vn * (if (binomial) binDev(a0NullFull)
-            else poisDev(if (params.intercept) yBarFull else 1.0))
-          acc
-        },
-        (a, b) => { var i = 0; while (i <= L) { a(i) += b(i); i += 1 }; a },
-        depth = 2)
-      val nulldev = devs(L)
-      val devRatio = Array.tabulate(L)(l =>
-        SgdNetModel.devRatio(devs(l), nulldev))
-      val full = new SgdNetModel(params.family, featureCols.toArray,
-        Array(labelCol), classes, lambdas, a0Full, betaFull, nulldev,
-        devRatio, total.n, sharedPasses + 2, params)
-
-      // held-out scoring per (fold, lambda): Σv·err / Σv with RAW v
-      val bA0 = sc.broadcast(a0Out)
-      val bBeta = sc.broadcast(betaOut)
-      val foldScores = measure match {
-        case "auc" =>
-          // v-weighted AUC: mass rides the cells (continuous-mass rank
-          // formula in aucPerGroup); etas rank via the monotone sigmoid
-          val spark = df.sparkSession
-          val scored = spark.createDataFrame(rows.map { t =>
-            val (f, x, y, v) = t
-            val etas = new Array[Double](L)
-            var l = 0
-            while (l < L) {
-              var eta = bA0.value(f)(l)
-              val bl = bBeta.value(f)(l)
-              var j = 0
-              while (j < p) { eta += bl(j) * x(j); j += 1 }
-              etas(l) = eta
-              l += 1
-            }
-            (f, y, v, etas)
-          }).toDF("__fold", "__y", "__v", "__etas")
-          val exploded = scored
-            .select(col("__fold"), col("__y"), col("__v"),
-              posexplode(col("__etas")).as(Seq("__l", "__s")))
-            .select((col("__l") * nfolds + col("__fold")).as("__g"),
-              col("__s"), col("__y"), col("__v"))
-          val aucs = aucPerGroup(exploded, L * nfolds, weightCol = "__v")
-          Array.tabulate(nfolds, L)((f, l) => aucs(l * nfolds + f))
-        case _ =>
-          val sums = rows.treeAggregate(new Array[Double](nfolds * L))(
-            (acc, t) => {
-              val (f, x, y, v) = t
-              var l = 0
-              while (l < L) {
-                var eta = bA0.value(f)(l)
-                val bl = bBeta.value(f)(l)
-                var j = 0
-                while (j < p) { eta += bl(j) * x(j); j += 1 }
-                acc(f * L + l) += v * (if (binomial) {
-                  val mu = 1.0 / (1.0 + math.exp(-eta))
-                  measure match {
-                    case "mse" => 2.0 * (mu - y) * (mu - y)
-                    case "mae" => 2.0 * math.abs(mu - y)
-                    case "class" => if ((if (mu > 0.5) 1.0 else 0.0) != y) 1.0 else 0.0
-                    case "deviance" =>
-                      val mc = math.min(math.max(mu, 1e-5), 1.0 - 1e-5)
-                      -2.0 * (y * math.log(mc) + (1 - y) * math.log(1 - mc))
-                    case other => // unreachable: fitWeightedMulti validates
-                      throw new IllegalArgumentException(s"unknown measure $other")
-                  }
-                } else {
-                  val mu = math.exp(eta)
-                  measure match {
-                    case "mse" => (y - mu) * (y - mu)
-                    case "mae" => math.abs(y - mu)
-                    case "deviance" =>
-                      val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-                      2.0 * (ylog - (y - mu))
-                    case other => // unreachable: fitWeightedMulti validates
-                      throw new IllegalArgumentException(s"unknown measure $other")
-                  }
-                })
-                l += 1
-              }
-              acc
-            },
-            (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
-            depth = 2)
-          Array.tabulate(nfolds, L)((f, l) => sums(f * L + l) / wFold(f))
-      }
-      summarize(params.alpha, lambdas, foldScores, full)
-    } finally rows.unpersist(blocking = false)
+      case ("deviance", _) => (y, eta) => fam.unitDeviance(y, eta)
+      case ("mse", _) => (y, eta) => { val d = mu(eta) - y; k * d * d }
+      case ("mae", _) => (y, eta) => k * math.abs(mu(eta) - y)
+      case ("class", SgdNet.Binomial) => (y, eta) =>
+        if ((if (mu(eta) > 0.5) 1.0 else 0.0) != y) 1.0 else 0.0
+      case _ => // unreachable: every entry validates its measures
+        throw new IllegalArgumentException(s"unknown ${fam.name} CV measure $measure")
+    }
   }
 
   // ------------------------------------------- offset CV (cv.glmnet offset)
@@ -1441,10 +782,11 @@ object CvSgdNet {
           fitWeighted(adj, featureCols, labelCol, weightCol, params, nfolds,
             measure, foldCol, alphas)
       case "binomial" | "poisson" =>
-        val alphaGrid = if (alphas.nonEmpty) alphas else Seq(params.alpha)
-        val paths = alphaGrid.map(a => cvOffsetGlmShared(df, featureCols,
-          labelCol, offsetCol, params.copy(alpha = a), nfolds, foldCol,
-          measure, weightCol))
+        val paths = cvIrls(df, labelCol, params, nfolds,
+          if (alphas.nonEmpty) alphas else Seq(params.alpha), measure,
+          weighted = weightCol != null, hasOffset = true, featureCols.toArray,
+          denseIrlsRows(df, featureCols, labelCol, nfolds, foldCol, weightCol,
+            offsetCol))
         val best = paths.minBy(p => p.cvm.min)
         CvResult(paths, best)
       case f => throw new IllegalArgumentException(
@@ -1489,402 +831,6 @@ object CvSgdNet {
     r.copy(offsetFit = true) // predictAt must get newoffset (glmnet)
   }
 
-  /** Shared-pass binomial/poisson CV with a per-row offset (see
-    * [[fitWithOffset]]): the [[cvWeightedGlmShared]] fold-tiling with
-    * η = off + a0_f + xs·β_f in every IRLS pass and the WLS target
-    * z − off, so each fold's inner solve fits exactly a0 + xs·β. The
-    * full-data model rides as virtual fold nfolds. */
-  private def cvOffsetGlmShared(df: DataFrame, featureCols: Seq[String],
-                                labelCol: String, offsetCol: String,
-                                params: SgdNetParams, nfolds: Int,
-                                foldCol: Column, measure: String,
-                                weightCol: String): CvPath = {
-    SgdNet.requireNoZeroPf(params, "shared offset CV")
-    val p = featureCols.size
-    val binomial = params.family == "binomial"
-    val classes: Array[String] =
-      if (binomial) SgdNet.binomialClasses(df, labelCol) else Array.empty
-    val yCol =
-      if (binomial) (col(labelCol).cast("string") === classes(1)).cast("double")
-      else col(labelCol).cast("double")
-    val weighted = weightCol != null
-    val wCol = if (weighted) col(weightCol).cast("double") else lit(1.0)
-    val hashCols = (featureCols :+ labelCol).map(col)
-    val rows0 = df
-      .withColumn("__fold", foldExpr(foldCol, hashCols, nfolds).cast("int"))
-      .select((featureCols.map(c => col(c).cast("double")) :+
-        yCol :+ col(offsetCol).cast("double") :+
-        col("__fold") :+ wCol): _*)
-      .rdd.map { r =>
-        val x = new Array[Double](p)
-        var j = 0
-        while (j < p) { x(j) = r.getDouble(j); j += 1 }
-        (r.getInt(p + 2), x, r.getDouble(p), r.getDouble(p + 1),
-          r.getDouble(p + 3))
-      }
-    val rows = (if (weighted)
-        rows0.map { t => require(t._5 >= 0, "weights must be non-negative"); t }
-          .filter(_._5 > 0)
-      else rows0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val F = nfolds + 1
-      // ONE pass: per-fold RAW-v moments + Σv + Σv·e^off (poisson
-      // exposure) + Σv·off (the binomial Newton start)
-      val zero = (Array.fill(nfolds)(new GramStats(p, 1)),
-        new Array[Double](nfolds), new Array[Double](nfolds),
-        new Array[Double](nfolds))
-      val (perFold, wFold, eFold, oFold) = rows.treeAggregate(zero)(
-        (acc, t) => {
-          acc._1(t._1).addWeighted(t._2, Array(t._3), t._5)
-          acc._2(t._1) += t._5
-          acc._3(t._1) += t._5 *
-            math.exp(math.max(math.min(t._4, 30.0), -30.0))
-          acc._4(t._1) += t._5 * t._4
-          acc
-        },
-        (a, b) => {
-          var i = 0
-          while (i < nfolds) {
-            a._1(i).merge(b._1(i)); a._2(i) += b._2(i); a._3(i) += b._3(i)
-            a._4(i) += b._4(i)
-            i += 1
-          }
-          a
-        }, depth = 2)
-      requireNonEmptyFolds(perFold.map(_.n), nfolds)
-      val total = new GramStats(p, 1)
-      perFold.foreach(total.merge)
-      val wTotal = wFold.sum
-      val eTotal = eFold.sum
-      val oTotal = oFold.sum
-      val syTotal = total.sumY(0)
-      val perFoldExt = perFold :+ new GramStats(p, 1)
-      val wFoldExt = wFold :+ 0.0
-      val eFoldExt = eFold :+ 0.0
-      val oFoldExt = oFold :+ 0.0
-      val syFoldExt = perFold.map(_.sumY(0)) :+ 0.0
-      val nTrain = Array.tabulate(F)(f => (total.n - perFoldExt(f).n).toDouble)
-      val norms = Array.tabulate(F)(f => nTrain(f) / (wTotal - wFoldExt(f)))
-      val trainStats = Array.tabulate(F) { f =>
-        val tr = new GramStats(p, 1).merge(total).subtract(perFoldExt(f))
-          .scaleWeights(norms(f))
-        SufficientStats.standardize(tr, params.standardize, params.intercept)
-      }
-      var sharedPasses = 1
-      // per-fold offset null intercept: poisson is the closed-form
-      // raw-v ratio (the sum-to-n norm cancels); binomial converges a
-      // fold-tiled Newton from the mean-offset-shifted logit (exact
-      // already for a constant offset, so the loop usually does one
-      // confirming pass)
-      val a0Null: Array[Double] =
-        if (!binomial) Array.tabulate(F) { f =>
-          val sy = syTotal - syFoldExt(f)
-          require(sy > 0,
-            "poisson response must contain positive counts in every train fold")
-          if (params.intercept) math.log(sy / (eTotal - eFoldExt(f))) else 0.0
-        } else {
-          val a0 = Array.tabulate(F) { f =>
-            val tw = wTotal - wFoldExt(f)
-            val yb = (syTotal - syFoldExt(f)) / tw
-            require(yb > 0 && yb < 1,
-              "binomial response must contain both classes in every train fold")
-            if (params.intercept)
-              math.log(yb / (1 - yb)) - (oTotal - oFoldExt(f)) / tw
-            else 0.0
-          }
-          if (params.intercept) {
-            var it = 0
-            var done = false
-            while (it < 25 && !done) {
-              val a0Snap = a0.clone()
-              val acc = rows.treeAggregate(new Array[Double](2 * F))(
-                (s, t) => {
-                  val (rowFold, _, y, off, v) = t
-                  var f = 0
-                  while (f < F) {
-                    if (f != rowFold) {
-                      val mu = 1.0 / (1.0 + math.exp(-(a0Snap(f) + off)))
-                      s(2 * f) += v * (y - mu)
-                      s(2 * f + 1) += v * math.max(mu * (1.0 - mu), 1e-10)
-                    }
-                    f += 1
-                  }
-                  s
-                },
-                (a, b) => {
-                  var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-                }, depth = 2)
-              sharedPasses += 1
-              var mx = 0.0
-              for (f <- 0 until F) {
-                val step = acc(2 * f) / acc(2 * f + 1)
-                a0(f) += step
-                if (math.abs(step) > mx) mx = math.abs(step)
-              }
-              it += 1
-              if (mx < 1e-12) done = true
-            }
-          }
-          a0
-        }
-      val means = trainStats.map(st =>
-        if (params.intercept) st.xMean else new Array[Double](p))
-      val scales = trainStats.map(st =>
-        if (params.standardize) st.xSd else Array.fill(p)(1.0))
-      val boundsF = scales.map(s => SgdNet.boundsStd(params, s, 1.0))
-      val sc = rows.sparkContext
-      val bMeans = sc.broadcast(means)
-      val bScales = sc.broadcast(scales)
-      val bNorms = sc.broadcast(norms)
-
-      val lambdas =
-        if (params.lambda != null) params.lambda
-        else {
-          // offset-corrected lambda_max on the full data (the
-          // SgdNet.IrlsRows.nullGradient pass): the null-model mean varies
-          // per row, so the offset-ignoring covariance would misplace
-          // the path start
-          val minRatio = if (params.lambdaMinRatio.isNaN)
-            LambdaPath.defaultMinRatio(total.n, p) else params.lambdaMinRatio
-          val a0N = a0Null(nfolds)
-          val mF = means(nfolds); val sF = scales(nfolds)
-          val nrm = norms(nfolds)
-          val bOff = rows.treeAggregate(new Array[Double](p))(
-            (acc, t) => {
-              val (_, xr, y, off, v) = t
-              val mu =
-                if (binomial) 1.0 / (1.0 + math.exp(-(a0N + off)))
-                else math.exp(math.max(math.min(a0N + off, 30.0), -30.0))
-              val r = v * nrm * (y - mu)
-              var j = 0
-              while (j < p) { acc(j) += (xr(j) - mF(j)) / sF(j) * r; j += 1 }
-              acc
-            },
-            (a, b) => { var i = 0; while (i < p) { a(i) += b(i); i += 1 }; a },
-            depth = 2)
-          sharedPasses += 1
-          LambdaPath.build(Array(bOff.map(_ / nTrain(nfolds))), params.alpha,
-            params.nlambda, minRatio, params.penaltyFactor)
-        }
-
-      val L = lambdas.length
-      val beta = Array.fill(F)(new Array[Double](p))
-      val a0 = a0Null.clone()
-      val a0Out = Array.ofDim[Double](F, L)
-      val betaOut = Array.ofDim[Double](F, L, p)
-      val lastGram = Array.fill[BinWGram](F)(null)
-
-      def solveFold(f: Int, g: BinWGram, l: Int): (Array[Double], Double) = {
-        val ninv = 1.0 / nTrain(f)
-        val aM = LinAlg.unpackSym(g.swxx, p).map(_.map(_ * ninv))
-        val r = CoordinateDescent.solve(aM, g.swxz.map(_ * ninv),
-          g.swx.map(_ * ninv), g.swz * ninv, g.sw * ninv,
-          lambdas(l), params.alpha, params.intercept, beta(f),
-          thresh = math.max(params.thresh * 1e-4, 1e-10),
-          maxIter = params.maxit,
-          penaltyFactor = params.penaltyFactor,
-          lower = boundsF(f)._1, upper = boundsF(f)._2)
-        (r.beta, r.a0)
-      }
-
-      for (l <- 0 until L) {
-        val active = Array.fill(F)(true)
-        // free first Newton step against the carried grams
-        if (lastGram.forall(_ != null)) {
-          for (f <- 0 until F) {
-            val (nb, na) = solveFold(f, lastGram(f), l)
-            var maxD = math.abs(na - a0(f))
-            var j = 0
-            while (j < p) {
-              val d = math.abs(nb(j) - beta(f)(j)); if (d > maxD) maxD = d; j += 1
-            }
-            beta(f) = nb; a0(f) = na
-            if (maxD == 0.0) active(f) = false
-          }
-        }
-        var iter = 0
-        while (iter < 25 && active.exists(identity)) {
-          val betaSnap = beta.map(_.clone())
-          val a0Snap = a0.clone()
-          val activeSnap = active.clone()
-          sharedPasses += 1
-          // ONE pass: offset-IRLS grams for all active folds — η
-          // includes the per-row offset, the WLS target z excludes it
-          val grams = rows.treeAggregate(Array.fill(F)(new BinWGram(p)))(
-            (acc, t) => {
-              val (rowFold, xr, y, off, v) = t
-              var f = 0
-              while (f < F) {
-                if (f != rowFold && activeSnap(f)) {
-                  val m = bMeans.value(f); val s = bScales.value(f)
-                  val bf = betaSnap(f)
-                  var eta = a0Snap(f) + off
-                  val xs = new Array[Double](p)
-                  var j = 0
-                  while (j < p) {
-                    xs(j) = (xr(j) - m(j)) / s(j); eta += xs(j) * bf(j); j += 1
-                  }
-                  var w = 0.0
-                  var z = 0.0
-                  if (binomial) {
-                    val mu = 1.0 / (1.0 + math.exp(-eta))
-                    w = math.max(mu * (1.0 - mu), 1e-5)
-                    z = eta + (y - mu) / w - off
-                  } else {
-                    val etaC = math.max(math.min(eta, 30.0), -30.0)
-                    val mu = math.exp(etaC)
-                    w = math.max(mu, 1e-5)
-                    z = etaC + (y - mu) / w - off
-                  }
-                  acc(f).add(xs, w * v * bNorms.value(f), z)
-                }
-                f += 1
-              }
-              acc
-            },
-            (a, b) => { var i = 0; while (i < F) { a(i).merge(b(i)); i += 1 }; a },
-            depth = 2)
-          for (f <- 0 until F if active(f)) {
-            val g = grams(f)
-            lastGram(f) = g
-            val (nb, na) = solveFold(f, g, l)
-            var maxD = math.abs(na - a0(f))
-            var j = 0
-            while (j < p) {
-              val d = math.abs(nb(j) - beta(f)(j)); if (d > maxD) maxD = d; j += 1
-            }
-            beta(f) = nb; a0(f) = na
-            if (maxD < math.max(params.thresh * 1e-2, 1e-8)) active(f) = false
-          }
-          iter += 1
-        }
-        for (f <- 0 until F) {
-          for (j <- 0 until p) betaOut(f)(l)(j) = beta(f)(j) / scales(f)(j)
-          a0Out(f)(l) =
-            if (params.intercept)
-              a0(f) - (0 until p).map(j => betaOut(f)(l)(j) * means(f)(j)).sum
-            else a0(f)
-        }
-      }
-
-      // full-data model from the virtual fold + offset deviance pass
-      val a0Full = Array.tabulate(L)(l => Array(a0Out(nfolds)(l)))
-      val betaFull = Array.tabulate(L)(l => Array(betaOut(nfolds)(l).clone()))
-      val names = featureCols.toArray
-      val normFull = norms(nfolds)
-      val a0NullFull = a0Null(nfolds)
-      val devs = rows.treeAggregate(new Array[Double](L + 1))(
-        (acc, t) => {
-          val (_, x, y, off, v) = t
-          def binDev(eta: Double): Double = {
-            val m = math.max(eta, 0.0)
-            2.0 * (m + math.log(math.exp(-m) + math.exp(eta - m)) - y * eta)
-          }
-          def poisDev(mu: Double): Double = {
-            val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-            2.0 * (ylog - (y - mu))
-          }
-          val vn = v * normFull
-          var l = 0
-          while (l < L) {
-            var eta = a0Full(l)(0) + off
-            val bl = betaFull(l)(0)
-            var j = 0
-            while (j < p) { eta += bl(j) * x(j); j += 1 }
-            acc(l) += vn * (if (binomial) binDev(eta)
-              else poisDev(math.exp(math.max(math.min(eta, 30.0), -30.0))))
-            l += 1
-          }
-          acc(L) += vn * (if (binomial) binDev(a0NullFull + off)
-            else poisDev(math.exp(
-              math.max(math.min(a0NullFull + off, 30.0), -30.0))))
-          acc
-        },
-        (a, b) => { var i = 0; while (i <= L) { a(i) += b(i); i += 1 }; a },
-        depth = 2)
-      val nulldev = devs(L)
-      val devRatio = Array.tabulate(L)(l =>
-        SgdNetModel.devRatio(devs(l), nulldev))
-      val full = new SgdNetModel(params.family, names, Array(labelCol),
-        classes, lambdas, a0Full, betaFull, nulldev, devRatio, total.n,
-        sharedPasses + 2, params)
-
-      // held-out scoring per (fold, lambda): the prediction includes the
-      // row's own offset (glmnet newoffset); Σv·err / Σv with RAW v
-      val bA0 = sc.broadcast(a0Out)
-      val bBeta = sc.broadcast(betaOut)
-      val foldScores = measure match {
-        case "auc" =>
-          val spark = df.sparkSession
-          val scored = spark.createDataFrame(rows.map { t =>
-            val (f, x, y, off, v) = t
-            val etas = new Array[Double](L)
-            var l = 0
-            while (l < L) {
-              var eta = bA0.value(f)(l) + off
-              val bl = bBeta.value(f)(l)
-              var j = 0
-              while (j < p) { eta += bl(j) * x(j); j += 1 }
-              etas(l) = eta
-              l += 1
-            }
-            (f, y, v, etas)
-          }).toDF("__fold", "__y", "__v", "__etas")
-          val exploded = scored
-            .select(col("__fold"), col("__y"), col("__v"),
-              posexplode(col("__etas")).as(Seq("__l", "__s")))
-            .select((col("__l") * nfolds + col("__fold")).as("__g"),
-              col("__s"), col("__y"), col("__v"))
-          val aucs = aucPerGroup(exploded, L * nfolds,
-            weightCol = if (weighted) "__v" else null)
-          Array.tabulate(nfolds, L)((f, l) => aucs(l * nfolds + f))
-        case _ =>
-          val sums = rows.treeAggregate(new Array[Double](nfolds * L))(
-            (acc, t) => {
-              val (f, x, y, off, v) = t
-              var l = 0
-              while (l < L) {
-                var eta = bA0.value(f)(l) + off
-                val bl = bBeta.value(f)(l)
-                var j = 0
-                while (j < p) { eta += bl(j) * x(j); j += 1 }
-                acc(f * L + l) += v * (if (binomial) {
-                  val mu = 1.0 / (1.0 + math.exp(-eta))
-                  measure match {
-                    case "mse" => 2.0 * (mu - y) * (mu - y)
-                    case "mae" => 2.0 * math.abs(mu - y)
-                    case "class" => if ((if (mu > 0.5) 1.0 else 0.0) != y) 1.0 else 0.0
-                    case "deviance" =>
-                      val mc = math.min(math.max(mu, 1e-5), 1.0 - 1e-5)
-                      -2.0 * (y * math.log(mc) + (1 - y) * math.log(1 - mc))
-                    case other => // unreachable: fitWithOffset validates
-                      throw new IllegalArgumentException(s"unknown measure $other")
-                  }
-                } else {
-                  val mu = math.exp(math.max(math.min(eta, 30.0), -30.0))
-                  measure match {
-                    case "mse" => (y - mu) * (y - mu)
-                    case "mae" => math.abs(y - mu)
-                    case "deviance" =>
-                      val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-                      2.0 * (ylog - (y - mu))
-                    case other => // unreachable: fitWithOffset validates
-                      throw new IllegalArgumentException(s"unknown measure $other")
-                  }
-                })
-                l += 1
-              }
-              acc
-            },
-            (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
-            depth = 2)
-          Array.tabulate(nfolds, L)((f, l) => sums(f * L + l) / wFold(f))
-      }
-      summarize(params.alpha, lambdas, foldScores, full)
-    } finally rows.unpersist(blocking = false)
-  }
-
   // ------------------------------------------ multinomial, shared-pass CV
 
   /** All k fold-models advance TOGETHER through the softmax FISTA loop:
@@ -1893,7 +839,7 @@ object CvSgdNet {
     * to all train sets except its own fold), and the FULL-data model
     * rides the same passes as virtual fold k (every row contributes —
     * "train = total minus an empty fold"). This is the multinomial twin
-    * of [[cvBinomialShared]]: CV costs ~one multinomial fit's worth of
+    * of [[cvIrls]]: CV costs ~one multinomial fit's worth of
     * data passes INCLUDING the full path fit, not k+1 of them — the
     * shape that holds at 100 TB. Driver state: (k+1) fold-models of
     * K x p coefficients each.
@@ -3125,9 +2071,11 @@ object CvSgdNet {
         cvSparseGaussian(df, idxCol, valCol, dim, Seq(labelCol), params,
           nfolds, alphaGrid, measure, foldCol, weightCol)
       case "binomial" | "poisson" =>
-        alphaGrid.map(a => cvSparseGlmShared(df, idxCol, valCol, dim,
-          labelCol, params.copy(alpha = a), nfolds, foldCol, measure,
-          weightCol))
+        cvIrls(df, labelCol, params, nfolds, alphaGrid, measure,
+          weighted = weightCol != null, hasOffset = false,
+          Array.tabulate(dim)(j => s"V$j"),
+          csrIrlsRows(df, idxCol, valCol, dim, labelCol, nfolds, foldCol,
+            weightCol, null))
       case "multinomial" =>
         alphaGrid.map(a => cvSparseMultinomialShared(df, idxCol, valCol, dim,
           labelCol, params.copy(alpha = a), nfolds, foldCol, measure,
@@ -3144,14 +2092,14 @@ object CvSgdNet {
     * cv.glmnet `offset` surface over dgCMatrix x, closing the last
     * sparse × offset × CV composition cell): gaussian reduces EXACTLY
     * to the plain sparse CV on y − offset (identity link); binomial
-    * and poisson run the [[cvSparseGlmShared]] fold-tiling with
+    * and poisson run [[cvIrls]] over CSR rows with
     * η = row-offset + a0_f + x·β_f in every IRLS accumulation and the
-    * WLS target z − offset (the [[cvOffsetGlmShared]] algebra over CSR
-    * rows — uncentered sparse moments, driver-side centering, never
-    * densified), per-fold offset nulls (closed-form exposure MLE for
-    * poisson, fold-tiled Newton for binomial), the offset-corrected
-    * sparse lambda path, held-out scores with the row's own offset in
-    * the prediction (newoffset), and optional frequency weights. */
+    * WLS target z − offset (uncentered sparse moments, driver-side
+    * centering, never densified), per-fold offset nulls (closed-form
+    * exposure MLE for poisson, fold-tiled Newton for binomial), the
+    * offset-corrected sparse lambda path, held-out scores with the
+    * row's own offset in the prediction (newoffset), and optional
+    * frequency weights. */
   def fitSparseWithOffset(df: DataFrame, idxCol: String, valCol: String,
                           dim: Int, labelCol: String, offsetCol: String,
                           params: SgdNetParams = SgdNetParams(),
@@ -3176,10 +2124,12 @@ object CvSgdNet {
         fitSparse(adj, idxCol, valCol, dim, labelCol, params, nfolds,
           measure, foldCol, alphas, weightCol)
       case "binomial" | "poisson" =>
-        val alphaGrid = if (alphas.nonEmpty) alphas else Seq(params.alpha)
-        val paths = alphaGrid.map(a => cvSparseOffsetGlmShared(df, idxCol,
-          valCol, dim, labelCol, offsetCol, params.copy(alpha = a), nfolds,
-          foldCol, measure, weightCol))
+        val paths = cvIrls(df, labelCol, params, nfolds,
+          if (alphas.nonEmpty) alphas else Seq(params.alpha), measure,
+          weighted = weightCol != null, hasOffset = true,
+          Array.tabulate(dim)(j => s"V$j"),
+          csrIrlsRows(df, idxCol, valCol, dim, labelCol, nfolds, foldCol,
+            weightCol, offsetCol))
         val best = paths.minBy(p => p.cvm.min)
         CvResult(paths, best)
       case f => throw new IllegalArgumentException(
@@ -3383,830 +2333,6 @@ object CvSgdNet {
         }
         summarize(a, lambdas, foldScores, full)
       }
-    } finally rows.unpersist(blocking = false)
-  }
-
-  /** Shared sparse IRLS CV for binomial/poisson (see [[fitSparse]]):
-    * the [[cvBinomialShared]] fold-tiling over the sparse route's
-    * uncentered nonzero accumulations, with per-fold algebraic
-    * centering driver-side — the matrix is never densified and per-row
-    * cost stays O(active-folds × nnz²). With `weightCol` the frequency
-    * weight folds into the IRLS weight as v·norm_f (the
-    * [[cvWeightedGlmShared]] convention) and held-out scores become
-    * Σv·err/Σv; the unweighted call is the v == 1 special case (all
-    * extra factors exactly 1.0 — bit-identical output). */
-  private def cvSparseGlmShared(df: DataFrame, idxCol: String, valCol: String,
-                                dim: Int, labelCol: String,
-                                params: SgdNetParams, nfolds: Int,
-                                foldCol: Column, measure: String,
-                                weightCol: String = null): CvPath = {
-    SgdNet.requireNoZeroPf(params, "shared sparse CV")
-    val p = dim
-    val weighted = weightCol != null
-    val binomial = params.family == "binomial"
-    val classes: Array[String] =
-      if (binomial) SgdNet.binomialClasses(df, labelCol) else Array.empty
-    val yCol =
-      if (binomial) (col(labelCol).cast("string") === classes(1)).cast("double")
-      else col(labelCol).cast("double")
-    val wCol = if (weighted) col(weightCol).cast("double") else lit(1.0)
-    val hashCols = Seq(col(idxCol), col(valCol), col(labelCol))
-    val rows0 = df
-      .withColumn("__fold", foldExpr(foldCol, hashCols, nfolds).cast("int"))
-      .select(col(idxCol), col(valCol).cast("array<double>"), yCol,
-        col("__fold"), wCol)
-      .rdd.map { r =>
-        (r.getInt(3), r.getSeq[Int](0).toArray,
-          r.getSeq[Double](1).toArray, r.getDouble(2), r.getDouble(4))
-      }
-    // v == 0 drops the observation everywhere (glmnet); the unweighted
-    // path never filters
-    val rows = (if (weighted)
-        rows0.map { t => require(t._5 >= 0, "weights must be non-negative"); t }
-          .filter(_._5 > 0)
-      else rows0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val F = nfolds + 1
-      // ONE pass: per-fold RAW-v weighted sparse moments + per-fold Σv
-      val zero = (Array.fill(nfolds)(new GramStats(p, 1)),
-        new Array[Double](nfolds))
-      val (perFold, wFold) = rows.treeAggregate(zero)(
-        (acc, t) => {
-          acc._1(t._1).addSparseWeighted(t._2, t._3, Array(t._4), t._5)
-          acc._2(t._1) += t._5
-          acc
-        },
-        (a, b) => {
-          var i = 0
-          while (i < nfolds) { a._1(i).merge(b._1(i)); a._2(i) += b._2(i); i += 1 }
-          a
-        }, depth = 2)
-      requireNonEmptyFolds(perFold.map(_.n), nfolds)
-      val total = new GramStats(p, 1)
-      perFold.foreach(total.merge)
-      val wTotal = wFold.sum
-      val perFoldExt = perFold :+ new GramStats(p, 1)
-      val wFoldExt = wFold :+ 0.0
-      val nTrain = Array.tabulate(F)(f => (total.n - perFoldExt(f).n).toDouble)
-      // per-fold sum-to-n_train weight normalization (exactly 1.0 when
-      // unweighted)
-      val norms = Array.tabulate(F)(f => nTrain(f) / (wTotal - wFoldExt(f)))
-      val trainStats = Array.tabulate(F) { f =>
-        val tr = new GramStats(p, 1).merge(total).subtract(perFoldExt(f))
-          .scaleWeights(norms(f))
-        SufficientStats.standardize(tr, params.standardize, params.intercept)
-      }
-      if (!binomial) trainStats.foreach(st => require(st.yMean(0) > 0,
-        "poisson response must contain positive counts in every train fold"))
-      val lambdas =
-        if (params.lambda != null) params.lambda
-        else {
-          val minRatio = if (params.lambdaMinRatio.isNaN)
-            LambdaPath.defaultMinRatio(total.n, p) else params.lambdaMinRatio
-          LambdaPath.build(trainStats(nfolds).b, params.alpha, params.nlambda,
-            minRatio, params.penaltyFactor)
-        }
-      val means = trainStats.map(st => if (params.intercept) st.xMean else new Array[Double](p))
-      val scales = trainStats.map(st => if (params.standardize) st.xSd else Array.fill(p)(1.0))
-      val boundsF = scales.map(s => SgdNet.boundsStd(params, s, 1.0))
-      val sc = rows.sparkContext
-
-      val L = lambdas.length
-      val beta = Array.fill(F)(new Array[Double](p))
-      val a0 = Array.tabulate(F) { f =>
-        val yb = trainStats(f).yMean(0)
-        if (!params.intercept) 0.0
-        else if (binomial) {
-          if (yb > 0 && yb < 1) math.log(yb / (1 - yb)) else 0.0
-        } else math.log(yb)
-      }
-      val a0Out = Array.ofDim[Double](F, L)
-      val betaOut = Array.ofDim[Double](F, L, p)
-      var sharedPasses = 0
-
-      // per-fold CENTERED solve from an uncentered gram — the
-      // SgdNet.CsrRows centering algebra, shared by the free step and
-      // the in-loop step
-      def solveFold(f: Int, g: BinWGram, l: Int): (Array[Double], Double) = {
-        val mean = means(f); val scale = scales(f)
-        val ninv = 1.0 / nTrain(f)
-        val swxStd = Array.tabulate(p)(j =>
-          (g.swx(j) - mean(j) * g.sw) / scale(j))
-        val swxzStd = Array.tabulate(p)(j =>
-          (g.swxz(j) - mean(j) * g.swz) / scale(j))
-        val aM = Array.ofDim[Double](p, p)
-        var j = 0
-        while (j < p) {
-          var i = 0
-          while (i <= j) {
-            val v = (g.swxx(LinAlg.triIdx(i, j)) - mean(i) * g.swx(j) -
-              mean(j) * g.swx(i) + mean(i) * mean(j) * g.sw) /
-              (scale(i) * scale(j)) * ninv
-            aM(i)(j) = v; aM(j)(i) = v
-            i += 1
-          }
-          j += 1
-        }
-        val r = CoordinateDescent.solve(aM, swxzStd.map(_ * ninv),
-          swxStd.map(_ * ninv), g.swz * ninv, g.sw * ninv,
-          lambdas(l), params.alpha, params.intercept, beta(f),
-          thresh = math.max(params.thresh * 1e-4, 1e-10),
-          maxIter = params.maxit,
-          penaltyFactor = params.penaltyFactor,
-          lower = boundsF(f)._1, upper = boundsF(f)._2)
-        (r.beta, r.a0)
-      }
-      val lastGram = Array.fill[BinWGram](F)(null)
-
-      for (l <- 0 until L) {
-        val active = Array.fill(F)(true)
-        // free first Newton step against the carried grams (the
-        // cvBinomialShared optimality-slack argument)
-        if (lastGram.forall(_ != null)) {
-          for (f <- 0 until F) {
-            val (nb, na) = solveFold(f, lastGram(f), l)
-            var maxD = math.abs(na - a0(f))
-            var j = 0
-            while (j < p) {
-              val d = math.abs(nb(j) - beta(f)(j)); if (d > maxD) maxD = d; j += 1
-            }
-            beta(f) = nb; a0(f) = na
-            if (maxD == 0.0) active(f) = false
-          }
-        }
-        var iter = 0
-        while (iter < 25 && active.exists(identity)) {
-          val activeSnap = active.clone()
-          // per-fold linear-predictor form on the ORIGINAL sparse scale:
-          // eta = off_f + Σ vals·(beta_f/scale_f)(idx)
-          val bOverS = Array.tabulate(F, p)((f, j) => beta(f)(j) / scales(f)(j))
-          val offs = Array.tabulate(F) { f =>
-            var o = a0(f)
-            var j = 0
-            while (j < p) { o -= means(f)(j) * bOverS(f)(j); j += 1 }
-            o
-          }
-          val bc = sc.broadcast((bOverS, offs, norms))
-          sharedPasses += 1
-          // ONE pass: uncentered v-weighted sparse IRLS moments for all
-          // active folds (frequency weight folds into the IRLS weight
-          // as v·norm_f — SgdNet.CsrRows.gram's w·v)
-          val grams = rows.treeAggregate(Array.fill(F)(new BinWGram(p)))(
-            (acc, t) => {
-              val (rowFold, idx, vals, y, v) = t
-              val (bos, off, nrm) = bc.value
-              var f = 0
-              while (f < F) {
-                if (f != rowFold && activeSnap(f)) {
-                  var eta = off(f)
-                  var i = 0
-                  while (i < idx.length) { eta += vals(i) * bos(f)(idx(i)); i += 1 }
-                  var w = 0.0
-                  var z = 0.0
-                  if (binomial) {
-                    val mu = 1.0 / (1.0 + math.exp(-eta))
-                    w = math.max(mu * (1.0 - mu), 1e-5)
-                    z = eta + (y - mu) / w
-                  } else {
-                    val etaC = math.max(math.min(eta, 30.0), -30.0)
-                    val mu = math.exp(etaC)
-                    w = math.max(mu, 1e-5)
-                    z = etaC + (y - mu) / w
-                  }
-                  val vw = v * nrm(f) * w
-                  val g = acc(f)
-                  g.sw += vw; g.swz += vw * z
-                  var i2 = 0
-                  while (i2 < idx.length) {
-                    val j = idx(i2)
-                    val wxj = vw * vals(i2)
-                    g.swx(j) += wxj
-                    g.swxz(j) += wxj * z
-                    var m = 0
-                    while (m <= i2) {
-                      g.swxx(LinAlg.triIdx(idx(m), j)) += wxj * vals(m)
-                      m += 1
-                    }
-                    i2 += 1
-                  }
-                }
-                f += 1
-              }
-              acc
-            },
-            (a, b) => { var i = 0; while (i < F) { a(i).merge(b(i)); i += 1 }; a },
-            depth = 2)
-          for (f <- 0 until F if active(f)) {
-            lastGram(f) = grams(f)
-            val (nb, na) = solveFold(f, grams(f), l)
-            var maxD = math.abs(na - a0(f))
-            var j = 0
-            while (j < p) {
-              val d = math.abs(nb(j) - beta(f)(j)); if (d > maxD) maxD = d; j += 1
-            }
-            beta(f) = nb; a0(f) = na
-            if (maxD < math.max(params.thresh * 1e-2, 1e-8)) active(f) = false
-          }
-          iter += 1
-        }
-        for (f <- 0 until F) {
-          for (j <- 0 until p) betaOut(f)(l)(j) = beta(f)(j) / scales(f)(j)
-          a0Out(f)(l) =
-            if (params.intercept)
-              a0(f) - (0 until p).map(j => betaOut(f)(l)(j) * means(f)(j)).sum
-            else a0(f)
-        }
-      }
-
-      // full-data model from the virtual fold + the SgdNet.CsrRows
-      // deviance forms (sparse eta, never densified; v·norm-weighted
-      // when a weight column rides along)
-      val a0Full = Array.tabulate(L)(l => Array(a0Out(nfolds)(l)))
-      val betaFull = Array.tabulate(L)(l => Array(betaOut(nfolds)(l).clone()))
-      val names = (0 until p).map(j => s"V$j").toArray
-      val normFull = norms(nfolds)
-      val full =
-        if (binomial) {
-          val pBar = trainStats(nfolds).yMean(0)
-          val nullP = if (params.intercept) pBar else 0.5
-          val a0Null =
-            if (!params.intercept) 0.0
-            else if (pBar > 0 && pBar < 1) math.log(pBar / (1 - pBar))
-            else 0.0
-          val devs = rows.treeAggregate(new Array[Double](L + 1))(
-            (acc, t) => {
-              val (_, idx, vals, y, v) = t
-              def binDev(eta: Double): Double = {
-                val m = math.max(eta, 0.0)
-                2.0 * (m + math.log(math.exp(-m) + math.exp(eta - m)) - y * eta)
-              }
-              val vn = v * normFull
-              var l = 0
-              while (l < L) {
-                var eta = a0Full(l)(0)
-                val bl = betaFull(l)(0)
-                var i = 0
-                while (i < idx.length) { eta += bl(idx(i)) * vals(i); i += 1 }
-                acc(l) += vn * binDev(eta)
-                l += 1
-              }
-              acc(L) += vn * binDev(a0Null)
-              acc
-            },
-            (a, b) => { var i = 0; while (i <= L) { a(i) += b(i); i += 1 }; a },
-            depth = 2)
-          // unweighted keeps round 15's closed-form nulldev bit-exactly;
-          // weighted takes the v·norm-weighted pass (the
-          // cvWeightedGlmShared form)
-          val nulldev =
-            if (weighted) devs(L)
-            else -2.0 * total.n *
-              (SgdNet.safeXLog(pBar, nullP) + SgdNet.safeXLog(1 - pBar, 1 - nullP))
-          val devRatio = devs.take(L).map(d =>
-            SgdNetModel.devRatio(d, nulldev))
-          new SgdNetModel("binomial", names, Array(labelCol), classes,
-            lambdas, a0Full, betaFull, nulldev, devRatio, total.n,
-            sharedPasses + 2, params)
-        } else {
-          val muNull = if (params.intercept) trainStats(nfolds).yMean(0) else 1.0
-          val devs = rows.treeAggregate(new Array[Double](L + 1))(
-            (acc, t) => {
-              val (_, idx, vals, y, v) = t
-              def devTerm(mu: Double): Double = {
-                val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-                2.0 * (ylog - (y - mu))
-              }
-              val vn = v * normFull
-              var l = 0
-              while (l < L) {
-                var eta = a0Full(l)(0)
-                val bl = betaFull(l)(0)
-                var i = 0
-                while (i < idx.length) { eta += bl(idx(i)) * vals(i); i += 1 }
-                acc(l) += vn * devTerm(math.exp(math.max(math.min(eta, 30.0), -30.0)))
-                l += 1
-              }
-              acc(L) += vn * devTerm(muNull)
-              acc
-            },
-            (a, b) => { var i = 0; while (i <= L) { a(i) += b(i); i += 1 }; a },
-            depth = 2)
-          val nulldev = devs.last
-          val devRatio = Array.tabulate(L)(l =>
-            SgdNetModel.devRatio(devs(l), nulldev))
-          new SgdNetModel("poisson", names, Array(labelCol), Array.empty,
-            lambdas, a0Full, betaFull, nulldev, devRatio, total.n,
-            sharedPasses + 2, params)
-        }
-
-      // held-out scoring per (fold, lambda) — sparse eta per row,
-      // Σv·err / Σv with RAW v
-      val bA0 = sc.broadcast(a0Out)
-      val bBeta = sc.broadcast(betaOut)
-      val foldScores = measure match {
-        case "auc" =>
-          val spark = df.sparkSession
-          val scored = spark.createDataFrame(rows.map { t =>
-            val (f, idx, vals, y, v) = t
-            val etas = new Array[Double](L)
-            var l = 0
-            while (l < L) {
-              var eta = bA0.value(f)(l)
-              val bl = bBeta.value(f)(l)
-              var i = 0
-              while (i < idx.length) { eta += bl(idx(i)) * vals(i); i += 1 }
-              etas(l) = eta
-              l += 1
-            }
-            (f, y, v, etas)
-          }).toDF("__fold", "__y", "__v", "__etas")
-          val exploded = scored
-            .select(col("__fold"), col("__y"), col("__v"),
-              posexplode(col("__etas")).as(Seq("__l", "__s")))
-            .select((col("__l") * nfolds + col("__fold")).as("__g"),
-              col("__s"), col("__y"), col("__v"))
-          val aucs = aucPerGroup(exploded, L * nfolds,
-            weightCol = if (weighted) "__v" else null)
-          Array.tabulate(nfolds, L)((f, l) => aucs(l * nfolds + f))
-        case _ =>
-          val sums = rows.treeAggregate(new Array[Double](nfolds * L))(
-            (acc, t) => {
-              val (f, idx, vals, y, v) = t
-              var l = 0
-              while (l < L) {
-                var eta = bA0.value(f)(l)
-                val bl = bBeta.value(f)(l)
-                var i = 0
-                while (i < idx.length) { eta += bl(idx(i)) * vals(i); i += 1 }
-                acc(f * L + l) += v * (if (binomial) {
-                  val mu = 1.0 / (1.0 + math.exp(-eta))
-                  measure match {
-                    case "mse" => 2.0 * (mu - y) * (mu - y)
-                    case "mae" => 2.0 * math.abs(mu - y)
-                    case "class" => if ((if (mu > 0.5) 1.0 else 0.0) != y) 1.0 else 0.0
-                    case "deviance" =>
-                      val mc = math.min(math.max(mu, 1e-5), 1.0 - 1e-5)
-                      -2.0 * (y * math.log(mc) + (1 - y) * math.log(1 - mc))
-                    case other => // unreachable: fitSparse validates
-                      throw new IllegalArgumentException(s"unknown measure $other")
-                  }
-                } else {
-                  val mu = math.exp(eta)
-                  measure match {
-                    case "mse" => (y - mu) * (y - mu)
-                    case "mae" => math.abs(y - mu)
-                    case "deviance" =>
-                      val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-                      2.0 * (ylog - (y - mu))
-                    case other => // unreachable: fitSparse validates
-                      throw new IllegalArgumentException(s"unknown measure $other")
-                  }
-                })
-                l += 1
-              }
-              acc
-            },
-            (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
-            depth = 2)
-          Array.tabulate(nfolds, L)((f, l) =>
-            sums(f * L + l) / wFold(f))
-      }
-      summarize(params.alpha, lambdas, foldScores, full)
-    } finally rows.unpersist(blocking = false)
-  }
-
-  /** Shared-pass binomial/poisson CV over CSR rows WITH a per-row
-    * offset (see [[fitSparseWithOffset]]): the [[cvSparseGlmShared]]
-    * uncentered-sparse-moment fold-tiling with the
-    * [[cvOffsetGlmShared]] offset algebra — η includes the row offset
-    * in every IRLS accumulation, the WLS target z excludes it (so each
-    * fold's inner solve fits exactly a0 + x·β), per-fold offset nulls
-    * (poisson closed-form exposure MLE; binomial fold-tiled Newton
-    * from the mean-offset-shifted logit, exact for constant offsets),
-    * the offset-corrected sparse lambda path, and held-out predictions
-    * that include the row's own offset. The full-data model rides as
-    * virtual fold nfolds; the matrix is never densified. */
-  private def cvSparseOffsetGlmShared(df: DataFrame, idxCol: String,
-                                      valCol: String, dim: Int,
-                                      labelCol: String, offsetCol: String,
-                                      params: SgdNetParams, nfolds: Int,
-                                      foldCol: Column, measure: String,
-                                      weightCol: String = null): CvPath = {
-    SgdNet.requireNoZeroPf(params, "shared sparse offset CV")
-    val p = dim
-    val weighted = weightCol != null
-    val binomial = params.family == "binomial"
-    val classes: Array[String] =
-      if (binomial) SgdNet.binomialClasses(df, labelCol) else Array.empty
-    val yCol =
-      if (binomial) (col(labelCol).cast("string") === classes(1)).cast("double")
-      else col(labelCol).cast("double")
-    val wCol = if (weighted) col(weightCol).cast("double") else lit(1.0)
-    val hashCols = Seq(col(idxCol), col(valCol), col(labelCol))
-    val rows0 = df
-      .withColumn("__fold", foldExpr(foldCol, hashCols, nfolds).cast("int"))
-      .select(col(idxCol), col(valCol).cast("array<double>"), yCol,
-        col(offsetCol).cast("double"), col("__fold"), wCol)
-      .rdd.map { r =>
-        (r.getInt(4), r.getSeq[Int](0).toArray,
-          r.getSeq[Double](1).toArray, r.getDouble(2), r.getDouble(3),
-          r.getDouble(5))
-      }
-    val rows = (if (weighted)
-        rows0.map { t => require(t._6 >= 0, "weights must be non-negative"); t }
-          .filter(_._6 > 0)
-      else rows0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val F = nfolds + 1
-      // ONE pass: per-fold RAW-v sparse moments + Σv + Σv·e^off
-      // (poisson exposure null) + Σv·off (binomial Newton start)
-      val zero = (Array.fill(nfolds)(new GramStats(p, 1)),
-        new Array[Double](nfolds), new Array[Double](nfolds),
-        new Array[Double](nfolds))
-      val (perFold, wFold, eFold, oFold) = rows.treeAggregate(zero)(
-        (acc, t) => {
-          acc._1(t._1).addSparseWeighted(t._2, t._3, Array(t._4), t._6)
-          acc._2(t._1) += t._6
-          acc._3(t._1) += t._6 *
-            math.exp(math.max(math.min(t._5, 30.0), -30.0))
-          acc._4(t._1) += t._6 * t._5
-          acc
-        },
-        (a, b) => {
-          var i = 0
-          while (i < nfolds) {
-            a._1(i).merge(b._1(i)); a._2(i) += b._2(i); a._3(i) += b._3(i)
-            a._4(i) += b._4(i)
-            i += 1
-          }
-          a
-        }, depth = 2)
-      requireNonEmptyFolds(perFold.map(_.n), nfolds)
-      val total = new GramStats(p, 1)
-      perFold.foreach(total.merge)
-      val wTotal = wFold.sum
-      val eTotal = eFold.sum
-      val oTotal = oFold.sum
-      val syTotal = total.sumY(0)
-      val perFoldExt = perFold :+ new GramStats(p, 1)
-      val wFoldExt = wFold :+ 0.0
-      val eFoldExt = eFold :+ 0.0
-      val oFoldExt = oFold :+ 0.0
-      val syFoldExt = perFold.map(_.sumY(0)) :+ 0.0
-      val nTrain = Array.tabulate(F)(f => (total.n - perFoldExt(f).n).toDouble)
-      val norms = Array.tabulate(F)(f => nTrain(f) / (wTotal - wFoldExt(f)))
-      val trainStats = Array.tabulate(F) { f =>
-        val tr = new GramStats(p, 1).merge(total).subtract(perFoldExt(f))
-          .scaleWeights(norms(f))
-        SufficientStats.standardize(tr, params.standardize, params.intercept)
-      }
-      var sharedPasses = 1
-      // per-fold offset null intercepts (the cvOffsetGlmShared forms)
-      val a0Null: Array[Double] =
-        if (!binomial) Array.tabulate(F) { f =>
-          val sy = syTotal - syFoldExt(f)
-          require(sy > 0,
-            "poisson response must contain positive counts in every train fold")
-          if (params.intercept) math.log(sy / (eTotal - eFoldExt(f))) else 0.0
-        } else {
-          val a0 = Array.tabulate(F) { f =>
-            val tw = wTotal - wFoldExt(f)
-            val yb = (syTotal - syFoldExt(f)) / tw
-            require(yb > 0 && yb < 1,
-              "binomial response must contain both classes in every train fold")
-            if (params.intercept)
-              math.log(yb / (1 - yb)) - (oTotal - oFoldExt(f)) / tw
-            else 0.0
-          }
-          if (params.intercept) {
-            var it = 0
-            var done = false
-            while (it < 25 && !done) {
-              val a0Snap = a0.clone()
-              val acc = rows.treeAggregate(new Array[Double](2 * F))(
-                (s, t) => {
-                  val (rowFold, _, _, y, off, v) = t
-                  var f = 0
-                  while (f < F) {
-                    if (f != rowFold) {
-                      val mu = 1.0 / (1.0 + math.exp(-(a0Snap(f) + off)))
-                      s(2 * f) += v * (y - mu)
-                      s(2 * f + 1) += v * math.max(mu * (1.0 - mu), 1e-10)
-                    }
-                    f += 1
-                  }
-                  s
-                },
-                (a, b) => {
-                  var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-                }, depth = 2)
-              sharedPasses += 1
-              var mx = 0.0
-              for (f <- 0 until F) {
-                val step = acc(2 * f) / acc(2 * f + 1)
-                a0(f) += step
-                if (math.abs(step) > mx) mx = math.abs(step)
-              }
-              it += 1
-              if (mx < 1e-12) done = true
-            }
-          }
-          a0
-        }
-      val means = trainStats.map(st =>
-        if (params.intercept) st.xMean else new Array[Double](p))
-      val scales = trainStats.map(st =>
-        if (params.standardize) st.xSd else Array.fill(p)(1.0))
-      val boundsF = scales.map(s => SgdNet.boundsStd(params, s, 1.0))
-      val sc = rows.sparkContext
-
-      val lambdas =
-        if (params.lambda != null) params.lambda
-        else {
-          // offset-corrected sparse lambda_max on the full data:
-          // uncentered Σr·x over the nonzeros + Σr, centered
-          // driver-side (the sparse null-gradient algebra)
-          val minRatio = if (params.lambdaMinRatio.isNaN)
-            LambdaPath.defaultMinRatio(total.n, p) else params.lambdaMinRatio
-          val a0N = a0Null(nfolds)
-          val nrm = norms(nfolds)
-          val acc = rows.treeAggregate(new Array[Double](p + 1))(
-            (s, t) => {
-              val (_, idx, vals, y, off, v) = t
-              val mu =
-                if (binomial) 1.0 / (1.0 + math.exp(-(a0N + off)))
-                else math.exp(math.max(math.min(a0N + off, 30.0), -30.0))
-              val r = v * nrm * (y - mu)
-              var i = 0
-              while (i < idx.length) { s(idx(i)) += r * vals(i); i += 1 }
-              s(p) += r
-              s
-            },
-            (a, b) => { var i = 0; while (i <= p) { a(i) += b(i); i += 1 }; a },
-            depth = 2)
-          sharedPasses += 1
-          val mF = means(nfolds); val sF = scales(nfolds)
-          val bOff = Array.tabulate(p)(j =>
-            (acc(j) - mF(j) * acc(p)) / sF(j) / nTrain(nfolds))
-          LambdaPath.build(Array(bOff), params.alpha, params.nlambda,
-            minRatio, params.penaltyFactor)
-        }
-
-      val L = lambdas.length
-      val beta = Array.fill(F)(new Array[Double](p))
-      val a0 = a0Null.clone()
-      val a0Out = Array.ofDim[Double](F, L)
-      val betaOut = Array.ofDim[Double](F, L, p)
-
-      // per-fold CENTERED solve from an uncentered gram — the
-      // cvSparseGlmShared centering algebra
-      def solveFold(f: Int, g: BinWGram, l: Int): (Array[Double], Double) = {
-        val mean = means(f); val scale = scales(f)
-        val ninv = 1.0 / nTrain(f)
-        val swxStd = Array.tabulate(p)(j =>
-          (g.swx(j) - mean(j) * g.sw) / scale(j))
-        val swxzStd = Array.tabulate(p)(j =>
-          (g.swxz(j) - mean(j) * g.swz) / scale(j))
-        val aM = Array.ofDim[Double](p, p)
-        var j = 0
-        while (j < p) {
-          var i = 0
-          while (i <= j) {
-            val v = (g.swxx(LinAlg.triIdx(i, j)) - mean(i) * g.swx(j) -
-              mean(j) * g.swx(i) + mean(i) * mean(j) * g.sw) /
-              (scale(i) * scale(j)) * ninv
-            aM(i)(j) = v; aM(j)(i) = v
-            i += 1
-          }
-          j += 1
-        }
-        val r = CoordinateDescent.solve(aM, swxzStd.map(_ * ninv),
-          swxStd.map(_ * ninv), g.swz * ninv, g.sw * ninv,
-          lambdas(l), params.alpha, params.intercept, beta(f),
-          thresh = math.max(params.thresh * 1e-4, 1e-10),
-          maxIter = params.maxit,
-          penaltyFactor = params.penaltyFactor,
-          lower = boundsF(f)._1, upper = boundsF(f)._2)
-        (r.beta, r.a0)
-      }
-      val lastGram = Array.fill[BinWGram](F)(null)
-
-      for (l <- 0 until L) {
-        val active = Array.fill(F)(true)
-        // free first Newton step against the carried grams
-        if (lastGram.forall(_ != null)) {
-          for (f <- 0 until F) {
-            val (nb, na) = solveFold(f, lastGram(f), l)
-            var maxD = math.abs(na - a0(f))
-            var j = 0
-            while (j < p) {
-              val d = math.abs(nb(j) - beta(f)(j)); if (d > maxD) maxD = d; j += 1
-            }
-            beta(f) = nb; a0(f) = na
-            if (maxD == 0.0) active(f) = false
-          }
-        }
-        var iter = 0
-        while (iter < 25 && active.exists(identity)) {
-          val activeSnap = active.clone()
-          // per-fold linear-predictor form on the ORIGINAL sparse
-          // scale: eta = foldOff_f + rowOff + Σ vals·(beta_f/scale_f)
-          val bOverS = Array.tabulate(F, p)((f, j) => beta(f)(j) / scales(f)(j))
-          val offs = Array.tabulate(F) { f =>
-            var o = a0(f)
-            var j = 0
-            while (j < p) { o -= means(f)(j) * bOverS(f)(j); j += 1 }
-            o
-          }
-          val bc = sc.broadcast((bOverS, offs, norms))
-          sharedPasses += 1
-          // ONE pass: uncentered v-weighted sparse offset-IRLS moments
-          // for all active folds — η includes the row offset, the WLS
-          // target z excludes it
-          val grams = rows.treeAggregate(Array.fill(F)(new BinWGram(p)))(
-            (acc, t) => {
-              val (rowFold, idx, vals, y, off, v) = t
-              val (bos, foldOff, nrm) = bc.value
-              var f = 0
-              while (f < F) {
-                if (f != rowFold && activeSnap(f)) {
-                  var eta = foldOff(f) + off
-                  var i = 0
-                  while (i < idx.length) { eta += vals(i) * bos(f)(idx(i)); i += 1 }
-                  var w = 0.0
-                  var z = 0.0
-                  if (binomial) {
-                    val mu = 1.0 / (1.0 + math.exp(-eta))
-                    w = math.max(mu * (1.0 - mu), 1e-5)
-                    z = eta + (y - mu) / w - off
-                  } else {
-                    val etaC = math.max(math.min(eta, 30.0), -30.0)
-                    val mu = math.exp(etaC)
-                    w = math.max(mu, 1e-5)
-                    z = etaC + (y - mu) / w - off
-                  }
-                  val vw = v * nrm(f) * w
-                  val g = acc(f)
-                  g.sw += vw; g.swz += vw * z
-                  var i2 = 0
-                  while (i2 < idx.length) {
-                    val j = idx(i2)
-                    val wxj = vw * vals(i2)
-                    g.swx(j) += wxj
-                    g.swxz(j) += wxj * z
-                    var m = 0
-                    while (m <= i2) {
-                      g.swxx(LinAlg.triIdx(idx(m), j)) += wxj * vals(m)
-                      m += 1
-                    }
-                    i2 += 1
-                  }
-                }
-                f += 1
-              }
-              acc
-            },
-            (a, b) => { var i = 0; while (i < F) { a(i).merge(b(i)); i += 1 }; a },
-            depth = 2)
-          for (f <- 0 until F if active(f)) {
-            lastGram(f) = grams(f)
-            val (nb, na) = solveFold(f, grams(f), l)
-            var maxD = math.abs(na - a0(f))
-            var j = 0
-            while (j < p) {
-              val d = math.abs(nb(j) - beta(f)(j)); if (d > maxD) maxD = d; j += 1
-            }
-            beta(f) = nb; a0(f) = na
-            if (maxD < math.max(params.thresh * 1e-2, 1e-8)) active(f) = false
-          }
-          iter += 1
-        }
-        for (f <- 0 until F) {
-          for (j <- 0 until p) betaOut(f)(l)(j) = beta(f)(j) / scales(f)(j)
-          a0Out(f)(l) =
-            if (params.intercept)
-              a0(f) - (0 until p).map(j => betaOut(f)(l)(j) * means(f)(j)).sum
-            else a0(f)
-        }
-      }
-
-      // full-data model from the virtual fold + sparse offset deviance
-      // pass (nulldev at the offset null, per row)
-      val a0Full = Array.tabulate(L)(l => Array(a0Out(nfolds)(l)))
-      val betaFull = Array.tabulate(L)(l => Array(betaOut(nfolds)(l).clone()))
-      val names = (0 until p).map(j => s"V$j").toArray
-      val normFull = norms(nfolds)
-      val a0NullFull = a0Null(nfolds)
-      val devs = rows.treeAggregate(new Array[Double](L + 1))(
-        (acc, t) => {
-          val (_, idx, vals, y, off, v) = t
-          def binDev(eta: Double): Double = {
-            val m = math.max(eta, 0.0)
-            2.0 * (m + math.log(math.exp(-m) + math.exp(eta - m)) - y * eta)
-          }
-          def poisDev(mu: Double): Double = {
-            val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-            2.0 * (ylog - (y - mu))
-          }
-          val vn = v * normFull
-          var l = 0
-          while (l < L) {
-            var eta = a0Full(l)(0) + off
-            val bl = betaFull(l)(0)
-            var i = 0
-            while (i < idx.length) { eta += bl(idx(i)) * vals(i); i += 1 }
-            acc(l) += vn * (if (binomial) binDev(eta)
-              else poisDev(math.exp(math.max(math.min(eta, 30.0), -30.0))))
-            l += 1
-          }
-          acc(L) += vn * (if (binomial) binDev(a0NullFull + off)
-            else poisDev(math.exp(
-              math.max(math.min(a0NullFull + off, 30.0), -30.0))))
-          acc
-        },
-        (a, b) => { var i = 0; while (i <= L) { a(i) += b(i); i += 1 }; a },
-        depth = 2)
-      val nulldev = devs(L)
-      val devRatio = Array.tabulate(L)(l =>
-        SgdNetModel.devRatio(devs(l), nulldev))
-      val full = new SgdNetModel(params.family, names, Array(labelCol),
-        classes, lambdas, a0Full, betaFull, nulldev, devRatio, total.n,
-        sharedPasses + 2, params)
-
-      // held-out scoring per (fold, lambda): the prediction includes
-      // the row's own offset (newoffset); Σv·err / Σv with RAW v
-      val bA0 = sc.broadcast(a0Out)
-      val bBeta = sc.broadcast(betaOut)
-      val foldScores = measure match {
-        case "auc" =>
-          val spark = df.sparkSession
-          val scored = spark.createDataFrame(rows.map { t =>
-            val (f, idx, vals, y, off, v) = t
-            val etas = new Array[Double](L)
-            var l = 0
-            while (l < L) {
-              var eta = bA0.value(f)(l) + off
-              val bl = bBeta.value(f)(l)
-              var i = 0
-              while (i < idx.length) { eta += bl(idx(i)) * vals(i); i += 1 }
-              etas(l) = eta
-              l += 1
-            }
-            (f, y, v, etas)
-          }).toDF("__fold", "__y", "__v", "__etas")
-          val exploded = scored
-            .select(col("__fold"), col("__y"), col("__v"),
-              posexplode(col("__etas")).as(Seq("__l", "__s")))
-            .select((col("__l") * nfolds + col("__fold")).as("__g"),
-              col("__s"), col("__y"), col("__v"))
-          val aucs = aucPerGroup(exploded, L * nfolds,
-            weightCol = if (weighted) "__v" else null)
-          Array.tabulate(nfolds, L)((f, l) => aucs(l * nfolds + f))
-        case _ =>
-          val sums = rows.treeAggregate(new Array[Double](nfolds * L))(
-            (acc, t) => {
-              val (f, idx, vals, y, off, v) = t
-              var l = 0
-              while (l < L) {
-                var eta = bA0.value(f)(l) + off
-                val bl = bBeta.value(f)(l)
-                var i = 0
-                while (i < idx.length) { eta += bl(idx(i)) * vals(i); i += 1 }
-                acc(f * L + l) += v * (if (binomial) {
-                  val mu = 1.0 / (1.0 + math.exp(-eta))
-                  measure match {
-                    case "mse" => 2.0 * (mu - y) * (mu - y)
-                    case "mae" => 2.0 * math.abs(mu - y)
-                    case "class" => if ((if (mu > 0.5) 1.0 else 0.0) != y) 1.0 else 0.0
-                    case "deviance" =>
-                      val mc = math.min(math.max(mu, 1e-5), 1.0 - 1e-5)
-                      -2.0 * (y * math.log(mc) + (1 - y) * math.log(1 - mc))
-                    case other => // unreachable: fitSparseWithOffset validates
-                      throw new IllegalArgumentException(s"unknown measure $other")
-                  }
-                } else {
-                  val mu = math.exp(math.max(math.min(eta, 30.0), -30.0))
-                  measure match {
-                    case "mse" => (y - mu) * (y - mu)
-                    case "mae" => math.abs(y - mu)
-                    case "deviance" =>
-                      val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-                      2.0 * (ylog - (y - mu))
-                    case other => // unreachable: fitSparseWithOffset validates
-                      throw new IllegalArgumentException(s"unknown measure $other")
-                  }
-                })
-                l += 1
-              }
-              acc
-            },
-            (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
-            depth = 2)
-          Array.tabulate(nfolds, L)((f, l) => sums(f * L + l) / wFold(f))
-      }
-      summarize(params.alpha, lambdas, foldScores, full)
     } finally rows.unpersist(blocking = false)
   }
 
@@ -5084,7 +3210,7 @@ object CvSgdNet {
                         nfolds: Int, measure: String,
                         foldCol: Column = null): CvPath = {
     // binomial (the only auc-capable family) always routes to
-    // cvBinomialShared, so auc cannot be satisfied here
+    // cvIrls, so auc cannot be satisfied here
     if (measure == "auc")
       throw new IllegalArgumentException(
         s"auc requires the binomial family, not ${params.family}")
@@ -5122,11 +3248,10 @@ object CvSgdNet {
     *    wMSE/deviance are v-weighted moment forms (mae adds one
     *    aggregation). CV cost: ONE data pass (+1 for mae) regardless of
     *    nfolds and of the alpha grid (moments are alpha-independent).
-    *  - binomial / poisson: shared IRLS on the [[cvBinomialShared]]
-    *    chassis — all folds advance in one treeAggregate per Newton
-    *    round with v·norm_f folded into each fold's IRLS weight
-    *    (exactly `SgdNet.DenseRows.gram`'s per-row accumulation, tiled
-    *    per fold), the full-data fit riding as the virtual fold.
+    *  - binomial / poisson: the shared IRLS path [[cvIrls]] — all
+    *    folds advance in one pass per Newton round with v·norm_f folded
+    *    into each fold's IRLS weight, the full-data fit riding as the
+    *    virtual fold.
     *
     *  - multinomial: shared FISTA on the [[cvMultinomialShared]]
     *    chassis with vn·(p−y) gradient contributions
@@ -5179,9 +3304,10 @@ object CvSgdNet {
         cvWeightedGaussian(df, featureCols, labelCols, weightCol, params,
           nfolds, alphaGrid, measure, foldCol)
       case "binomial" | "poisson" =>
-        alphaGrid.map(a => cvWeightedGlmShared(df, featureCols,
-          labelCols.head, weightCol, params.copy(alpha = a), nfolds, foldCol,
-          measure))
+        cvIrls(df, labelCols.head, params, nfolds, alphaGrid, measure,
+          weighted = true, hasOffset = false, featureCols.toArray,
+          denseIrlsRows(df, featureCols, labelCols.head, nfolds, foldCol,
+            weightCol, null))
       case "multinomial" =>
         alphaGrid.map(a => cvWeightedMultinomialShared(df, featureCols,
           labelCols.head, weightCol, params.copy(alpha = a), nfolds, foldCol,
@@ -5709,8 +3835,10 @@ object CvSgdNet {
       require(okMeasures.contains(measure),
         s"relaxed ${params.family} CV supports " +
           s"${okMeasures.toSeq.sorted.mkString("|")}, not '$measure'")
-      return cvRelaxedGlmShared(df, featureCols, labelCol, params, nfolds,
-        gammas, measure, foldCol, weightCol, offsetCol)
+      return cvRelaxedIrls(df, labelCol, params, nfolds, gammas, measure,
+        weighted = weightCol != null, hasOffset = offsetCol != null,
+        featureCols.toArray, denseIrlsRows(df, featureCols, labelCol, nfolds,
+          foldCol, weightCol, offsetCol))
         .copy(offsetFit = offsetCol != null)
     }
     require(params.family == "gaussian",
@@ -5950,8 +4078,10 @@ object CvSgdNet {
       require(okMeasures.contains(measure),
         s"relaxed ${params.family} CV supports " +
           s"${okMeasures.toSeq.sorted.mkString("|")}, not '$measure'")
-      return cvRelaxedGlmSharedSparse(df, idxCol, valCol, dim, labelCol,
-        params, nfolds, gammas, measure, foldCol, weightCol, offsetCol)
+      return cvRelaxedIrls(df, labelCol, params, nfolds, gammas, measure,
+        weighted = weightCol != null, hasOffset = offsetCol != null,
+        Array.tabulate(dim)(j => s"V$j"), csrIrlsRows(df, idxCol, valCol,
+          dim, labelCol, nfolds, foldCol, weightCol, offsetCol))
         .copy(offsetFit = offsetCol != null)
     }
     require(params.family == "gaussian",
@@ -6147,1179 +4277,259 @@ object CvSgdNet {
       relaxedFull)
   }
 
-  /** Relaxed CV for the IRLS families (round 16 — cv.glmnet
-    * relax = TRUE with binomial | poisson): three fold-tiled stages,
-    * each ONE treeAggregate per round regardless of nfolds × nlambda:
+  /** Relaxed CV for the IRLS families (cv.glmnet relax = TRUE with
+    * binomial | poisson), dense or CSR rows, in three fold-tiled stages,
+    * each ONE pass per round regardless of nfolds × nlambda:
     *
-    *  1. per-fold PENALIZED paths — the [[cvWeightedGlmShared]] IRLS
-    *     fold-tiling (v = 1 when unweighted);
+    *  1. per-fold PENALIZED paths — the [[cvIrls]] setup and stage 1
+    *     ([[foldPaths]]), full-data model riding as virtual fold nfolds;
     *  2. per-(fold, lambda) UNPENALIZED active-set refits — the
     *     [[SgdNet.relaxedFitGlm]] restricted-moment algebra tiled over
-    *     BOTH folds and lambdas: each Newton round accumulates every
-    *     unconverged cell's restricted WLS block from its train rows
-    *     and solves driver-side (warm-started at the penalized
-    *     coefficients; empty active sets take the fold's closed-form
-    *     null);
+    *     BOTH folds and lambdas ([[refitSums]]): each Newton round
+    *     accumulates every unconverged cell's restricted WLS block from
+    *     its train rows and solves driver-side (warm-started at the
+    *     penalized coefficients; empty active sets take the fold's
+    *     null, the offset null when an offset rides along);
     *  3. held-out scoring of every (gamma, fold, lambda) blend in one
-    *     pass (newoffset-free glmnet measures, Σv·err/Σv), plus one
-    *     deviance pass for the per-gamma blended full models.
-    *
-    * The full-data relaxed path rides as virtual fold nfolds. */
-  private def cvRelaxedGlmShared(df: DataFrame, featureCols: Seq[String],
-                                 labelCol: String, params: SgdNetParams,
-                                 nfolds: Int, gammas: Seq[Double],
-                                 measure: String, foldCol: Column,
-                                 weightCol: String,
-                                 offsetCol: String = null): RelaxedCvResult = {
-    SgdNet.requireNoZeroPf(params, "relaxed GLM CV")
-    val p = featureCols.size
-    val binomial = params.family == "binomial"
-    val weighted = weightCol != null
-    val hasOffset = offsetCol != null
-    val classes: Array[String] =
-      if (binomial) SgdNet.binomialClasses(df, labelCol) else Array.empty
-    val yCol =
-      if (binomial) (col(labelCol).cast("string") === classes(1)).cast("double")
-      else col(labelCol).cast("double")
-    val wCol = if (weighted) col(weightCol).cast("double") else lit(1.0)
-    val oCol = if (hasOffset) col(offsetCol).cast("double") else lit(0.0)
-    val hashCols = (featureCols :+ labelCol).map(col)
-    val rows0 = df
-      .withColumn("__fold", foldExpr(foldCol, hashCols, nfolds).cast("int"))
-      .select((featureCols.map(c => col(c).cast("double")) :+
-        yCol :+ wCol :+ oCol :+ col("__fold")): _*)
-      .rdd.map { r =>
-        val x = new Array[Double](p)
-        var j = 0
-        while (j < p) { x(j) = r.getDouble(j); j += 1 }
-        (r.getInt(p + 3), x, r.getDouble(p), r.getDouble(p + 1),
-          r.getDouble(p + 2))
-      }
-    val rows = (if (weighted)
-        rows0.map { t => require(t._4 >= 0, "weights must be non-negative"); t }
-          .filter(_._4 > 0)
-      else rows0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val F = nfolds + 1
-      // ONE pass: per-fold raw-v moments + Σv + Σv·e^off + Σv·off (the
-      // last two feed the per-fold OFFSET nulls; zero when no offset)
-      val zero = (Array.fill(nfolds)(new GramStats(p, 1)),
-        new Array[Double](nfolds), new Array[Double](nfolds),
-        new Array[Double](nfolds))
-      val (perFold, wFold, eFold, oFold) = rows.treeAggregate(zero)(
-        (acc, t) => {
-          acc._1(t._1).addWeighted(t._2, Array(t._3), t._4)
-          acc._2(t._1) += t._4
-          acc._3(t._1) += t._4 *
-            math.exp(math.max(math.min(t._5, 30.0), -30.0))
-          acc._4(t._1) += t._4 * t._5
-          acc
-        },
-        (a, b) => {
+    *     pass ([[heldOutScores]]), plus one deviance pass for the
+    *     per-gamma blended full models. */
+  private def cvRelaxedIrls(df: DataFrame, labelCol: String,
+                            params: SgdNetParams, nfolds: Int,
+                            gammas: Seq[Double], measure: String,
+                            weighted: Boolean, hasOffset: Boolean,
+                            names: Array[String],
+                            rowsOf: Column => SgdNet.IrlsRows): RelaxedCvResult =
+    withIrlsSetup(df, labelCol, params, nfolds, weighted, hasOffset, rowsOf) {
+      (s, classes) =>
+        val p = s.p
+        val F = s.full + 1
+        val fp = foldPaths(s, params)
+        val lambdas = fp.lambdas
+        val L = lambdas.length
+        val sc = df.sparkSession.sparkContext
+
+        // --------- stage 2: per-(fold, lambda) unpenalized active-set
+        // refits, tiled over both folds and lambdas (original scale)
+        val activeSet = Array.tabulate(F, L)((f, l) =>
+          (0 until p).filter(j => fp.beta(f)(l)(j) != 0.0).toArray)
+        val a0R = Array.tabulate(F, L)((f, l) => fp.a0(f)(l))
+        val bFull = Array.tabulate(F, L)((f, l) => fp.beta(f)(l).clone())
+        val doneR = Array.ofDim[Boolean](F, L)
+        for (f <- 0 until F; l <- 0 until L if activeSet(f)(l).isEmpty) {
+          a0R(f)(l) = s.a0Null(f)
+          java.util.Arrays.fill(bFull(f)(l), 0.0)
+          doneR(f)(l) = true
+        }
+        val tolR = math.max(params.thresh * 1e-2, 1e-8)
+        var passes = fp.passes
+        var iterR = 0
+        while (iterR < 25 && !doneR.forall(_.forall(identity))) {
+          val live = (for (f <- 0 until F; l <- 0 until L if !doneR(f)(l))
+            yield (f, l)).toArray
+          val offs = live.map { case (f, l) =>
+            val m = activeSet(f)(l).length
+            2 + 2 * m + LinAlg.triSize(m)
+          }.scanLeft(0)(_ + _)
+          val acc = refitSums(s, sc.broadcast(RefitCells(live.map(_._1),
+            live.map { case (f, l) => activeSet(f)(l) },
+            live.map { case (f, l) => a0R(f)(l) },
+            live.map { case (f, l) => bFull(f)(l) }, offs)))
+          passes += 1
+          for (i <- live.indices) {
+            val (f, l) = live(i)
+            val a = activeSet(f)(l)
+            val m = a.length
+            val loA = if (params.lowerLimits == null) null
+              else a.map(params.lowerLimits(_))
+            val upA = if (params.upperLimits == null) null
+              else a.map(params.upperLimits(_))
+            val (na0, sol) = SgdNet.solveRestrictedWls(acc, offs(i), m,
+              params.intercept, loA, upA, a.map(bFull(f)(l)(_)), params.maxit)
+            var maxD = math.abs(na0 - a0R(f)(l))
+            for (q <- 0 until m) {
+              val d = math.abs(sol(q) - bFull(f)(l)(a(q)))
+              if (d > maxD) maxD = d
+            }
+            a0R(f)(l) = na0
+            for (q <- 0 until m) bFull(f)(l)(a(q)) = sol(q)
+            if (maxD < tolR) doneR(f)(l) = true
+          }
+          iterR += 1
+        }
+
+        // the γ-blend γ·penalized + (1−γ)·refit of cell (f, l), column
+        // g·L + l of the blended coefficient sets
+        val gArr = gammas.toArray
+        val G = gArr.length
+        def blendA0(f: Int, c: Int): Double = {
+          val gm = gArr(c / L); val l = c % L
+          gm * fp.a0(f)(l) + (1 - gm) * a0R(f)(l)
+        }
+        def blendBeta(f: Int, c: Int): Array[Double] = {
+          val gm = gArr(c / L); val l = c % L
+          Array.tabulate(p)(j => gm * fp.beta(f)(l)(j) + (1 - gm) * bFull(f)(l)(j))
+        }
+        val full = nfolds
+        // one pass: deviances of every (gamma, lambda) blend + the null
+        val devs = s.rows.deviance(s.fam,
+          Array.tabulate(G * L)(c => Array(blendA0(full, c))) :+ Array(s.a0Null(full)),
+          Array.tabulate(G * L)(c => Array(blendBeta(full, c))) :+
+            Array(new Array[Double](p)), s.norm(full))
+        val nulldev = devs(G * L)
+
+        // ------ stage 3: held-out scores for every (gamma, fold, lambda)
+        val scores = heldOutScores(df.sparkSession, s, measure,
+          Array.tabulate(nfolds, G * L)(blendA0),
+          Array.tabulate(nfolds, G * L)(blendBeta))
+        passes += 2
+        val paths = (0 until G).map { g =>
+          val model = new SgdNetModel(params.family, names, Array(labelCol),
+            classes, lambdas,
+            Array.tabulate(L)(l => Array(blendA0(full, g * L + l))),
+            Array.tabulate(L)(l => Array(blendBeta(full, g * L + l))), nulldev,
+            Array.tabulate(L)(l => SgdNetModel.devRatio(devs(g * L + l), nulldev)),
+            s.nObs, passes, params)
+          summarize(params.alpha, lambdas,
+            Array.tabulate(nfolds, L)((f, l) => scores(f)(g * L + l)), model,
+            maximize = measure == "auc")
+        }
+        // cv.glmnet relax maximizes auc (sign-flipped internally); every
+        // other measure minimizes — unlike plain fit's documented
+        // reference which.min parity (R/cv_sgdnet.R:265-282), the relax
+        // grid is a glmnet-parity surface.
+        val bestIdx =
+          if (measure == "auc") (0 until G).maxBy(g => paths(g).cvm.max)
+          else (0 until G).minBy(g => paths(g).cvm.min)
+        // the gamma = 1 slice IS the penalized model's deviance when 1.0
+        // is in the grid; otherwise its dev.ratio (informational here) is NaN
+        val g1 = gArr.indexWhere(_ == 1.0)
+        val fullPenalized = new SgdNetModel(params.family, names,
+          Array(labelCol), classes, lambdas,
+          Array.tabulate(L)(l => Array(fp.a0(full)(l))),
+          Array.tabulate(L)(l => Array(fp.beta(full)(l))), nulldev,
+          Array.tabulate(L)(l =>
+            if (nulldev <= 0) 0.0
+            else if (g1 >= 0) SgdNetModel.devRatio(devs(g1 * L + l), nulldev)
+            else Double.NaN),
+          s.nObs, passes, params)
+        val relaxedFull = SgdNet.RelaxedPath(fullPenalized, a0R(full),
+          bFull(full), 1.0)
+        RelaxedCvResult(gArr, paths, gArr(bestIdx), paths(bestIdx), relaxedFull)
+    }
+
+  /** The live cells of one relaxed-refit round: each cell's model
+    * (fold), sorted active set, current (a0, β) on the original scale
+    * and the offset of its restricted WLS block
+    * [Σw, Σwz, Σw·x_A, Σw·x_A·z, packed Σw·x_A·x_A'] in the round's
+    * accumulator. */
+  private final case class RefitCells(model: Array[Int], active: Array[Array[Int]],
+                                      a0: Array[Double], beta: Array[Array[Double]],
+                                      offs: Array[Int])
+
+  /** One refit pass: every live cell's restricted IRLS moments from its
+    * train rows (a row feeds every cell but its own fold's), η = off +
+    * a0 + x·β and target z − off, the raw weight folded into the IRLS
+    * weight (the unpenalized solve is scale-free). CSR rows walk their
+    * nonzeros and find their active-set slots by binary search in the
+    * cell's sorted active array, so the broadcast stays O(Σ active). */
+  private def refitSums(s: SgdNet.IrlsSetup,
+                        bc: org.apache.spark.broadcast.Broadcast[RefitCells]): Array[Double] = {
+    val fam = s.fam
+    val size = bc.value.offs.last
+    def link(eta: Double, y: Double, off: Double): (Double, Double) = {
+      val e = fam.clampEta(eta)
+      val mu = fam.mean(e)
+      val w = fam.weight(mu)
+      (w, e + (y - mu) / w - off)
+    }
+    val merge = (a: Array[Double], b: Array[Double]) => {
+      var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
+    }
+    s.rows match {
+      case d: SgdNet.DenseRows =>
+        d.rdd.treeAggregate(new Array[Double](size))((acc, r) => {
+          val cells = bc.value
+          val x = r.x
           var i = 0
-          while (i < nfolds) {
-            a._1(i).merge(b._1(i)); a._2(i) += b._2(i); a._3(i) += b._3(i)
-            a._4(i) += b._4(i)
+          while (i < cells.model.length) {
+            if (cells.model(i) != r.fold) {
+              val a = cells.active(i)
+              val m = a.length
+              val b = cells.beta(i)
+              var eta = cells.a0(i) + r.off
+              var q = 0
+              while (q < m) { eta += b(a(q)) * x(a(q)); q += 1 }
+              val (w0, z) = link(eta, r.y, r.off)
+              val w = w0 * r.w
+              val base = cells.offs(i)
+              acc(base) += w
+              acc(base + 1) += w * z
+              q = 0
+              while (q < m) {
+                val wx = w * x(a(q))
+                acc(base + 2 + q) += wx
+                acc(base + 2 + m + q) += wx * z
+                var r2 = 0
+                while (r2 <= q) {
+                  acc(base + 2 + 2 * m + LinAlg.triIdx(r2, q)) += wx * x(a(r2))
+                  r2 += 1
+                }
+                q += 1
+              }
+            }
             i += 1
           }
-          a
-        }, depth = 2)
-      requireNonEmptyFolds(perFold.map(_.n), nfolds)
-      val total = new GramStats(p, 1)
-      perFold.foreach(total.merge)
-      val wTotal = wFold.sum
-      val eTotal = eFold.sum
-      val oTotal = oFold.sum
-      val syTotal = total.sumY(0)
-      val perFoldExt = perFold :+ new GramStats(p, 1)
-      val wFoldExt = wFold :+ 0.0
-      val eFoldExt = eFold :+ 0.0
-      val oFoldExt = oFold :+ 0.0
-      val syFoldExt = perFold.map(_.sumY(0)) :+ 0.0
-      val nTrain = Array.tabulate(F)(f => (total.n - perFoldExt(f).n).toDouble)
-      val norms = Array.tabulate(F)(f => nTrain(f) / (wTotal - wFoldExt(f)))
-      val trainStats = Array.tabulate(F) { f =>
-        val tr = new GramStats(p, 1).merge(total).subtract(perFoldExt(f))
-          .scaleWeights(norms(f))
-        SufficientStats.standardize(tr, params.standardize, params.intercept)
-      }
-      if (!binomial) trainStats.foreach(st => require(st.yMean(0) > 0,
-        "poisson response must contain positive counts in every train fold"))
-      var offsetPasses = 0
-      // per-fold null intercepts: the plain closed forms without an
-      // offset; with one, the cvOffsetGlmShared offset nulls (poisson
-      // exposure ratio; binomial fold-tiled Newton from the
-      // mean-offset-shifted logit, exact for constant offsets)
-      val a0Null: Array[Double] =
-        if (!params.intercept) new Array[Double](F)
-        else if (!hasOffset) Array.tabulate(F) { f =>
-          val yb = trainStats(f).yMean(0)
-          if (binomial) {
-            if (yb > 0 && yb < 1) math.log(yb / (1 - yb)) else 0.0
-          } else math.log(yb)
-        } else if (!binomial) Array.tabulate(F) { f =>
-          math.log((syTotal - syFoldExt(f)) / (eTotal - eFoldExt(f)))
-        } else {
-          val a0n = Array.tabulate(F) { f =>
-            val tw = wTotal - wFoldExt(f)
-            val yb = (syTotal - syFoldExt(f)) / tw
-            require(yb > 0 && yb < 1,
-              "binomial response must contain both classes in every train fold")
-            math.log(yb / (1 - yb)) - (oTotal - oFoldExt(f)) / tw
-          }
-          var it = 0
-          var done = false
-          while (it < 25 && !done) {
-            val a0Snap = a0n.clone()
-            val acc = rows.treeAggregate(new Array[Double](2 * F))(
-              (s, t) => {
-                val (rowFold, _, y, v, off) = t
-                var f = 0
-                while (f < F) {
-                  if (f != rowFold) {
-                    val mu = 1.0 / (1.0 + math.exp(-(a0Snap(f) + off)))
-                    s(2 * f) += v * (y - mu)
-                    s(2 * f + 1) += v * math.max(mu * (1.0 - mu), 1e-10)
-                  }
-                  f += 1
-                }
-                s
-              },
-              (a, b) => {
-                var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-              }, depth = 2)
-            offsetPasses += 1
-            var mx = 0.0
-            for (f <- 0 until F) {
-              val step = acc(2 * f) / acc(2 * f + 1)
-              a0n(f) += step
-              if (math.abs(step) > mx) mx = math.abs(step)
-            }
-            it += 1
-            if (mx < 1e-12) done = true
-          }
-          a0n
-        }
-      val lambdas =
-        if (params.lambda != null) params.lambda
-        else if (!hasOffset) {
-          val minRatio = if (params.lambdaMinRatio.isNaN)
-            LambdaPath.defaultMinRatio(total.n, p) else params.lambdaMinRatio
-          LambdaPath.build(trainStats(nfolds).b, params.alpha, params.nlambda,
-            minRatio, params.penaltyFactor)
-        } else {
-          // offset-corrected lambda_max on the full data (the
-          // cvOffsetGlmShared pathB pass)
-          val minRatio = if (params.lambdaMinRatio.isNaN)
-            LambdaPath.defaultMinRatio(total.n, p) else params.lambdaMinRatio
-          val a0N = a0Null(nfolds)
-          val mF = if (params.intercept) trainStats(nfolds).xMean
-            else new Array[Double](p)
-          val sF = if (params.standardize) trainStats(nfolds).xSd
-            else Array.fill(p)(1.0)
-          val nrm = norms(nfolds)
-          val bOff = rows.treeAggregate(new Array[Double](p))(
-            (acc, t) => {
-              val (_, xr, y, v, off) = t
-              val mu =
-                if (binomial) 1.0 / (1.0 + math.exp(-(a0N + off)))
-                else math.exp(math.max(math.min(a0N + off, 30.0), -30.0))
-              val r = v * nrm * (y - mu)
-              var j = 0
-              while (j < p) { acc(j) += (xr(j) - mF(j)) / sF(j) * r; j += 1 }
-              acc
-            },
-            (a, b) => { var i = 0; while (i < p) { a(i) += b(i); i += 1 }; a },
-            depth = 2)
-          offsetPasses += 1
-          LambdaPath.build(Array(bOff.map(_ / nTrain(nfolds))), params.alpha,
-            params.nlambda, minRatio, params.penaltyFactor)
-        }
-      val means = trainStats.map(st =>
-        if (params.intercept) st.xMean else new Array[Double](p))
-      val scales = trainStats.map(st =>
-        if (params.standardize) st.xSd else Array.fill(p)(1.0))
-      val boundsF = scales.map(s => SgdNet.boundsStd(params, s, 1.0))
-      val sc = rows.sparkContext
-      val bMeans = sc.broadcast(means)
-      val bScales = sc.broadcast(scales)
-      val bNorms = sc.broadcast(norms)
-
-      // ---------------- stage 1: per-fold penalized paths (fold-tiled)
-      val L = lambdas.length
-      val beta = Array.fill(F)(new Array[Double](p))
-      val a0 = a0Null.clone()
-      val a0Out = Array.ofDim[Double](F, L)
-      val betaOut = Array.ofDim[Double](F, L, p)
-      var sharedPasses = 1 + offsetPasses
-      for (l <- 0 until L) {
-        val active = Array.fill(F)(true)
-        var iter = 0
-        while (iter < 25 && active.exists(identity)) {
-          val betaSnap = beta.map(_.clone())
-          val a0Snap = a0.clone()
-          val activeSnap = active.clone()
-          sharedPasses += 1
-          val grams = rows.treeAggregate(Array.fill(F)(new BinWGram(p)))(
-            (acc, t) => {
-              val (rowFold, xr, y, v, off) = t
-              var f = 0
-              while (f < F) {
-                if (f != rowFold && activeSnap(f)) {
-                  val m = bMeans.value(f); val s = bScales.value(f)
-                  val bf = betaSnap(f)
-                  var eta = a0Snap(f) + off
-                  val xs = new Array[Double](p)
-                  var j = 0
-                  while (j < p) {
-                    xs(j) = (xr(j) - m(j)) / s(j); eta += xs(j) * bf(j); j += 1
-                  }
-                  var w = 0.0
-                  var z = 0.0
-                  if (binomial) {
-                    val mu = 1.0 / (1.0 + math.exp(-eta))
-                    w = math.max(mu * (1.0 - mu), 1e-5)
-                    z = eta + (y - mu) / w - off
-                  } else {
-                    val etaC = math.max(math.min(eta, 30.0), -30.0)
-                    val mu = math.exp(etaC)
-                    w = math.max(mu, 1e-5)
-                    z = etaC + (y - mu) / w - off
-                  }
-                  acc(f).add(xs, w * v * bNorms.value(f), z)
-                }
-                f += 1
-              }
-              acc
-            },
-            (a, b) => { var i = 0; while (i < F) { a(i).merge(b(i)); i += 1 }; a },
-            depth = 2)
-          for (f <- 0 until F if active(f)) {
-            val g = grams(f)
-            val ninv = 1.0 / nTrain(f)
-            val aM = LinAlg.unpackSym(g.swxx, p).map(_.map(_ * ninv))
-            val r = CoordinateDescent.solve(aM, g.swxz.map(_ * ninv),
-              g.swx.map(_ * ninv), g.swz * ninv, g.sw * ninv,
-              lambdas(l), params.alpha, params.intercept, beta(f),
-              thresh = math.max(params.thresh * 1e-4, 1e-10),
-              maxIter = params.maxit,
-              penaltyFactor = params.penaltyFactor,
-              lower = boundsF(f)._1, upper = boundsF(f)._2)
-            var maxD = math.abs(r.a0 - a0(f))
-            var j = 0
-            while (j < p) {
-              val d = math.abs(r.beta(j) - beta(f)(j)); if (d > maxD) maxD = d; j += 1
-            }
-            beta(f) = r.beta; a0(f) = r.a0
-            if (maxD < math.max(params.thresh * 1e-2, 1e-8)) active(f) = false
-          }
-          iter += 1
-        }
-        for (f <- 0 until F) {
-          for (j <- 0 until p) betaOut(f)(l)(j) = beta(f)(j) / scales(f)(j)
-          a0Out(f)(l) =
-            if (params.intercept)
-              a0(f) - (0 until p).map(j => betaOut(f)(l)(j) * means(f)(j)).sum
-            else a0(f)
-        }
-      }
-
-      // --------- stage 2: per-(fold, lambda) unpenalized active-set
-      // refits, tiled over both folds and lambdas (original scale)
-      val activeSet = Array.tabulate(F, L)((f, l) =>
-        (0 until p).filter(j => betaOut(f)(l)(j) != 0.0).toArray)
-      val a0R = Array.tabulate(F, L)((f, l) => a0Out(f)(l))
-      val bFull = Array.tabulate(F, L)((f, l) => betaOut(f)(l).clone())
-      val doneR = Array.ofDim[Boolean](F, L)
-      for (f <- 0 until F; l <- 0 until L if activeSet(f)(l).isEmpty) {
-        // empty-set refit = the fold's null (the OFFSET null when an
-        // offset rides along)
-        a0R(f)(l) = a0Null(f)
-        java.util.Arrays.fill(bFull(f)(l), 0.0)
-        doneR(f)(l) = true
-      }
-      val tolR = math.max(params.thresh * 1e-2, 1e-8)
-      var iterR = 0
-      while (iterR < 25 && !doneR.forall(_.forall(identity))) {
-        val live = (for (f <- 0 until F; l <- 0 until L if !doneR(f)(l))
-          yield (f, l)).toArray
-        val sizes = live.map { case (f, l) =>
-          val m = activeSet(f)(l).length
-          2 + 2 * m + LinAlg.triSize(m)
-        }
-        val offs = sizes.scanLeft(0)(_ + _)
-        val bState = sc.broadcast((live,
-          live.map { case (f, l) => activeSet(f)(l) },
-          live.map { case (f, l) => a0R(f)(l) },
-          live.map { case (f, l) => bFull(f)(l) }, offs))
-        sharedPasses += 1
-        val acc = rows.treeAggregate(new Array[Double](offs.last))(
-          (s, t) => {
-            val (rowFold, x, y, v, off) = t
-            val (lv, acts, a0s, bs, os) = bState.value
-            var i = 0
-            while (i < lv.length) {
-              if (lv(i)._1 != rowFold) {
-                val a = acts(i)
-                val m = a.length
-                var eta = a0s(i) + off
-                var q = 0
-                while (q < m) { eta += bs(i)(a(q)) * x(a(q)); q += 1 }
-                var w = 0.0
-                var z = 0.0
-                if (binomial) {
-                  val mu = 1.0 / (1.0 + math.exp(-eta))
-                  w = math.max(mu * (1.0 - mu), 1e-5)
-                  z = eta + (y - mu) / w - off
-                } else {
-                  val etaC = math.max(math.min(eta, 30.0), -30.0)
-                  val mu = math.exp(etaC)
-                  w = math.max(mu, 1e-5)
-                  z = etaC + (y - mu) / w - off
-                }
-                w *= v
-                val base = os(i)
-                s(base) += w
-                s(base + 1) += w * z
-                q = 0
-                while (q < m) {
-                  val wx = w * x(a(q))
-                  s(base + 2 + q) += wx
-                  s(base + 2 + m + q) += wx * z
-                  var r2 = 0
-                  while (r2 <= q) {
-                    s(base + 2 + 2 * m + LinAlg.triIdx(r2, q)) += wx * x(a(r2))
-                    r2 += 1
-                  }
-                  q += 1
-                }
-              }
-              i += 1
-            }
-            s
-          },
-          (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
-          depth = 2)
-        for (i <- live.indices) {
-          val (f, l) = live(i)
-          val a = activeSet(f)(l)
-          val m = a.length
-          val base = offs(i)
-          val loA = if (params.lowerLimits == null) null
-            else a.map(params.lowerLimits(_))
-          val upA = if (params.upperLimits == null) null
-            else a.map(params.upperLimits(_))
-          val (na0, sol) = SgdNet.solveRestrictedWls(acc, base, m,
-            params.intercept, loA, upA, a.map(bFull(f)(l)(_)), params.maxit)
-          var maxD = math.abs(na0 - a0R(f)(l))
-          for (q <- 0 until m) {
-            val d = math.abs(sol(q) - bFull(f)(l)(a(q)))
-            if (d > maxD) maxD = d
-          }
-          a0R(f)(l) = na0
-          for (q <- 0 until m) bFull(f)(l)(a(q)) = sol(q)
-          if (maxD < tolR) doneR(f)(l) = true
-        }
-        iterR += 1
-      }
-
-      // full-data relaxed path (virtual fold) + its penalized model
-      val a0FullP = Array.tabulate(L)(l => Array(a0Out(nfolds)(l)))
-      val betaFullP = Array.tabulate(L)(l => Array(betaOut(nfolds)(l).clone()))
-      val G = gammas.length
-      val normFull = norms(nfolds)
-      val a0NullFull = a0Null(nfolds)
-      // one pass: deviances of every (gamma, lambda) BLEND + the null
-      val gArr = gammas.toArray
-      val devs = rows.treeAggregate(new Array[Double](G * L + 1))(
-        (acc, t) => {
-          val (_, x, y, v, off) = t
-          def binDev(eta: Double): Double = {
-            val m = math.max(eta, 0.0)
-            2.0 * (m + math.log(math.exp(-m) + math.exp(eta - m)) - y * eta)
-          }
-          def poisDev(mu: Double): Double = {
-            val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-            2.0 * (ylog - (y - mu))
-          }
-          val vn = v * normFull
-          var g = 0
-          while (g < G) {
-            val gm = gArr(g)
-            var l = 0
-            while (l < L) {
-              var eta = gm * a0FullP(l)(0) + (1 - gm) * a0R(nfolds)(l) + off
-              var j = 0
-              while (j < p) {
-                eta += (gm * betaFullP(l)(0)(j) +
-                  (1 - gm) * bFull(nfolds)(l)(j)) * x(j)
-                j += 1
-              }
-              acc(g * L + l) += vn * (if (binomial) binDev(eta)
-                else poisDev(math.exp(math.max(math.min(eta, 30.0), -30.0))))
-              l += 1
-            }
-            g += 1
-          }
-          acc(G * L) += vn * (if (binomial) binDev(a0NullFull + off)
-            else poisDev(math.exp(
-              math.max(math.min(a0NullFull + off, 30.0), -30.0))))
           acc
-        },
-        (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
-        depth = 2)
-      sharedPasses += 1
-      val nulldev = devs(G * L)
-
-      // ------ stage 3: held-out scores for every (gamma, fold, lambda)
-      val bA0P = sc.broadcast(a0Out)
-      val bBetaP = sc.broadcast(betaOut)
-      val bA0R = sc.broadcast(a0R)
-      val bBR = sc.broadcast(bFull)
-      // round 17 — type.measure = "auc" (cv.glmnet accepts auc with
-      // relax = TRUE): rank-AUC per (gamma, fold, lambda) blend through
-      // the same two-pass rank machinery as the plain binomial CV; etas
-      // rank via the monotone sigmoid, weight mass rides the cells when
-      // a weight column is present (continuous-mass rank form).
-      val cellAuc: Array[Double] =
-        if (measure != "auc") null
-        else {
-          val spark = df.sparkSession
-          val scored = spark.createDataFrame(rows.map { t =>
-            val (f, x, y, v, off) = t
-            val etas = new Array[Double](G * L)
-            var g = 0
-            while (g < G) {
-              val gm = gArr(g)
-              var l = 0
-              while (l < L) {
-                var eta = gm * bA0P.value(f)(l) +
-                  (1 - gm) * bA0R.value(f)(l) + off
-                var j = 0
-                while (j < p) {
-                  eta += (gm * bBetaP.value(f)(l)(j) +
-                    (1 - gm) * bBR.value(f)(l)(j)) * x(j)
-                  j += 1
-                }
-                etas(g * L + l) = eta
-                l += 1
-              }
-              g += 1
-            }
-            (f, y, v, etas)
-          }).toDF("__fold", "__y", "__v", "__etas")
-          val exploded = scored
-            .select(col("__fold"), col("__y"), col("__v"),
-              posexplode(col("__etas")).as(Seq("__i", "__s")))
-            .select((((col("__i") / lit(L)).cast("int") * nfolds +
-              col("__fold")) * L + pmod(col("__i"), lit(L))).as("__g"),
-              col("__s"), col("__y"), col("__v"))
-          aucPerGroup(exploded, G * nfolds * L,
-            weightCol = if (weighted) "__v" else null)
-        }
-      val sums = if (measure == "auc") new Array[Double](G * nfolds * L)
-      else rows.treeAggregate(new Array[Double](G * nfolds * L))(
-        (s, t) => {
-          val (f, x, y, v, off) = t
-          var g = 0
-          while (g < G) {
-            val gm = gArr(g)
-            var l = 0
-            while (l < L) {
-              var eta = gm * bA0P.value(f)(l) +
-                (1 - gm) * bA0R.value(f)(l) + off
-              var j = 0
-              while (j < p) {
-                eta += (gm * bBetaP.value(f)(l)(j) +
-                  (1 - gm) * bBR.value(f)(l)(j)) * x(j)
-                j += 1
-              }
-              s((g * nfolds + f) * L + l) += v * (if (binomial) {
-                val mu = 1.0 / (1.0 + math.exp(-eta))
-                measure match {
-                  case "mse" => 2.0 * (mu - y) * (mu - y)
-                  case "mae" => 2.0 * math.abs(mu - y)
-                  case "class" => if ((if (mu > 0.5) 1.0 else 0.0) != y) 1.0 else 0.0
-                  case "deviance" =>
-                    val mc = math.min(math.max(mu, 1e-5), 1.0 - 1e-5)
-                    -2.0 * (y * math.log(mc) + (1 - y) * math.log(1 - mc))
-                  case other => // unreachable: fitRelaxed validates
-                    throw new IllegalArgumentException(s"unknown measure $other")
-                }
-              } else {
-                val mu = math.exp(math.max(math.min(eta, 30.0), -30.0))
-                measure match {
-                  case "mse" => (y - mu) * (y - mu)
-                  case "mae" => math.abs(y - mu)
-                  case "deviance" =>
-                    val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-                    2.0 * (ylog - (y - mu))
-                  case other => // unreachable: fitRelaxed validates
-                    throw new IllegalArgumentException(s"unknown measure $other")
-                }
-              })
-              l += 1
-            }
-            g += 1
-          }
-          s
-        },
-        (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
-        depth = 2)
-      sharedPasses += 1
-
-      val names = featureCols.toArray
-      val paths = (0 until G).map { g =>
-        val gm = gArr(g)
-        val a0B = Array.tabulate(L)(l => Array(
-          gm * a0FullP(l)(0) + (1 - gm) * a0R(nfolds)(l)))
-        val bB = Array.tabulate(L)(l => Array(Array.tabulate(p)(j =>
-          gm * betaFullP(l)(0)(j) + (1 - gm) * bFull(nfolds)(l)(j))))
-        val devRatio = Array.tabulate(L)(l =>
-          SgdNetModel.devRatio(devs(g * L + l), nulldev))
-        val model = new SgdNetModel(params.family, names, Array(labelCol),
-          classes, lambdas, a0B, bB, nulldev, devRatio, total.n,
-          sharedPasses, params)
-        val foldScores = Array.tabulate(nfolds, L)((f, l) =>
-          if (measure == "auc") cellAuc((g * nfolds + f) * L + l)
-          else sums((g * nfolds + f) * L + l) / wFold(f))
-        summarize(params.alpha, lambdas, foldScores, model,
-          maximize = measure == "auc")
-      }
-      // cv.glmnet relax maximizes auc (sign-flipped internally); every
-      // other measure minimizes — unlike plain fit's documented
-      // reference which.min parity (R/cv_sgdnet.R:265-282), the relax
-      // grid is a glmnet-parity surface.
-      val bestIdx =
-        if (measure == "auc") (0 until G).maxBy(g => paths(g).cvm.max)
-        else (0 until G).minBy(g => paths(g).cvm.min)
-      val fullPenalized = new SgdNetModel(params.family, names,
-        Array(labelCol), classes, lambdas, a0FullP, betaFullP, nulldev,
-        Array.tabulate(L)(l =>
-          if (nulldev > 0) {
-            // gamma = 1 slice IS the penalized model's deviance when 1.0
-            // is in the grid; otherwise recompute is skipped — dev.ratio
-            // of the penalized full model is informational here
-            val g1 = gArr.indexWhere(_ == 1.0)
-            if (g1 >= 0) SgdNetModel.devRatio(devs(g1 * L + l), nulldev) else Double.NaN
-          } else 0.0),
-        total.n, sharedPasses, params)
-      val relaxedFull = SgdNet.RelaxedPath(fullPenalized, a0R(nfolds),
-        bFull(nfolds), 1.0)
-      RelaxedCvResult(gArr, paths, gArr(bestIdx), paths(bestIdx), relaxedFull)
-    } finally rows.unpersist(blocking = false)
-  }
-
-  /** [[cvRelaxedGlmShared]] over CSR feature rows (round 17 —
-    * cv.glmnet relax = TRUE with a dgCMatrix x for the IRLS families,
-    * closing the last sparse-delegation cell of R/cv_sgdnet.R): the
-    * same three fold-tiled stages with every data pass walking only
-    * the rows' nonzeros —
-    *
-    *  1. per-fold penalized IRLS paths via the [[cvSparseGlmShared]]
-    *     uncentered-sparse-moment accumulation (η = off_f + x·(β/s),
-    *     centering applied driver-side in the per-fold WLS solve);
-    *  2. per-(fold, lambda) unpenalized active-set refits — the
-    *     [[SgdNet.relaxedFitGlmSparse]] restricted accumulation tiled
-    *     over BOTH folds and lambdas; active-set slots resolve by
-    *     binary search in the cell's sorted active array (no p-sized
-    *     per-cell lookup maps, so the broadcast stays O(Σ active));
-    *  3. held-out scoring of every (gamma, fold, lambda) blend in one
-    *     pass (auc via the two-pass rank machinery), plus one deviance
-    *     pass for the per-gamma blended full models.
-    *
-    * The matrix is never densified; CSR indices are assumed sorted
-    * ascending (the GramStats.addSparseWeighted contract). */
-  private def cvRelaxedGlmSharedSparse(df: DataFrame, idxCol: String,
-                                       valCol: String, dim: Int,
-                                       labelCol: String,
-                                       params: SgdNetParams, nfolds: Int,
-                                       gammas: Seq[Double], measure: String,
-                                       foldCol: Column,
-                                       weightCol: String,
-                                       offsetCol: String = null): RelaxedCvResult = {
-    SgdNet.requireNoZeroPf(params, "relaxed GLM CV")
-    val p = dim
-    val binomial = params.family == "binomial"
-    val weighted = weightCol != null
-    val hasOffset = offsetCol != null
-    val classes: Array[String] =
-      if (binomial) SgdNet.binomialClasses(df, labelCol) else Array.empty
-    val yCol =
-      if (binomial) (col(labelCol).cast("string") === classes(1)).cast("double")
-      else col(labelCol).cast("double")
-    val wCol = if (weighted) col(weightCol).cast("double") else lit(1.0)
-    val oCol = if (hasOffset) col(offsetCol).cast("double") else lit(0.0)
-    val hashCols = Seq(col(idxCol), col(valCol), col(labelCol))
-    val rows0 = df
-      .withColumn("__fold", foldExpr(foldCol, hashCols, nfolds).cast("int"))
-      .select(col(idxCol), col(valCol).cast("array<double>"), yCol,
-        col("__fold"), wCol, oCol)
-      .rdd.map { r =>
-        (r.getInt(3), r.getSeq[Int](0).toArray,
-          r.getSeq[Double](1).toArray, r.getDouble(2), r.getDouble(4),
-          r.getDouble(5))
-      }
-    val rows = (if (weighted)
-        rows0.map { t => require(t._5 >= 0, "weights must be non-negative"); t }
-          .filter(_._5 > 0)
-      else rows0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val F = nfolds + 1
-      val zero = (Array.fill(nfolds)(new GramStats(p, 1)),
-        new Array[Double](nfolds), new Array[Double](nfolds),
-        new Array[Double](nfolds))
-      val (perFold, wFold, eFold, oFold) = rows.treeAggregate(zero)(
-        (acc, t) => {
-          acc._1(t._1).addSparseWeighted(t._2, t._3, Array(t._4), t._5)
-          acc._2(t._1) += t._5
-          acc._3(t._1) += t._5 *
-            math.exp(math.max(math.min(t._6, 30.0), -30.0))
-          acc._4(t._1) += t._5 * t._6
-          acc
-        },
-        (a, b) => {
+        }, merge, depth = 2)
+      case c: SgdNet.CsrRows =>
+        c.rdd.treeAggregate(new Array[Double](size))((acc, r) => {
+          val cells = bc.value
+          val idx = r.idx; val vals = r.vals
           var i = 0
-          while (i < nfolds) {
-            a._1(i).merge(b._1(i)); a._2(i) += b._2(i); a._3(i) += b._3(i)
-            a._4(i) += b._4(i)
-            i += 1
-          }
-          a
-        }, depth = 2)
-      requireNonEmptyFolds(perFold.map(_.n), nfolds)
-      val total = new GramStats(p, 1)
-      perFold.foreach(total.merge)
-      val wTotal = wFold.sum
-      val eTotal = eFold.sum
-      val oTotal = oFold.sum
-      val syTotal = total.sumY(0)
-      val perFoldExt = perFold :+ new GramStats(p, 1)
-      val wFoldExt = wFold :+ 0.0
-      val eFoldExt = eFold :+ 0.0
-      val oFoldExt = oFold :+ 0.0
-      val syFoldExt = perFold.map(_.sumY(0)) :+ 0.0
-      val nTrain = Array.tabulate(F)(f => (total.n - perFoldExt(f).n).toDouble)
-      val norms = Array.tabulate(F)(f => nTrain(f) / (wTotal - wFoldExt(f)))
-      val trainStats = Array.tabulate(F) { f =>
-        val tr = new GramStats(p, 1).merge(total).subtract(perFoldExt(f))
-          .scaleWeights(norms(f))
-        SufficientStats.standardize(tr, params.standardize, params.intercept)
-      }
-      if (!binomial) trainStats.foreach(st => require(st.yMean(0) > 0,
-        "poisson response must contain positive counts in every train fold"))
-      var offsetPasses = 0
-      val a0NullArr: Array[Double] =
-        if (!params.intercept) new Array[Double](F)
-        else if (!hasOffset) Array.tabulate(F) { f =>
-          val yb = trainStats(f).yMean(0)
-          if (binomial) {
-            if (yb > 0 && yb < 1) math.log(yb / (1 - yb)) else 0.0
-          } else math.log(yb)
-        } else if (!binomial) Array.tabulate(F) { f =>
-          math.log((syTotal - syFoldExt(f)) / (eTotal - eFoldExt(f)))
-        } else {
-          val a0n = Array.tabulate(F) { f =>
-            val tw = wTotal - wFoldExt(f)
-            val yb = (syTotal - syFoldExt(f)) / tw
-            require(yb > 0 && yb < 1,
-              "binomial response must contain both classes in every train fold")
-            math.log(yb / (1 - yb)) - (oTotal - oFoldExt(f)) / tw
-          }
-          var it = 0
-          var done = false
-          while (it < 25 && !done) {
-            val a0Snap = a0n.clone()
-            val acc = rows.treeAggregate(new Array[Double](2 * F))(
-              (s, t) => {
-                val (rowFold, _, _, y, v, off) = t
-                var f = 0
-                while (f < F) {
-                  if (f != rowFold) {
-                    val mu = 1.0 / (1.0 + math.exp(-(a0Snap(f) + off)))
-                    s(2 * f) += v * (y - mu)
-                    s(2 * f + 1) += v * math.max(mu * (1.0 - mu), 1e-10)
-                  }
-                  f += 1
-                }
-                s
-              },
-              (a, b) => {
-                var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-              }, depth = 2)
-            offsetPasses += 1
-            var mx = 0.0
-            for (f <- 0 until F) {
-              val step = acc(2 * f) / acc(2 * f + 1)
-              a0n(f) += step
-              if (math.abs(step) > mx) mx = math.abs(step)
-            }
-            it += 1
-            if (mx < 1e-12) done = true
-          }
-          a0n
-        }
-      val lambdas =
-        if (params.lambda != null) params.lambda
-        else if (!hasOffset) {
-          val minRatio = if (params.lambdaMinRatio.isNaN)
-            LambdaPath.defaultMinRatio(total.n, p) else params.lambdaMinRatio
-          LambdaPath.build(trainStats(nfolds).b, params.alpha, params.nlambda,
-            minRatio, params.penaltyFactor)
-        } else {
-          // offset-corrected sparse lambda_max: accumulate Σr·x_j over
-          // nonzeros + Σr, center/standardize algebraically
-          val minRatio = if (params.lambdaMinRatio.isNaN)
-            LambdaPath.defaultMinRatio(total.n, p) else params.lambdaMinRatio
-          val a0N = a0NullArr(nfolds)
-          val mF = if (params.intercept) trainStats(nfolds).xMean
-            else new Array[Double](p)
-          val sF = if (params.standardize) trainStats(nfolds).xSd
-            else Array.fill(p)(1.0)
-          val nrm = norms(nfolds)
-          val acc = rows.treeAggregate(new Array[Double](p + 1))(
-            (s, t) => {
-              val (_, idx, vals, y, v, off) = t
-              val mu =
-                if (binomial) 1.0 / (1.0 + math.exp(-(a0N + off)))
-                else math.exp(math.max(math.min(a0N + off, 30.0), -30.0))
-              val r = v * nrm * (y - mu)
-              var i = 0
-              while (i < idx.length) { s(idx(i)) += r * vals(i); i += 1 }
-              s(p) += r
-              s
-            },
-            (a, b) => {
-              var i = 0; while (i <= p) { a(i) += b(i); i += 1 }; a
-            }, depth = 2)
-          offsetPasses += 1
-          val bOff = Array.tabulate(p)(j =>
-            (acc(j) - mF(j) * acc(p)) / sF(j) / nTrain(nfolds))
-          LambdaPath.build(Array(bOff), params.alpha, params.nlambda,
-            minRatio, params.penaltyFactor)
-        }
-      val means = trainStats.map(st =>
-        if (params.intercept) st.xMean else new Array[Double](p))
-      val scales = trainStats.map(st =>
-        if (params.standardize) st.xSd else Array.fill(p)(1.0))
-      val boundsF = scales.map(s => SgdNet.boundsStd(params, s, 1.0))
-      val sc = rows.sparkContext
-
-      // ---------------- stage 1: per-fold penalized paths (fold-tiled,
-      // uncentered sparse IRLS moments, centered in the driver solve)
-      val L = lambdas.length
-      val beta = Array.fill(F)(new Array[Double](p))
-      val a0 = a0NullArr.clone()
-      val a0Out = Array.ofDim[Double](F, L)
-      val betaOut = Array.ofDim[Double](F, L, p)
-      var sharedPasses = 1 + offsetPasses
-      def solveFold(f: Int, g: BinWGram, l: Int): (Array[Double], Double) = {
-        val mean = means(f); val scale = scales(f)
-        val ninv = 1.0 / nTrain(f)
-        val swxStd = Array.tabulate(p)(j =>
-          (g.swx(j) - mean(j) * g.sw) / scale(j))
-        val swxzStd = Array.tabulate(p)(j =>
-          (g.swxz(j) - mean(j) * g.swz) / scale(j))
-        val aM = Array.ofDim[Double](p, p)
-        var j = 0
-        while (j < p) {
-          var i = 0
-          while (i <= j) {
-            val v = (g.swxx(LinAlg.triIdx(i, j)) - mean(i) * g.swx(j) -
-              mean(j) * g.swx(i) + mean(i) * mean(j) * g.sw) /
-              (scale(i) * scale(j)) * ninv
-            aM(i)(j) = v; aM(j)(i) = v
-            i += 1
-          }
-          j += 1
-        }
-        val r = CoordinateDescent.solve(aM, swxzStd.map(_ * ninv),
-          swxStd.map(_ * ninv), g.swz * ninv, g.sw * ninv,
-          lambdas(l), params.alpha, params.intercept, beta(f),
-          thresh = math.max(params.thresh * 1e-4, 1e-10),
-          maxIter = params.maxit,
-          penaltyFactor = params.penaltyFactor,
-          lower = boundsF(f)._1, upper = boundsF(f)._2)
-        (r.beta, r.a0)
-      }
-      for (l <- 0 until L) {
-        val active = Array.fill(F)(true)
-        var iter = 0
-        while (iter < 25 && active.exists(identity)) {
-          val activeSnap = active.clone()
-          // per-fold linear predictor on the ORIGINAL sparse scale:
-          // eta = off_f + Σ vals·(beta_f/scale_f)(idx)
-          val bOverS = Array.tabulate(F, p)((f, j) => beta(f)(j) / scales(f)(j))
-          val offs = Array.tabulate(F) { f =>
-            var o = a0(f)
-            var j = 0
-            while (j < p) { o -= means(f)(j) * bOverS(f)(j); j += 1 }
-            o
-          }
-          val bc = sc.broadcast((bOverS, offs, norms))
-          sharedPasses += 1
-          val grams = rows.treeAggregate(Array.fill(F)(new BinWGram(p)))(
-            (acc, t) => {
-              val (rowFold, idx, vals, y, v, roff) = t
-              val (bos, off, nrm) = bc.value
-              var f = 0
-              while (f < F) {
-                if (f != rowFold && activeSnap(f)) {
-                  var eta = off(f) + roff
-                  var i = 0
-                  while (i < idx.length) { eta += vals(i) * bos(f)(idx(i)); i += 1 }
-                  var w = 0.0
-                  var z = 0.0
-                  if (binomial) {
-                    val mu = 1.0 / (1.0 + math.exp(-eta))
-                    w = math.max(mu * (1.0 - mu), 1e-5)
-                    z = eta + (y - mu) / w - roff
-                  } else {
-                    val etaC = math.max(math.min(eta, 30.0), -30.0)
-                    val mu = math.exp(etaC)
-                    w = math.max(mu, 1e-5)
-                    z = etaC + (y - mu) / w - roff
-                  }
-                  val vw = v * nrm(f) * w
-                  val g = acc(f)
-                  g.sw += vw; g.swz += vw * z
-                  var i2 = 0
-                  while (i2 < idx.length) {
-                    val j = idx(i2)
-                    val wxj = vw * vals(i2)
-                    g.swx(j) += wxj
-                    g.swxz(j) += wxj * z
-                    var m = 0
-                    while (m <= i2) {
-                      g.swxx(LinAlg.triIdx(idx(m), j)) += wxj * vals(m)
-                      m += 1
+          while (i < cells.model.length) {
+            if (cells.model(i) != r.fold) {
+              val a = cells.active(i)
+              val m = a.length
+              // slots of this row's nonzeros in the cell's active set
+              // (β is zero off the active set, so η walks all nonzeros)
+              var eta = cells.a0(i) + r.off
+              val qs = new Array[Int](idx.length)
+              var t = 0
+              while (t < idx.length) {
+                eta += cells.beta(i)(idx(t)) * vals(t)
+                qs(t) = java.util.Arrays.binarySearch(a, idx(t))
+                t += 1
+              }
+              val (w0, z) = link(eta, r.y, r.off)
+              val w = w0 * r.w
+              val base = cells.offs(i)
+              acc(base) += w
+              acc(base + 1) += w * z
+              t = 0
+              while (t < idx.length) {
+                val q = qs(t)
+                if (q >= 0) {
+                  val wx = w * vals(t)
+                  acc(base + 2 + q) += wx
+                  acc(base + 2 + m + q) += wx * z
+                  var u = 0
+                  while (u <= t) {
+                    val r2 = qs(u)
+                    if (r2 >= 0) {
+                      acc(base + 2 + 2 * m +
+                        LinAlg.triIdx(math.min(q, r2), math.max(q, r2))) += wx * vals(u)
                     }
-                    i2 += 1
+                    u += 1
                   }
                 }
-                f += 1
+                t += 1
               }
-              acc
-            },
-            (a, b) => { var i = 0; while (i < F) { a(i).merge(b(i)); i += 1 }; a },
-            depth = 2)
-          for (f <- 0 until F if active(f)) {
-            val (nb, na) = solveFold(f, grams(f), l)
-            var maxD = math.abs(na - a0(f))
-            var j = 0
-            while (j < p) {
-              val d = math.abs(nb(j) - beta(f)(j)); if (d > maxD) maxD = d; j += 1
             }
-            beta(f) = nb; a0(f) = na
-            if (maxD < math.max(params.thresh * 1e-2, 1e-8)) active(f) = false
+            i += 1
           }
-          iter += 1
-        }
-        for (f <- 0 until F) {
-          for (j <- 0 until p) betaOut(f)(l)(j) = beta(f)(j) / scales(f)(j)
-          a0Out(f)(l) =
-            if (params.intercept)
-              a0(f) - (0 until p).map(j => betaOut(f)(l)(j) * means(f)(j)).sum
-            else a0(f)
-        }
-      }
-
-      // --------- stage 2: per-(fold, lambda) unpenalized active-set
-      // refits, tiled over folds AND lambdas (original scale; slots by
-      // binary search in the sorted active array)
-      val activeSet = Array.tabulate(F, L)((f, l) =>
-        (0 until p).filter(j => betaOut(f)(l)(j) != 0.0).toArray)
-      val a0R = Array.tabulate(F, L)((f, l) => a0Out(f)(l))
-      val bFull = Array.tabulate(F, L)((f, l) => betaOut(f)(l).clone())
-      val doneR = Array.ofDim[Boolean](F, L)
-      for (f <- 0 until F; l <- 0 until L if activeSet(f)(l).isEmpty) {
-        // empty-set refit = the fold's null (OFFSET null with an offset)
-        a0R(f)(l) = a0NullArr(f)
-        java.util.Arrays.fill(bFull(f)(l), 0.0)
-        doneR(f)(l) = true
-      }
-      val tolR = math.max(params.thresh * 1e-2, 1e-8)
-      var iterR = 0
-      while (iterR < 25 && !doneR.forall(_.forall(identity))) {
-        val live = (for (f <- 0 until F; l <- 0 until L if !doneR(f)(l))
-          yield (f, l)).toArray
-        val sizes = live.map { case (f, l) =>
-          val m = activeSet(f)(l).length
-          2 + 2 * m + LinAlg.triSize(m)
-        }
-        val offsA = sizes.scanLeft(0)(_ + _)
-        val bState = sc.broadcast((live,
-          live.map { case (f, l) => activeSet(f)(l) },
-          live.map { case (f, l) => a0R(f)(l) },
-          live.map { case (f, l) => bFull(f)(l) }, offsA))
-        sharedPasses += 1
-        val acc = rows.treeAggregate(new Array[Double](offsA.last))(
-          (s, t) => {
-            val (rowFold, idx, vals, y, v, roff) = t
-            val (lv, acts, a0s, bs, os) = bState.value
-            var i = 0
-            while (i < lv.length) {
-              if (lv(i)._1 != rowFold) {
-                val a = acts(i)
-                val m = a.length
-                // slots of this row's nonzeros in the cell's active set
-                // (bs is zero off the active set, so eta walks all
-                // nonzeros without the lookup)
-                var eta = a0s(i) + roff
-                val qs = new Array[Int](idx.length)
-                var t2 = 0
-                while (t2 < idx.length) {
-                  eta += bs(i)(idx(t2)) * vals(t2)
-                  qs(t2) = java.util.Arrays.binarySearch(a, idx(t2))
-                  t2 += 1
-                }
-                var w = 0.0
-                var z = 0.0
-                if (binomial) {
-                  val mu = 1.0 / (1.0 + math.exp(-eta))
-                  w = math.max(mu * (1.0 - mu), 1e-5)
-                  z = eta + (y - mu) / w - roff
-                } else {
-                  val etaC = math.max(math.min(eta, 30.0), -30.0)
-                  val mu = math.exp(etaC)
-                  w = math.max(mu, 1e-5)
-                  z = etaC + (y - mu) / w - roff
-                }
-                w *= v
-                val base = os(i)
-                s(base) += w
-                s(base + 1) += w * z
-                t2 = 0
-                while (t2 < idx.length) {
-                  val q = qs(t2)
-                  if (q >= 0) {
-                    val wx = w * vals(t2)
-                    s(base + 2 + q) += wx
-                    s(base + 2 + m + q) += wx * z
-                    var u = 0
-                    while (u <= t2) {
-                      val r2 = qs(u)
-                      if (r2 >= 0) {
-                        val lo = math.min(q, r2); val hi = math.max(q, r2)
-                        s(base + 2 + 2 * m + LinAlg.triIdx(lo, hi)) +=
-                          (if (u == t2) wx * vals(t2) else wx * vals(u))
-                      }
-                      u += 1
-                    }
-                  }
-                  t2 += 1
-                }
-              }
-              i += 1
-            }
-            s
-          },
-          (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
-          depth = 2)
-        for (i <- live.indices) {
-          val (f, l) = live(i)
-          val a = activeSet(f)(l)
-          val m = a.length
-          val base = offsA(i)
-          val loA = if (params.lowerLimits == null) null
-            else a.map(params.lowerLimits(_))
-          val upA = if (params.upperLimits == null) null
-            else a.map(params.upperLimits(_))
-          val (na0, sol) = SgdNet.solveRestrictedWls(acc, base, m,
-            params.intercept, loA, upA, a.map(bFull(f)(l)(_)), params.maxit)
-          var maxD = math.abs(na0 - a0R(f)(l))
-          for (q <- 0 until m) {
-            val d = math.abs(sol(q) - bFull(f)(l)(a(q)))
-            if (d > maxD) maxD = d
-          }
-          a0R(f)(l) = na0
-          for (q <- 0 until m) bFull(f)(l)(a(q)) = sol(q)
-          if (maxD < tolR) doneR(f)(l) = true
-        }
-        iterR += 1
-      }
-
-      // full-data relaxed path (virtual fold) + blended deviances
-      val a0FullP = Array.tabulate(L)(l => Array(a0Out(nfolds)(l)))
-      val betaFullP = Array.tabulate(L)(l => Array(betaOut(nfolds)(l).clone()))
-      val G = gammas.length
-      val normFull = norms(nfolds)
-      val a0NullFull = a0NullArr(nfolds)
-      val gArr = gammas.toArray
-      val devs = rows.treeAggregate(new Array[Double](G * L + 1))(
-        (acc, t) => {
-          val (_, idx, vals, y, v, roff) = t
-          def binDev(eta: Double): Double = {
-            val m = math.max(eta, 0.0)
-            2.0 * (m + math.log(math.exp(-m) + math.exp(eta - m)) - y * eta)
-          }
-          def poisDev(mu: Double): Double = {
-            val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-            2.0 * (ylog - (y - mu))
-          }
-          val vn = v * normFull
-          var g = 0
-          while (g < G) {
-            val gm = gArr(g)
-            var l = 0
-            while (l < L) {
-              var eta = gm * a0FullP(l)(0) + (1 - gm) * a0R(nfolds)(l) + roff
-              var i = 0
-              while (i < idx.length) {
-                val j = idx(i)
-                eta += (gm * betaFullP(l)(0)(j) +
-                  (1 - gm) * bFull(nfolds)(l)(j)) * vals(i)
-                i += 1
-              }
-              acc(g * L + l) += vn * (if (binomial) binDev(eta)
-                else poisDev(math.exp(math.max(math.min(eta, 30.0), -30.0))))
-              l += 1
-            }
-            g += 1
-          }
-          acc(G * L) += vn * (if (binomial) binDev(a0NullFull + roff)
-            else poisDev(math.exp(
-              math.max(math.min(a0NullFull + roff, 30.0), -30.0))))
           acc
-        },
-        (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
-        depth = 2)
-      sharedPasses += 1
-      val nulldev = devs(G * L)
-
-      // ------ stage 3: held-out scores for every (gamma, fold, lambda)
-      val bA0P = sc.broadcast(a0Out)
-      val bBetaP = sc.broadcast(betaOut)
-      val bA0R = sc.broadcast(a0R)
-      val bBR = sc.broadcast(bFull)
-      val cellAuc: Array[Double] =
-        if (measure != "auc") null
-        else {
-          val spark = df.sparkSession
-          val scored = spark.createDataFrame(rows.map { t =>
-            val (f, idx, vals, y, v, roff) = t
-            val etas = new Array[Double](G * L)
-            var g = 0
-            while (g < G) {
-              val gm = gArr(g)
-              var l = 0
-              while (l < L) {
-                var eta = gm * bA0P.value(f)(l) +
-                  (1 - gm) * bA0R.value(f)(l) + roff
-                var i = 0
-                while (i < idx.length) {
-                  val j = idx(i)
-                  eta += (gm * bBetaP.value(f)(l)(j) +
-                    (1 - gm) * bBR.value(f)(l)(j)) * vals(i)
-                  i += 1
-                }
-                etas(g * L + l) = eta
-                l += 1
-              }
-              g += 1
-            }
-            (f, y, v, etas)
-          }).toDF("__fold", "__y", "__v", "__etas")
-          val exploded = scored
-            .select(col("__fold"), col("__y"), col("__v"),
-              posexplode(col("__etas")).as(Seq("__i", "__s")))
-            .select((((col("__i") / lit(L)).cast("int") * nfolds +
-              col("__fold")) * L + pmod(col("__i"), lit(L))).as("__g"),
-              col("__s"), col("__y"), col("__v"))
-          aucPerGroup(exploded, G * nfolds * L,
-            weightCol = if (weighted) "__v" else null)
-        }
-      val sums = if (measure == "auc") new Array[Double](G * nfolds * L)
-      else rows.treeAggregate(new Array[Double](G * nfolds * L))(
-        (s, t) => {
-          val (f, idx, vals, y, v, roff) = t
-          var g = 0
-          while (g < G) {
-            val gm = gArr(g)
-            var l = 0
-            while (l < L) {
-              var eta = gm * bA0P.value(f)(l) +
-                (1 - gm) * bA0R.value(f)(l) + roff
-              var i = 0
-              while (i < idx.length) {
-                val j = idx(i)
-                eta += (gm * bBetaP.value(f)(l)(j) +
-                  (1 - gm) * bBR.value(f)(l)(j)) * vals(i)
-                i += 1
-              }
-              s((g * nfolds + f) * L + l) += v * (if (binomial) {
-                val mu = 1.0 / (1.0 + math.exp(-eta))
-                measure match {
-                  case "mse" => 2.0 * (mu - y) * (mu - y)
-                  case "mae" => 2.0 * math.abs(mu - y)
-                  case "class" => if ((if (mu > 0.5) 1.0 else 0.0) != y) 1.0 else 0.0
-                  case "deviance" =>
-                    val mc = math.min(math.max(mu, 1e-5), 1.0 - 1e-5)
-                    -2.0 * (y * math.log(mc) + (1 - y) * math.log(1 - mc))
-                  case other => // unreachable: fitRelaxedSparse validates
-                    throw new IllegalArgumentException(s"unknown measure $other")
-                }
-              } else {
-                val mu = math.exp(math.max(math.min(eta, 30.0), -30.0))
-                measure match {
-                  case "mse" => (y - mu) * (y - mu)
-                  case "mae" => math.abs(y - mu)
-                  case "deviance" =>
-                    val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-                    2.0 * (ylog - (y - mu))
-                  case other => // unreachable: fitRelaxedSparse validates
-                    throw new IllegalArgumentException(s"unknown measure $other")
-                }
-              })
-              l += 1
-            }
-            g += 1
-          }
-          s
-        },
-        (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
-        depth = 2)
-      sharedPasses += 1
-
-      val names = (0 until p).map(j => s"V$j").toArray
-      val paths = (0 until G).map { g =>
-        val gm = gArr(g)
-        val a0B = Array.tabulate(L)(l => Array(
-          gm * a0FullP(l)(0) + (1 - gm) * a0R(nfolds)(l)))
-        val bB = Array.tabulate(L)(l => Array(Array.tabulate(p)(j =>
-          gm * betaFullP(l)(0)(j) + (1 - gm) * bFull(nfolds)(l)(j))))
-        val devRatio = Array.tabulate(L)(l =>
-          SgdNetModel.devRatio(devs(g * L + l), nulldev))
-        val model = new SgdNetModel(params.family, names, Array(labelCol),
-          classes, lambdas, a0B, bB, nulldev, devRatio, total.n,
-          sharedPasses, params)
-        val foldScores = Array.tabulate(nfolds, L)((f, l) =>
-          if (measure == "auc") cellAuc((g * nfolds + f) * L + l)
-          else sums((g * nfolds + f) * L + l) / wFold(f))
-        summarize(params.alpha, lambdas, foldScores, model,
-          maximize = measure == "auc")
-      }
-      // cv.glmnet relax maximizes auc (sign-flipped internally); every
-      // other measure minimizes — unlike plain fit's documented
-      // reference which.min parity (R/cv_sgdnet.R:265-282), the relax
-      // grid is a glmnet-parity surface.
-      val bestIdx =
-        if (measure == "auc") (0 until G).maxBy(g => paths(g).cvm.max)
-        else (0 until G).minBy(g => paths(g).cvm.min)
-      val fullPenalized = new SgdNetModel(params.family, names,
-        Array(labelCol), classes, lambdas, a0FullP, betaFullP, nulldev,
-        Array.tabulate(L)(l =>
-          if (nulldev > 0) {
-            val g1 = gArr.indexWhere(_ == 1.0)
-            if (g1 >= 0) SgdNetModel.devRatio(devs(g1 * L + l), nulldev) else Double.NaN
-          } else 0.0),
-        total.n, sharedPasses, params)
-      val relaxedFull = SgdNet.RelaxedPath(fullPenalized, a0R(nfolds),
-        bFull(nfolds), 1.0)
-      RelaxedCvResult(gArr, paths, gArr(bestIdx), paths(bestIdx), relaxedFull)
-    } finally rows.unpersist(blocking = false)
+        }, merge, depth = 2)
+    }
   }
 
   private[ml] def summarize(alpha: Double, lambdas: Array[Double],

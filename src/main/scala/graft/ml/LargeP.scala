@@ -2066,7 +2066,7 @@ object LargeP {
     val withFold = df.withColumn("__fold",
       CvSgdNet.foldExpr(foldCol, hashCols, nfolds).cast("int"))
     // spread a thin input before the batched pass loop (the
-    // cvBinomialShared rationale: every fused KKT/moment pass re-scans
+    // CvSgdNet.cvIrls rationale: every fused KKT/moment pass re-scans
     // these blocks; no-op at scale — see graft.ops.Spread)
     val rows = graft.ops.Spread.thin(withFold
       .select((featureCols.map(c => col(c).cast("double")) :+ yExpr :+
@@ -3184,12 +3184,13 @@ object LargeP {
         "penalty strengths (lambdas) must be positive.")
   }
 
-  /** Rows carry (x, y, offset, vn): `vn` is the PRE-normalized
-    * frequency weight (Σvn = n over kept rows, 1.0 unweighted — the
-    * ratio forms below then run the identical per-row arithmetic,
-    * 1.0·x ≡ x), `offset` the per-row link-level offset (0.0 without
-    * one — every eta below is a0 + off + xs·β and every WLS target is
-    * z − off, the dense SgdNet.fitIrls shape). */
+  /** Rows carry (x, y, offset, v): every pass reads the frequency
+    * weight as vn = v·norm, rescaled to sum to n over the kept rows
+    * (norm from pass A's Σv; exactly 1.0 unweighted — the ratio forms
+    * below then run the identical per-row arithmetic, 1.0·x ≡ x),
+    * `offset` the per-row link-level offset (0.0 without one — every
+    * eta below is a0 + off + xs·β and every WLS target is z − off, the
+    * dense SgdNet.fitIrls shape). */
   private def fitGlmImpl(rows: RDD[SgdNet.GlmRow],
                          featureCols: Seq[String], labelCol: String,
                          classes: Array[String], family: String,
@@ -3201,9 +3202,10 @@ object LargeP {
     val binom = family == "binomial"
 
     // ------------------- pass A: O(p) weighted moments (+ offset sums)
-    val accA = rows.treeAggregate(new Array[Double](3 * p + 5))(
+    val accA = rows.treeAggregate(new Array[Double](3 * p + 6))(
       seqOp = (a, r) => {
-        val x = r.x; val y = r.y; val off = r.off; val vn = r.w
+        val x = r.x; val y = r.y; val off = r.off; val vn = r.w // raw; rescaled by norm below
+        a(3 * p + 5) += vn
         var j = 0
         while (j < p) {
           val xj = vn * x(j)
@@ -3221,6 +3223,8 @@ object LargeP {
     var passes = 1
     val nD = accA(3 * p)
     require(nD > 0, "the response (y) is empty.")
+    val norm = if (weighted) nD / accA(3 * p + 5) else 1.0
+    if (weighted) for (i <- 0 until 3 * p + 5 if i != 3 * p) accA(i) *= norm
     val nL = nD.toLong
     val n = nD
     val mean = Array.tabulate(p)(j => accA(j) / nD)
@@ -3266,8 +3270,9 @@ object LargeP {
             val (s1, s2) = rows.treeAggregate((0.0, 0.0))(
               (s, r) => {
                 val mu = 1.0 / (1.0 + math.exp(-(a0N + r.off)))
-                (s._1 + r.w * (r.y - mu),
-                  s._2 + r.w * math.max(mu * (1.0 - mu), 1e-10))
+                val vn = r.w * norm
+                (s._1 + vn * (r.y - mu),
+                  s._2 + vn * math.max(mu * (1.0 - mu), 1e-10))
               },
               (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
             passes += 1
@@ -3296,7 +3301,7 @@ object LargeP {
       val bc = sc.broadcast((eArr, actIdx, actVal))
       val acc = rows.treeAggregate(new Array[Double](sz))(
         seqOp = (a, r) => {
-          val x = r.x; val y = r.y; val off = r.off; val vn = r.w
+          val x = r.x; val y = r.y; val off = r.off; val vn = r.w * norm
           val (eL, aI, aV) = bc.value
           val (ctr, scl) = bCS.value
           var eta = a0w + off
@@ -3359,7 +3364,7 @@ object LargeP {
       val bc = sc.broadcast((eArr, wIdx, wVal, nIdx, nVal))
       val acc = rows.treeAggregate(new Array[Double](p + szE))(
         seqOp = (a, r) => {
-          val x = r.x; val y = r.y; val off = r.off; val vn = r.w
+          val x = r.x; val y = r.y; val off = r.off; val vn = r.w * norm
           val (eL, wI, wV, nI, nV) = bc.value
           val (ctr, scl) = bCS.value
           var etaW = a0w + off
@@ -3445,7 +3450,7 @@ object LargeP {
     def initGrad(a0i: Double): Array[Double] = {
       val acc = rows.treeAggregate(new Array[Double](p))(
         seqOp = (a, r) => {
-          val x = r.x; val y = r.y; val off = r.off; val vn = r.w
+          val x = r.x; val y = r.y; val off = r.off; val vn = r.w * norm
           val (ctr, scl) = bCS.value
           val eta = a0i + off
           val mu = if (binom) 1.0 / (1.0 + math.exp(-eta))
@@ -3617,7 +3622,7 @@ object LargeP {
     val Lc = cutL
     val devAcc = rows.treeAggregate(new Array[Double](Lc + 1))(
       seqOp = (acc, r) => {
-        val x = r.x; val y = r.y; val off = r.off; val vn = r.w
+        val x = r.x; val y = r.y; val off = r.off; val vn = r.w * norm
         val (a0s, ixs, vls) = bcPath.value
         var l2 = 0
         while (l2 < Lc) {

@@ -45,7 +45,8 @@ final case class SgdNetParams(
     // scale the whole cross-response group j by pf_j. Contract
     // (requireNoZeroPf): pf = 0 entries need an EXPLICIT lambda
     // sequence on the paths without the unpenalized-coordinate
-    // lambda_max projection (group solvers, multinomial, shared CV).
+    // lambda_max projection (mgaussian group, multinomial and their
+    // CVs).
     penaltyFactor: Array[Double] = null,
     // glmnet lower.limits / upper.limits: per-coefficient box
     // constraints on the ORIGINAL coefficient scale (the working
@@ -1295,6 +1296,34 @@ object SgdNet {
     val swx = new Array[Double](p)
     val swxz = new Array[Double](p)
     val swxx = new Array[Double](LinAlg.triSize(p))
+    /** One dense row `xs` with IRLS weight `w` and working response `z`. */
+    def add(xs: Array[Double], w: Double, z: Double): Unit = {
+      sw += w; swz += w * z
+      var j = 0
+      while (j < p) {
+        val wxj = w * xs(j)
+        swx(j) += wxj
+        swxz(j) += wxj * z
+        var i = 0
+        val base = j * (j + 1) / 2
+        while (i <= j) { swxx(base + i) += xs(i) * wxj; i += 1 }
+        j += 1
+      }
+    }
+    /** One CSR row (sorted `idx`, its `vals`), uncentered. */
+    def addSparse(idx: Array[Int], vals: Array[Double], w: Double, z: Double): Unit = {
+      sw += w; swz += w * z
+      var i = 0
+      while (i < idx.length) {
+        val j = idx(i)
+        val wxj = w * vals(i)
+        swx(j) += wxj
+        swxz(j) += wxj * z
+        var m = 0
+        while (m <= i) { swxx(LinAlg.triIdx(idx(m), j)) += wxj * vals(m); m += 1 }
+        i += 1
+      }
+    }
     def merge(o: WGram): WGram = {
       sw += o.sw; swz += o.swz
       var i = 0
@@ -1305,126 +1334,145 @@ object SgdNet {
     }
   }
 
-  /** One dense GLM row: features, response, offset (0.0 without one)
-    * and weight (1.0 without one, else rescaled to sum to n). Primitive
-    * fields: a cached row is one object and one array, nothing boxed. */
-  private[ml] final case class GlmRow(x: Array[Double], y: Double,
-                                      off: Double, w: Double)
-
-  /** The CSR twin of [[GlmRow]]: nonzero indices and values of x. */
-  private[ml] final case class CsrRow(idx: Array[Int], vals: Array[Double],
-                                      y: Double, off: Double, w: Double)
-
-  /** The rows of one binomial/poisson fit. Every row carries
-    * (x, y, offset, weight): offset 0.0 and weight 1.0 when the caller
-    * gives none, weights already rescaled to sum to n. A zero offset
-    * and a unit weight leave every pass bit-identical to one that never
-    * read them. One pass kernel per statistic for each row kind. */
-  private[ml] sealed trait IrlsRows {
-    def p: Int
-    def unpersist(): Unit
-    /** (y, offset, weight) of every row. */
-    def yow: RDD[(Double, Double, Double)]
-    /** Weighted moments of (x, y) and, with `offsetSums`, Σv·e^off and
-      * Σv·off (else 0.0) in one pass. */
-    def moments(offsetSums: Boolean): (GramStats, Double, Double)
-    /** One IRLS pass at η = off + a0 + xs·β: the moments of the working
-      * response z − off on the standardized scale, so the solve fits
-      * exactly a0 + xs·β. */
-    def gram(fam: IrlsFamily, mean: Array[Double], scale: Array[Double],
-             beta: Array[Double], a0: Double): WGram
-    /** (1/n)·Σ xs_j·v·(y − μ) at the null η = off + a0: the gradient
-      * λ_max reads when the null mean varies with the offset. */
-    def nullGradient(fam: IrlsFamily, mean: Array[Double],
-                     scale: Array[Double], a0: Double, n: Double): Array[Double]
-    /** One pass: the v-weighted deviance at η = off + a0 + x·β of every
-      * path point (ORIGINAL scale coefficients, [L][1] and [L][1][p]). */
-    def deviance(fam: IrlsFamily, a0: Array[Array[Double]],
-                 beta: Array[Array[Array[Double]]]): Array[Double]
+  /** One binomial/poisson row: response, offset (0.0 without one), the
+    * RAW frequency weight (1.0 without one; each model rescales it to
+    * sum to its row count, see [[IrlsSetup]]) and the CV fold it is held
+    * out of (-1 outside a CV). Row kinds keep primitive fields: a cached
+    * row is one object and its arrays, nothing boxed. */
+  private[ml] sealed trait IrlsRow extends Serializable {
+    def y: Double
+    def off: Double
+    def w: Double
+    def fold: Int
+    /** `init` + x·b, accumulated left to right. */
+    def eta(init: Double, b: Array[Double]): Double
+    /** Adds this row's w-weighted moments of (x, y) to `g`. */
+    def addTo(g: GramStats): Unit
   }
 
-  private[ml] final case class DenseRows(
-      rdd: RDD[GlmRow], p: Int) extends IrlsRows {
-    def unpersist(): Unit = { rdd.unpersist(blocking = false); () }
-    def yow: RDD[(Double, Double, Double)] = rdd.map(r => (r.y, r.off, r.w))
+  private[ml] final case class GlmRow(x: Array[Double], y: Double,
+                                      off: Double, w: Double,
+                                      fold: Int) extends IrlsRow {
+    def eta(init: Double, b: Array[Double]): Double = {
+      var e = init
+      var j = 0
+      while (j < x.length) { e += b(j) * x(j); j += 1 }
+      e
+    }
+    def addTo(g: GramStats): Unit = g.addWeighted(x, Array(y), w)
+  }
 
-    def moments(offsetSums: Boolean): (GramStats, Double, Double) = {
+  /** The CSR twin of [[GlmRow]]: nonzero indices (sorted) and values of x. */
+  private[ml] final case class CsrRow(idx: Array[Int], vals: Array[Double],
+                                      y: Double, off: Double, w: Double,
+                                      fold: Int) extends IrlsRow {
+    def eta(init: Double, b: Array[Double]): Double = {
+      var e = init
+      var i = 0
+      while (i < idx.length) { e += b(idx(i)) * vals(i); i += 1 }
+      e
+    }
+    def addTo(g: GramStats): Unit = g.addSparseWeighted(idx, vals, Array(y), w)
+  }
+
+  /** One fold's raw-weight moments: the [[GramStats]] of (x, y), Σv and,
+    * when asked for, Σv·e^off (offset clamped to ±30) and Σv·off. */
+  private[ml] final class FoldMoments(p: Int) extends Serializable {
+    val g = new GramStats(p, 1)
+    var sw = 0.0; var sExpOff = 0.0; var sOff = 0.0
+    def merge(o: FoldMoments): FoldMoments = {
+      g.merge(o.g); sw += o.sw; sExpOff += o.sExpOff; sOff += o.sOff
+      this
+    }
+  }
+
+  /** The rows of binomial/poisson fits and CVs. A pass over them serves
+    * several MODELS at once: model f trains every row except those held
+    * out in fold f, so a CV's fold models and its full-data model (which
+    * no row is held out of) advance together, and a single fit is the
+    * one-model case. A zero offset and a unit weight leave every pass
+    * bit-identical to one that never read them. One pass kernel per
+    * statistic for each row kind. */
+  private[ml] sealed trait IrlsRows {
+    type R <: IrlsRow
+    def rdd: RDD[R]
+    def p: Int
+    def unpersist(): Unit = { rdd.unpersist(blocking = false); () }
+
+    /** One pass: the raw-weight moments of every fold (one slot for all
+      * rows outside a CV), with the offset sums when `offsetSums`. */
+    def moments(nfolds: Int, offsetSums: Boolean): Array[FoldMoments] = {
       val p = this.p
-      rdd.treeAggregate((new GramStats(p, 1), 0.0, 0.0))(
-        seqOp = (s, r) => {
-          s._1.addWeighted(r.x, Array(r.y), r.w)
-          if (!offsetSums) s
-          else (s._1, s._2 + r.w * math.exp(math.max(math.min(r.off, 30.0), -30.0)),
-            s._3 + r.w * r.off)
+      rdd.treeAggregate(Array.fill(math.max(nfolds, 1))(new FoldMoments(p)))(
+        seqOp = (acc, r) => {
+          val m = acc(if (nfolds == 0) 0 else {
+            require(r.fold >= 0 && r.fold < nfolds,
+              s"fold index ${r.fold} outside [0, $nfolds)")
+            r.fold
+          })
+          r.addTo(m.g)
+          m.sw += r.w
+          if (offsetSums) {
+            m.sExpOff += r.w * math.exp(math.max(math.min(r.off, 30.0), -30.0))
+            m.sOff += r.w * r.off
+          }
+          acc
         },
-        combOp = (a, b) => (a._1.merge(b._1), a._2 + b._2, a._3 + b._3),
+        combOp = (a, b) => { var i = 0; while (i < a.length) { a(i).merge(b(i)); i += 1 }; a },
         depth = 2)
     }
 
-    def gram(fam: IrlsFamily, mean: Array[Double], scale: Array[Double],
-             beta: Array[Double], a0: Double): WGram = {
-      val p = this.p
-      rdd.treeAggregate(new WGram(p))(
+    /** One IRLS pass for every `active` model f: at η = off + a0(f) +
+      * xs·β(f) on model f's standardization (`mean(f)`, `scale(f)`), the
+      * moments of the working response z − off with the row weight
+      * times `norm(f)` folded into the IRLS weight — so each solve fits
+      * exactly a0 + xs·β. Inactive models come back null. */
+    def gram(fam: IrlsFamily, mean: Array[Array[Double]],
+             scale: Array[Array[Double]], norm: Array[Double],
+             beta: Array[Array[Double]], a0: Array[Double],
+             active: Array[Boolean]): Array[WGram]
+
+    /** (1/n)·Σ xs_j·v·norm·(y − μ) over every row at the null
+      * η = off + a0: the gradient λ_max reads when the null mean varies
+      * with the offset (full-data model). */
+    def nullGradient(fam: IrlsFamily, mean: Array[Double],
+                     scale: Array[Double], a0: Double, norm: Double,
+                     n: Double): Array[Double]
+
+    /** One pass of the binomial offset-null Newton for every model f:
+      * (Σvn·(y − μ), Σvn·μ(1 − μ)) at η = a0(f) + off, interleaved. */
+    def nullNewtonSums(a0: Array[Double], norm: Array[Double]): Array[Double] = {
+      val F = a0.length
+      rdd.treeAggregate(new Array[Double](2 * F))(
         seqOp = (s, r) => {
-          val xr = r.x; val y = r.y; val off = r.off; val v = r.w
-          val xs = new Array[Double](p)
-          var j = 0
-          var eta = a0 + off
-          while (j < p) {
-            xs(j) = (xr(j) - mean(j)) / scale(j)
-            eta += xs(j) * beta(j)
-            j += 1
-          }
-          val e = fam.clampEta(eta)
-          val mu = fam.mean(e)
-          val w0 = fam.weight(mu)
-          val z = e + (y - mu) / w0 - off
-          val w = w0 * v // the frequency weight folds into the IRLS weight
-          s.sw += w; s.swz += w * z
-          j = 0
-          while (j < p) {
-            val wxj = w * xs(j)
-            s.swx(j) += wxj
-            s.swxz(j) += wxj * z
-            var i = 0
-            val base = j * (j + 1) / 2
-            while (i <= j) { s.swxx(base + i) += xs(i) * wxj; i += 1 }
-            j += 1
+          var f = 0
+          while (f < F) {
+            if (f != r.fold) {
+              val vn = r.w * norm(f)
+              val mu = 1.0 / (1.0 + math.exp(-(a0(f) + r.off)))
+              s(2 * f) += vn * (r.y - mu)
+              s(2 * f + 1) += vn * math.max(mu * (1.0 - mu), 1e-10)
+            }
+            f += 1
           }
           s
         },
-        combOp = (a, b) => a.merge(b), depth = 2)
+        combOp = (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
+        depth = 2)
     }
 
-    def nullGradient(fam: IrlsFamily, mean: Array[Double],
-                     scale: Array[Double], a0: Double, n: Double): Array[Double] = {
-      val p = this.p
-      rdd.treeAggregate(new Array[Double](p))(
-        seqOp = (acc, r) => {
-          val xr = r.x; val y = r.y; val off = r.off; val v = r.w
-          val res = v * (y - fam.mean(fam.clampEta(a0 + off)))
-          var j = 0
-          while (j < p) { acc(j) += (xr(j) - mean(j)) / scale(j) * res; j += 1 }
-          acc
-        },
-        combOp = (a, b) => { var i = 0; while (i < p) { a(i) += b(i); i += 1 }; a },
-        depth = 2).map(_ / n)
-    }
-
+    /** One pass: the weight·`norm` deviance over every row at
+      * η = off + a0 + x·β of every path point (ORIGINAL scale
+      * coefficients, [L][1] and [L][1][p]). */
     def deviance(fam: IrlsFamily, a0: Array[Array[Double]],
-                 beta: Array[Array[Array[Double]]]): Array[Double] = {
-      val p = this.p
+                 beta: Array[Array[Array[Double]]], norm: Double): Array[Double] = {
       val L = a0.length
       rdd.treeAggregate(new Array[Double](L))(
         seqOp = (acc, r) => {
-          val x = r.x; val y = r.y; val off = r.off; val v = r.w
+          val vn = r.w * norm
           var l = 0
           while (l < L) {
-            var eta = a0(l)(0) + off
-            val bl = beta(l)(0)
-            var j = 0
-            while (j < p) { eta += bl(j) * x(j); j += 1 }
-            acc(l) += v * fam.unitDeviance(y, eta)
+            acc(l) += vn * fam.unitDeviance(r.y, r.eta(a0(l)(0) + r.off, beta(l)(0)))
             l += 1
           }
           acc
@@ -1434,69 +1482,115 @@ object SgdNet {
     }
   }
 
-  /** CSR rows (idx, vals, y, offset, weight). Every pass accumulates
-    * UNCENTERED sums over each row's nonzeros only (O(nnz²) per row for
-    * the gram) and centers and standardizes algebraically after the
-    * pass, so the sparse matrix is never densified:
+  private[ml] final case class DenseRows(rdd: RDD[GlmRow], p: Int) extends IrlsRows {
+    type R = GlmRow
+
+    def gram(fam: IrlsFamily, mean: Array[Array[Double]],
+             scale: Array[Array[Double]], norm: Array[Double],
+             beta: Array[Array[Double]], a0: Array[Double],
+             active: Array[Boolean]): Array[WGram] = {
+      val p = this.p
+      val F = a0.length
+      rdd.treeAggregate(Array.tabulate(F)(f => if (active(f)) new WGram(p) else null))(
+        seqOp = (acc, r) => {
+          val xr = r.x; val y = r.y; val off = r.off; val v = r.w
+          var f = 0
+          while (f < F) {
+            if (f != r.fold && active(f)) {
+              val m = mean(f); val s = scale(f); val b = beta(f)
+              val xs = new Array[Double](p)
+              var j = 0
+              var eta = a0(f) + off
+              while (j < p) {
+                xs(j) = (xr(j) - m(j)) / s(j)
+                eta += xs(j) * b(j)
+                j += 1
+              }
+              val e = fam.clampEta(eta)
+              val mu = fam.mean(e)
+              val w0 = fam.weight(mu)
+              // the frequency weight folds into the IRLS weight
+              acc(f).add(xs, w0 * (v * norm(f)), e + (y - mu) / w0 - off)
+            }
+            f += 1
+          }
+          acc
+        },
+        combOp = (a, b) => {
+          var f = 0; while (f < F) { if (a(f) != null) a(f).merge(b(f)); f += 1 }; a
+        }, depth = 2)
+    }
+
+    def nullGradient(fam: IrlsFamily, mean: Array[Double],
+                     scale: Array[Double], a0: Double, norm: Double,
+                     n: Double): Array[Double] = {
+      val p = this.p
+      rdd.treeAggregate(new Array[Double](p))(
+        seqOp = (acc, r) => {
+          val xr = r.x
+          val res = r.w * norm * (r.y - fam.mean(fam.clampEta(a0 + r.off)))
+          var j = 0
+          while (j < p) { acc(j) += (xr(j) - mean(j)) / scale(j) * res; j += 1 }
+          acc
+        },
+        combOp = (a, b) => { var i = 0; while (i < p) { a(i) += b(i); i += 1 }; a },
+        depth = 2).map(_ / n)
+    }
+  }
+
+  /** CSR rows. Every pass accumulates UNCENTERED sums over each row's
+    * nonzeros only (O(nnz²) per row for the gram) and centers and
+    * standardizes algebraically after the pass, so the sparse matrix is
+    * never densified:
     *   Σw·xs_i·xs_j = (Σw·x_i·x_j − m_i·Σw·x_j − m_j·Σw·x_i + m_i·m_j·Σw)/(s_i·s_j)
     * and the linear predictor takes the per-pass scalar
     * a0 − Σ_j m_j·β_j/s_j, O(nnz) per row. */
-  private[ml] final case class CsrRows(
-      rdd: RDD[CsrRow], p: Int) extends IrlsRows {
-    def unpersist(): Unit = { rdd.unpersist(blocking = false); () }
-    def yow: RDD[(Double, Double, Double)] = rdd.map(r => (r.y, r.off, r.w))
+  private[ml] final case class CsrRows(rdd: RDD[CsrRow], p: Int) extends IrlsRows {
+    type R = CsrRow
 
-    def moments(offsetSums: Boolean): (GramStats, Double, Double) = {
+    def gram(fam: IrlsFamily, mean: Array[Array[Double]],
+             scale: Array[Array[Double]], norm: Array[Double],
+             beta: Array[Array[Double]], a0: Array[Double],
+             active: Array[Boolean]): Array[WGram] = {
       val p = this.p
-      rdd.treeAggregate((new GramStats(p, 1), 0.0, 0.0))(
-        seqOp = (s, r) => {
-          s._1.addSparseWeighted(r.idx, r.vals, Array(r.y), r.w)
-          if (!offsetSums) s
-          else (s._1, s._2 + r.w * math.exp(math.max(math.min(r.off, 30.0), -30.0)),
-            s._3 + r.w * r.off)
-        },
-        combOp = (a, b) => (a._1.merge(b._1), a._2 + b._2, a._3 + b._3),
-        depth = 2)
-    }
-
-    def gram(fam: IrlsFamily, mean: Array[Double], scale: Array[Double],
-             beta: Array[Double], a0: Double): WGram = {
-      val p = this.p
-      val bOverS = Array.tabulate(p)(j => beta(j) / scale(j))
-      var cOff = a0
-      var j0 = 0
-      while (j0 < p) { cOff -= mean(j0) * bOverS(j0); j0 += 1 }
-      val c0 = cOff
+      val F = a0.length
+      val bOverS = Array.tabulate(F)(f =>
+        if (active(f)) Array.tabulate(p)(j => beta(f)(j) / scale(f)(j)) else null)
+      val c0 = Array.tabulate(F) { f =>
+        var c = a0(f)
+        var j = 0
+        while (active(f) && j < p) { c -= mean(f)(j) * bOverS(f)(j); j += 1 }
+        c
+      }
       val bc = rdd.sparkContext.broadcast(bOverS)
-      val wg = rdd.treeAggregate(new WGram(p))(
-        seqOp = (s, r) => {
+      val raw = rdd.treeAggregate(Array.tabulate(F)(f => if (active(f)) new WGram(p) else null))(
+        seqOp = (acc, r) => {
           val idx = r.idx; val vals = r.vals; val y = r.y; val off = r.off; val v = r.w
           val bos = bc.value
-          var eta = c0 + off
-          var i = 0
-          while (i < idx.length) { eta += vals(i) * bos(idx(i)); i += 1 }
-          val e = fam.clampEta(eta)
-          val mu = fam.mean(e)
-          val w0 = fam.weight(mu)
-          val z = e + (y - mu) / w0 - off
-          val w = w0 * v
-          s.sw += w; s.swz += w * z
-          i = 0
-          while (i < idx.length) {
-            val j = idx(i)
-            val wxj = w * vals(i)
-            s.swx(j) += wxj
-            s.swxz(j) += wxj * z
-            var m = 0
-            while (m <= i) {
-              s.swxx(LinAlg.triIdx(idx(m), j)) += wxj * vals(m)
-              m += 1
+          var f = 0
+          while (f < F) {
+            if (f != r.fold && active(f)) {
+              val bf = bos(f)
+              var eta = c0(f) + off
+              var i = 0
+              while (i < idx.length) { eta += vals(i) * bf(idx(i)); i += 1 }
+              val e = fam.clampEta(eta)
+              val mu = fam.mean(e)
+              val w0 = fam.weight(mu)
+              acc(f).addSparse(idx, vals, w0 * (v * norm(f)), e + (y - mu) / w0 - off)
             }
-            i += 1
+            f += 1
           }
-          s
+          acc
         },
-        combOp = (a, b) => a.merge(b), depth = 2)
+        combOp = (a, b) => {
+          var f = 0; while (f < F) { if (a(f) != null) a(f).merge(b(f)); f += 1 }; a
+        }, depth = 2)
+      Array.tabulate(F)(f =>
+        if (raw(f) == null) null else centered(raw(f), mean(f), scale(f)))
+    }
+
+    private def centered(wg: WGram, mean: Array[Double], scale: Array[Double]): WGram = {
       val std = new WGram(p)
       std.sw = wg.sw; std.swz = wg.swz
       var j = 0
@@ -1517,12 +1611,13 @@ object SgdNet {
     }
 
     def nullGradient(fam: IrlsFamily, mean: Array[Double],
-                     scale: Array[Double], a0: Double, n: Double): Array[Double] = {
+                     scale: Array[Double], a0: Double, norm: Double,
+                     n: Double): Array[Double] = {
       val p = this.p
       val acc = rdd.treeAggregate(new Array[Double](p + 1))(
         seqOp = (s, r) => {
-          val idx = r.idx; val vals = r.vals; val y = r.y; val off = r.off; val v = r.w
-          val res = v * (y - fam.mean(fam.clampEta(a0 + off)))
+          val idx = r.idx; val vals = r.vals
+          val res = r.w * norm * (r.y - fam.mean(fam.clampEta(a0 + r.off)))
           var i = 0
           while (i < idx.length) { s(idx(i)) += res * vals(i); i += 1 }
           s(p) += res
@@ -1532,93 +1627,81 @@ object SgdNet {
         depth = 2)
       Array.tabulate(p)(j => (acc(j) - mean(j) * acc(p)) / scale(j) / n)
     }
-
-    def deviance(fam: IrlsFamily, a0: Array[Array[Double]],
-                 beta: Array[Array[Array[Double]]]): Array[Double] = {
-      val L = a0.length
-      rdd.treeAggregate(new Array[Double](L))(
-        seqOp = (acc, r) => {
-          val idx = r.idx; val vals = r.vals; val y = r.y; val off = r.off; val v = r.w
-          var l = 0
-          while (l < L) {
-            var eta = a0(l)(0) + off
-            val bl = beta(l)(0)
-            var i = 0
-            while (i < idx.length) { eta += bl(idx(i)) * vals(i); i += 1 }
-            acc(l) += v * fam.unitDeviance(y, eta)
-            l += 1
-          }
-          acc
-        },
-        combOp = (a, b) => { var i = 0; while (i < L) { a(i) += b(i); i += 1 }; a },
-        depth = 2)
-    }
   }
 
-  /** The glmnet weight rules, shared by both row kinds: with a
-    * weight column, w must be non-negative, w = 0 drops the row, and the
-    * kept rows' weights rescale to sum to their count (one count/sum
-    * pre-pass), so every downstream moment is a pure ratio form over n.
-    * Without one the rows pass through (w ≡ 1, no pre-pass). The
-    * returned RDD is persisted MEMORY_AND_DISK. */
-  private def keptRows[R: scala.reflect.ClassTag](raw: RDD[R],
-      weighted: Boolean, w: R => Double,
-      rescale: (R, Double) => R): RDD[R] =
-    if (!weighted) raw.persist(StorageLevel.MEMORY_AND_DISK)
-    else {
-      val (nRows, wSum) = raw.treeAggregate((0L, 0.0))(
-        seqOp = (s, r) => {
-          val v = w(r)
-          require(v >= 0, "weights must be non-negative")
-          if (v > 0) (s._1 + 1, s._2 + v) else s
-        },
-        combOp = (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
-      require(nRows > 0, "the response (y) is empty.")
-      val norm = nRows.toDouble / wSum
-      raw.filter(w(_) > 0).map(rescale(_, norm))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
+  /** The glmnet weight rules, shared by both row kinds: with a weight
+    * column, w must be non-negative and w = 0 drops the row (the
+    * sum-to-n rescale happens per model, from the moments pass). Without
+    * one the rows pass through (w ≡ 1). The returned RDD is persisted
+    * MEMORY_AND_DISK. */
+  private def keptRows[R <: IrlsRow](raw: RDD[R], weighted: Boolean): RDD[R] =
+    (if (!weighted) raw
+      else raw.filter { r => require(r.w >= 0, "weights must be non-negative"); r.w > 0 })
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
-  /** (x, y, offset, weight) rows for the dense GLM routes: offset
-    * defaults to 0.0, weight to 1.0; [[keptRows]] applies the weight
-    * rules. */
+  /** (x, y, offset, raw weight, fold) rows for the dense GLM routes:
+    * offset defaults to 0.0, weight to 1.0, fold to -1 (no `foldCol`);
+    * [[keptRows]] applies the weight rules. CV rows (a `foldCol`) are
+    * spread first when the input is thin ([[cvSpread]]). */
   private[ml] def glmRows(df: DataFrame, featureCols: Seq[String],
                           yCol: org.apache.spark.sql.Column,
-                          weightCol: String,
-                          offsetCol: String): RDD[GlmRow] = {
+                          weightCol: String, offsetCol: String,
+                          foldCol: org.apache.spark.sql.Column = null): RDD[GlmRow] = {
     import org.apache.spark.sql.functions.{col, lit}
     val p = featureCols.size
-    val offC = if (offsetCol == null) lit(0.0) else col(offsetCol).cast("double")
-    val wC = if (weightCol == null) lit(1.0) else col(weightCol).cast("double")
-    // NOT spread (unlike the batched-CV prep): the single-fit IRLS
-    // routes run few enough passes that the extra exchange measured as
-    // a net loss (bench: q_binom_largep 1.05x, q_relaxed_glm_largep
-    // 1.24x with a spread here)
-    val raw = df.select((featureCols.map(c => col(c).cast("double")) ++
-        Seq(yCol, offC, wC)): _*)
-      .rdd.map { row =>
-        val x = new Array[Double](p)
-        var j = 0
-        while (j < p) { x(j) = row.getDouble(j); j += 1 }
-        GlmRow(x, row.getDouble(p), row.getDouble(p + 1), row.getDouble(p + 2))
-      }
-    keptRows[GlmRow](raw, weightCol != null, _.w, (r, norm) => r.copy(w = r.w * norm))
+    val sel = df.select((featureCols.map(c => col(c).cast("double")) ++
+      irlsCols(yCol, weightCol, offsetCol, foldCol)): _*)
+    val raw = sel.rdd.map { row =>
+      val x = new Array[Double](p)
+      var j = 0
+      while (j < p) { x(j) = row.getDouble(j); j += 1 }
+      GlmRow(x, row.getDouble(p), row.getDouble(p + 1), row.getDouble(p + 2),
+        row.getInt(p + 3))
+    }
+    keptRows(cvSpread(raw, sel, foldCol), weightCol != null)
   }
 
-  /** The CSR twin of [[glmRows]]: (idx, vals, y, offset, weight). */
-  private def csrRows(df: DataFrame, idxCol: String, valCol: String,
-                      yCol: org.apache.spark.sql.Column, weightCol: String,
-                      offsetCol: String): RDD[CsrRow] = {
+  /** The CSR twin of [[glmRows]]: (idx, vals, y, offset, weight, fold). */
+  private[ml] def csrRows(df: DataFrame, idxCol: String, valCol: String,
+                          yCol: org.apache.spark.sql.Column, weightCol: String,
+                          offsetCol: String,
+                          foldCol: org.apache.spark.sql.Column = null): RDD[CsrRow] = {
+    import org.apache.spark.sql.functions.col
+    val sel = df.select((Seq(col(idxCol), col(valCol).cast("array<double>")) ++
+      irlsCols(yCol, weightCol, offsetCol, foldCol)): _*)
+    val raw = sel.rdd.map { r =>
+      CsrRow(r.getSeq[Int](0).toArray, r.getSeq[Double](1).toArray,
+        r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getInt(5))
+    }
+    keptRows(cvSpread(raw, sel, foldCol), weightCol != null)
+  }
+
+  /** CV rows (non-null `foldCol`) of a thin input (`src`'s plan stats
+    * within [[graft.ops.Spread.smallByStats]]) are spread before the
+    * pass loop: every fold-tiled IRLS round re-scans these persisted
+    * blocks, so a one-partition scan would serialize EVERY pass. Modest
+    * target (the minhash-kernel lesson: full parallelism floods the
+    * per-pass jobs with tiny tasks); no-op at scale. An RDD shuffle, so
+    * the first pass runs it inside its own job (a DataFrame exchange is
+    * one more job under AQE). Single fits are NOT spread: they run few
+    * enough passes that the extra exchange measured as a net loss
+    * (bench: q_binom_largep 1.05x, q_relaxed_glm_largep 1.24x). */
+  private def cvSpread[R: scala.reflect.ClassTag](rows: RDD[R], src: DataFrame,
+      foldCol: org.apache.spark.sql.Column): RDD[R] = {
+    val par = math.min(rows.sparkContext.defaultParallelism, 8)
+    if (foldCol == null || par < 2 || !graft.ops.Spread.smallByStats(src)) rows
+    else rows.repartition(par)
+  }
+
+  /** y, offset, weight and fold columns of an IRLS row. */
+  private def irlsCols(yCol: org.apache.spark.sql.Column, weightCol: String,
+                       offsetCol: String, foldCol: org.apache.spark.sql.Column):
+      Seq[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.functions.{col, lit}
-    val offC = if (offsetCol == null) lit(0.0) else col(offsetCol).cast("double")
-    val wC = if (weightCol == null) lit(1.0) else col(weightCol).cast("double")
-    val raw = df.select(col(idxCol), col(valCol).cast("array<double>"), yCol,
-        offC, wC)
-      .rdd.map { r =>
-        CsrRow(r.getSeq[Int](0).toArray, r.getSeq[Double](1).toArray,
-          r.getDouble(2), r.getDouble(3), r.getDouble(4))
-      }
-    keptRows[CsrRow](raw, weightCol != null, _.w, (r, norm) => r.copy(w = r.w * norm))
+    Seq(yCol,
+      if (offsetCol == null) lit(0.0) else col(offsetCol).cast("double"),
+      if (weightCol == null) lit(1.0) else col(weightCol).cast("double"),
+      if (foldCol == null) lit(-1) else foldCol.cast("int"))
   }
 
   /** The two sorted class labels of a binomial response; fails on one
@@ -1636,7 +1719,7 @@ object SgdNet {
   /** Family, class labels and response column of a binomial/poisson fit:
     * binomial models P(label == classes(1)) as a 0/1 column, poisson
     * reads the label as a count. */
-  private def glmResponse(df: DataFrame, labelCol: String, family: String):
+  private[ml] def glmResponse(df: DataFrame, labelCol: String, family: String):
       (IrlsFamily, Array[String], org.apache.spark.sql.Column) = {
     import org.apache.spark.sql.functions.col
     family match {
@@ -1678,42 +1761,162 @@ object SgdNet {
     finally rows.unpersist()
   }
 
-  /** Null-model intercept. Without an offset it is the closed form
-    * logit(ȳ) / ln(ȳ). With one, poisson takes the exposure MLE
-    * ln(Σv·y / Σv·e^off); binomial has no closed form — a0 solves
-    * Σv·σ(a0 + off) = Σv·y — so a Newton loop over
-    * one-scalar-pair passes converges it from logit(ȳ) − mean(off),
-    * which is already the root for a constant offset. */
-  private def nullIntercept(rows: IrlsRows, fam: IrlsFamily, yBar: Double,
-                            n: Double, sumExpOff: Double, sumOff: Double,
-                            hasOffset: Boolean, intercept: Boolean): Double =
-    if (!intercept) 0.0
-    else fam match {
-      case Poisson =>
-        if (hasOffset) math.log(yBar * n / sumExpOff) else math.log(yBar)
-      case Binomial if !hasOffset =>
-        if (yBar > 0 && yBar < 1) math.log(yBar / (1 - yBar)) else 0.0
-      case Binomial =>
-        val yow = rows.yow
-        var a0 = math.log(yBar / (1 - yBar)) - sumOff / n
+  /** What every binomial/poisson path reads before its first Newton
+    * pass, per MODEL: model f < `nfolds` trains CV fold f's train set
+    * (every row but fold f's), model `nfolds` the full data; a single
+    * fit is `nfolds` = 0, one model. Construction runs one moments pass
+    * and, for binomial with an offset, the null-intercept Newton passes;
+    * [[pathB]] adds the full model's λ_max pass when it is read.
+    *
+    * Each model's train moments are total minus its fold, with the raw
+    * weights rescaled to sum to its row count (`norm`, 1.0 unweighted:
+    * moments are linear in the weight, so one raw pass serves every
+    * model). Null intercepts: logit(ȳ) / ln(ȳ) without an offset; with
+    * one, poisson takes the exposure MLE ln(Σv·y / Σv·e^off) and binomial
+    * solves Σv·σ(a0 + off) = Σv·y by a Newton loop over one fold-tiled
+    * scalar-pair pass per step, from logit(ȳ) − mean(off) (the root for
+    * a constant offset). Every model's train set must hold positive
+    * poisson counts, or both binomial classes. */
+  private[ml] final class IrlsSetup(val rows: IrlsRows, val fam: IrlsFamily,
+                                    val params: SgdNetParams, val nfolds: Int,
+                                    val weighted: Boolean, val hasOffset: Boolean) {
+    val p: Int = rows.p
+    require(params.penaltyFactor == null ||
+      (params.penaltyFactor.length == p && params.penaltyFactor.forall(_ >= 0)),
+      "penaltyFactor must have one non-negative entry per feature")
+    /** Index of the full-data model; there are `full + 1` models. */
+    val full: Int = nfolds
+    /** Raw-weight moments of each fold (of all rows outside a CV). */
+    val folds: Array[FoldMoments] = rows.moments(nfolds, offsetSums = hasOffset)
+    if (nfolds > 0) CvSgdNet.requireNonEmptyFolds(folds.map(_.g.n).toIndexedSeq, nfolds)
+    private val total = folds.foldLeft(new FoldMoments(p))(_.merge(_))
+    if (weighted) require(total.g.n > 0, "the response (y) is empty.")
+    /** Rows in the whole input. */
+    val nObs: Long = total.g.n
+    private def heldOut(f: Int): Option[FoldMoments] =
+      if (f < nfolds) Some(folds(f)) else None
+    /** Train rows, the weight multiplier and the standardized train
+      * moments of each model. */
+    val n: Array[Double] = Array.tabulate(full + 1)(f =>
+      (nObs - heldOut(f).fold(0L)(_.g.n)).toDouble)
+    val norm: Array[Double] = Array.tabulate(full + 1)(f =>
+      if (weighted) n(f) / (total.sw - heldOut(f).fold(0.0)(_.sw)) else 1.0)
+    val st: Array[StdStats] = Array.tabulate(full + 1) { f =>
+      val tr = new GramStats(p, 1).merge(total.g)
+      heldOut(f).foreach(h => tr.subtract(h.g))
+      if (weighted) tr.scaleWeights(norm(f))
+      SufficientStats.standardize(tr, params.standardize, params.intercept)
+    }
+    private val where = if (nfolds > 0) " in every train fold" else ""
+    st.foreach { s =>
+      val yBar = s.yMean(0) // weighted mean of y
+      if (fam == Poisson) require(yBar > 0, s"poisson response must contain positive counts$where")
+      else require(yBar > 0 && yBar < 1, s"binomial response must contain both classes$where")
+    }
+    val mean: Array[Array[Double]] = st.map(s =>
+      if (params.intercept) s.xMean else new Array[Double](p))
+    val scale: Array[Array[Double]] = st.map(s =>
+      if (params.standardize) s.xSd else Array.fill(p)(1.0))
+    /** Box limits on each model's standardized scale (null = none). */
+    val bounds: Array[(Array[Double], Array[Double])] =
+      scale.map(s => boundsStd(params, s, 1.0))
+    val a0Null: Array[Double] = {
+      def trainSum(f: Int, of: FoldMoments => Double): Double =
+        (of(total) - heldOut(f).fold(0.0)(of)) * norm(f)
+      val a0 = Array.tabulate(full + 1) { f =>
+        val yBar = st(f).yMean(0)
+        if (!params.intercept) 0.0
+        else if (fam == Poisson) {
+          if (hasOffset) math.log(yBar * n(f) / trainSum(f, _.sExpOff))
+          else math.log(yBar)
+        } else if (hasOffset) math.log(yBar / (1 - yBar)) - trainSum(f, _.sOff) / n(f)
+        else math.log(yBar / (1 - yBar))
+      }
+      if (params.intercept && fam == Binomial && hasOffset) {
         var it = 0
         var done = false
         while (it < 25 && !done) {
-          val a = a0
-          val (s1, s2) = yow.treeAggregate((0.0, 0.0))(
-            (s, r) => {
-              val mu = 1.0 / (1.0 + math.exp(-(a + r._2)))
-              (s._1 + r._3 * (r._1 - mu),
-                s._2 + r._3 * math.max(mu * (1.0 - mu), 1e-10))
-            },
-            (u, w) => (u._1 + w._1, u._2 + w._2), depth = 2)
-          val step = s1 / s2
-          a0 += step
+          val s = rows.nullNewtonSums(a0.clone(), norm)
+          var mx = 0.0
+          for (f <- a0.indices) {
+            val step = s(2 * f) / s(2 * f + 1)
+            a0(f) += step
+            mx = math.max(mx, math.abs(step))
+          }
           it += 1
-          if (math.abs(step) < 1e-12) done = true
+          if (mx < 1e-12) done = true
         }
-        a0
+      }
+      a0
     }
+
+    /** One fold-tiled IRLS pass (see [[IrlsRows.gram]]) at every
+      * active model's (β, a0). */
+    def gram(beta: Array[Array[Double]], a0: Array[Double],
+             active: Array[Boolean]): Array[WGram] =
+      rows.gram(fam, mean, scale, norm, beta, a0, active)
+
+    /** One IRLS pass for model `m` alone at (β, a0). */
+    def gramAt(m: Int)(beta: Array[Double], a0: Double): WGram =
+      gram(Array.fill(full + 1)(beta), Array.fill(full + 1)(a0),
+        Array.tabulate(full + 1)(_ == m))(m)
+
+    /** The full model's λ_max gradient: with penalty-factor zeros the
+      * gradient at the unpenalized sub-fit ([[pfZeroPathGradient]]);
+      * else with an offset one gradient pass at the offset null; else
+      * the null covariance of the moments. */
+    lazy val pathB: Array[Array[Double]] = {
+      val pf = params.penaltyFactor
+      if (pf != null && pf.contains(0.0))
+        Array(pfZeroPathGradient(p, n(full), pf, params.intercept,
+          a0Init = a0Null(full), thresh = params.thresh, maxit = params.maxit,
+          gramAt = gramAt(full), userLo = bounds(full)._1, userUp = bounds(full)._2))
+      else if (hasOffset)
+        Array(rows.nullGradient(fam, mean(full), scale(full), a0Null(full),
+          norm(full), n(full)))
+      else st(full).b
+    }
+
+    /** The λ path at `alpha`: the caller's, or built from [[pathB]]. */
+    def lambdas(alpha: Double): Array[Double] =
+      if (params.lambda != null) params.lambda
+      else LambdaPath.build(pathB, alpha, params.nlambda,
+        if (params.lambdaMinRatio.isNaN) LambdaPath.defaultMinRatio(nObs, p)
+        else params.lambdaMinRatio, params.penaltyFactor)
+
+    /** Model `f`'s standardized (β, a0) on the original scale. */
+    def original(f: Int, beta: Array[Double], a0: Double): (Array[Double], Double) = {
+      val b = Array.tabulate(p)(j => beta(j) / scale(f)(j))
+      (b, if (params.intercept) a0 - (0 until p).map(j => b(j) * mean(f)(j)).sum else a0)
+    }
+
+    /** The full-data model of a path (ORIGINAL scale [L][1] and
+      * [L][1][p] coefficients) with its deviance pass: the null
+      * deviance is closed form for unweighted binomial without an
+      * offset (reference families.h Binomial::NullDeviance) and rides
+      * the pass as one more point (β = 0) otherwise. `npasses` is
+      * `passes` plus the deviance pass. */
+    def model(featureNames: Array[String], labelCol: String,
+              classes: Array[String], fitParams: SgdNetParams,
+              lambdas: Array[Double], a0Out: Array[Array[Double]],
+              betaOut: Array[Array[Array[Double]]], passes: Int): SgdNetModel = {
+      val L = lambdas.length
+      val closedNull = fam == Binomial && !weighted && !hasOffset
+      val devs =
+        if (closedNull) rows.deviance(fam, a0Out, betaOut, norm(full))
+        else rows.deviance(fam, a0Out :+ Array(a0Null(full)),
+          betaOut :+ Array(new Array[Double](p)), norm(full))
+      val nulldev =
+        if (closedNull) {
+          val yBar = st(full).yMean(0)
+          val nullP = if (params.intercept) yBar else 0.5
+          -2.0 * n(full) * (safeXLog(yBar, nullP) + safeXLog(1 - yBar, 1 - nullP))
+        } else devs(L)
+      val devRatio = Array.tabulate(L)(l => SgdNetModel.devRatio(devs(l), nulldev))
+      new SgdNetModel(fam.name, featureNames, Array(labelCol), classes, lambdas,
+        a0Out, betaOut, nulldev, devRatio, nObs, passes + 1, fitParams)
+    }
+  }
 
   /** Newton (IRLS) steps at one λ from (β, a0): one gram pass per step,
     * then `solve(A, c, xw, z̄, w̄, warm)` — the penalized WLS subproblem
@@ -1730,16 +1933,7 @@ object SgdNet {
     var iter = 0
     var done = false
     while (iter < 25 && !done) {
-      val wg = gramAt(beta, a0)
-      val ninv = 1.0 / n
-      val r = solve(LinAlg.unpackSym(wg.swxx, p).map(_.map(_ * ninv)),
-        wg.swxz.map(_ * ninv), wg.swx.map(_ * ninv), wg.swz * ninv,
-        wg.sw * ninv, beta)
-      var maxD = math.abs(r.a0 - a0)
-      var j = 0
-      while (j < p) {
-        val d = math.abs(r.beta(j) - beta(j)); if (d > maxD) maxD = d; j += 1
-      }
+      val (r, maxD) = wlsStep(gramAt(beta, a0), n, beta, a0)(solve)
       beta = r.beta; a0 = r.a0
       iter += 1
       if (maxD < math.max(thresh * 1e-2, 1e-8)) done = true
@@ -1747,66 +1941,50 @@ object SgdNet {
     (beta, a0, iter)
   }
 
-  /** The one binomial/poisson IRLS path, for dense and CSR rows alike:
+  /** One penalized WLS solve on gram `wg` (moments divided by `n`),
+    * warm from (β, a0); returns the solution and max|Δcoef|. */
+  private[ml] def wlsStep(wg: WGram, n: Double, beta: Array[Double], a0: Double)(
+      solve: (Array[Array[Double]], Array[Double], Array[Double], Double,
+        Double, Array[Double]) => CoordinateDescent.Result)
+      : (CoordinateDescent.Result, Double) = {
+    val p = beta.length
+    val ninv = 1.0 / n
+    val r = solve(LinAlg.unpackSym(wg.swxx, p).map(_.map(_ * ninv)),
+      wg.swxz.map(_ * ninv), wg.swx.map(_ * ninv), wg.swz * ninv,
+      wg.sw * ninv, beta)
+    var maxD = math.abs(r.a0 - a0)
+    var j = 0
+    while (j < p) {
+      val d = math.abs(r.beta(j) - beta(j)); if (d > maxD) maxD = d; j += 1
+    }
+    (r, maxD)
+  }
+
+  /** The one binomial/poisson IRLS fit, for dense and CSR rows alike:
     * one `treeAggregate` per Newton step, the penalized WLS solved
     * locally by CD (strong-rule screened at p ≥ [[ScreenMinP]],
     * exact by KKT backcheck), warm starts along the path. Every row's
     * offset enters each linear predictor and its weight folds into each
     * IRLS weight and deviance term, so standardization, the lambda path,
-    * penalty factors and box limits all apply on the weighted moments.
-    *
-    * λ_max: with penalty-factor zeros the gradient at the unpenalized
-    * sub-fit ([[pfZeroPathGradient]]); else with an offset one gradient
-    * pass at the offset null; else the null covariance of the moments.
+    * penalty factors and box limits all apply on the weighted moments
+    * (see [[IrlsSetup]], the one-model case of the CV path's setup).
     * A `dfmax`/`pmax` violation stops the path and drops that point.
     * `npasses` counts the Newton passes plus the deviance pass; the
-    * moments, weight, null-intercept and λ_max passes are setup.
-    * The null deviance is closed form for unweighted binomial without
-    * an offset (reference families.h Binomial::NullDeviance) and read
-    * from the deviance pass otherwise. */
+    * moments, null-intercept and λ_max passes are setup. */
   private def fitIrls(rows: IrlsRows, fam: IrlsFamily,
                       featureNames: Array[String], labelCol: String,
                       classes: Array[String], params: SgdNetParams,
                       weighted: Boolean, hasOffset: Boolean): SgdNetModel = {
+    val s = new IrlsSetup(rows, fam, params, nfolds = 0, weighted, hasOffset)
     val p = rows.p
-    require(params.penaltyFactor == null ||
-      (params.penaltyFactor.length == p && params.penaltyFactor.forall(_ >= 0)),
-      "penaltyFactor must have one non-negative entry per feature")
-    val (g, sumExpOff, sumOff) = rows.moments(offsetSums = hasOffset)
-    val st = SufficientStats.standardize(g, params.standardize, params.intercept)
-    val n = g.n.toDouble
-    val yBar = st.yMean(0) // weighted mean of y
-    if (fam == Poisson) require(yBar > 0, "poisson response must contain positive counts")
-    if (fam == Binomial && hasOffset)
-      require(yBar > 0 && yBar < 1, "binomial response must contain both classes")
-    val a0Null = nullIntercept(rows, fam, yBar, n, sumExpOff, sumOff,
-      hasOffset, params.intercept)
-
-    val mean = if (params.intercept) st.xMean else new Array[Double](p)
-    val scale = if (params.standardize) st.xSd else Array.fill(p)(1.0)
-    val (loStd, upStd) = boundsStd(params, scale, 1.0)
-    def gramAt(beta: Array[Double], a0: Double): WGram =
-      rows.gram(fam, mean, scale, beta, a0)
-    val minRatio = if (params.lambdaMinRatio.isNaN)
-      LambdaPath.defaultMinRatio(g.n, p) else params.lambdaMinRatio
-    val lambdas = if (params.lambda != null) params.lambda
-      else {
-        val pf = params.penaltyFactor
-        val pathB =
-          if (pf != null && pf.contains(0.0))
-            Array(pfZeroPathGradient(p, n, pf, params.intercept,
-              a0Init = a0Null, thresh = params.thresh, maxit = params.maxit,
-              gramAt = gramAt, userLo = loStd, userUp = upStd))
-          else if (hasOffset) Array(rows.nullGradient(fam, mean, scale, a0Null, n))
-          else st.b
-        LambdaPath.build(pathB, params.alpha, params.nlambda, minRatio, pf)
-      }
-
+    val n = s.n(0)
+    val (loStd, upStd) = s.bounds(0)
+    val lambdas = s.lambdas(params.alpha)
     val L = lambdas.length
     val a0Out = Array.ofDim[Double](L, 1)
     val betaOut = Array.ofDim[Double](L, 1, p)
     var beta = new Array[Double](p) // standardized scale
-    var a0 = a0Null
+    var a0 = s.a0Null(0)
     var passes = 0
     val newtonTol = math.max(params.thresh * 1e-4, 1e-10)
     val dfGate = new DfGate(params, p)
@@ -1817,7 +1995,7 @@ object SgdNet {
       val lamPrev = if (l > 0) lambdas(l - 1) else Double.NaN
       // first path point has no lamPrev to screen from
       val screen = screenGlm && params.alpha > 0 && p >= ScreenMinP && l > 0
-      val (b, a, steps) = newtonSteps(p, n, params.thresh, gramAt, beta, a0) {
+      val (b, a, steps) = newtonSteps(p, n, params.thresh, s.gramAt(0), beta, a0) {
         (aM, c, xw, zBar, wBar, warm) =>
           if (screen)
             CoordinateDescent.solveScreened(aM, c, xw, zBar, wBar, lam, lamPrev,
@@ -1829,35 +2007,15 @@ object SgdNet {
             penaltyFactor = params.penaltyFactor, lower = loStd, upper = upStd)
       }
       beta = b; a0 = a; passes += steps
-      for (j <- 0 until p) betaOut(l)(0)(j) = beta(j) / scale(j)
-      a0Out(l)(0) =
-        if (params.intercept) a0 - (0 until p).map(j => betaOut(l)(0)(j) * mean(j)).sum
-        else a0
+      val (bo, ao) = s.original(0, beta, a0)
+      betaOut(l)(0) = bo; a0Out(l)(0) = ao
       // glmnet dfmax/pmax: drop the violating point and stop the path
       if (!dfGate.admit(j => betaOut(l)(0)(j) != 0.0)) { cutL = l; l = L }
       else l += 1
     }
     require(cutL > 0, "dfmax/pmax exclude every path point")
-    val lambdasT = lambdas.take(cutL)
-    val a0OutT = a0Out.take(cutL)
-    val betaOutT = betaOut.take(cutL)
-
-    // the null model rides the deviance pass as one more point
-    // (β = 0) unless its deviance has a closed form
-    val closedNull = fam == Binomial && !weighted && !hasOffset
-    val devs =
-      if (closedNull) rows.deviance(fam, a0OutT, betaOutT)
-      else rows.deviance(fam, a0OutT :+ Array(a0Null),
-        betaOutT :+ Array(new Array[Double](p)))
-    passes += 1
-    val nulldev =
-      if (closedNull) {
-        val nullP = if (params.intercept) yBar else 0.5
-        -2.0 * n * (safeXLog(yBar, nullP) + safeXLog(1 - yBar, 1 - nullP))
-      } else devs(cutL)
-    val devRatio = Array.tabulate(cutL)(l => SgdNetModel.devRatio(devs(l), nulldev))
-    new SgdNetModel(fam.name, featureNames, Array(labelCol), classes, lambdasT,
-      a0OutT, betaOutT, nulldev, devRatio, g.n, passes, params)
+    s.model(featureNames, labelCol, classes, params, lambdas.take(cutL),
+      a0Out.take(cutL), betaOut.take(cutL), passes)
   }
 
   private[ml] def safeXLog(x: Double, q: Double): Double =
@@ -1992,9 +2150,9 @@ object SgdNet {
     require(params.lambda != null || params.penaltyFactor == null ||
       !params.penaltyFactor.contains(0.0),
       s"penaltyFactor entries of 0 need an explicit lambda sequence on " +
-        s"the $where path (the automatic lambda_max there does not apply " +
-        "the unpenalized-coordinate projection the dense gaussian/" +
-        "binomial/poisson paths implement)")
+        s"the $where path (the mgaussian group and multinomial paths and " +
+        "their CVs build lambda_max without the unpenalized-coordinate " +
+        "projection)")
 
   // ----------------------------------------------------------- offset fits
 

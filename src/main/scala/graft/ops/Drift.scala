@@ -33,17 +33,17 @@ object Drift {
     // below shuffles ~n cells to deduplicate little and then pays the
     // RDD cache + range-partition machinery (probe: q_ks_drift
     // taskSec 14-50 for a 10 MB input). Below an explicit ROW bound —
-    // behind the free plan-stats pregate, so a 100 TB union never pays
-    // the count — collect the raw (v, tag) pairs and fold the SAME
+    // one bounded scan behind the free plan-stats pregate, so a 100 TB
+    // union pays no scan — collect the raw (v, tag) pairs and fold the SAME
     // per-distinct-value (ca, cb) walk on primitive arrays: sorted
     // copy → distinct values → per-row binary-search accumulation →
     // the identical value-ordered gap scan. Counts are the same exact
     // integers-in-doubles; expressions shared — bit-identical D.
-    if (Spread.smallByStats(tagged, 128L << 20) &&
-        tagged.count() <= maxLocalRows) {
-      val spark = tagged.sparkSession
-      import spark.implicits._
-      val raw = tagged.as[(Double, Int)].collect()
+    val spark = tagged.sparkSession
+    import spark.implicits._
+    val rawTier = Spread.collectAtMost(tagged.as[(Double, Int)], maxLocalRows)
+    if (rawTier.isDefined) {
+      val raw = rawTier.get
       val m = raw.length
       val va = new Array[Double](m)
       var i = 0
@@ -170,9 +170,9 @@ object Drift {
     // raw bounded collect (round 19 — the [[ksStatistic]] raw tier):
     // same per-distinct-value (ca, cb) fold on primitive arrays, same
     // BigInt walk, bit-identical T
-    if (Spread.smallByStats(tagged, 128L << 20) &&
-        tagged.count() <= maxLocalRows) {
-      val raw = tagged.as[(Double, Long)].collect()
+    val rawTier = Spread.collectAtMost(tagged.as[(Double, Long)], maxLocalRows)
+    if (rawTier.isDefined) {
+      val raw = rawTier.get
       val m = raw.length
       val va = new Array[Double](m)
       var i = 0

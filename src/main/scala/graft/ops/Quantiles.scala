@@ -85,15 +85,16 @@ object Quantiles {
     // tier): for CONTINUOUS value columns the distinct-value aggregate
     // below shuffles ~n cells to deduplicate little, then pays the RDD
     // cache + range-partition chain. Below an explicit ROW bound —
-    // behind the free plan-stats pregate so a 100 TB scan never pays
-    // the count — the bracketing order statistics come straight off a
+    // one bounded scan behind the free plan-stats pregate, so a 100 TB
+    // input pays no scan — the bracketing order statistics come straight off a
     // primitively SORTED raw array: rank r (1-indexed over the
     // cumulative distinct-value counts) is sorted(r−1) by definition,
     // and the closing interpolation expression is shared —
     // bit-identical output.
-    if (Spread.smallByStats(vals, 128L << 20) && vals.count() <= maxLocalRows) {
-      import spark.implicits._
-      val raw = vals.as[Double].collect()
+    import spark.implicits._
+    val rawTier = Spread.collectAtMost(vals.as[Double], maxLocalRows)
+    if (rawTier.isDefined) {
+      val raw = rawTier.get
       val n = raw.length.toLong
       require(n > 0, s"no non-null values in $valueCol")
       val sorted = new Array[Double](raw.length)
@@ -229,10 +230,10 @@ object Quantiles {
     // distinct values + per-value weight sums folded on primitive
     // arrays (sorted copy → binary-search accumulation), then the
     // identical value-ordered target walk — bit-identical selection
-    if (Spread.smallByStats(pairs, 128L << 20) &&
-        pairs.count() <= maxLocalRows) {
-      import spark.implicits._
-      val raw = pairs.as[(Double, Long)].collect()
+    import spark.implicits._
+    val rawTier = Spread.collectAtMost(pairs.as[(Double, Long)], maxLocalRows)
+    if (rawTier.isDefined) {
+      val raw = rawTier.get
       val m = raw.length
       val va = new Array[Double](m)
       var i = 0
@@ -412,8 +413,9 @@ object Quantiles {
     // raw bounded collect (round 19 — the [[exactScale]] raw tier, per
     // group): per-group primitive sort, direct order statistics, the
     // shared interpolation expression — bit-identical rows
-    if (Spread.smallByStats(gv, 128L << 20) && gv.count() <= maxLocalRows) {
-      val raw = gv.collect()
+    val rawTier = Spread.collectAtMost(gv, maxLocalRows)
+    if (rawTier.isDefined) {
+      val raw = rawTier.get
       val byG = groupRows(raw) { r =>
         val x = r.getDouble(1)
         if (x == 0.0) 0.0 else x

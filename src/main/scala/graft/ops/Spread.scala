@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
+
+import scala.reflect.ClassTag
 
 /** Thin-input spreading — the [[Dedup.corpusSketch]] pattern hoisted to
   * a shared helper (optimization round 18).
@@ -60,4 +62,20 @@ private[graft] object Spread {
   def smallByStats(df: DataFrame, maxBytes: Long = 1L << 30): Boolean =
     try df.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBytes
     catch { case scala.util.control.NonFatal(_) => false }
+
+  /** The raw-tier gate of the driver cutovers: every row of `ds` when
+    * the free [[smallByStats]] pregate (`maxBytes`) passes and `ds`
+    * holds at most `maxRows` rows, else None. ONE scan, which never
+    * counts first: each partition returns at most `maxRows + 1` rows, so
+    * an input above the bound shows itself in the same job (and the
+    * pregate bounds what that job can ship). Not `limit(n).collect()`:
+    * Spark's incremental take may run several jobs. */
+  def collectAtMost[T: ClassTag](ds: Dataset[T], maxRows: Long,
+                                 maxBytes: Long = 128L << 20): Option[Array[T]] =
+    if (!smallByStats(ds.toDF(), maxBytes)) None
+    else {
+      val cap = math.min(maxRows, Int.MaxValue - 1L).toInt + 1
+      val rows = ds.rdd.mapPartitions(_.take(cap)).collect()
+      if (rows.length > maxRows) None else Some(rows)
+    }
 }

@@ -75,8 +75,8 @@ object Stats {
     // aggregation below shuffles ~n rows to deduplicate nothing and
     // then pays an RDD cache + boxed index sorts on the driver
     // (probe: q_spearman 2.73 s, most of it that chain). Below an
-    // explicit ROW bound — still behind the free plan-stats pregate,
-    // so a 100 TB input pays neither the count nor the collect — skip
+    // explicit ROW bound — one bounded scan (Spread.collectAtMost) behind
+    // the free plan-stats pregate, so a 100 TB input pays no scan — skip
     // the aggregation entirely: collect the raw pairs and assign ranks
     // with primitive-array sorts + binary search. Rank2 values are the
     // identical integers (ties accumulate the same per-value row
@@ -84,8 +84,9 @@ object Stats {
     // same long/BigInt branches with cnt = 1, and the closing double
     // expressions are shared — bit-identical output (LocalCutoverSpec
     // pins all three paths).
-    if (Spread.smallByStats(rows, 128L << 20) && rows.count() <= maxLocalRows) {
-      val raw = rows.as[(Double, Double)].collect()
+    val rawTier = Spread.collectAtMost(rows.as[(Double, Double)], maxLocalRows)
+    if (rawTier.isDefined) {
+      val raw = rawTier.get
       val m = raw.length
       val va = new Array[Double](m); val vb = new Array[Double](m)
       var i = 0

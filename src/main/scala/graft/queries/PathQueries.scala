@@ -1920,7 +1920,7 @@ object PathQueries {
   }
 
   /** Oracle-exact POISSON cross-validation — lights up the shared-pass
-    * poisson IRLS CV route (`CvSgdNet.cvPoissonShared`) end-to-end. At
+    * poisson IRLS CV route (`CvSgdNet.cvIrls`) end-to-end. At
     * a lambda far above every fold's standardized gradient the
     * coefficient stays zero and the intercept-only poisson MLE is the
     * closed form a0_f = ln(train ȳ_f) (the IRLS intercept update is a

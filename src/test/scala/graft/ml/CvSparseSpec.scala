@@ -242,4 +242,47 @@ class CvSparseSpec extends SparkSpec {
     }
     ()
   }
+
+  test("binomial/poisson CV with penalty-factor zeros and no lambda: " +
+    "full-data path == SgdNet.fit / fitSparse") {
+    for ((fam, label) <- Seq("binomial" -> "yb", "poisson" -> "yp")) {
+      val params = SgdNetParams(family = fam, nlambda = 4,
+        penaltyFactor = Array(0.0, 1.0, 1.0, 1.0), thresh = 1e-9, maxit = 100000)
+      val dense = CvSgdNet.fit(dn, feats, Seq(label), params, nfolds = 3,
+        foldCol = fold).best.fit.lambda
+      val sparse = CvSgdNet.fitSparse(sp, "idx", "vals", 4, label, params,
+        nfolds = 3, foldCol = fold).best.fit.lambda
+      // the fold moments merge in a different order than one fit's
+      // moments, so the grids agree to round-off, not bitwise
+      for ((cv, single, tag) <- Seq(
+          (dense, SgdNet.fit(dn, feats, label, params).lambda, "dense"),
+          (sparse, SgdNet.fitSparse(sp, "idx", "vals", 4, label, params).lambda, "sparse"))) {
+        assert(cv.length == single.length, s"$fam/$tag path length")
+        for (l <- cv.indices)
+          assert(math.abs(cv(l) - single(l)) <= 1e-9 * single(l),
+            s"$fam/$tag lambda($l): cv ${cv(l)} vs fit ${single(l)}")
+      }
+    }
+  }
+
+  test("binomial CV fails when a train fold holds one class " +
+    "(fit, fitWeighted, fitSparse)") {
+    // every positive row sits in fold 0, so fold 0's train set is all
+    // negatives
+    val oneClass = when(col("yb") === 1.0, lit(0))
+      .otherwise(lit(1) + pmod(xxhash64(col("rid")), lit(2)))
+    val params = SgdNetParams(family = "binomial", nlambda = 3)
+    val calls: Seq[(String, () => Any)] = Seq(
+      "fit" -> (() => CvSgdNet.fit(dn, feats, Seq("yb"), params, nfolds = 3,
+        foldCol = oneClass)),
+      "fitWeighted" -> (() => CvSgdNet.fitWeighted(dn, feats, "yb", "w",
+        params, nfolds = 3, foldCol = oneClass)),
+      "fitSparse" -> (() => CvSgdNet.fitSparse(sp, "idx", "vals", 4, "yb",
+        params, nfolds = 3, foldCol = oneClass)))
+    for ((tag, call) <- calls) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("both classes in every train fold"),
+        s"$tag: ${e.getMessage}")
+    }
+  }
 }
