@@ -11,8 +11,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     MlQueries.lambdaPath(spark, "/root/testdata/sf0.001")
 
+  /** A map of `entries` that fails on a repeated key: in a plain
+    * `Map(...)` a later copy would silently replace the first. */
+  private[graft] def uniqueKeys[V](entries: (String, V)*): Map[String, V] = {
+    val repeated = entries.groupBy(_._1).collect { case (k, v) if v.size > 1 => k }
+    require(repeated.isEmpty,
+      s"repeated query keys: ${repeated.toSeq.sorted.mkString(", ")}")
+    entries.toMap
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = uniqueKeys(
     "q_gauss_ols1"    -> (MlQueries.gaussOls1 _),
     "q_gauss_ridge1"  -> (MlQueries.gaussRidge1 _),
     "q_ridge_compat"  -> (MlQueries.gaussRidgeCompat _),
@@ -111,9 +120,6 @@ object SparkEntry {
     "q_cv_sparse_multinom" -> (PathQueries.cvSparseMultinom _),
     "q_cv_sparse_weighted" -> (PathQueries.cvSparseWeighted _),
     "q_cv_sparse_mgauss" -> (PathQueries.cvSparseMgauss _),
-    "q_multinom_pf"      -> (PathQueries.multinomPf _),
-    "q_weighted_binom"   -> (MlQueries.weightedBinom _),
-    "q_weighted_poisson" -> (MlQueries.weightedPoisson _),
     "q_multinom_pf"      -> (PathQueries.multinomPf _),
     "q_weighted_binom"   -> (MlQueries.weightedBinom _),
     "q_weighted_poisson" -> (MlQueries.weightedPoisson _),

@@ -4,48 +4,50 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Screened / active-set Gram construction for LARGE p (round 18 —
-  * the architectural extension behind the `maxGramP` contract gate):
-  * the gaussian elastic-net path WITHOUT ever materializing the p×p
-  * Gram.
+/** Elastic-net paths at LARGE p without the p×p Gram: the routes
+  * behind the `maxGramP` contract gate of [[SgdNet.fit]] /
+  * [[SgdNet.fitSparse]] (gaussian, binomial and poisson fits, their
+  * sparse CSR twins, relax and CV; multinomial runs the dense FISTA
+  * core with a power-iteration Lipschitz bound instead).
   *
-  * The one-pass [[SgdNet.fit]] route aggregates the full packed Gram
-  * (p(p+1)/2 doubles in the driver and in every task), which caps p at
-  * `SgdNet.maxGramP` (~8k). For alpha > 0 the sequential strong rule
-  * (Tibshirani et al. 2012) knows each path point's candidate set
-  * BEFORE the Gram is consumed, so this route aggregates only:
+  * The one-pass routes aggregate the full packed Gram (p(p+1)/2
+  * doubles in the driver and in every task), which caps p at
+  * `SgdNet.maxGramP` (~8k). These routes hold the Gram only over a
+  * grow-only ever-candidate set E of columns, in the manner of
+  * working-set solvers (Celer, Massias et al. 2018):
   *
-  *  - pass A: per-feature means/variances, X'y, y-moments — O(p)
-  *    driver state, the lambda path and the zero-solution gradient;
-  *  - Gram-EXTENSION passes: when new columns enter the ever-candidate
-  *    set E, one pass accumulates the raw |new|×|E| cross-moment slab
-  *    (centered/standardized driver-side with the exact
-  *    [[SufficientStats.standardize]] formula) — driver state grows to
-  *    O(|E|²), never O(p²);
-  *  - one GRADIENT pass per path point: the full standardized
-  *    p-gradient at the just-solved coefficients (per-row cost
-  *    O(p + |active|)), which is BOTH the exact KKT backcheck over
-  *    every discarded coordinate (violators re-enter E, the Gram slab
-  *    extends, and the point re-solves — equality with the full-Gram
-  *    path is structural, same discipline as `solveScreened`) AND the
-  *    next point's strong-rule input.
+  *  - E starts each path point from a screening bound on the current
+  *    gradient (`screenBound`): the sequential strong rule
+  *    α(2λ − λ_prev) (Tibshirani et al. 2012), floored at
+  *    αλ(1 − λ/λ_prev). The floor binds only below λ ≈ 0.618·λ_prev,
+  *    so fine paths screen exactly as the bare rule does; on a wide
+  *    gap, where the bare rule is vacuous and would admit all p
+  *    columns, it tends to the exact KKT threshold αλ.
+  *  - after each solve over E, one full-p pass computes the exact
+  *    gradient (the WLS KKT vector under frozen weights for the IRLS
+  *    routes). Columns outside E with |g_j| > αλ + tol are violators;
+  *    if any exists, they and every column at or above the screening
+  *    bound join E ([[reentry]]) and the point re-solves. Equality with
+  *    the full-Gram path is therefore structural, whatever the bound.
   *
-  * Cost model: 1 + nlambda (+ rare extension/violation) data passes vs
-  * the full-Gram route's single pass — the designed trade for p beyond
-  * driver memory. The input rows are persisted MEMORY_AND_DISK for the
-  * multi-pass loop and unpersisted on return. `|E|` (not p) is held to
-  * `SgdNet.maxGramP`; `dfmax`/`pmax` bound it tighter and stop the
-  * path early, which is the recommended regime at very large p.
+  * Cost model per path point: the gaussian routes pay one gradient
+  * pass (plus a Gram-extension pass whenever E grows — the raw
+  * |new|×|E| cross moments, standardized driver-side with the
+  * [[SufficientStats.standardize]] formula); the IRLS routes pay one
+  * fused pass per Newton step (KKT vector plus the next step's
+  * weighted moments over E) and a moments pass whenever E grows.
+  * Task results and driver state are O(p + |E|²), never O(p²), and a
+  * path point's E stays near its active set however wide the λ gap.
+  * The input rows are persisted MEMORY_AND_DISK for the pass loop and
+  * unpersisted on return. |E| is held to `SgdNet.maxGramP`;
+  * `dfmax`/`pmax` bound it tighter and stop the path early.
   *
-  * Contract: gaussian single-response, alpha > 0 (ridge keeps every
-  * coordinate — screening is vacuous), no penalty factors / box
-  * limits / sgdnetCompat (those compose with the full-Gram route,
-  * which large-p users reach after dimensionality reduction).
-  * standardize and intercept both honored; round 18 adds `weightCol`
-  * (glmnet weights as pure ratio forms — v ≡ 1 reproduces the
-  * unweighted arithmetic bitwise) and `offsetCol` (the identity-link
-  * y − offset reduction). Verified equal to [[SgdNet.fit]] /
-  * [[SgdNet.fitWeighted]] on every shared regime by LargePSpec.
+  * Contract: alpha > 0 (ridge keeps every coordinate and the Gram IS
+  * p×p), no penalty factors / box limits / sgdnetCompat /
+  * standardizeResponse (those compose with the full-Gram routes after
+  * dimensionality reduction); standardize, intercept, `weightCol` and
+  * `offsetCol` are honored where the signatures take them. Verified
+  * equal to the full-Gram routes on every shared regime by LargePSpec.
   */
 object LargeP {
 
@@ -67,6 +69,105 @@ object LargeP {
     var scale: Array[Double] = _
     var mean: Array[Double] = _
     var yMean: Double = 0.0
+  }
+
+  /** Screening bound on |grad_j| for the path point `lam` after
+    * `lamPrev`: the sequential strong rule α(2λ − λ_prev), floored at
+    * αλ(1 − λ/λ_prev). The floor binds below λ ≈ 0.618·λ_prev, where
+    * the bare rule falls towards 0 (it goes negative past λ_prev/2 and
+    * would admit every column); as the gap widens it tends to αλ, the
+    * exact KKT threshold. A non-decreasing step (or λ_prev ≤ 0) keeps
+    * the bare rule, which is then ≥ αλ. Never 0, so a λ = 0 point
+    * admits only columns with a nonzero gradient. */
+  private def screenBound(alpha: Double, lam: Double, lamPrev: Double): Double = {
+    val floor = if (lamPrev > lam) lam * (1.0 - lam / lamPrev) else 0.0
+    math.max(alpha * math.max(2.0 * lam - lamPrev, floor), Double.MinPositiveValue)
+  }
+
+  /** E may hold at most `SgdNet.maxGramP` columns: `what` grows as
+    * |E|² in driver memory. */
+  private def requireEFits(size: Int, what: String): Unit =
+    require(size <= SgdNet.maxGramP,
+      s"the ever-candidate set would grow to $size > maxGramP = " +
+        s"${SgdNet.maxGramP} columns: $what no longer fits the driver " +
+        "budget. Use dfmax/pmax to bound the path, a larger lambda " +
+        "floor, or raise graft.ml.SgdNet.maxGramP.")
+
+  /** The m×m symmetric matrix of a packed lower triangle (row x2 at
+    * x2(x2+1)/2), every entry times `scale`. */
+  private def unpackSym(packed: Array[Double], m: Int,
+                        scale: Double): Array[Array[Double]] = {
+    val a = Array.ofDim[Double](m, m)
+    var x2 = 0
+    while (x2 < m) {
+      val base = x2 * (x2 + 1) / 2
+      var y2 = 0
+      while (y2 <= x2) {
+        val v = packed(base + y2) * scale
+        a(x2)(y2) = v; a(y2)(x2) = v
+        y2 += 1
+      }
+      x2 += 1
+    }
+    a
+  }
+
+  /** Columns outside E that the path point starts with: the nonzero
+    * warm-start coefficients and every |grad_j| ≥ `bound`. */
+  private def screened(grad: Array[Double], beta: Array[Double],
+                       inE: Array[Boolean], bound: Double): Array[Int] = {
+    val out = scala.collection.mutable.ArrayBuilder.make[Int]
+    var j = 0
+    while (j < grad.length) {
+      if (!inE(j) && (beta(j) != 0.0 || math.abs(grad(j)) >= bound)) out += j
+      j += 1
+    }
+    out.result()
+  }
+
+  /** The KKT re-entry after a solve over E: empty when no column
+    * outside E violates |kkt_j| > `level` (the point is exact), else
+    * every column outside E at or above `bound` — the violators and
+    * the columns the screening bound says come next. */
+  private def reentry(kkt: Array[Double], inE: Array[Boolean],
+                      level: Double, bound: Double): Array[Int] = {
+    val out = scala.collection.mutable.ArrayBuilder.make[Int]
+    var violated = false
+    var j = 0
+    while (j < kkt.length) {
+      val g = math.abs(kkt(j))
+      if (!inE(j) && (g >= bound || g > level)) {
+        out += j
+        if (g > level) violated = true
+      }
+      j += 1
+    }
+    if (violated) out.result() else Array.emptyIntArray
+  }
+
+  /** The symmetric m×m block `old` grown to n×n: old entries copied,
+    * each new row i ≥ m (and its mirror column above the old diagonal
+    * block) filled from `entry(i − m, j)`. Primitive rows, rebuilt
+    * only when E grows. */
+  private def growSym(old: Array[Array[Double]], n: Int)(
+      entry: (Int, Int) => Double): Array[Array[Double]] = {
+    val m = old.length
+    val g = Array.ofDim[Double](n, n)
+    var i = 0
+    while (i < m) { System.arraycopy(old(i), 0, g(i), 0, m); i += 1 }
+    var a = 0
+    while (a < n - m) {
+      val row = g(m + a)
+      var j = 0
+      while (j < n) {
+        val v = entry(a, j)
+        row(j) = v
+        if (j < m) g(j)(m + a) = v
+        j += 1
+      }
+      a += 1
+    }
+    g
   }
 
   def fitGaussian(df: DataFrame, featureCols: Seq[String], labelCol: String,
@@ -162,26 +263,19 @@ object LargeP {
           minRatio, null)
       // the SAME max(alpha, 1e-3) clamp as LambdaPath.lambdaMax: without
       // it, alpha < 1e-3 makes lamPrev exceed the first auto-path lambda
-      // and the first strong-rule bound goes negative (admits all of p)
+      // and the first screening bound falls to its floor
       val lmaxData = c.map(math.abs).max / math.max(params.alpha, 1e-3)
 
       // ------------------------------------- ever-candidate Gram block E
-      val posOf = scala.collection.mutable.HashMap.empty[Int, Int]
+      val inE = new Array[Boolean](p)
       val eIdx = scala.collection.mutable.ArrayBuffer.empty[Int]
-      // symmetric standardized Gram over E, grown in place
-      val gramE = scala.collection.mutable.ArrayBuffer
-        .empty[scala.collection.mutable.ArrayBuffer[Double]]
+      // symmetric standardized Gram over E (primitive rows)
+      var gramE = Array.empty[Array[Double]]
 
-      def extend(newCols: Seq[Int]): Unit = {
-        if (newCols.isEmpty) return
-        require(eIdx.size + newCols.size <= SgdNet.maxGramP,
-          s"the ever-candidate set would grow to " +
-            s"${eIdx.size + newCols.size} > maxGramP = ${SgdNet.maxGramP} " +
-            "columns: the active block no longer fits the O(|E|^2) " +
-            "driver budget. Use dfmax/pmax to bound the path, a larger " +
-            "lambda floor, or raise graft.ml.SgdNet.maxGramP.")
+      def extend(nn: Array[Int]): Unit = {
+        if (nn.isEmpty) return
+        requireEFits(eIdx.size + nn.length, "the O(|E|^2) active block")
         val oldE = eIdx.toArray
-        val nn = newCols.toArray
         val eAfter = oldE ++ nn
         val bc = sc.broadcast((nn, eAfter))
         // RAW v-weighted cross moments (same accumulation shape as
@@ -210,17 +304,11 @@ object LargeP {
         def std(aRaw: Double, i: Int, j: Int): Double =
           (aRaw / nD - center(i) * mean(j) - center(j) * mean(i) +
             center(i) * center(j)) / (scale(i) * scale(j))
-        // append new columns to the symmetric block
-        for (bi <- oldE.indices)
-          for (ai <- nn.indices)
-            gramE(bi) += std(acc(ai * eAfter.length + bi), nn(ai), oldE(bi))
-        for (ai <- nn.indices) {
-          val row = scala.collection.mutable.ArrayBuffer.empty[Double]
-          for (bi <- eAfter.indices)
-            row += std(acc(ai * eAfter.length + bi), nn(ai), eAfter(bi))
-          gramE += row
-        }
-        nn.foreach { j => posOf(j) = eIdx.size; eIdx += j }
+        // append the new columns to the symmetric block
+        val mE = eAfter.length
+        gramE = growSym(gramE, mE)((ai, bi) =>
+          std(acc(ai * mE + bi), nn(ai), eAfter(bi)))
+        nn.foreach { j => inE(j) = true; eIdx += j }
       }
 
       // full standardized gradient at the current solution — the KKT /
@@ -269,9 +357,10 @@ object LargeP {
       var l = 0
       while (l < L) {
         val lam = lambdas(l)
-        val bound = params.alpha * (2.0 * lam - lamPrev)
-        extend((0 until p).filter(j => !posOf.contains(j) &&
-          (beta(j) != 0.0 || math.abs(grad(j)) >= bound)))
+        // E starts from the floored strong rule; the KKT sweep below
+        // keeps the point exact
+        val bound = screenBound(params.alpha, lam, lamPrev)
+        extend(screened(grad, beta, inE, bound))
         // tolerance tracks the CD solve threshold itself (thresh*1e-4
         // below) — the same round-18 tightening as solveScreened; a
         // marginal false re-entry costs one extra sub-solve, grow-only E
@@ -279,30 +368,33 @@ object LargeP {
         var done = false
         while (!done) {
           val m = eIdx.size
-          val aSub = Array.tabulate(m, m)((x2, y2) => gramE(x2)(y2))
           val cSub = Array.tabulate(m)(x2 => c(eIdx(x2)))
           val init = Array.tabulate(m)(x2 => beta(eIdx(x2)))
-          val r = CoordinateDescent.solve(aSub, cSub,
+          val r = CoordinateDescent.solve(gramE, cSub,
             new Array[Double](m), 0.0, 1.0, lam, params.alpha,
             intercept = false, init = init,
             thresh = params.thresh * 1e-4, maxIter = params.maxit)
           var x2 = 0
           while (x2 < m) { beta(eIdx(x2)) = r.beta(x2); x2 += 1 }
           grad = gradientPass(beta)
-          val violators = (0 until p).filter(j => !posOf.contains(j) &&
-            math.abs(grad(j)) > lam * params.alpha + tol)
-          if (violators.isEmpty) done = true else extend(violators)
+          val back = reentry(grad, inE, lam * params.alpha + tol, bound)
+          if (back.isEmpty) done = true else extend(back)
         }
         if (!dfGate.admit(j => beta(j) != 0.0)) { cutL = l; l = L }
         else {
           // RSS/n from the block moments (full-Gram tail formula on E)
+          val eArr = eIdx.toArray
           var bb = 0.0; var gq = 0.0
-          for (x2 <- 0 until eIdx.size) {
-            val j = eIdx(x2)
+          var x2 = 0
+          while (x2 < eArr.length) {
+            val j = eArr(x2)
             bb += c(j) * beta(j)
+            val row = gramE(x2)
             var s = 0.0
-            for (y2 <- 0 until eIdx.size) s += gramE(x2)(y2) * beta(eIdx(y2))
+            var y2 = 0
+            while (y2 < eArr.length) { s += row(y2) * beta(eArr(y2)); y2 += 1 }
             gq += beta(j) * s
+            x2 += 1
           }
           val rssOverN = ySecond - 2 * bb + gq
           devRatio(l) = SgdNetModel.devRatio(nRows * rssOverN, nulldev)
@@ -317,7 +409,7 @@ object LargeP {
       require(cutL > 0, "dfmax/pmax exclude every path point")
       if (capture != null) {
         capture.eIdx = eIdx.toArray
-        capture.gram = Array.tabulate(eIdx.size, eIdx.size)((i, j) => gramE(i)(j))
+        capture.gram = gramE
         capture.b = c.clone(); capture.scale = scale; capture.mean = mean
         capture.yMean = yMean
       }
@@ -435,21 +527,15 @@ object LargeP {
       val lmaxData = c.map(math.abs).max / math.max(params.alpha, 1e-3)
 
       // ------------------------------------- ever-candidate Gram block E
-      val posOf = scala.collection.mutable.HashMap.empty[Int, Int]
+      val inE = new Array[Boolean](p)
       val eIdx = scala.collection.mutable.ArrayBuffer.empty[Int]
-      val gramE = scala.collection.mutable.ArrayBuffer
-        .empty[scala.collection.mutable.ArrayBuffer[Double]]
+      // symmetric standardized Gram over E (primitive rows)
+      var gramE = Array.empty[Array[Double]]
 
-      def extend(newCols: Seq[Int]): Unit = {
-        if (newCols.isEmpty) return
-        require(eIdx.size + newCols.size <= SgdNet.maxGramP,
-          s"the ever-candidate set would grow to " +
-            s"${eIdx.size + newCols.size} > maxGramP = ${SgdNet.maxGramP} " +
-            "columns: the active block no longer fits the O(|E|^2) " +
-            "driver budget. Use dfmax/pmax to bound the path, a larger " +
-            "lambda floor, or raise graft.ml.SgdNet.maxGramP.")
+      def extend(nn: Array[Int]): Unit = {
+        if (nn.isEmpty) return
+        requireEFits(eIdx.size + nn.length, "the O(|E|^2) active block")
         val oldE = eIdx.toArray
-        val nn = newCols.toArray
         val eAfter = oldE ++ nn
         // slot lookups so each row finds its nnz inside each set in
         // O(nnz) — broadcast int arrays, -1 = not a member
@@ -505,16 +591,11 @@ object LargeP {
         def std(aRaw: Double, i: Int, j: Int): Double =
           (aRaw / nD - center(i) * mean(j) - center(j) * mean(i) +
             center(i) * center(j)) / (scale(i) * scale(j))
-        for (bi <- oldE.indices)
-          for (ai <- nn.indices)
-            gramE(bi) += std(acc(ai * eAfter.length + bi), nn(ai), oldE(bi))
-        for (ai <- nn.indices) {
-          val row = scala.collection.mutable.ArrayBuffer.empty[Double]
-          for (bi <- eAfter.indices)
-            row += std(acc(ai * eAfter.length + bi), nn(ai), eAfter(bi))
-          gramE += row
-        }
-        nn.foreach { j => posOf(j) = eIdx.size; eIdx += j }
+        // append the new columns to the symmetric block
+        val mE = eAfter.length
+        gramE = growSym(gramE, mE)((ai, bi) =>
+          std(acc(ai * mE + bi), nn(ai), eAfter(bi)))
+        nn.foreach { j => inE(j) = true; eIdx += j }
       }
 
       // full standardized gradient, SPARSE per row: the centering
@@ -576,36 +657,39 @@ object LargeP {
       var l = 0
       while (l < L) {
         val lam = lambdas(l)
-        val bound = params.alpha * (2.0 * lam - lamPrev)
-        extend((0 until p).filter(j => !posOf.contains(j) &&
-          (beta(j) != 0.0 || math.abs(grad(j)) >= bound)))
+        // floored strong-rule start, exact KKT re-entry (fitGaussian)
+        val bound = screenBound(params.alpha, lam, lamPrev)
+        extend(screened(grad, beta, inE, bound))
         val tol = math.max(params.thresh * 1e-4, 1e-12) * math.max(lam, 1.0)
         var done = false
         while (!done) {
           val m = eIdx.size
-          val aSub = Array.tabulate(m, m)((x2, y2) => gramE(x2)(y2))
           val cSub = Array.tabulate(m)(x2 => c(eIdx(x2)))
           val init = Array.tabulate(m)(x2 => beta(eIdx(x2)))
-          val r = CoordinateDescent.solve(aSub, cSub,
+          val r = CoordinateDescent.solve(gramE, cSub,
             new Array[Double](m), 0.0, 1.0, lam, params.alpha,
             intercept = false, init = init,
             thresh = params.thresh * 1e-4, maxIter = params.maxit)
           var x2 = 0
           while (x2 < m) { beta(eIdx(x2)) = r.beta(x2); x2 += 1 }
           grad = gradientPass(beta)
-          val violators = (0 until p).filter(j => !posOf.contains(j) &&
-            math.abs(grad(j)) > lam * params.alpha + tol)
-          if (violators.isEmpty) done = true else extend(violators)
+          val back = reentry(grad, inE, lam * params.alpha + tol, bound)
+          if (back.isEmpty) done = true else extend(back)
         }
         if (!dfGate.admit(j => beta(j) != 0.0)) { cutL = l; l = L }
         else {
+          val eArr = eIdx.toArray
           var bb = 0.0; var gq = 0.0
-          for (x2 <- 0 until eIdx.size) {
-            val j = eIdx(x2)
+          var x2 = 0
+          while (x2 < eArr.length) {
+            val j = eArr(x2)
             bb += c(j) * beta(j)
+            val row = gramE(x2)
             var s = 0.0
-            for (y2 <- 0 until eIdx.size) s += gramE(x2)(y2) * beta(eIdx(y2))
+            var y2 = 0
+            while (y2 < eArr.length) { s += row(y2) * beta(eArr(y2)); y2 += 1 }
             gq += beta(j) * s
+            x2 += 1
           }
           val rssOverN = ySecond - 2 * bb + gq
           devRatio(l) = SgdNetModel.devRatio(nD * rssOverN, nulldev)
@@ -620,7 +704,7 @@ object LargeP {
       require(cutL > 0, "dfmax/pmax exclude every path point")
       if (capture != null) {
         capture.eIdx = eIdx.toArray
-        capture.gram = Array.tabulate(eIdx.size, eIdx.size)((i, j) => gramE(i)(j))
+        capture.gram = gramE
         capture.b = c.clone(); capture.scale = scale; capture.mean = mean
         capture.yMean = yMean
       }
@@ -1002,8 +1086,10 @@ object LargeP {
         while (j < p) { x(j) = r.getDouble(j); j += 1 }
         (x, r.getDouble(p), r.getDouble(p + 1), r.getDouble(p + 2))
       }
-    val rows = (if (weightCol != null) rows0.filter(_._3 > 0) else rows0)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val rows = (if (weightCol == null) rows0
+      else rows0.filter { t =>
+        require(t._3 >= 0, "weights must be non-negative"); t._3 > 0
+      }).persist(StorageLevel.MEMORY_AND_DISK)
     try SgdNet.relaxedGlmRefit(rows, model, params, gamma,
       hasOffset = offsetCol != null)
     finally { rows.unpersist(blocking = false); () }
@@ -1175,26 +1261,17 @@ object LargeP {
       val bcStd = sc.broadcast((centerM, invScaleM))
 
       // ---------------- union ever-candidate set E + per-fold RAW slabs
-      val posOf = scala.collection.mutable.HashMap.empty[Int, Int]
+      val posOf = Array.fill(p)(-1) // position in E, -1 outside
       val eIdx = scala.collection.mutable.ArrayBuffer.empty[Int]
       // foldSlab(f)(a)(b): SUM over fold-f rows of x_Ea * x_Eb (raw,
-      // uncentered; symmetric, grown in place). totSlab = Σ folds.
-      val foldSlab = Array.fill(nfolds)(
-        scala.collection.mutable.ArrayBuffer
-          .empty[scala.collection.mutable.ArrayBuffer[Double]])
-      val totSlab = scala.collection.mutable.ArrayBuffer
-        .empty[scala.collection.mutable.ArrayBuffer[Double]]
+      // uncentered; symmetric primitive rows). totSlab = Σ folds.
+      val foldSlab = Array.fill(nfolds)(Array.empty[Array[Double]])
+      var totSlab = Array.empty[Array[Double]]
 
-      def slabExtend(newCols: Seq[Int]): Unit = {
-        if (newCols.isEmpty) return
-        require(eIdx.size + newCols.size <= SgdNet.maxGramP,
-          s"the union ever-candidate set would grow to " +
-            s"${eIdx.size + newCols.size} > maxGramP = ${SgdNet.maxGramP} " +
-            "columns: the nfolds x |E|^2 slab no longer fits the " +
-            "driver budget. Use dfmax/pmax to bound the path, a larger " +
-            "lambda floor, or raise graft.ml.SgdNet.maxGramP.")
+      def slabExtend(nn: Array[Int]): Unit = {
+        if (nn.isEmpty) return
+        requireEFits(eIdx.size + nn.length, "the nfolds x |E|^2 slab")
         val oldE = eIdx.toArray
-        val nn = newCols.toArray
         val eAfter = oldE ++ nn
         val bc = sc.broadcast((nn, eAfter))
         val block = nn.length * eAfter.length
@@ -1218,26 +1295,18 @@ object LargeP {
           }, depth = 2)
         passes += 1
         bc.destroy()
+        val mE = eAfter.length
         for (f <- 0 until nfolds) {
           val off = f * block
-          for (bi <- oldE.indices; ai <- nn.indices)
-            foldSlab(f)(bi) += acc(off + ai * eAfter.length + bi)
-          for (ai <- nn.indices) {
-            val row = scala.collection.mutable.ArrayBuffer.empty[Double]
-            for (bi <- eAfter.indices)
-              row += acc(off + ai * eAfter.length + bi)
-            foldSlab(f) += row
-          }
+          foldSlab(f) = growSym(foldSlab(f), mE)((ai, bi) =>
+            acc(off + ai * mE + bi))
         }
-        for (bi <- oldE.indices; ai <- nn.indices)
-          totSlab(bi) += (0 until nfolds).map(f =>
-            foldSlab(f)(bi)(oldE.length + ai)).sum
-        for (ai <- nn.indices) {
-          val row = scala.collection.mutable.ArrayBuffer.empty[Double]
-          for (bi <- eAfter.indices)
-            row += (0 until nfolds).map(f =>
-              foldSlab(f)(oldE.length + ai)(bi)).sum
-          totSlab += row
+        val mOld = oldE.length
+        totSlab = growSym(totSlab, mE) { (ai, bi) =>
+          var t = 0.0
+          var f = 0
+          while (f < nfolds) { t += foldSlab(f)(mOld + ai)(bi); f += 1 }
+          t
         }
         nn.foreach { j => posOf(j) = eIdx.size; eIdx += j }
       }
@@ -1303,8 +1372,14 @@ object LargeP {
         val L = lambdas.length
         // per-model path state
         val beta = Array.fill(M)(new Array[Double](p)) // standardized
-        val cand = Array.fill(M)(
-          scala.collection.mutable.LinkedHashSet.empty[Int])
+        // per-model candidate sets (insertion order = CD order)
+        val inCand = Array.fill(M)(new Array[Boolean](p))
+        val cand = Array.fill(M)(scala.collection.mutable.ArrayBuffer.empty[Int])
+        def addCand(m: Int, j: Int,
+                    needE: scala.collection.mutable.LinkedHashSet[Int]): Unit = {
+          inCand(m)(j) = true; cand(m) += j
+          if (posOf(j) < 0) needE += j
+        }
         val grad = Array.tabulate(M)(m => cM(m).clone())
         val lamPrev0 = Array.tabulate(M)(m =>
           cM(m).map(math.abs).max / math.max(alpha, 1e-3))
@@ -1322,21 +1397,15 @@ object LargeP {
         while (l < L) {
           val lam = lambdas(l)
           val tol = math.max(prm.thresh * 1e-4, 1e-12) * math.max(lam, 1.0)
-          // strong rule per model; union E extension in ONE slab pass
+          // floored strong rule per model; union E extension in ONE
+          // slab pass
+          val bounds =
+            Array.tabulate(M)(m => screenBound(alpha, lam, lamPrev(m)))
           val needE = scala.collection.mutable.LinkedHashSet.empty[Int]
-          for (m <- 0 until M) {
-            val bound = alpha * (2.0 * lam - lamPrev(m))
-            var j = 0
-            while (j < p) {
-              if (!cand(m).contains(j) &&
-                  (beta(m)(j) != 0.0 || math.abs(grad(m)(j)) >= bound)) {
-                cand(m) += j
-                if (!posOf.contains(j)) needE += j
-              }
-              j += 1
-            }
-          }
-          slabExtend(needE.toSeq)
+          for (m <- 0 until M)
+            screened(grad(m), beta(m), inCand(m), bounds(m))
+              .foreach(j => addCand(m, j, needE))
+          slabExtend(needE.toArray)
           var settled = false
           while (!settled) {
             // solve every model over its candidate set (driver CD on
@@ -1347,7 +1416,7 @@ object LargeP {
               if (k > 0) {
                 val ctr = centerM(m); val mn = meanM(m); val scl = scaleM(m)
                 val nm = nM(m)
-                val pos = cIdx.map(posOf)
+                val pos = cIdx.map(posOf(_))
                 val aSub = Array.tabulate(k, k) { (x2, y2) =>
                   val i = cIdx(x2); val j = cIdx(y2)
                   (trainRaw(m, pos(x2), pos(y2)) / nm - ctr(i) * mn(j) -
@@ -1373,20 +1442,16 @@ object LargeP {
             for (m <- 0 until M) grad(m) = g(m)
             val needE2 = scala.collection.mutable.LinkedHashSet.empty[Int]
             var any = false
+            // exact KKT per model: a model with violators also takes its
+            // columns at or above its screening bound
             for (m <- 0 until M) {
-              var j = 0
-              while (j < p) {
-                if (!cand(m).contains(j) &&
-                    math.abs(grad(m)(j)) > lam * alpha + tol) {
-                  cand(m) += j
-                  if (!posOf.contains(j)) needE2 += j
-                  any = true
-                }
-                j += 1
+              val back = reentry(grad(m), inCand(m), lam * alpha + tol, bounds(m))
+              if (back.nonEmpty) {
+                any = true; back.foreach(j => addCand(m, j, needE2))
               }
             }
             if (!any) settled = true
-            else slabExtend(needE2.toSeq)
+            else slabExtend(needE2.toArray)
           }
           // record: full model through the DfGate; folds scored
           if (!dfGate.admit(j => beta(nfolds)(j) != 0.0)) { cutL = l; l = L }
@@ -1620,24 +1685,15 @@ object LargeP {
         yMeanM(nfolds) * yMeanM(nfolds), 0.0)
 
       // ---------------- union ever-candidate set E + per-fold RAW slabs
-      val posOf = scala.collection.mutable.HashMap.empty[Int, Int]
+      val posOf = Array.fill(p)(-1) // position in E, -1 outside
       val eIdx = scala.collection.mutable.ArrayBuffer.empty[Int]
-      val foldSlab = Array.fill(nfolds)(
-        scala.collection.mutable.ArrayBuffer
-          .empty[scala.collection.mutable.ArrayBuffer[Double]])
-      val totSlab = scala.collection.mutable.ArrayBuffer
-        .empty[scala.collection.mutable.ArrayBuffer[Double]]
+      val foldSlab = Array.fill(nfolds)(Array.empty[Array[Double]])
+      var totSlab = Array.empty[Array[Double]]
 
-      def slabExtend(newCols: Seq[Int]): Unit = {
-        if (newCols.isEmpty) return
-        require(eIdx.size + newCols.size <= SgdNet.maxGramP,
-          s"the union ever-candidate set would grow to " +
-            s"${eIdx.size + newCols.size} > maxGramP = ${SgdNet.maxGramP} " +
-            "columns: the nfolds x |E|^2 slab no longer fits the " +
-            "driver budget. Use dfmax/pmax to bound the path, a larger " +
-            "lambda floor, or raise graft.ml.SgdNet.maxGramP.")
+      def slabExtend(nn: Array[Int]): Unit = {
+        if (nn.isEmpty) return
+        requireEFits(eIdx.size + nn.length, "the nfolds x |E|^2 slab")
         val oldE = eIdx.toArray
-        val nn = newCols.toArray
         val eAfter = oldE ++ nn
         // slot lookups so each row finds its nnz inside each set in
         // O(nnz) — broadcast int arrays, -1 = not a member
@@ -1690,26 +1746,18 @@ object LargeP {
           }, depth = 2)
         passes += 1
         bc.destroy()
+        val mE = eAfter.length
         for (f <- 0 until nfolds) {
           val off = f * block
-          for (bi <- oldE.indices; ai <- nn.indices)
-            foldSlab(f)(bi) += acc(off + ai * eAfter.length + bi)
-          for (ai <- nn.indices) {
-            val row = scala.collection.mutable.ArrayBuffer.empty[Double]
-            for (bi <- eAfter.indices)
-              row += acc(off + ai * eAfter.length + bi)
-            foldSlab(f) += row
-          }
+          foldSlab(f) = growSym(foldSlab(f), mE)((ai, bi) =>
+            acc(off + ai * mE + bi))
         }
-        for (bi <- oldE.indices; ai <- nn.indices)
-          totSlab(bi) += (0 until nfolds).map(f =>
-            foldSlab(f)(bi)(oldE.length + ai)).sum
-        for (ai <- nn.indices) {
-          val row = scala.collection.mutable.ArrayBuffer.empty[Double]
-          for (bi <- eAfter.indices)
-            row += (0 until nfolds).map(f =>
-              foldSlab(f)(oldE.length + ai)(bi)).sum
-          totSlab += row
+        val mOld = oldE.length
+        totSlab = growSym(totSlab, mE) { (ai, bi) =>
+          var t = 0.0
+          var f = 0
+          while (f < nfolds) { t += foldSlab(f)(mOld + ai)(bi); f += 1 }
+          t
         }
         nn.foreach { j => posOf(j) = eIdx.size; eIdx += j }
       }
@@ -1796,8 +1844,14 @@ object LargeP {
             minRatio, null)
         val L = lambdas.length
         val beta = Array.fill(M)(new Array[Double](p))
-        val cand = Array.fill(M)(
-          scala.collection.mutable.LinkedHashSet.empty[Int])
+        // per-model candidate sets (insertion order = CD order)
+        val inCand = Array.fill(M)(new Array[Boolean](p))
+        val cand = Array.fill(M)(scala.collection.mutable.ArrayBuffer.empty[Int])
+        def addCand(m: Int, j: Int,
+                    needE: scala.collection.mutable.LinkedHashSet[Int]): Unit = {
+          inCand(m)(j) = true; cand(m) += j
+          if (posOf(j) < 0) needE += j
+        }
         val grad = Array.tabulate(M)(m => cM(m).clone())
         val lamPrev0 = Array.tabulate(M)(m =>
           cM(m).map(math.abs).max / math.max(alpha, 1e-3))
@@ -1815,20 +1869,14 @@ object LargeP {
         while (l < L) {
           val lam = lambdas(l)
           val tol = math.max(prm.thresh * 1e-4, 1e-12) * math.max(lam, 1.0)
+          // floored strong rule per model (cvGaussian)
+          val bounds =
+            Array.tabulate(M)(m => screenBound(alpha, lam, lamPrev(m)))
           val needE = scala.collection.mutable.LinkedHashSet.empty[Int]
-          for (m <- 0 until M) {
-            val bound = alpha * (2.0 * lam - lamPrev(m))
-            var j = 0
-            while (j < p) {
-              if (!cand(m).contains(j) &&
-                  (beta(m)(j) != 0.0 || math.abs(grad(m)(j)) >= bound)) {
-                cand(m) += j
-                if (!posOf.contains(j)) needE += j
-              }
-              j += 1
-            }
-          }
-          slabExtend(needE.toSeq)
+          for (m <- 0 until M)
+            screened(grad(m), beta(m), inCand(m), bounds(m))
+              .foreach(j => addCand(m, j, needE))
+          slabExtend(needE.toArray)
           var settled = false
           while (!settled) {
             for (m <- 0 until M) {
@@ -1837,7 +1885,7 @@ object LargeP {
               if (k > 0) {
                 val ctr = centerM(m); val mn = meanM(m); val scl = scaleM(m)
                 val nm = nM(m)
-                val pos = cIdx.map(posOf)
+                val pos = cIdx.map(posOf(_))
                 val aSub = Array.tabulate(k, k) { (x2, y2) =>
                   val i = cIdx(x2); val j = cIdx(y2)
                   (trainRaw(m, pos(x2), pos(y2)) / nm - ctr(i) * mn(j) -
@@ -1862,20 +1910,16 @@ object LargeP {
             for (m <- 0 until M) grad(m) = g(m)
             val needE2 = scala.collection.mutable.LinkedHashSet.empty[Int]
             var any = false
+            // exact KKT per model: a model with violators also takes its
+            // columns at or above its screening bound
             for (m <- 0 until M) {
-              var j = 0
-              while (j < p) {
-                if (!cand(m).contains(j) &&
-                    math.abs(grad(m)(j)) > lam * alpha + tol) {
-                  cand(m) += j
-                  if (!posOf.contains(j)) needE2 += j
-                  any = true
-                }
-                j += 1
+              val back = reentry(grad(m), inCand(m), lam * alpha + tol, bounds(m))
+              if (back.nonEmpty) {
+                any = true; back.foreach(j => addCand(m, j, needE2))
               }
             }
             if (!any) settled = true
-            else slabExtend(needE2.toSeq)
+            else slabExtend(needE2.toArray)
           }
           if (!dfGate.admit(j => beta(nfolds)(j) != 0.0)) { cutL = l; l = L }
           else {
@@ -2143,17 +2187,13 @@ object LargeP {
 
       // --------------- union ever-candidate set E (indices only — the
       // weighted moment blocks are rebuilt per Newton step)
-      val posOf = scala.collection.mutable.HashMap.empty[Int, Int]
+      val inE = new Array[Boolean](p)
       val eIdx = scala.collection.mutable.ArrayBuffer.empty[Int]
-      def extendIdx(newCols: Seq[Int]): Unit = {
+      def extendIdx(newCols: Array[Int]): Unit = {
         if (newCols.isEmpty) return
-        require(eIdx.size + newCols.size <= SgdNet.maxGramP,
-          s"the union ever-candidate set would grow to " +
-            s"${eIdx.size + newCols.size} > maxGramP = ${SgdNet.maxGramP} " +
-            "columns: the per-model O(|E|^2) weighted moment blocks no " +
-            "longer fit the driver budget. Use dfmax/pmax to bound the " +
-            "path, a larger lambda floor, or raise graft.ml.SgdNet.maxGramP.")
-        newCols.foreach { j => posOf(j) = eIdx.size; eIdx += j }
+        requireEFits(eIdx.size + newCols.size,
+          "the per-model O(|E|^2) weighted moment blocks")
+        newCols.foreach { j => inE(j) = true; eIdx += j }
       }
 
       def linkWZ(eta: Double, y: Double): (Double, Double) =
@@ -2378,18 +2418,13 @@ object LargeP {
         var l = 0
         while (l < L) {
           val lam = lambdas(l)
+          // floored strong rule per model, one union E
+          val bounds =
+            Array.tabulate(M)(m => screenBound(alpha, lam, lamPrev(m)))
           val needE = scala.collection.mutable.LinkedHashSet.empty[Int]
-          for (m <- 0 until M) {
-            val bound = alpha * (2.0 * lam - lamPrev(m))
-            var j = 0
-            while (j < p) {
-              if (!posOf.contains(j) &&
-                  (beta(m)(j) != 0.0 || math.abs(grad(m)(j)) >= bound))
-                needE += j
-              j += 1
-            }
-          }
-          extendIdx(needE.toSeq)
+          for (m <- 0 until M)
+            needE ++= screened(grad(m), beta(m), inE, bounds(m))
+          extendIdx(needE.toArray)
           val tol = math.max(newtonTol, 1e-12) * math.max(lam, 1.0)
           val active = Array.fill(M)(true)
           var iter = 0
@@ -2423,10 +2458,7 @@ object LargeP {
                   val ww = g(base2 + 1) * ninv
                   if (prm.intercept) ra0(m) = zw / ww
                 } else {
-                  val aM = Array.tabulate(mE, mE) { (x2, y2) =>
-                    val (hi, lo) = if (x2 >= y2) (x2, y2) else (y2, x2)
-                    g(hi * (hi + 1) / 2 + lo) * ninv
-                  }
+                  val aM = unpackSym(g, mE, ninv)
                   val cV = Array.tabulate(mE)(x2 => g(base2 + x2) * ninv)
                   val xwV = Array.tabulate(mE)(x2 => g(base2 + mE + x2) * ninv)
                   val zw = g(base2 + 2 * mE) * ninv
@@ -2445,20 +2477,13 @@ object LargeP {
               val (kkts, wgs) = passFusedAll(eArr, active, a0,
                 beta.map(actOf), ra0, rbeta.map(actOf))
               val viol = scala.collection.mutable.LinkedHashSet.empty[Int]
-              for (m <- 0 until M if active(m)) {
-                var j = 0
-                while (j < p) {
-                  if (!posOf.contains(j) &&
-                      math.abs(kkts(m)(j)) > lam * alpha + tol)
-                    viol += j
-                  j += 1
-                }
-              }
+              for (m <- 0 until M if active(m))
+                viol ++= reentry(kkts(m), inE, lam * alpha + tol, bounds(m))
               if (viol.isEmpty) {
                 a0N = ra0; betaN = rbeta; kktN = kkts; wgN = wgs
                 stepDone = true
               } else {
-                extendIdx(viol.toSeq)
+                extendIdx(viol.toArray)
                 // rebuild the frozen moments over the grown E for the
                 // active models and re-solve the step
                 val ws = passWAll(eIdx.toArray, active, a0, beta.map(actOf))
@@ -2833,12 +2858,20 @@ object LargeP {
       val ninv = 1.0 / n
       val swxRaw = Array.tabulate(m)(i => raw(off + base2 + m + i))
       val swxzRaw = Array.tabulate(m)(i => raw(off + base2 + i))
-      val aM = Array.tabulate(m, m) { (x2, y2) =>
-        val (hi, lo) = if (x2 >= y2) (x2, y2) else (y2, x2)
-        val i = eArr(x2); val j = eArr(y2)
-        (raw(off + hi * (hi + 1) / 2 + lo) - center(i) * swxRaw(y2) -
-          center(j) * swxRaw(x2) + center(i) * center(j) * sw) *
-          invScale(i) * invScale(j) * ninv
+      val aM = Array.ofDim[Double](m, m)
+      var x2 = 0
+      while (x2 < m) {
+        val i = eArr(x2); val row = aM(x2)
+        var y2 = 0
+        while (y2 < m) {
+          val j = eArr(y2)
+          val hi = math.max(x2, y2); val lo = math.min(x2, y2)
+          row(y2) = (raw(off + hi * (hi + 1) / 2 + lo) - center(i) * swxRaw(y2) -
+            center(j) * swxRaw(x2) + center(i) * center(j) * sw) *
+            invScale(i) * invScale(j) * ninv
+          y2 += 1
+        }
+        x2 += 1
       }
       val cM = Array.tabulate(m) { x2 =>
         val i = eArr(x2)
@@ -2988,17 +3021,12 @@ object LargeP {
     }
 
     // ------------------------------------- ever-candidate set E
-    val posOf = scala.collection.mutable.HashMap.empty[Int, Int]
+    val inE = new Array[Boolean](p)
     val eIdx = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def extendIdx(newCols: Seq[Int]): Unit = {
+    def extendIdx(newCols: Array[Int]): Unit = {
       if (newCols.isEmpty) return
-      require(eIdx.size + newCols.size <= SgdNet.maxGramP,
-        s"the ever-candidate set would grow to " +
-          s"${eIdx.size + newCols.size} > maxGramP = ${SgdNet.maxGramP} " +
-          "columns: the active block no longer fits the O(|E|^2) " +
-          "driver budget. Use dfmax/pmax to bound the path, a larger " +
-          "lambda floor, or raise graft.ml.SgdNet.maxGramP.")
-      newCols.foreach { j => posOf(j) = eIdx.size; eIdx += j }
+      requireEFits(eIdx.size + newCols.size, "the O(|E|^2) active block")
+      newCols.foreach { j => inE(j) = true; eIdx += j }
     }
 
     // ----------------------------------------------------- path loop
@@ -3029,9 +3057,10 @@ object LargeP {
     var l = 0
     while (l < L) {
       val lam = lambdas(l)
-      val bound = params.alpha * (2.0 * lam - lamPrev)
-      extendIdx((0 until p).filter(j => !posOf.contains(j) &&
-        (beta(j) != 0.0 || math.abs(grad(j)) >= bound)))
+      // floored strong-rule start; each KKT re-entry below takes the
+      // violators and every column at or above the same bound
+      val bound = screenBound(params.alpha, lam, lamPrev)
+      extendIdx(screened(grad, beta, inE, bound))
       val tol = math.max(newtonTol, 1e-12) * math.max(lam, 1.0)
       var iter = 0
       var done = false
@@ -3065,13 +3094,12 @@ object LargeP {
           while (x2 < m) { bFull(eArr(x2)) = rbeta(x2); x2 += 1 }
           val packN = actPack(ra0, bFull)
           val (kkt, wgN) = passFused(eArr, packCur, packN)
-          val violators = (0 until p).filter(j => !posOf.contains(j) &&
-            math.abs(kkt(j)) > lam * params.alpha + tol)
-          if (violators.isEmpty) {
+          val back = reentry(kkt, inE, lam * params.alpha + tol, bound)
+          if (back.isEmpty) {
             a0n = ra0; betaN = bFull; kktN = kkt; wgNext = wgN
             stepDone = true
           } else {
-            extendIdx(violators)
+            extendIdx(back)
             wg = passW(eIdx.toArray, packCur); wgESize = eIdx.size
           }
         }
@@ -3470,17 +3498,12 @@ object LargeP {
     // ------------------------------------- ever-candidate set E (indices
     // only: the weighted Gram block is rebuilt per Newton step, so E
     // carries no slab state — unlike the gaussian route's gramE)
-    val posOf = scala.collection.mutable.HashMap.empty[Int, Int]
+    val inE = new Array[Boolean](p)
     val eIdx = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def extendIdx(newCols: Seq[Int]): Unit = {
+    def extendIdx(newCols: Array[Int]): Unit = {
       if (newCols.isEmpty) return
-      require(eIdx.size + newCols.size <= SgdNet.maxGramP,
-        s"the ever-candidate set would grow to " +
-          s"${eIdx.size + newCols.size} > maxGramP = ${SgdNet.maxGramP} " +
-          "columns: the active block no longer fits the O(|E|^2) " +
-          "driver budget. Use dfmax/pmax to bound the path, a larger " +
-          "lambda floor, or raise graft.ml.SgdNet.maxGramP.")
-      newCols.foreach { j => posOf(j) = eIdx.size; eIdx += j }
+      requireEFits(eIdx.size + newCols.size, "the O(|E|^2) active block")
+      newCols.foreach { j => inE(j) = true; eIdx += j }
     }
 
     // ------------------------------------- lambda path + gradient seed
@@ -3518,9 +3541,10 @@ object LargeP {
     }
     while (l < L) {
       val lam = lambdas(l)
-      val bound = params.alpha * (2.0 * lam - lamPrev)
-      extendIdx((0 until p).filter(j => !posOf.contains(j) &&
-        (beta(j) != 0.0 || math.abs(grad(j)) >= bound)))
+      // floored strong-rule start; each KKT re-entry below takes the
+      // violators and every column at or above the same bound
+      val bound = screenBound(params.alpha, lam, lamPrev)
+      extendIdx(screened(grad, beta, inE, bound))
       val tol = math.max(newtonTol, 1e-12) * math.max(lam, 1.0)
       var iter = 0
       var done = false
@@ -3545,10 +3569,7 @@ object LargeP {
               val ww = wg(base2 + 1) * ninv
               (if (params.intercept) zw / ww else a0, Array.empty[Double])
             } else {
-              val aM = Array.tabulate(m, m) { (x2, y2) =>
-                val (hi, lo) = if (x2 >= y2) (x2, y2) else (y2, x2)
-                wg(hi * (hi + 1) / 2 + lo) * ninv
-              }
+              val aM = unpackSym(wg, m, ninv)
               val cM = Array.tabulate(m)(x2 => wg(base2 + x2) * ninv)
               val xwM = Array.tabulate(m)(x2 => wg(base2 + m + x2) * ninv)
               val zw = wg(base2 + 2 * m) * ninv
@@ -3564,13 +3585,12 @@ object LargeP {
           while (x2 < m) { bFull(eArr(x2)) = rbeta(x2); x2 += 1 }
           val (ni, nv) = actOf(bFull)
           val (kkt, wgN) = passFused(eArr, a0, wi, wv, ra0, ni, nv)
-          val violators = (0 until p).filter(j => !posOf.contains(j) &&
-            math.abs(kkt(j)) > lam * params.alpha + tol)
-          if (violators.isEmpty) {
+          val back = reentry(kkt, inE, lam * params.alpha + tol, bound)
+          if (back.isEmpty) {
             a0n = ra0; betaN = bFull; kktN = kkt; wgNext = wgN
             stepDone = true
           } else {
-            extendIdx(violators)
+            extendIdx(back)
             // the fused pass's E-moments are stale (E grew): rebuild the
             // frozen-weight moments over the grown E and re-solve
             wg = passW(eIdx.toArray, a0, wi, wv); wgESize = eIdx.size

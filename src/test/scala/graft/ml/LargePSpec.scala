@@ -865,4 +865,90 @@ class LargePSpec extends SparkSpec {
         weightCol = "w0"), 1e-9, "binom-zero-weight-drop")
     ()
   }
+
+  // ------------------------------------- wide lambda gaps (floored rule)
+
+  test("wide lambda gaps and a lambda = 0 end == the full-Gram paths") {
+    // λ_l < λ_{l-1}/2 makes the bare strong rule negative; the floored
+    // bound must still give the exact full-Gram answer on every route
+    val csr = data.select(col("y") +: names.map(col): _*)
+      .withColumn("sidx", array((0 until p).map(lit): _*))
+      .withColumn("svals", array(names.map(col): _*))
+    val lmax = SgdNet.fit(data, names, "y",
+      SgdNetParams(alpha = 1.0, nlambda = 3, thresh = 1e-9)).lambda(0)
+    for (lams <- Seq(Array(1.0, 0.1), Array(1.0, 0.1, 0.0))) {
+      val prm = SgdNetParams(alpha = 1.0, lambda = lams.map(_ * lmax),
+        thresh = 1e-9, maxit = 100000)
+      val tag = s"gaussian ${lams.mkString(",")}"
+      assertSame(LargeP.fitGaussian(data, names, "y", prm),
+        SgdNet.fit(data, names, "y", prm), 1e-7, s"dense $tag")
+      assertSame(LargeP.fitSparseGaussian(csr, "sidx", "svals", p, "y", prm),
+        SgdNet.fitSparse(csr, "sidx", "svals", p, "y", prm), 1e-7,
+        s"sparse $tag")
+    }
+    val gcsr = glmData.select(col("yb") +: col("yp") +: names.map(col): _*)
+      .withColumn("sidx", array((0 until p).map(lit): _*))
+      .withColumn("svals", array(names.map(col): _*))
+    for (fam <- Seq("binomial", "poisson")) {
+      val y = if (fam == "binomial") "yb" else "yp"
+      val l0 = SgdNet.fit(glmData, names, y, SgdNetParams(family = fam,
+        alpha = 1.0, nlambda = 3, thresh = 1e-9)).lambda(0)
+      for (lams <- Seq(Array(1.0, 0.1), Array(1.0, 0.1, 0.0))) {
+        val prm = SgdNetParams(family = fam, alpha = 1.0,
+          lambda = lams.map(_ * l0), thresh = 1e-9, maxit = 100000)
+        val tag = s"$fam ${lams.mkString(",")}"
+        val full = SgdNet.fitSparse(gcsr, "sidx", "svals", p, y, prm)
+        assertSame(
+          if (fam == "binomial")
+            LargeP.fitSparseBinomial(gcsr, "sidx", "svals", p, y, prm)
+          else LargeP.fitSparsePoisson(gcsr, "sidx", "svals", p, y, prm),
+          full, 1e-6, s"sparse $tag")
+        if (fam == "binomial")
+          assertSame(LargeP.fitBinomial(glmData, names, y, prm),
+            SgdNet.fit(glmData, names, y, prm), 1e-6, s"dense $tag")
+      }
+    }
+  }
+
+  /** Hashed bag-of-words rows over `dim` columns: planted columns 0, 1
+    * and 2 (value 1, each in about half the rows) plus `noise` distinct
+    * random columns per row (value 1–2); `y` linear and `yb` logistic
+    * in the planted columns. Indices sorted and unique per row. */
+  private def hashedRows(n: Int, dim: Int, noise: Int, seed: Int) = {
+    val rnd = new scala.util.Random(seed)
+    (1 to n).map { i =>
+      val planted = (0 until 3).filter(_ => rnd.nextBoolean())
+      val extra = scala.collection.mutable.TreeMap.empty[Int, Double]
+      while (extra.size < noise)
+        extra(3 + rnd.nextInt(dim - 3)) = 1.0 + rnd.nextDouble()
+      val x = (j: Int) => if (planted.contains(j)) 1.0 else 0.0
+      val y = 2.0 * x(0) - 1.5 * x(1) + x(2) + 0.5 * rnd.nextGaussian()
+      val eta = 2.0 * x(0) - 2.0 * x(1) + 1.5 * x(2) - 0.75
+      val yb = if (rnd.nextDouble() < 1.0 / (1.0 + math.exp(-eta))) 1.0 else 0.0
+      (i.toLong, planted ++ extra.keys, planted.map(_ => 1.0) ++ extra.values,
+        y, yb)
+    }.toDF("rid", "sidx", "svals", "y", "yb")
+  }
+
+  test("a 2-lambda ratio-0.1 path keeps E far below p") {
+    // the bare rule α(2λ − λ_prev) is negative here and put all p
+    // columns in E; the floor keeps E near the solution's support
+    val dim = 1024
+    val docs = hashedRows(2000, dim, 10, 71)
+    val cap = new LargeP.GramCapture
+    val prm = SgdNetParams(alpha = 1.0, nlambda = 2, lambdaMinRatio = 0.1)
+    val m = LargeP.fitSparseGaussian(docs, "sidx", "svals", dim, "y", prm, cap)
+    assert(cap.eIdx.length < dim / 4, s"|E| = ${cap.eIdx.length} of $dim")
+    assert((0 until 3).forall(j => m.beta(1)(0)(j) != 0.0), "planted support")
+  }
+
+  test("a 2-lambda ratio-0.1 sparse binomial fit at p = 2^17 stays under maxGramP") {
+    val dim = 1 << 17
+    val docs = hashedRows(4000, dim, 10, 73)
+    val m = LargeP.fitSparseBinomial(docs, "sidx", "svals", dim, "yb",
+      SgdNetParams(family = "binomial", alpha = 1.0, nlambda = 2,
+        lambdaMinRatio = 0.1))
+    val nz = (0 until dim).count(m.beta(1)(0)(_) != 0.0)
+    assert(nz >= 3 && nz < SgdNet.maxGramP / 100, s"nonzeros at the last lambda: $nz")
+  }
 }
