@@ -520,17 +520,21 @@ object CvSgdNet {
   // -------------------------------- binomial / poisson, fold-tiled IRLS CV
 
   /** The per-fold paths of one IRLS CV at one alpha: the λ grid, every
-    * model's ORIGINAL-scale coefficients ([F][L] and [F][L][p]; model
-    * `nfolds` is the full data) and the Newton passes spent. */
-  private final case class FoldPaths(lambdas: Array[Double],
-                                     a0: Array[Array[Double]],
-                                     beta: Array[Array[Array[Double]]],
-                                     passes: Int)
+    * model's ORIGINAL-scale intercepts and nonzero coefficients ([F][L];
+    * model `nfolds` is the full data), p, and the passes the full
+    * model's `npasses` reports. */
+  private[ml] final case class FoldPaths(lambdas: Array[Double],
+                                         a0: Array[Array[Double]],
+                                         coefs: Array[Array[SgdNet.Coefs]],
+                                         p: Int, passes: Int) {
+    /** Model f's dense coefficients at path point l. */
+    def beta(f: Int, l: Int): Array[Double] = coefs(f)(l).dense(p)
+  }
 
   /** Rows of a dense IRLS CV, given the response column: the
     * `SgdNet.glmRows` rows plus the fold (content hash of features and
     * label unless `foldCol` is given). */
-  private def denseIrlsRows(df: DataFrame, featureCols: Seq[String],
+  private[ml] def denseIrlsRows(df: DataFrame, featureCols: Seq[String],
                             labelCol: String, nfolds: Int, foldCol: Column,
                             weightCol: String, offsetCol: String): Column => SgdNet.IrlsRows = {
     val fold = foldExpr(foldCol, (featureCols :+ labelCol).map(col), nfolds)
@@ -551,7 +555,7 @@ object CvSgdNet {
   /** Builds the rows and the `SgdNet.IrlsSetup` of an IRLS CV (one
     * moments pass for every fold model and the full-data model), runs
     * `body` on them with the class labels, and releases the rows. */
-  private def withIrlsSetup[T](df: DataFrame, labelCol: String,
+  private[ml] def withIrlsSetup[T](df: DataFrame, labelCol: String,
                                params: SgdNetParams, nfolds: Int,
                                weighted: Boolean, hasOffset: Boolean,
                                rowsOf: Column => SgdNet.IrlsRows)(
@@ -575,23 +579,26 @@ object CvSgdNet {
     * data, penalty-factor zeros included — and one moments pass serves
     * every alpha. The full model finishes with `IrlsSetup.model`'s
     * deviance pass; held-out scores take one more pass
-    * ([[heldOutScores]]). Driver state: (k+1) × p². */
-  private def cvIrls(df: DataFrame, labelCol: String, params: SgdNetParams,
-                     nfolds: Int, alphas: Seq[Double], measure: String,
-                     weighted: Boolean, hasOffset: Boolean,
-                     featureNames: Array[String],
-                     rowsOf: Column => SgdNet.IrlsRows): Seq[CvPath] =
+    * ([[heldOutScores]]). `paths` runs the per-alpha fold paths:
+    * [[foldPaths]] here, with (k+1) × p² driver state, or
+    * `LargeP.screenedIrls` at large p, with (k+1) × |E|². */
+  private[ml] def cvIrls(df: DataFrame, labelCol: String, params: SgdNetParams,
+                         nfolds: Int, alphas: Seq[Double], measure: String,
+                         weighted: Boolean, hasOffset: Boolean,
+                         featureNames: Array[String],
+                         rowsOf: Column => SgdNet.IrlsRows,
+                         paths: (SgdNet.IrlsSetup, SgdNetParams) => FoldPaths = foldPaths): Seq[CvPath] =
     withIrlsSetup(df, labelCol, params, nfolds, weighted, hasOffset, rowsOf) {
       (s, classes) =>
         alphas.map { a =>
           val pa = params.copy(alpha = a)
-          val fp = foldPaths(s, pa)
+          val fp = paths(s, pa)
           val L = fp.lambdas.length
           val full = s.model(featureNames, labelCol, classes, pa, fp.lambdas,
             Array.tabulate(L)(l => Array(fp.a0(nfolds)(l))),
-            Array.tabulate(L)(l => Array(fp.beta(nfolds)(l))), fp.passes)
+            Array.tabulate(L)(l => Array(fp.beta(nfolds, l))), fp.passes)
           summarize(a, fp.lambdas,
-            heldOutScores(df.sparkSession, s, measure, fp.a0, fp.beta), full)
+            heldOutScores(df.sparkSession, s, measure, fp.a0, fp.coefs), full)
         }
     }
 
@@ -615,7 +622,7 @@ object CvSgdNet {
     val beta = Array.fill(F)(new Array[Double](p)) // standardized scale
     val a0 = s.a0Null.clone()
     val a0Out = Array.ofDim[Double](F, L)
-    val betaOut = Array.ofDim[Double](F, L, p)
+    val betaOut = Array.ofDim[SgdNet.Coefs](F, L)
     val newtonTol = math.max(params.thresh * 1e-4, 1e-10)
     val tol = math.max(params.thresh * 1e-2, 1e-8)
     val lastGram = new Array[SgdNet.WGram](F)
@@ -648,22 +655,24 @@ object CvSgdNet {
       }
       for (f <- 0 until F) {
         val (b, a) = s.original(f, beta(f), a0(f))
-        betaOut(f)(l) = b; a0Out(f)(l) = a
+        betaOut(f)(l) = SgdNet.Coefs.of(b); a0Out(f)(l) = a
       }
     }
-    FoldPaths(lambdas, a0Out, betaOut, passes)
+    FoldPaths(lambdas, a0Out, betaOut, p, passes)
   }
 
   /** Held-out scores of per-fold coefficient sets: a row of fold f is
     * scored at η = a0(f)(c) + off + x·β(f)(c) for every column c, by the
     * model trained without it, the row's own offset included (glmnet
-    * newoffset). One pass for Σv·err/Σv with raw weights, or the rank
-    * AUC per (fold, column) through [[aucPerGroup]] (v-weighted when
-    * weighted; AUC is invariant to the monotone link, so η ranks
-    * directly and never saturates). Returns [nfolds][columns]. */
-  private def heldOutScores(spark: SparkSession, s: SgdNet.IrlsSetup,
-                            measure: String, a0: Array[Array[Double]],
-                            beta: Array[Array[Array[Double]]]): Array[Array[Double]] = {
+    * newoffset). Only the nonzero coefficients are broadcast and read,
+    * so a row costs O(columns·|active|). One pass for Σv·err/Σv with
+    * raw weights, or the rank AUC per (fold, column) through
+    * [[aucPerGroup]] (v-weighted when weighted; AUC is invariant to the
+    * monotone link, so η ranks directly and never saturates). Returns
+    * [nfolds][columns]. */
+  private[ml] def heldOutScores(spark: SparkSession, s: SgdNet.IrlsSetup,
+                                measure: String, a0: Array[Array[Double]],
+                                beta: Array[Array[SgdNet.Coefs]]): Array[Array[Double]] = {
     val nfolds = s.nfolds
     val C = a0(0).length
     val sc = spark.sparkContext
@@ -4306,14 +4315,15 @@ object CvSgdNet {
         val fp = foldPaths(s, params)
         val lambdas = fp.lambdas
         val L = lambdas.length
+        val penB = Array.tabulate(F, L)(fp.beta)
         val sc = df.sparkSession.sparkContext
 
         // --------- stage 2: per-(fold, lambda) unpenalized active-set
         // refits, tiled over both folds and lambdas (original scale)
         val activeSet = Array.tabulate(F, L)((f, l) =>
-          (0 until p).filter(j => fp.beta(f)(l)(j) != 0.0).toArray)
+          fp.coefs(f)(l).idx)
         val a0R = Array.tabulate(F, L)((f, l) => fp.a0(f)(l))
-        val bFull = Array.tabulate(F, L)((f, l) => fp.beta(f)(l).clone())
+        val bFull = Array.tabulate(F, L)((f, l) => penB(f)(l).clone())
         val doneR = Array.ofDim[Boolean](F, L)
         for (f <- 0 until F; l <- 0 until L if activeSet(f)(l).isEmpty) {
           a0R(f)(l) = s.a0Null(f)
@@ -4367,20 +4377,20 @@ object CvSgdNet {
         }
         def blendBeta(f: Int, c: Int): Array[Double] = {
           val gm = gArr(c / L); val l = c % L
-          Array.tabulate(p)(j => gm * fp.beta(f)(l)(j) + (1 - gm) * bFull(f)(l)(j))
+          Array.tabulate(p)(j => gm * penB(f)(l)(j) + (1 - gm) * bFull(f)(l)(j))
         }
         val full = nfolds
         // one pass: deviances of every (gamma, lambda) blend + the null
         val devs = s.rows.deviance(s.fam,
-          Array.tabulate(G * L)(c => Array(blendA0(full, c))) :+ Array(s.a0Null(full)),
-          Array.tabulate(G * L)(c => Array(blendBeta(full, c))) :+
-            Array(new Array[Double](p)), s.norm(full))
+          Array.tabulate(G * L)(blendA0(full, _)) :+ s.a0Null(full),
+          Array.tabulate(G * L)(c => SgdNet.Coefs.of(blendBeta(full, c))) :+
+            SgdNet.Coefs(Array.emptyIntArray, Array.emptyDoubleArray), s.norm(full))
         val nulldev = devs(G * L)
 
         // ------ stage 3: held-out scores for every (gamma, fold, lambda)
         val scores = heldOutScores(df.sparkSession, s, measure,
           Array.tabulate(nfolds, G * L)(blendA0),
-          Array.tabulate(nfolds, G * L)(blendBeta))
+          Array.tabulate(nfolds, G * L)((f, c) => SgdNet.Coefs.of(blendBeta(f, c))))
         passes += 2
         val paths = (0 until G).map { g =>
           val model = new SgdNetModel(params.family, names, Array(labelCol),
@@ -4406,7 +4416,7 @@ object CvSgdNet {
         val fullPenalized = new SgdNetModel(params.family, names,
           Array(labelCol), classes, lambdas,
           Array.tabulate(L)(l => Array(fp.a0(full)(l))),
-          Array.tabulate(L)(l => Array(fp.beta(full)(l))), nulldev,
+          Array.tabulate(L)(l => Array(penB(full)(l))), nulldev,
           Array.tabulate(L)(l =>
             if (nulldev <= 0) 0.0
             else if (g1 >= 0) SgdNetModel.devRatio(devs(g1 * L + l), nulldev)

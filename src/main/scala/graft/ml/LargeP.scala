@@ -1,6 +1,5 @@
 package graft.ml
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
@@ -33,14 +32,21 @@ import org.apache.spark.storage.StorageLevel
   * Cost model per path point: the gaussian routes pay one gradient
   * pass (plus a Gram-extension pass whenever E grows — the raw
   * |new|×|E| cross moments, standardized driver-side with the
-  * [[SufficientStats.standardize]] formula); the IRLS routes pay one
-  * fused pass per Newton step (KKT vector plus the next step's
-  * weighted moments over E) and a moments pass whenever E grows.
-  * Task results and driver state are O(p + |E|²), never O(p²), and a
-  * path point's E stays near its active set however wide the λ gap.
-  * The input rows are persisted MEMORY_AND_DISK for the pass loop and
-  * unpersisted on return. |E| is held to `SgdNet.maxGramP`;
-  * `dfmax`/`pmax` bound it tighter and stop the path early.
+  * [[SufficientStats.standardize]] formula). The binomial/poisson
+  * routes (fits, CSR fits and CV) are one loop, [[screenedIrls]], on
+  * `SgdNet`'s IRLS chassis: `SgdNet.IrlsSetup` runs one O(p)-per-fold
+  * moments pass, then each Newton round is one fused
+  * `IrlsRows.screened` pass (the KKT vector plus the next step's
+  * weighted moments over E) and each growth of E one moments pass; the
+  * deviance and held-out scoring passes read only the nonzero
+  * coefficients. Row kinds: dense `SgdNet.GlmRow` (O(|E|² + p) per row
+  * and model) and CSR `SgdNet.CsrRow` (O(nnz + k_E²), k_E the row's
+  * nonzeros inside E, centered driver-side). Task results and driver
+  * state are O(p + |E|²) per model, never O(p²), and a path point's E
+  * stays near its active set however wide the λ gap. The input rows
+  * are persisted MEMORY_AND_DISK for the pass loop and unpersisted on
+  * return. |E| is held to `SgdNet.maxGramP`; `dfmax`/`pmax` bound it
+  * tighter and stop the path early.
   *
   * Contract: alpha > 0 (ridge keeps every coordinate and the Gram IS
   * p×p), no penalty factors / box limits / sgdnetCompat /
@@ -92,25 +98,6 @@ object LargeP {
         s"${SgdNet.maxGramP} columns: $what no longer fits the driver " +
         "budget. Use dfmax/pmax to bound the path, a larger lambda " +
         "floor, or raise graft.ml.SgdNet.maxGramP.")
-
-  /** The m×m symmetric matrix of a packed lower triangle (row x2 at
-    * x2(x2+1)/2), every entry times `scale`. */
-  private def unpackSym(packed: Array[Double], m: Int,
-                        scale: Double): Array[Array[Double]] = {
-    val a = Array.ofDim[Double](m, m)
-    var x2 = 0
-    while (x2 < m) {
-      val base = x2 * (x2 + 1) / 2
-      var y2 = 0
-      while (y2 <= x2) {
-        val v = packed(base + y2) * scale
-        a(x2)(y2) = v; a(y2)(x2) = v
-        y2 += 1
-      }
-      x2 += 1
-    }
-    a
-  }
 
   /** Columns outside E that the path point starts with: the nonzero
     * warm-start coefficients and every |grad_j| ≥ `bound`. */
@@ -1069,27 +1056,8 @@ object LargeP {
                                params: SgdNetParams, gamma: Double,
                                weightCol: String,
                                offsetCol: String): SgdNet.RelaxedPath = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val p = featureCols.size
-    val yExpr =
-      if (params.family == "binomial") {
-        val positive = model.classLabels(1)
-        (col(labelCol).cast("string") === positive).cast("double")
-      } else col(labelCol).cast("double")
-    val wExpr = if (weightCol != null) col(weightCol).cast("double") else lit(1.0)
-    val oExpr = if (offsetCol != null) col(offsetCol).cast("double") else lit(0.0)
-    val rows0 = df.select((featureCols.map(c => col(c).cast("double")) :+
-        yExpr :+ wExpr :+ oExpr): _*)
-      .rdd.map { r =>
-        val x = new Array[Double](p)
-        var j = 0
-        while (j < p) { x(j) = r.getDouble(j); j += 1 }
-        (x, r.getDouble(p), r.getDouble(p + 1), r.getDouble(p + 2))
-      }
-    val rows = (if (weightCol == null) rows0
-      else rows0.filter { t =>
-        require(t._3 >= 0, "weights must be non-negative"); t._3 > 0
-      }).persist(StorageLevel.MEMORY_AND_DISK)
+    val rows = SgdNet.glmRows(df, featureCols, SgdNet.glmLabel(model, labelCol),
+      weightCol, offsetCol)
     try SgdNet.relaxedGlmRefit(rows, model, params, gamma,
       hasOffset = offsetCol != null)
     finally { rows.unpersist(blocking = false); () }
@@ -2027,30 +1995,19 @@ object LargeP {
 
   // -------------------------------------------------------------- GLM CV
 
-  /** Screened-Gram IRLS CROSS-VALIDATION for LARGE p (round 18 — the
-    * binomial cv.glmnet surface past the p² cliff): reproduces the
-    * shared-pass GLM CV semantics of `CvSgdNet.fit` (all nfolds+1
-    * models advance in LOCKSTEP — the full-data model rides as the
-    * virtual empty fold; per-training-fold standardization from
-    * moment subtraction; the lambda grid from the full-data
-    * standardized gradient; held-out deviance/mse/mae/class from one
-    * scoring pass, auc from the fold-partitioned rank chain; identical
-    * cvm/cvsd/lambda.min/lambda.1se arithmetic) while holding
-    * O(M·|E|²) driver state instead of the shared route's
-    * (nfolds+1)·p²/2 weighted Grams. Each Newton round is the
-    * [[fitBinomial]] fused discipline BATCHED across models: ONE pass
-    * computes every active model's full-p WLS KKT vector at its
-    * candidate point (frozen weights) AND its next-step weighted
-    * moments over the grow-only UNION candidate set E — violators
-    * re-enter E and the step re-solves, so each model's path equals
-    * its full-Gram shared-CV twin within the convergence tolerance
-    * (the same optimality slack the shared route's gram-carry has).
-    * Per-model a0/beta/grad is M·p driver state; the alpha grid
-    * shares the moment pass and E. Same contract surface as
-    * [[fitBinomial]] plus nfolds ≥ 2; measures
-    * deviance|mse|mae|class|auc (selection minimizes cvm for EVERY
-    * measure — the documented reference-parity which.min convention,
-    * auc included). */
+  /** Screened IRLS CROSS-VALIDATION for LARGE p (the binomial
+    * cv.glmnet surface past the p² cliff): `CvSgdNet.fit`'s fold-tiled
+    * IRLS CV (`CvSgdNet.cvIrls` — fold models and the full-data model
+    * advance in lockstep, per-train-fold standardization, the λ grid
+    * from the full data, held-out scores and the full model's deviance,
+    * identical cvm/cvsd/lambda.min/lambda.1se arithmetic) with the
+    * per-alpha paths from [[screenedIrls]]: O(M·|E|²) driver state over
+    * one union ever-candidate set instead of (nfolds+1)·p²/2 weighted
+    * Grams. Same contract surface as [[fitBinomial]] plus nfolds ≥ 2;
+    * measures deviance|mse|mae|class|auc (selection minimizes cvm for
+    * EVERY measure — the documented reference-parity which.min
+    * convention, auc included). Every train fold must hold both
+    * classes, and a `foldCol` value must lie in [0, nfolds). */
   def cvBinomial(df: DataFrame, featureCols: Seq[String], labelCol: String,
                  params: SgdNetParams = SgdNetParams(family = "binomial"),
                  nfolds: Int = 10,
@@ -2061,8 +2018,7 @@ object LargeP {
       s"LargeP.cvBinomial supports binomial, not ${params.family}")
     require(Set("deviance", "mse", "mae", "class", "auc").contains(measure),
       s"unknown type.measure '$measure' (want deviance|mse|mae|class|auc)")
-    cvGlmImpl(df, featureCols, labelCol, "binomial", params, nfolds,
-      alphas, measure, foldCol)
+    cvGlm(df, featureCols, labelCol, params, nfolds, alphas, measure, foldCol)
   }
 
   /** Poisson twin of [[cvBinomial]] (log link, the [[fitPoisson]]
@@ -2078,675 +2034,84 @@ object LargeP {
       s"LargeP.cvPoisson supports poisson, not ${params.family}")
     require(Set("deviance", "mse", "mae").contains(measure),
       s"large-p poisson CV supports deviance|mse|mae, not '$measure'")
-    cvGlmImpl(df, featureCols, labelCol, "poisson", params, nfolds,
-      alphas, measure, foldCol)
+    cvGlm(df, featureCols, labelCol, params, nfolds, alphas, measure, foldCol)
   }
 
-  private def cvGlmImpl(df: DataFrame, featureCols: Seq[String],
-                        labelCol: String, family: String,
-                        params: SgdNetParams, nfolds: Int,
-                        alphas: Seq[Double], measure: String,
-                        foldCol: org.apache.spark.sql.Column): CvSgdNet.CvResult = {
-    import org.apache.spark.sql.functions.col
-    val binom = family == "binomial"
+  private def cvGlm(df: DataFrame, featureCols: Seq[String], labelCol: String,
+                    params: SgdNetParams, nfolds: Int, alphas: Seq[Double],
+                    measure: String,
+                    foldCol: org.apache.spark.sql.Column): CvSgdNet.CvResult = {
     require(nfolds >= 2, "nfolds must be at least 2")
-    requireGlmContract(params, featureCols)
+    requireGlmContract(params, featureCols.size)
     val alphaGrid = if (alphas.nonEmpty) alphas else Seq(params.alpha)
     alphaGrid.foreach(a => require(a > 0 && a <= 1,
       "the screened-Gram GLM CV needs every alpha in (0, 1] (at " +
         "alpha = 0 every coordinate is active and the per-model " +
         "weighted Gram IS p x p)"))
-    val p = featureCols.size
-    val sc = df.sparkSession.sparkContext
-    val M = nfolds + 1 // models: 0..nfolds-1 exclude that fold; nfolds = full
-
-    val classes: Array[String] =
-      if (binom) SgdNet.binomialClasses(df, labelCol) else Array.empty
-    val yExpr =
-      if (binom) (col(labelCol).cast("string") === classes(1)).cast("double")
-      else col(labelCol).cast("double")
-
-    val hashCols = (featureCols :+ labelCol).map(col)
-    val withFold = df.withColumn("__fold",
-      CvSgdNet.foldExpr(foldCol, hashCols, nfolds).cast("int"))
-    // spread a thin input before the batched pass loop (the
-    // CvSgdNet.cvIrls rationale: every fused KKT/moment pass re-scans
-    // these blocks; no-op at scale — see graft.ops.Spread)
-    val rows = graft.ops.Spread.thin(withFold
-      .select((featureCols.map(c => col(c).cast("double")) :+ yExpr :+
-        col("__fold")): _*),
-      target = math.min(df.sparkSession.sparkContext.defaultParallelism, 8))
-      .rdd.map { r =>
-        val x = new Array[Double](p)
-        var j = 0
-        while (j < p) { x(j) = r.getDouble(j); j += 1 }
-        (r.getInt(p + 1), x, r.getDouble(p))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // ------------------------------ pass A: per-fold O(p) moments
-      val accA = rows.treeAggregate(
-          Array.fill(nfolds)(new Array[Double](3 * p + 3)))(
-        seqOp = (acc, t) => {
-          val a = acc(t._1); val x = t._2; val y = t._3
-          var j = 0
-          while (j < p) {
-            val xj = x(j)
-            a(j) += xj; a(p + j) += xj * xj; a(2 * p + j) += xj * y
-            j += 1
-          }
-          a(3 * p) += 1.0; a(3 * p + 1) += y; a(3 * p + 2) += y * y
-          acc
-        },
-        combOp = (a, b) => {
-          var f = 0
-          while (f < nfolds) {
-            val af = a(f); val bf = b(f)
-            var i = 0
-            while (i < af.length) { af(i) += bf(i); i += 1 }
-            f += 1
-          }
-          a
-        }, depth = 2)
-      var passes = 1
-      CvSgdNet.requireNonEmptyFolds(
-        accA.map(_(3 * p).toLong).toIndexedSeq, nfolds)
-      val momTot = new Array[Double](3 * p + 3)
-      accA.foreach { a =>
-        var i = 0; while (i < momTot.length) { momTot(i) += a(i); i += 1 }
-      }
-      val mom = Array.tabulate(M) { m =>
-        if (m == nfolds) momTot
-        else {
-          val t = momTot.clone()
-          val a = accA(m)
-          var i = 0; while (i < t.length) { t(i) -= a(i); i += 1 }
-          t
-        }
-      }
-      val nM = Array.tabulate(M)(m => mom(m)(3 * p))
-      val meanM = Array.tabulate(M, p)((m, j) => mom(m)(j) / nM(m))
-      val sdM = Array.tabulate(M, p) { (m, j) =>
-        val v = math.max(mom(m)(p + j) / nM(m) - meanM(m)(j) * meanM(m)(j), 0.0)
-        val s = math.sqrt(v); if (s > 0) s else 1.0
-      }
-      val scaleM = Array.tabulate(M)(m =>
-        if (params.standardize) sdM(m) else Array.fill(p)(1.0))
-      val centerM = Array.tabulate(M)(m =>
-        if (params.intercept) meanM(m) else new Array[Double](p))
-      val yMeanM = Array.tabulate(M)(m => mom(m)(3 * p + 1) / nM(m))
-      if (!binom) (0 until M).foreach(m => require(yMeanM(m) > 0,
-        "poisson response must contain positive counts in every train fold"))
-      val yCenM = Array.tabulate(M)(m => if (params.intercept) yMeanM(m) else 0.0)
-      // standardized null covariance per model (the lambda-path input
-      // and, at an intercept-only init, the exact init gradient)
-      val cM = Array.tabulate(M, p)((m, j) =>
-        (mom(m)(2 * p + j) / nM(m) - centerM(m)(j) * yMeanM(m) -
-          yCenM(m) * meanM(m)(j) + centerM(m)(j) * yCenM(m)) / scaleM(m)(j))
-      val nTot = nM(nfolds)
-      val bcStd = sc.broadcast((centerM, scaleM))
-
-      // --------------- union ever-candidate set E (indices only — the
-      // weighted moment blocks are rebuilt per Newton step)
-      val inE = new Array[Boolean](p)
-      val eIdx = scala.collection.mutable.ArrayBuffer.empty[Int]
-      def extendIdx(newCols: Array[Int]): Unit = {
-        if (newCols.isEmpty) return
-        requireEFits(eIdx.size + newCols.size,
-          "the per-model O(|E|^2) weighted moment blocks")
-        newCols.foreach { j => inE(j) = true; eIdx += j }
-      }
-
-      def linkWZ(eta: Double, y: Double): (Double, Double) =
-        if (binom) {
-          val mu = 1.0 / (1.0 + math.exp(-eta))
-          val w = math.max(mu * (1.0 - mu), 1e-5)
-          (w, eta + (y - mu) / w)
-        } else {
-          val etaC = math.max(math.min(eta, 30.0), -30.0)
-          val mu = math.exp(etaC)
-          val w = math.max(mu, 1e-5)
-          (w, etaC + (y - mu) / w)
-        }
-
-      // batched frozen-weight moments over E for the flagged models:
-      // per model [packed |E|(|E|+1)/2][swxz][swx][swz][sw]
-      def passWAll(eArr: Array[Int], need: Array[Boolean],
-                   a0w: Array[Double],
-                   act: Array[(Array[Int], Array[Double])]): Array[Array[Double]] = {
-        val m = eArr.length
-        val szE = m * (m + 1) / 2 + 2 * m + 2
-        val bc = sc.broadcast((eArr, need, a0w, act))
-        val acc = rows.treeAggregate(new Array[Double](M * szE))(
-          seqOp = (a, r) => {
-            val (fold, x, y) = r
-            val (eL, needL, a0s, actL) = bc.value
-            val (ctrs, scls) = bcStd.value
-            var mm = 0
-            while (mm < M) {
-              if (needL(mm) && mm != fold) {
-                val ctr = ctrs(mm); val scl = scls(mm)
-                val (aI, aV) = actL(mm)
-                var eta = a0s(mm)
-                var i = 0
-                while (i < aI.length) {
-                  val j = aI(i); eta += aV(i) * (x(j) - ctr(j)) / scl(j); i += 1
-                }
-                val (w, z) = linkWZ(eta, y)
-                val off = mm * szE
-                val base2 = m * (m + 1) / 2
-                a(off + szE - 2) += w * z; a(off + szE - 1) += w
-                var jj = 0
-                while (jj < m) {
-                  val ej = eL(jj)
-                  val xsj = (x(ej) - ctr(ej)) / scl(ej)
-                  val wxj = w * xsj
-                  a(off + base2 + jj) += wxj * z
-                  a(off + base2 + m + jj) += wxj
-                  val base = off + jj * (jj + 1) / 2
-                  var ii = 0
-                  while (ii <= jj) {
-                    val ei = eL(ii)
-                    a(base + ii) += (x(ei) - ctr(ei)) / scl(ei) * wxj
-                    ii += 1
-                  }
-                  jj += 1
-                }
-              }
-              mm += 1
-            }
-            a
-          },
-          combOp = (a, b2) => {
-            var i = 0; while (i < a.length) { a(i) += b2(i); i += 1 }; a
-          }, depth = 2)
-        passes += 1
-        bc.destroy()
-        Array.tabulate(M)(mm =>
-          if (need(mm)) java.util.Arrays.copyOfRange(acc, mm * szE, (mm + 1) * szE)
-          else null)
-      }
-
-      // batched FUSED pass: per active model, the full-p WLS KKT vector
-      // at its candidate point under its frozen weights AND its
-      // next-step weighted moments over E at the candidate point
-      def passFusedAll(eArr: Array[Int], act: Array[Boolean],
-                       a0w: Array[Double], wAct: Array[(Array[Int], Array[Double])],
-                       a0n: Array[Double], nAct: Array[(Array[Int], Array[Double])]): (Array[Array[Double]], Array[Array[Double]]) = {
-        val m = eArr.length
-        val szE = m * (m + 1) / 2 + 2 * m + 2
-        val blk = p + szE
-        val bc = sc.broadcast((eArr, act, a0w, wAct, a0n, nAct))
-        val acc = rows.treeAggregate(new Array[Double](M * blk))(
-          seqOp = (a, r) => {
-            val (fold, x, y) = r
-            val (eL, actL, a0ws, wActL, a0ns, nActL) = bc.value
-            val (ctrs, scls) = bcStd.value
-            var mm = 0
-            while (mm < M) {
-              if (actL(mm) && mm != fold) {
-                val ctr = ctrs(mm); val scl = scls(mm)
-                val (wI, wV) = wActL(mm)
-                var etaW = a0ws(mm)
-                var i = 0
-                while (i < wI.length) {
-                  val j = wI(i); etaW += wV(i) * (x(j) - ctr(j)) / scl(j); i += 1
-                }
-                val (nI, nV) = nActL(mm)
-                var etaN = a0ns(mm)
-                i = 0
-                while (i < nI.length) {
-                  val j = nI(i); etaN += nV(i) * (x(j) - ctr(j)) / scl(j); i += 1
-                }
-                val off = mm * blk
-                val (wF, zF) = linkWZ(etaW, y)
-                val resid = wF * (zF - etaN)
-                var j = 0
-                while (j < p) {
-                  a(off + j) += resid * (x(j) - ctr(j)) / scl(j); j += 1
-                }
-                val (wN, zN) = linkWZ(etaN, y)
-                val base2 = off + p + m * (m + 1) / 2
-                a(off + p + szE - 2) += wN * zN; a(off + p + szE - 1) += wN
-                var jj = 0
-                while (jj < m) {
-                  val ej = eL(jj)
-                  val xsj = (x(ej) - ctr(ej)) / scl(ej)
-                  val wxj = wN * xsj
-                  a(base2 + jj) += wxj * zN
-                  a(base2 + m + jj) += wxj
-                  val base = off + p + jj * (jj + 1) / 2
-                  var ii = 0
-                  while (ii <= jj) {
-                    val ei = eL(ii)
-                    a(base + ii) += (x(ei) - ctr(ei)) / scl(ei) * wxj
-                    ii += 1
-                  }
-                  jj += 1
-                }
-              }
-              mm += 1
-            }
-            a
-          },
-          combOp = (a, b2) => {
-            var i = 0; while (i < a.length) { a(i) += b2(i); i += 1 }; a
-          }, depth = 2)
-        passes += 1
-        bc.destroy()
-        val kkts = Array.tabulate(M)(mm =>
-          if (act(mm)) Array.tabulate(p)(j => acc(mm * blk + j) / nM(mm))
-          else null)
-        val wgs = Array.tabulate(M)(mm =>
-          if (act(mm)) java.util.Arrays.copyOfRange(acc, mm * blk + p, (mm + 1) * blk)
-          else null)
-        (kkts, wgs)
-      }
-
-      // batched init gradients at (beta = 0, a0 per model) — only the
-      // !intercept regime needs the pass (with an intercept the init
-      // gradient IS cM(m))
-      def initGradAll(a0i: Array[Double]): Array[Array[Double]] = {
-        val bc = sc.broadcast(a0i)
-        val acc = rows.treeAggregate(new Array[Double](M * p))(
-          seqOp = (a, r) => {
-            val (fold, x, y) = r
-            val a0s = bc.value
-            val (ctrs, scls) = bcStd.value
-            var mm = 0
-            while (mm < M) {
-              if (mm != fold) {
-                val eta = a0s(mm)
-                val mu = if (binom) 1.0 / (1.0 + math.exp(-eta))
-                  else math.exp(math.max(math.min(eta, 30.0), -30.0))
-                val resid = y - mu
-                val ctr = ctrs(mm); val scl = scls(mm)
-                var j = 0
-                while (j < p) {
-                  a(mm * p + j) += resid * (x(j) - ctr(j)) / scl(j); j += 1
-                }
-              }
-              mm += 1
-            }
-            a
-          },
-          combOp = (a, b2) => {
-            var i = 0; while (i < a.length) { a(i) += b2(i); i += 1 }; a
-          }, depth = 2)
-        passes += 1
-        bc.destroy()
-        Array.tabulate(M, p)((mm, j) => acc(mm * p + j) / nM(mm))
-      }
-
-      def actOf(bb: Array[Double]): (Array[Int], Array[Double]) = {
-        val idx = (0 until p).filter(bb(_) != 0.0).toArray
-        (idx, idx.map(bb))
-      }
-
-      // ------------------------------------------------ per-alpha paths
-      val paths = alphaGrid.map { alpha =>
-        val prm = params.copy(alpha = alpha)
-        val lambdas = if (prm.lambda != null) prm.lambda
-          else {
-            val minRatio = if (prm.lambdaMinRatio.isNaN)
-              LambdaPath.defaultMinRatio(nTot.toLong, p) else prm.lambdaMinRatio
-            LambdaPath.build(Array(cM(nfolds)), alpha, prm.nlambda,
-              minRatio, null)
-          }
-        val L = lambdas.length
-        val beta = Array.fill(M)(new Array[Double](p)) // per-model std scale
-        val a0 = Array.tabulate(M) { m =>
-          if (binom) {
-            val pb = yMeanM(m)
-            if (prm.intercept && pb > 0 && pb < 1) math.log(pb / (1 - pb)) else 0.0
-          } else if (prm.intercept) math.log(yMeanM(m)) else 0.0
-        }
-        val grad: Array[Array[Double]] =
-          if (prm.intercept) Array.tabulate(M)(m => cM(m).clone())
-          else initGradAll(a0)
-        val lamPrev = Array.tabulate(M)(m =>
-          grad(m).map(math.abs).max / math.max(alpha, 1e-3))
-        // frozen-weight moments over E per model, carried across path
-        // points; invalidated whenever E grows
-        val wg = Array.fill[Array[Double]](M)(null)
-        val wgESize = Array.fill(M)(-1)
-        val a0Out = Array.ofDim[Double](M, L)
-        val bOut = Array.ofDim[Array[Double]](M, L)
-        val actOut = Array.ofDim[Array[Int]](M, L)
-        val newtonTol = math.max(prm.thresh * 1e-4, 1e-10)
-        val dfGate = new SgdNet.DfGate(prm, p)
-        var cutL = L
-        var l = 0
-        while (l < L) {
-          val lam = lambdas(l)
-          // floored strong rule per model, one union E
-          val bounds =
-            Array.tabulate(M)(m => screenBound(alpha, lam, lamPrev(m)))
-          val needE = scala.collection.mutable.LinkedHashSet.empty[Int]
-          for (m <- 0 until M)
-            needE ++= screened(grad(m), beta(m), inE, bounds(m))
-          extendIdx(needE.toArray)
-          val tol = math.max(newtonTol, 1e-12) * math.max(lam, 1.0)
-          val active = Array.fill(M)(true)
-          var iter = 0
-          while (iter < 25 && active.exists(identity)) {
-            // fresh frozen moments for active models whose E view is stale
-            val stale = Array.tabulate(M)(m =>
-              active(m) && (wg(m) == null || wgESize(m) != eIdx.size))
-            if (stale.exists(identity)) {
-              val ws = passWAll(eIdx.toArray, stale, a0, beta.map(actOf))
-              for (m <- 0 until M if stale(m)) {
-                wg(m) = ws(m); wgESize(m) = eIdx.size
-              }
-            }
-            var stepDone = false
-            var a0N: Array[Double] = null
-            var betaN: Array[Array[Double]] = null
-            var kktN: Array[Array[Double]] = null
-            var wgN: Array[Array[Double]] = null
-            while (!stepDone) {
-              val eArr = eIdx.toArray
-              val mE = eArr.length
-              val base2 = mE * (mE + 1) / 2
-              // per-model WLS solve over E from the frozen moments
-              val ra0 = a0.clone()
-              val rbeta = beta.map(_.clone())
-              for (m <- 0 until M if active(m)) {
-                val g = wg(m)
-                val ninv = 1.0 / nM(m)
-                if (mE == 0) {
-                  val zw = g(base2) * ninv
-                  val ww = g(base2 + 1) * ninv
-                  if (prm.intercept) ra0(m) = zw / ww
-                } else {
-                  val aM = unpackSym(g, mE, ninv)
-                  val cV = Array.tabulate(mE)(x2 => g(base2 + x2) * ninv)
-                  val xwV = Array.tabulate(mE)(x2 => g(base2 + mE + x2) * ninv)
-                  val zw = g(base2 + 2 * mE) * ninv
-                  val ww = g(base2 + 2 * mE + 1) * ninv
-                  val init = Array.tabulate(mE)(x2 => beta(m)(eArr(x2)))
-                  val r = CoordinateDescent.solve(aM, cV, xwV, zw, ww, lam,
-                    alpha, prm.intercept, init,
-                    thresh = newtonTol, maxIter = prm.maxit)
-                  ra0(m) = r.a0
-                  val bF = new Array[Double](p)
-                  var x2 = 0
-                  while (x2 < mE) { bF(eArr(x2)) = r.beta(x2); x2 += 1 }
-                  rbeta(m) = bF
-                }
-              }
-              val (kkts, wgs) = passFusedAll(eArr, active, a0,
-                beta.map(actOf), ra0, rbeta.map(actOf))
-              val viol = scala.collection.mutable.LinkedHashSet.empty[Int]
-              for (m <- 0 until M if active(m))
-                viol ++= reentry(kkts(m), inE, lam * alpha + tol, bounds(m))
-              if (viol.isEmpty) {
-                a0N = ra0; betaN = rbeta; kktN = kkts; wgN = wgs
-                stepDone = true
-              } else {
-                extendIdx(viol.toArray)
-                // rebuild the frozen moments over the grown E for the
-                // active models and re-solve the step
-                val ws = passWAll(eIdx.toArray, active, a0, beta.map(actOf))
-                for (m <- 0 until M if active(m)) {
-                  wg(m) = ws(m); wgESize(m) = eIdx.size
-                }
-              }
-            }
-            for (m <- 0 until M if active(m)) {
-              var maxD = math.abs(a0N(m) - a0(m))
-              var j = 0
-              while (j < p) {
-                val d = math.abs(betaN(m)(j) - beta(m)(j))
-                if (d > maxD) maxD = d
-                j += 1
-              }
-              beta(m) = betaN(m); a0(m) = a0N(m)
-              grad(m) = kktN(m); wg(m) = wgN(m); wgESize(m) = eIdx.size
-              if (maxD < math.max(prm.thresh * 1e-2, 1e-8)) active(m) = false
-            }
-            iter += 1
-          }
-          if (!dfGate.admit(j => beta(nfolds)(j) != 0.0)) { cutL = l; l = L }
-          else {
-            for (m <- 0 until M) {
-              val ai = (0 until p).filter(beta(m)(_) != 0.0).toArray
-              val bOrig = ai.map(j => beta(m)(j) / scaleM(m)(j))
-              actOut(m)(l) = ai; bOut(m)(l) = bOrig
-              a0Out(m)(l) = if (prm.intercept)
-                a0(m) - ai.indices.map(i => bOrig(i) * meanM(m)(ai(i))).sum
-              else a0(m)
-              lamPrev(m) = lam
-            }
-            l += 1
-          }
-        }
-        require(cutL > 0, "dfmax/pmax exclude every path point")
-        val lambdasT = lambdas.take(cutL)
-        val Lc = cutL
-
-        // ---- ONE fused scoring scan: held-out fold scores (all
-        // measures but auc) + the full model's deviance path — every
-        // eta from active-only coefficient lists (O(L·|active|)/row)
-        val bcOut = sc.broadcast((a0Out, bOut, actOut, Lc))
-        val muNullP = if (prm.intercept) yMeanM(nfolds) else 1.0
-        val scoreAuc = measure == "auc"
-        val acc = rows.treeAggregate(new Array[Double](nfolds * Lc + Lc + 1))(
-          seqOp = (a, r) => {
-            val (f, x, y) = r
-            val (a0s, bs, as2, lc) = bcOut.value
-            // held-out: the row's own fold's model
-            if (!scoreAuc) {
-              var l2 = 0
-              while (l2 < lc) {
-                var eta = a0s(f)(l2)
-                val ai = as2(f)(l2); val bv = bs(f)(l2)
-                var i = 0
-                while (i < ai.length) { eta += bv(i) * x(ai(i)); i += 1 }
-                a(f * lc + l2) += (if (binom) {
-                  val mu = 1.0 / (1.0 + math.exp(-eta))
-                  measure match {
-                    case "mse" => 2.0 * (mu - y) * (mu - y)
-                    case "mae" => 2.0 * math.abs(mu - y)
-                    case "class" =>
-                      if ((if (mu > 0.5) 1.0 else 0.0) != y) 1.0 else 0.0
-                    case _ =>
-                      val mc = math.min(math.max(mu, 1e-5), 1.0 - 1e-5)
-                      -2.0 * (y * math.log(mc) + (1 - y) * math.log(1 - mc))
-                  }
-                } else {
-                  val mu = math.exp(eta)
-                  measure match {
-                    case "mse" => (y - mu) * (y - mu)
-                    case "mae" => math.abs(y - mu)
-                    case _ =>
-                      val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-                      2.0 * (ylog - (y - mu))
-                  }
-                })
-                l2 += 1
-              }
-            }
-            // full model deviance (+ poisson null slot)
-            var l2 = 0
-            while (l2 < lc) {
-              var eta = a0s(nfolds)(l2)
-              val ai = as2(nfolds)(l2); val bv = bs(nfolds)(l2)
-              var i = 0
-              while (i < ai.length) { eta += bv(i) * x(ai(i)); i += 1 }
-              a(nfolds * lc + l2) += (if (binom) {
-                val mx = math.max(eta, 0.0)
-                2.0 * (mx + math.log(math.exp(-mx) + math.exp(eta - mx)) - y * eta)
-              } else {
-                val mu = math.exp(math.max(math.min(eta, 30.0), -30.0))
-                val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-                2.0 * (ylog - (y - mu))
-              })
-              l2 += 1
-            }
-            if (!binom) {
-              val ylog = if (y > 0) y * math.log(y / muNullP) else 0.0
-              a(nfolds * lc + lc) += 2.0 * (ylog - (y - muNullP))
-            }
-            a
-          },
-          combOp = (a, b2) => {
-            var i = 0; while (i < a.length) { a(i) += b2(i); i += 1 }; a
-          }, depth = 2)
-        passes += 1
-
-        val nulldev =
-          if (binom) {
-            val pBar = yMeanM(nfolds)
-            val nullP = if (prm.intercept) pBar else 0.5
-            -2.0 * nTot * (SgdNet.safeXLog(pBar, nullP) +
-              SgdNet.safeXLog(1 - pBar, 1 - nullP))
-          } else acc(nfolds * Lc + Lc)
-        val devRatio = Array.tabulate(Lc)(l2 =>
-          SgdNetModel.devRatio(acc(nfolds * Lc + l2), nulldev))
-        val a0Full = Array.tabulate(Lc)(l2 => Array(a0Out(nfolds)(l2)))
-        val betaFull = Array.tabulate(Lc) { l2 =>
-          val b = new Array[Double](p)
-          val ai = actOut(nfolds)(l2); val bv = bOut(nfolds)(l2)
-          for (i <- ai.indices) b(ai(i)) = bv(i)
-          Array(b)
-        }
-        val full = new SgdNetModel(family, featureCols.toArray,
-          Array(labelCol), classes, lambdasT, a0Full, betaFull, nulldev,
-          devRatio, nTot.toLong, passes, prm)
-
-        val foldScores: Array[Array[Double]] =
-          if (scoreAuc) {
-            // the fold-partitioned rank chain over active-only etas
-            val spark = df.sparkSession
-            import spark.implicits._
-            val scored = spark.createDataFrame(rows.map { t =>
-              val (f, x, _) = t
-              val (a0s, bs, as2, lc) = bcOut.value
-              val etas = new Array[Double](lc)
-              var l2 = 0
-              while (l2 < lc) {
-                var eta = a0s(f)(l2)
-                val ai = as2(f)(l2); val bv = bs(f)(l2)
-                var i = 0
-                while (i < ai.length) { eta += bv(i) * x(ai(i)); i += 1 }
-                etas(l2) = eta
-                l2 += 1
-              }
-              (f, t._3, etas)
-            }).toDF("__fold", "__y", "__etas")
-            val exploded = scored
-              .select(col("__fold"), col("__y"),
-                org.apache.spark.sql.functions.posexplode(col("__etas"))
-                  .as(Seq("__l", "__s")))
-              .select((col("__l") * nfolds + col("__fold")).as("__g"),
-                col("__s"), col("__y"))
-            val aucs = CvSgdNet.aucPerGroup(exploded, Lc * nfolds)
-            Array.tabulate(nfolds, Lc)((f, l2) => aucs(l2 * nfolds + f))
-          } else
-            Array.tabulate(nfolds, Lc)((f, l2) =>
-              acc(f * Lc + l2) / accA(f)(3 * p))
-        bcOut.destroy()
-        CvSgdNet.summarize(alpha, lambdasT, foldScores, full)
-      }
-      bcStd.destroy()
-      val best = paths.minBy(pth => pth.cvm.min)
-      CvSgdNet.CvResult(paths, best)
-    } finally rows.unpersist(blocking = false)
+    val paths = CvSgdNet.cvIrls(df, labelCol, params, nfolds, alphaGrid,
+      measure, weighted = false, hasOffset = false, featureCols.toArray,
+      CvSgdNet.denseIrlsRows(df, featureCols, labelCol, nfolds, foldCol,
+        null, null), screenedIrls)
+    CvSgdNet.CvResult(paths, paths.minBy(_.cvm.min))
   }
 
   // ------------------------------------------------------------------ GLM
 
-  /** Screened-Gram IRLS for LARGE p — the binomial twin of
-    * [[fitGaussian]] (round 18): the logistic elastic-net path without
-    * ever materializing the p×p weighted Gram. Each Newton step's WLS
-    * subproblem is solved over the grow-only ever-candidate set E
-    * (strong-rule seeded) and backchecked with the EXACT per-step WLS
-    * KKT sweep over every discarded coordinate — violators re-enter E
-    * and the step re-solves, so the screened IRLS path equals the
-    * full-Gram [[SgdNet.fit]] path structurally (same discipline as
-    * `CoordinateDescent.solveScreened`, moved from the driver solve to
-    * the aggregation contract).
-    *
-    * Cost model per path point: 1 weighted-moments pass + one FUSED
-    * pass per Newton step (the fused pass computes the O(p) WLS KKT
-    * vector at the candidate point under the step's frozen weights AND
-    * the next step's O(|E|²) weighted moment block in the same scan),
-    * + rare extension re-passes. Driver/task state is O(|E|²), never
-    * O(p²). Same contract surface as [[fitGaussian]] (alpha > 0, no
-    * penalty factors / box limits / compat), plus the dense route's
-    * IRLS conventions bit-for-bit: w = max(mu(1−mu), 1e-5),
-    * z = eta + (y − mu)/w, Newton cap 25, stop at
-    * max|Δcoef| < max(thresh·1e-2, 1e-8) (SgdNet.fitIrls with the
-    * SgdNet.Binomial family). */
+  /** Screened IRLS for LARGE p — the binomial twin of [[fitGaussian]]:
+    * the logistic elastic-net path without the p×p weighted Gram (see
+    * [[screenedIrls]]), equal to the full-Gram [[SgdNet.fit]] path.
+    * `weightCol` and `offsetCol` compose as on [[SgdNet.fitWeighted]]
+    * and [[SgdNet.fitWithOffset]]; the IRLS conventions are
+    * SgdNet.Binomial's: w = max(μ(1−μ), 1e-5), z = η + (y − μ)/w,
+    * Newton cap 25, stop at max|Δcoef| < max(thresh·1e-2, 1e-8).
+    * Same contract surface as [[fitGaussian]]. */
   def fitBinomial(df: DataFrame, featureCols: Seq[String], labelCol: String,
                   params: SgdNetParams = SgdNetParams(family = "binomial"),
                   weightCol: String = null,
                   offsetCol: String = null): SgdNetModel = {
-    import org.apache.spark.sql.functions.col
     require(params.family == "binomial",
       s"LargeP.fitBinomial supports binomial, not ${params.family}")
-    requireGlmContract(params, featureCols)
-    val classes = SgdNet.binomialClasses(df, labelCol)
-    val positive = classes(1)
-    val yCol = (col(labelCol).cast("string") === positive).cast("double")
-    val rows = SgdNet.glmRows(df, featureCols, yCol, weightCol, offsetCol)
-    try fitGlmImpl(rows, featureCols, labelCol, classes, "binomial",
-      params, hasOffset = offsetCol != null, weighted = weightCol != null)
-    finally rows.unpersist(blocking = false)
+    fitGlm(df, featureCols.toArray, labelCol, params, weightCol, offsetCol,
+      y => SgdNet.DenseRows(SgdNet.glmRows(df, featureCols, y, weightCol,
+        offsetCol), featureCols.size))
   }
 
-  /** Screened-Gram IRLS for LARGE p — the poisson (log link) twin of
-    * [[fitBinomial]], with the dense route's link conventions
-    * (eta clamped to ±30, w = max(mu, 1e-5) — SgdNet.Poisson). */
+  /** Screened IRLS for LARGE p — the poisson (log link) twin of
+    * [[fitBinomial]], with SgdNet.Poisson's link conventions (η clamped
+    * to ±30, w = max(μ, 1e-5)). */
   def fitPoisson(df: DataFrame, featureCols: Seq[String], labelCol: String,
                  params: SgdNetParams = SgdNetParams(family = "poisson"),
                  weightCol: String = null,
                  offsetCol: String = null): SgdNetModel = {
-    import org.apache.spark.sql.functions.col
     require(params.family == "poisson",
       s"LargeP.fitPoisson supports poisson, not ${params.family}")
-    requireGlmContract(params, featureCols)
-    val rows = SgdNet.glmRows(df, featureCols, col(labelCol).cast("double"),
-      weightCol, offsetCol)
-    try fitGlmImpl(rows, featureCols, labelCol, Array.empty, "poisson",
-      params, hasOffset = offsetCol != null, weighted = weightCol != null)
-    finally rows.unpersist(blocking = false)
+    fitGlm(df, featureCols.toArray, labelCol, params, weightCol, offsetCol,
+      y => SgdNet.DenseRows(SgdNet.glmRows(df, featureCols, y, weightCol,
+        offsetCol), featureCols.size))
   }
 
-  /** Screened-Gram IRLS for LARGE-DIM SPARSE (CSR) input — the
-    * hashed-feature logistic path (round 18): [[fitBinomial]]'s fused
-    * per-Newton discipline with every cluster pass SPARSE per row.
-    * Centering makes the standardized weighted moments dense, but each
-    * splits into raw sparse accumulations plus driver-side
-    * corrections:
+  /** Screened IRLS for LARGE-DIM SPARSE (CSR) input — the
+    * hashed-feature logistic path: [[fitBinomial]] over CSR rows, every
+    * pass sparse per row. Centering makes the standardized weighted
+    * moments dense, so the passes accumulate raw sparse sums and center
+    * them driver-side:
     *
     *   Σw·xsₐ·xs_b = (Σw·xₐ·x_b − cₐΣw·x_b − c_bΣw·xₐ + cₐc_bΣw)/(sₐs_b)
     *   Σw·z·xsₐ   = (Σw·z·xₐ − cₐΣw·z)/sₐ
-    *   kkt_j      = (Σr·x_j − c_jΣr)/s_j/n,  r = w·(z − ηN)
+    *   kkt_j      = (Σr·x_j − c_jΣr)/s_j/n,  r = w·(z − η)
     *
-    * so the moments pass is O(k_E²) per row (k_E = the row's nnz
-    * inside E), the fused KKT+moments pass is O(nnz + k_E²), and no
-    * pass ever loops over all p in a row. This is the quality-
-    * classifier regime — logistic elastic net over 2^17-dim hashed
-    * text features — where the dense weighted Gram never existed.
-    * Same contract as [[fitBinomial]]; feature names are `V$j`. */
+    * so a screened pass costs O(nnz + k_E²) per row (k_E = the row's
+    * nonzeros inside E) and no pass loops over all p in a row. This is
+    * the quality-classifier regime — logistic elastic net over
+    * 2^17-dim hashed text features — where the dense weighted Gram
+    * never existed. Same contract as [[fitBinomial]]; feature names are
+    * `V$j`. */
   def fitSparseBinomial(df: DataFrame, idxCol: String, valCol: String,
                         dim: Int, labelCol: String,
                         params: SgdNetParams = SgdNetParams(family = "binomial")): SgdNetModel = {
-    import org.apache.spark.sql.functions.col
     require(params.family == "binomial",
       s"LargeP.fitSparseBinomial supports binomial, not ${params.family}")
-    requireGlmContract(params, (0 until dim).map(j => s"V$j"))
-    val classes = SgdNet.binomialClasses(df, labelCol)
-    val positive = classes(1)
-    val rows = df.select(col(idxCol), col(valCol).cast("array<double>"),
-        (col(labelCol).cast("string") === positive).cast("double"))
-      .rdd.map { r =>
-        (r.getSeq[Int](0).toArray, r.getSeq[Double](1).toArray,
-          r.getDouble(2))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    try fitSparseGlmImpl(rows, dim, labelCol, classes, "binomial", params)
-    finally rows.unpersist(blocking = false)
+    fitSparseGlm(df, idxCol, valCol, dim, labelCol, params)
   }
 
   /** Sparse large-dim poisson twin of [[fitSparseBinomial]] (log link,
@@ -2754,443 +2119,150 @@ object LargeP {
   def fitSparsePoisson(df: DataFrame, idxCol: String, valCol: String,
                        dim: Int, labelCol: String,
                        params: SgdNetParams = SgdNetParams(family = "poisson")): SgdNetModel = {
-    import org.apache.spark.sql.functions.col
     require(params.family == "poisson",
       s"LargeP.fitSparsePoisson supports poisson, not ${params.family}")
-    requireGlmContract(params, (0 until dim).map(j => s"V$j"))
-    val rows = df.select(col(idxCol), col(valCol).cast("array<double>"),
-        col(labelCol).cast("double"))
-      .rdd.map { r =>
-        (r.getSeq[Int](0).toArray, r.getSeq[Double](1).toArray,
-          r.getDouble(2))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-    try fitSparseGlmImpl(rows, dim, labelCol, Array.empty, "poisson", params)
-    finally rows.unpersist(blocking = false)
+    fitSparseGlm(df, idxCol, valCol, dim, labelCol, params)
   }
 
-  private def fitSparseGlmImpl(rows: RDD[(Array[Int], Array[Double], Double)],
-                               dim: Int, labelCol: String,
-                               classes: Array[String], family: String,
-                               params: SgdNetParams): SgdNetModel = {
-    val p = dim
-    val sc = rows.sparkContext
-    val binom = family == "binomial"
+  private def fitSparseGlm(df: DataFrame, idxCol: String, valCol: String,
+                           dim: Int, labelCol: String,
+                           params: SgdNetParams): SgdNetModel =
+    fitGlm(df, Array.tabulate(dim)(j => s"V$j"), labelCol, params, null, null,
+      y => SgdNet.CsrRows(SgdNet.csrRows(df, idxCol, valCol, y, null, null), dim))
 
-    // ---------------------------------------------- pass A (O(nnz)/row)
-    val accA = rows.treeAggregate(new Array[Double](3 * p + 3))(
-      seqOp = (a, r) => {
-        val (ix, vs, y) = r
-        var k = 0
-        while (k < ix.length) {
-          val j = ix(k); val v = vs(k)
-          a(j) += v; a(p + j) += v * v; a(2 * p + j) += v * y
-          k += 1
-        }
-        a(3 * p) += 1.0; a(3 * p + 1) += y; a(3 * p + 2) += y * y
-        a
-      },
-      combOp = (a, b) => {
-        var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-      }, depth = 2)
-    var passes = 1
-    val nD = accA(3 * p)
-    require(nD > 0, "the response (y) is empty.")
-    val nL = nD.toLong
-    val n = nD
-    val mean = Array.tabulate(p)(j => accA(j) / nD)
-    val xSd = Array.tabulate(p) { j =>
-      val v = math.max(accA(p + j) / nD - mean(j) * mean(j), 0.0)
-      val s = math.sqrt(v); if (s > 0) s else 1.0
+  /** One screened fit: `SgdNet.IrlsSetup` over the rows, [[screenedIrls]]
+    * as its one model, and `IrlsSetup.model`'s deviance pass. `npasses`
+    * counts every data pass, setup included. */
+  private def fitGlm(df: DataFrame, names: Array[String], labelCol: String,
+                     params: SgdNetParams, weightCol: String, offsetCol: String,
+                     rowsOf: org.apache.spark.sql.Column => SgdNet.IrlsRows): SgdNetModel = {
+    requireGlmContract(params, names.length)
+    CvSgdNet.withIrlsSetup(df, labelCol, params, 0, weightCol != null,
+        offsetCol != null, rowsOf) { (s, classes) =>
+      val fp = screenedIrls(s, params)
+      s.model(names, labelCol, classes, params, fp.lambdas,
+        fp.a0(0).map(Array(_)), fp.lambdas.indices.map(l => Array(fp.beta(0, l))).toArray,
+        fp.passes)
     }
-    val scale = if (params.standardize) xSd else Array.fill(p)(1.0)
-    val center = if (params.intercept) mean else new Array[Double](p)
-    val invScale = Array.tabulate(p)(j => 1.0 / scale(j))
-    val yBar = accA(3 * p + 1) / nD
-    if (!binom) require(yBar > 0, "poisson response must contain positive counts")
-    val yCen = if (params.intercept) yBar else 0.0
-    val b0 = Array.tabulate(p)(j =>
-      (accA(2 * p + j) / nD - center(j) * yBar - yCen * mean(j) +
-        center(j) * yCen) / scale(j))
+  }
 
-    val minRatio = if (params.lambdaMinRatio.isNaN)
-      LambdaPath.defaultMinRatio(nL, p) else params.lambdaMinRatio
-    val lambdas = if (params.lambda != null) params.lambda
-      else LambdaPath.build(Array(b0), params.alpha, params.nlambda,
-        minRatio, null)
-    val lmaxData = b0.map(math.abs).max / math.max(params.alpha, 1e-3)
-
-    // note: NO per-row center/invScale use anywhere below — every
-    // centering correction is applied driver-side (see scaladoc), so
-    // the broadcasts carry only active-set packs and E slot lookups
-
-    // sparse eta at a point (a0, act): a0 − C_act + Σ_{act∩nnz} β·x·inv
-    // with C_act = Σ_act β·ctr·inv precomputed driver-side. Broadcast
-    // carries (slot lookup over p, beta·inv values, C_act).
-    def actPack(a0x: Double, beta: Array[Double]): (Array[Int], Array[Double], Double, Double) = {
-      val ai = (0 until p).filter(beta(_) != 0.0).toArray
-      val bi = ai.map(j => beta(j) * invScale(j))
-      var cAct = 0.0
-      ai.indices.foreach(i => cAct += bi(i) * center(ai(i)))
-      val slot = Array.fill(p)(-1)
-      ai.indices.foreach(i => slot(ai(i)) = i)
-      (slot, bi, cAct, a0x)
-    }
-    @inline def linkWZ(eta: Double, y: Double): (Double, Double) =
-      if (binom) {
-        val mu = 1.0 / (1.0 + math.exp(-eta))
-        val w = math.max(mu * (1.0 - mu), 1e-5)
-        (w, eta + (y - mu) / w)
-      } else {
-        val etaC = math.max(math.min(eta, 30.0), -30.0)
-        val mu = math.exp(etaC)
-        val w = math.max(mu, 1e-5)
-        (w, etaC + (y - mu) / w)
-      }
-
-    // assemble the standardized weighted moment block from the raw
-    // sparse accumulations: layout of the raw acc (size base2 + 2m + 2):
-    // [Σw x_a x_b packed][Σw z x_a][Σw x_a][Σw z][Σw]
-    def assemble(raw: Array[Double], eArr: Array[Int], off: Int): (Array[Array[Double]], Array[Double], Array[Double], Double, Double) = {
-      val m = eArr.length
-      val base2 = m * (m + 1) / 2
-      val sw = raw(off + base2 + 2 * m + 1)
-      val swz = raw(off + base2 + 2 * m)
-      val ninv = 1.0 / n
-      val swxRaw = Array.tabulate(m)(i => raw(off + base2 + m + i))
-      val swxzRaw = Array.tabulate(m)(i => raw(off + base2 + i))
-      val aM = Array.ofDim[Double](m, m)
-      var x2 = 0
-      while (x2 < m) {
-        val i = eArr(x2); val row = aM(x2)
-        var y2 = 0
-        while (y2 < m) {
-          val j = eArr(y2)
-          val hi = math.max(x2, y2); val lo = math.min(x2, y2)
-          row(y2) = (raw(off + hi * (hi + 1) / 2 + lo) - center(i) * swxRaw(y2) -
-            center(j) * swxRaw(x2) + center(i) * center(j) * sw) *
-            invScale(i) * invScale(j) * ninv
-          y2 += 1
-        }
-        x2 += 1
-      }
-      val cM = Array.tabulate(m) { x2 =>
-        val i = eArr(x2)
-        (swxzRaw(x2) - center(i) * swz) * invScale(i) * ninv
-      }
-      val xwM = Array.tabulate(m) { x2 =>
-        val i = eArr(x2)
-        (swxRaw(x2) - center(i) * sw) * invScale(i) * ninv
-      }
-      (aM, cM, xwM, swz * ninv, sw * ninv)
-    }
-
-    // raw weighted moments over E at the point pack — all sparse per
-    // row: gather the row's nnz inside E, then O(k_E²) packed updates
-    def passW(eArr: Array[Int],
-              pack: (Array[Int], Array[Double], Double, Double)): Array[Double] = {
-      val m = eArr.length
-      val sz = m * (m + 1) / 2 + 2 * m + 2
-      val slotE = Array.fill(p)(-1)
-      eArr.indices.foreach(i => slotE(eArr(i)) = i)
-      val bc = sc.broadcast((slotE, pack))
-      val acc = rows.treeAggregate(new Array[Double](sz))(
-        seqOp = (a, r) => {
-          val (ix, vs, y) = r
-          val (sE, pk) = bc.value
-          val (slot, bi, cAct, a0w) = pk
-          var eta = a0w - cAct
-          var k = 0
-          var cntE = 0
-          while (k < ix.length) {
-            val j = ix(k)
-            val s = slot(j)
-            if (s >= 0) eta += bi(s) * vs(k)
-            if (sE(j) >= 0) cntE += 1
-            k += 1
-          }
-          val (w, z) = linkWZ(eta, y)
-          val b2 = sz - 2 * m - 2 // = m(m+1)/2, start of the Σwzx block
-          a(sz - 2) += w * z; a(sz - 1) += w
-          if (cntE > 0) {
-            val eS = new Array[Int](cntE); val eV = new Array[Double](cntE)
-            k = 0; var t = 0
-            while (k < ix.length) {
-              val s = sE(ix(k))
-              if (s >= 0) { eS(t) = s; eV(t) = vs(k); t += 1 }
-              k += 1
-            }
-            val wz = w * z
-            var i1 = 0
-            while (i1 < cntE) {
-              val s1 = eS(i1); val wv = w * eV(i1)
-              a(b2 + s1) += wz * eV(i1)        // Σ w z x_a
-              a(b2 + m + s1) += wv             // Σ w x_a
-              var i2 = 0
-              while (i2 < cntE) {
-                val s2 = eS(i2)
-                if (s2 <= s1) a(s1 * (s1 + 1) / 2 + s2) += wv * eV(i2)
-                i2 += 1
-              }
-              i1 += 1
-            }
-          }
-          a
-        },
-        combOp = (a, b) => {
-          var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-        }, depth = 2)
-      passes += 1
-      bc.destroy()
-      acc
-    }
-
-    // FUSED pass: frozen-weight full-p KKT at the candidate point
-    // (sparse: Σ r·x_j + scalar Σ r, centering applied driver-side)
-    // AND the candidate point's raw weighted moments over E
-    def passFused(eArr: Array[Int],
-                  packW: (Array[Int], Array[Double], Double, Double),
-                  packN: (Array[Int], Array[Double], Double, Double)): (Array[Double], Array[Double]) = {
-      val m = eArr.length
-      val szE = m * (m + 1) / 2 + 2 * m + 2
-      val slotE = Array.fill(p)(-1)
-      eArr.indices.foreach(i => slotE(eArr(i)) = i)
-      val bc = sc.broadcast((slotE, packW, packN))
-      val acc = rows.treeAggregate(new Array[Double](p + 1 + szE))(
-        seqOp = (a, r) => {
-          val (ix, vs, y) = r
-          val (sE, pw, pn) = bc.value
-          val (slW, biW, cW, a0w) = pw
-          val (slN, biN, cN, a0n) = pn
-          var etaW = a0w - cW
-          var etaN = a0n - cN
-          var k = 0
-          var cntE = 0
-          while (k < ix.length) {
-            val j = ix(k); val v = vs(k)
-            val s1 = slW(j); if (s1 >= 0) etaW += biW(s1) * v
-            val s2 = slN(j); if (s2 >= 0) etaN += biN(s2) * v
-            if (sE(j) >= 0) cntE += 1
-            k += 1
-          }
-          val (wF, zF) = linkWZ(etaW, y)
-          val resid = wF * (zF - etaN)
-          if (resid != 0.0) {
-            k = 0
-            while (k < ix.length) { a(ix(k)) += resid * vs(k); k += 1 }
-            a(p) += resid
-          }
-          val (wN, zN) = linkWZ(etaN, y)
-          val off = p + 1
-          a(off + szE - 2) += wN * zN; a(off + szE - 1) += wN
-          if (cntE > 0) {
-            val eS = new Array[Int](cntE); val eV = new Array[Double](cntE)
-            k = 0; var t = 0
-            while (k < ix.length) {
-              val s = sE(ix(k))
-              if (s >= 0) { eS(t) = s; eV(t) = vs(k); t += 1 }
-              k += 1
-            }
-            val b2 = off + szE - 2 * m - 2
-            val wz = wN * zN
-            var i1 = 0
-            while (i1 < cntE) {
-              val s1 = eS(i1); val wv = wN * eV(i1)
-              a(b2 + s1) += wz * eV(i1)
-              a(b2 + m + s1) += wv
-              var i2 = 0
-              while (i2 < cntE) {
-                val s2 = eS(i2)
-                if (s2 <= s1) a(off + s1 * (s1 + 1) / 2 + s2) += wv * eV(i2)
-                i2 += 1
-              }
-              i1 += 1
-            }
-          }
-          a
-        },
-        combOp = (a, b) => {
-          var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-        }, depth = 2)
-      passes += 1
-      bc.destroy()
-      val sumR = acc(p)
-      val kkt = Array.tabulate(p)(j =>
-        (acc(j) - center(j) * sumR) * invScale(j) / n)
-      val wg = java.util.Arrays.copyOfRange(acc, p + 1, p + 1 + szE)
-      (kkt, wg)
-    }
-
-    // ------------------------------------- ever-candidate set E
+  /** The screened IRLS paths of every model of `s` at `params.alpha`
+    * (one model for a fit; the fold models and the full model for a
+    * CV), warm along the λ grid. The penalized WLS of each Newton step
+    * is solved over a grow-only ever-candidate set E of columns, one E
+    * for all models:
+    *
+    *  - each path point starts E from the floored strong rule
+    *    ([[screenBound]]) on every model's current gradient;
+    *  - a Newton round solves each unconverged model over E from its
+    *    moments, then ONE screened pass (`IrlsRows.screened`) returns,
+    *    per model, the full-p KKT vector of the step's WLS at the
+    *    candidate under the frozen weights of the current point, and
+    *    the next step's moments over E at the candidate;
+    *  - a column outside E with |kkt_j| > αλ + tol is a violator: it
+    *    and every column at or above the bound join E ([[reentry]]),
+    *    the moments over the grown E are rebuilt at the current point
+    *    (one more pass) and the step re-solves. Equality with the
+    *    full-Gram paths is therefore structural.
+    *
+    * Moments carry across path points (the last fused pass computed
+    * them at exactly the next point's start) until E grows. A model
+    * stops at max|Δcoef| < max(thresh·1e-2, 1e-8) or 25 rounds; the
+    * full model's `dfmax`/`pmax` stop the path. Driver state is
+    * O(M·(p + |E|²)), |E| capped at `SgdNet.maxGramP`. Returns the
+    * ORIGINAL-scale nonzero coefficients and every data pass, setup
+    * included. */
+  private def screenedIrls(s: SgdNet.IrlsSetup,
+                           params: SgdNetParams): CvSgdNet.FoldPaths = {
+    val p = s.p
+    val F = s.full + 1
+    val alpha = params.alpha
+    val lambdas = s.lambdas(alpha)
+    val L = lambdas.length
+    val beta = Array.fill(F)(new Array[Double](p)) // standardized scale
+    val a0 = s.a0Null.clone()
+    val grad = Array.tabulate(F)(s.nullGradient)
+    val lamPrev = grad.map(g => g.map(math.abs).max / math.max(alpha, 1e-3))
     val inE = new Array[Boolean](p)
     val eIdx = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def extendIdx(newCols: Array[Int]): Unit = {
-      if (newCols.isEmpty) return
-      requireEFits(eIdx.size + newCols.size, "the O(|E|^2) active block")
-      newCols.foreach { j => inE(j) = true; eIdx += j }
+    def extend(cols: Iterable[Int]): Unit = if (cols.nonEmpty) {
+      requireEFits(eIdx.size + cols.size, "the per-model O(|E|^2) moments")
+      cols.foreach { j => inE(j) = true; eIdx += j }
     }
-
-    // ----------------------------------------------------- path loop
-    val L = lambdas.length
-    val a0Out = Array.ofDim[Double](L, 1)
-    val betaOut = Array.ofDim[Double](L, 1, p)
-    val beta = new Array[Double](p)
-    var a0 =
-      if (binom) { if (params.intercept && yBar > 0 && yBar < 1)
-          math.log(yBar / (1 - yBar)) else 0.0 }
-      else { if (params.intercept) math.log(yBar) else 0.0 }
-    // init gradient at (a0, 0): mu is CONSTANT, so it assembles from
-    // the pass-A moments driver-side — no extra pass:
-    // grad_j = [Σx_j·y − mu·Σx_j − c_j·n·(ȳ − mu)]·inv_j / n
-    var grad = {
-      val mu0 = if (binom) 1.0 / (1.0 + math.exp(-a0))
-        else math.exp(math.max(math.min(a0, 30.0), -30.0))
-      Array.tabulate(p)(j =>
-        (accA(2 * p + j) - mu0 * accA(j) -
-          center(j) * nD * (yBar - mu0)) * invScale(j) / n)
+    // moments over E at each model's (a0, β); stale once E outgrows them
+    val wg = new Array[SgdNet.WGram](F)
+    var passes = 0
+    def refresh(need: Array[Boolean]): Unit = if (need.exists(identity)) {
+      val e = eIdx.toArray
+      val out = s.screened(e, a0, beta.map(b => e.map(b)), null, need)
+      passes += 1
+      for (f <- 0 until F if need(f)) wg(f) = out(f)._1
     }
-    var lamPrev = lmaxData
+    val a0Out = Array.ofDim[Double](F, L)
+    val cOut = Array.ofDim[SgdNet.Coefs](F, L)
     val newtonTol = math.max(params.thresh * 1e-4, 1e-10)
+    val stopTol = math.max(params.thresh * 1e-2, 1e-8)
     val dfGate = new SgdNet.DfGate(params, p)
-    var wg: Array[Double] = null
-    var wgESize = -1
     var cutL = L
     var l = 0
     while (l < L) {
       val lam = lambdas(l)
-      // floored strong-rule start; each KKT re-entry below takes the
-      // violators and every column at or above the same bound
-      val bound = screenBound(params.alpha, lam, lamPrev)
-      extendIdx(screened(grad, beta, inE, bound))
-      val tol = math.max(newtonTol, 1e-12) * math.max(lam, 1.0)
+      val bound = lamPrev.map(screenBound(alpha, lam, _))
+      extend((0 until F).flatMap(f => screened(grad(f), beta(f), inE, bound(f))).distinct)
+      val level = lam * alpha + math.max(newtonTol, 1e-12) * math.max(lam, 1.0)
+      val active = Array.fill(F)(true)
       var iter = 0
-      var done = false
-      var packCur = actPack(a0, beta)
-      if (wg == null || wgESize != eIdx.size) {
-        wg = passW(eIdx.toArray, packCur); wgESize = eIdx.size
-      }
-      while (iter < 25 && !done) {
-        var stepDone = false
-        var a0n = a0
-        var betaN: Array[Double] = null
-        var kktN: Array[Double] = null
-        var wgNext: Array[Double] = null
-        while (!stepDone) {
-          val eArr = eIdx.toArray
-          val m = eArr.length
-          val (ra0, rbeta) =
-            if (m == 0) {
-              val (_, _, _, zwN, wwN) = assemble(wg, eArr, 0)
-              (if (params.intercept) zwN / wwN else a0, Array.empty[Double])
-            } else {
-              val (aM, cMv, xwM, zw, ww) = assemble(wg, eArr, 0)
-              val init = Array.tabulate(m)(x2 => beta(eArr(x2)))
-              val r = CoordinateDescent.solve(aM, cMv, xwM, zw, ww, lam,
-                params.alpha, params.intercept, init,
-                thresh = newtonTol, maxIter = params.maxit)
-              (r.a0, r.beta)
+      while (iter < 25 && active.exists(identity)) {
+        refresh(Array.tabulate(F)(f =>
+          active(f) && (wg(f) == null || wg(f).swx.length != eIdx.size)))
+        var step: Array[(SgdNet.WGram, Array[Double])] = null
+        val ra0 = a0.clone()
+        val rbeta = beta.clone()
+        val maxD = new Array[Double](F)
+        while (step == null) {
+          val e = eIdx.toArray
+          for (f <- 0 until F if active(f)) {
+            val (r, d) = SgdNet.wlsStep(wg(f), s.n(f), e.map(beta(f)), a0(f)) {
+              (aM, c, xw, zBar, wBar, warm) =>
+                CoordinateDescent.solve(aM, c, xw, zBar, wBar, lam, alpha,
+                  params.intercept, warm, thresh = newtonTol, maxIter = params.maxit)
             }
-          val bFull = new Array[Double](p)
-          var x2 = 0
-          while (x2 < m) { bFull(eArr(x2)) = rbeta(x2); x2 += 1 }
-          val packN = actPack(ra0, bFull)
-          val (kkt, wgN) = passFused(eArr, packCur, packN)
-          val back = reentry(kkt, inE, lam * params.alpha + tol, bound)
-          if (back.isEmpty) {
-            a0n = ra0; betaN = bFull; kktN = kkt; wgNext = wgN
-            stepDone = true
-          } else {
-            extendIdx(back)
-            wg = passW(eIdx.toArray, packCur); wgESize = eIdx.size
+            ra0(f) = r.a0
+            rbeta(f) = new Array[Double](p)
+            e.indices.foreach(jj => rbeta(f)(e(jj)) = r.beta(jj))
+            maxD(f) = d
           }
+          val out = s.screened(e, ra0, rbeta.map(b => e.map(b)),
+            (a0, beta.map(b => e.map(b))), active)
+          passes += 1
+          val back = (0 until F).filter(active).flatMap(f =>
+            reentry(out(f)._2, inE, level, bound(f))).distinct
+          if (back.isEmpty) step = out
+          else { extend(back); refresh(active) }
         }
-        var maxD = math.abs(a0n - a0)
-        var j = 0
-        while (j < p) {
-          val d = math.abs(betaN(j) - beta(j)); if (d > maxD) maxD = d
-          j += 1
+        for (f <- 0 until F if active(f)) {
+          beta(f) = rbeta(f); a0(f) = ra0(f)
+          wg(f) = step(f)._1; grad(f) = step(f)._2
+          if (maxD(f) < stopTol) active(f) = false
         }
-        System.arraycopy(betaN, 0, beta, 0, p)
-        a0 = a0n
-        grad = kktN
-        wg = wgNext
-        packCur = actPack(a0, beta)
         iter += 1
-        if (maxD < math.max(params.thresh * 1e-2, 1e-8)) done = true
       }
-      if (!dfGate.admit(j => beta(j) != 0.0)) { cutL = l; l = L }
+      if (!dfGate.admit(j => beta(s.full)(j) != 0.0)) { cutL = l; l = L }
       else {
-        for (j <- 0 until p) betaOut(l)(0)(j) = beta(j) / scale(j)
-        a0Out(l)(0) = if (params.intercept)
-          a0 - (0 until p).map(j => betaOut(l)(0)(j) * mean(j)).sum
-        else a0
-        lamPrev = lam
+        for (f <- 0 until F) {
+          val (c, a) = s.original(f, SgdNet.Coefs.of(beta(f)), a0(f))
+          cOut(f)(l) = c; a0Out(f)(l) = a
+          lamPrev(f) = lam
+        }
         l += 1
       }
     }
     require(cutL > 0, "dfmax/pmax exclude every path point")
-    val lambdasT = lambdas.take(cutL)
-    val a0OutT = a0Out.take(cutL)
-    val betaOutT = betaOut.take(cutL)
-
-    // ------------------------- deviance: ONE sparse scan, per-l active
-    // coefficients on the ORIGINAL scale (sorted idx + binary search)
-    val actIdxL = betaOutT.map(bl => (0 until p).filter(bl(0)(_) != 0.0).toArray)
-    val actValL = actIdxL.zip(betaOutT).map { case (ixA, bl) => ixA.map(bl(0)) }
-    val a0L = a0OutT.map(_(0))
-    val muNull = if (params.intercept) yBar else 1.0
-    val bcPath = sc.broadcast((a0L, actIdxL, actValL))
-    val Lc = cutL
-    val devAcc = rows.treeAggregate(new Array[Double](Lc + 1))(
-      seqOp = (acc, r) => {
-        val (ix, vs, y) = r
-        val (a0s, ixs, vls) = bcPath.value
-        var l2 = 0
-        while (l2 < Lc) {
-          var eta = a0s(l2)
-          val ai = ixs(l2); val av = vls(l2)
-          var k = 0
-          while (k < ix.length) {
-            val s = java.util.Arrays.binarySearch(ai, ix(k))
-            if (s >= 0) eta += av(s) * vs(k)
-            k += 1
-          }
-          if (binom) {
-            val mx = math.max(eta, 0.0)
-            acc(l2) += 2.0 * (mx + math.log(math.exp(-mx) + math.exp(eta - mx)) - y * eta)
-          } else {
-            val mu = math.exp(math.max(math.min(eta, 30.0), -30.0))
-            val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-            acc(l2) += 2.0 * (ylog - (y - mu))
-          }
-          l2 += 1
-        }
-        if (!binom) {
-          val ylog = if (y > 0) y * math.log(y / muNull) else 0.0
-          acc(Lc) += 2.0 * (ylog - (y - muNull))
-        }
-        acc
-      },
-      combOp = (a, b2) => {
-        var i = 0; while (i <= Lc) { a(i) += b2(i); i += 1 }; a
-      }, depth = 2)
-    passes += 1
-    bcPath.destroy()
-    val nulldev =
-      if (binom) {
-        val nullP = if (params.intercept) yBar else 0.5
-        -2.0 * n * (SgdNet.safeXLog(yBar, nullP) +
-          SgdNet.safeXLog(1 - yBar, 1 - nullP))
-      } else devAcc(Lc)
-    val devRatio = Array.tabulate(Lc)(l2 =>
-      SgdNetModel.devRatio(devAcc(l2), nulldev))
-
-    new SgdNetModel(family, (0 until p).map(j => s"V$j").toArray,
-      Array(labelCol), classes, lambdasT, a0OutT, betaOutT, nulldev,
-      devRatio, nL, passes, params)
+    CvSgdNet.FoldPaths(lambdas.take(cutL), a0Out.map(_.take(cutL)),
+      cOut.map(_.take(cutL)), p, s.passes + passes)
   }
 
-  private def requireGlmContract(params: SgdNetParams,
-                                 featureCols: Seq[String]): Unit = {
+  private def requireGlmContract(params: SgdNetParams, p: Int): Unit = {
     require(params.alpha > 0,
       "the screened-Gram route needs alpha > 0 (at alpha = 0 every " +
         "coordinate is active and the weighted Gram IS p x p — ridge " +
@@ -3201,7 +2273,7 @@ object LargeP {
       "the screened-Gram GLM route composes with none of penaltyFactor " +
         "/ box limits / sgdnetCompat / standardizeResponse — reduce " +
         "dimensionality and use SgdNet.fit for those")
-    require(featureCols.nonEmpty, "the predictor matrix (x) is empty.")
+    require(p > 0, "the predictor matrix (x) is empty.")
     require(params.alpha <= 1,
       "elastic net mixing parameter (alpha) must be in [0, 1].")
     require(params.nlambda > 0, "lambda path cannot be of zero length.")
@@ -3210,488 +2282,5 @@ object LargeP {
     if (params.lambda != null)
       require(params.lambda.forall(_ >= 0),
         "penalty strengths (lambdas) must be positive.")
-  }
-
-  /** Rows carry (x, y, offset, v): every pass reads the frequency
-    * weight as vn = v·norm, rescaled to sum to n over the kept rows
-    * (norm from pass A's Σv; exactly 1.0 unweighted — the ratio forms
-    * below then run the identical per-row arithmetic, 1.0·x ≡ x),
-    * `offset` the per-row link-level offset (0.0 without one — every
-    * eta below is a0 + off + xs·β and every WLS target is z − off, the
-    * dense SgdNet.fitIrls shape). */
-  private def fitGlmImpl(rows: RDD[SgdNet.GlmRow],
-                         featureCols: Seq[String], labelCol: String,
-                         classes: Array[String], family: String,
-                         params: SgdNetParams,
-                         hasOffset: Boolean = false,
-                         weighted: Boolean = false): SgdNetModel = {
-    val p = featureCols.size
-    val sc = rows.sparkContext
-    val binom = family == "binomial"
-
-    // ------------------- pass A: O(p) weighted moments (+ offset sums)
-    val accA = rows.treeAggregate(new Array[Double](3 * p + 6))(
-      seqOp = (a, r) => {
-        val x = r.x; val y = r.y; val off = r.off; val vn = r.w // raw; rescaled by norm below
-        a(3 * p + 5) += vn
-        var j = 0
-        while (j < p) {
-          val xj = vn * x(j)
-          a(j) += xj; a(p + j) += xj * x(j); a(2 * p + j) += xj * y
-          j += 1
-        }
-        a(3 * p) += 1.0; a(3 * p + 1) += vn * y; a(3 * p + 2) += vn * y * y
-        a(3 * p + 3) += vn * off
-        a(3 * p + 4) += vn * math.exp(math.max(math.min(off, 30.0), -30.0))
-        a
-      },
-      combOp = (a, b) => {
-        var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-      }, depth = 2)
-    var passes = 1
-    val nD = accA(3 * p)
-    require(nD > 0, "the response (y) is empty.")
-    val norm = if (weighted) nD / accA(3 * p + 5) else 1.0
-    if (weighted) for (i <- 0 until 3 * p + 5 if i != 3 * p) accA(i) *= norm
-    val nL = nD.toLong
-    val n = nD
-    val mean = Array.tabulate(p)(j => accA(j) / nD)
-    val xSd = Array.tabulate(p) { j =>
-      val v = math.max(accA(p + j) / nD - mean(j) * mean(j), 0.0)
-      val s = math.sqrt(v); if (s > 0) s else 1.0
-    }
-    val scale = if (params.standardize) xSd else Array.fill(p)(1.0)
-    val center = if (params.intercept) mean else new Array[Double](p)
-    val yBar = accA(3 * p + 1) / nD
-    if (!binom) require(yBar > 0, "poisson response must contain positive counts")
-    val yCen = if (params.intercept) yBar else 0.0
-    // standardized null-covariance b (SufficientStats.standardize
-    // formula) — the dense IRLS routes' lambda-path input
-    val b0 = Array.tabulate(p)(j =>
-      (accA(2 * p + j) / nD - center(j) * yBar - yCen * mean(j) +
-        center(j) * yCen) / scale(j))
-
-    val minRatio = if (params.lambdaMinRatio.isNaN)
-      LambdaPath.defaultMinRatio(nL, p) else params.lambdaMinRatio
-
-    val bCS = sc.broadcast((center, scale))
-
-    // null intercept (the a0 init and the null-deviance anchor): the
-    // closed forms at the weighted yBar without an offset; with one,
-    // binomial+intercept solves Σvn·σ(a0+off) = Σvn·y by a driver
-    // Newton loop over scalar-pair passes (quadratic; the mean-offset-
-    // shifted logit start is exact for a constant offset), poisson+
-    // intercept is the exposure-weighted closed form
-    // ln(Σvn·y / Σvn·e^off) — both as SgdNet.nullIntercept
-    val a0Null: Double =
-      if (!params.intercept) 0.0
-      else if (binom) {
-        if (!hasOffset) {
-          if (yBar > 0 && yBar < 1) math.log(yBar / (1 - yBar)) else 0.0
-        } else {
-          require(yBar > 0 && yBar < 1,
-            "binomial response must contain both classes")
-          var a0N = math.log(yBar / (1 - yBar)) - accA(3 * p + 3) / n
-          var it = 0
-          var done = false
-          while (it < 25 && !done) {
-            val (s1, s2) = rows.treeAggregate((0.0, 0.0))(
-              (s, r) => {
-                val mu = 1.0 / (1.0 + math.exp(-(a0N + r.off)))
-                val vn = r.w * norm
-                (s._1 + vn * (r.y - mu),
-                  s._2 + vn * math.max(mu * (1.0 - mu), 1e-10))
-              },
-              (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
-            passes += 1
-            val step = s1 / s2
-            a0N += step
-            it += 1
-            if (math.abs(step) < 1e-12) done = true
-          }
-          a0N
-        }
-      } else {
-        if (!hasOffset) math.log(yBar)
-        else math.log(accA(3 * p + 1) / accA(3 * p + 4))
-      }
-
-    // per-family link kernel: eta -> (mu, w, z-producing pieces) is
-    // inlined in the passes below to keep the hot loop allocation-free
-
-    // --------------------------------- pass kernels (all standardized x)
-    // weighted moments over E at the point (a0w, actIdx/actVal):
-    // [packed swxx m(m+1)/2][swxz m][swx m][swz][sw]
-    def passW(eArr: Array[Int], a0w: Double, actIdx: Array[Int],
-              actVal: Array[Double]): Array[Double] = {
-      val m = eArr.length
-      val sz = m * (m + 1) / 2 + 2 * m + 2
-      val bc = sc.broadcast((eArr, actIdx, actVal))
-      val acc = rows.treeAggregate(new Array[Double](sz))(
-        seqOp = (a, r) => {
-          val x = r.x; val y = r.y; val off = r.off; val vn = r.w * norm
-          val (eL, aI, aV) = bc.value
-          val (ctr, scl) = bCS.value
-          var eta = a0w + off
-          var i = 0
-          while (i < aI.length) {
-            val j = aI(i); eta += aV(i) * (x(j) - ctr(j)) / scl(j); i += 1
-          }
-          // w carries the vn-folded IRLS weight; z is on the SOLVER
-          // scale (the WLS target excludes the offset)
-          var w = 0.0; var z = 0.0
-          if (binom) {
-            val mu = 1.0 / (1.0 + math.exp(-eta))
-            val wr = math.max(mu * (1.0 - mu), 1e-5)
-            w = wr * vn
-            z = eta + (y - mu) / wr - off
-          } else {
-            val etaC = math.max(math.min(eta, 30.0), -30.0)
-            val mu = math.exp(etaC)
-            val wr = math.max(mu, 1e-5)
-            w = wr * vn
-            z = etaC + (y - mu) / wr - off
-          }
-          val base2 = m * (m + 1) / 2
-          a(sz - 2) += w * z; a(sz - 1) += w
-          var jj = 0
-          while (jj < m) {
-            val ej = eL(jj)
-            val xsj = (x(ej) - ctr(ej)) / scl(ej)
-            val wxj = w * xsj
-            a(base2 + jj) += wxj * z
-            a(base2 + m + jj) += wxj
-            val base = jj * (jj + 1) / 2
-            var ii = 0
-            while (ii <= jj) {
-              val ei = eL(ii)
-              a(base + ii) += (x(ei) - ctr(ei)) / scl(ei) * wxj
-              ii += 1
-            }
-            jj += 1
-          }
-          a
-        },
-        combOp = (a, b2) => {
-          var i = 0; while (i < a.length) { a(i) += b2(i); i += 1 }; a
-        }, depth = 2)
-      passes += 1
-      bc.destroy()
-      acc
-    }
-
-    // FUSED pass: under the FROZEN weights of (a0w, actW) compute the
-    // full-p WLS KKT residual gradient at the candidate (a0n, actN)
-    // [slots 0..p-1], AND the next step's weighted moments over E at
-    // the candidate point's weights [slots p..]. One scan does both.
-    def passFused(eArr: Array[Int], a0w: Double, wIdx: Array[Int],
-                  wVal: Array[Double], a0n: Double, nIdx: Array[Int],
-                  nVal: Array[Double]): (Array[Double], Array[Double]) = {
-      val m = eArr.length
-      val szE = m * (m + 1) / 2 + 2 * m + 2
-      val bc = sc.broadcast((eArr, wIdx, wVal, nIdx, nVal))
-      val acc = rows.treeAggregate(new Array[Double](p + szE))(
-        seqOp = (a, r) => {
-          val x = r.x; val y = r.y; val off = r.off; val vn = r.w * norm
-          val (eL, wI, wV, nI, nV) = bc.value
-          val (ctr, scl) = bCS.value
-          var etaW = a0w + off
-          var i = 0
-          while (i < wI.length) {
-            val j = wI(i); etaW += wV(i) * (x(j) - ctr(j)) / scl(j); i += 1
-          }
-          // etaNs: the candidate point on the SOLVER scale (no offset);
-          // etaN adds the offset back for the link evaluations
-          var etaNs = a0n
-          i = 0
-          while (i < nI.length) {
-            val j = nI(i); etaNs += nV(i) * (x(j) - ctr(j)) / scl(j); i += 1
-          }
-          val etaN = etaNs + off
-          // frozen-weight WLS residual at the candidate point (z on the
-          // solver scale, so the residual is against etaNs)
-          var wF = 0.0; var zF = 0.0
-          if (binom) {
-            val mu = 1.0 / (1.0 + math.exp(-etaW))
-            wF = math.max(mu * (1.0 - mu), 1e-5)
-            zF = etaW + (y - mu) / wF - off
-          } else {
-            val etaC = math.max(math.min(etaW, 30.0), -30.0)
-            val mu = math.exp(etaC)
-            wF = math.max(mu, 1e-5)
-            zF = etaC + (y - mu) / wF - off
-          }
-          val resid = wF * vn * (zF - etaNs)
-          var j = 0
-          while (j < p) { a(j) += resid * (x(j) - ctr(j)) / scl(j); j += 1 }
-          // next-step weighted moments over E at the candidate point
-          var wN = 0.0; var zN = 0.0
-          if (binom) {
-            val mu = 1.0 / (1.0 + math.exp(-etaN))
-            val wr = math.max(mu * (1.0 - mu), 1e-5)
-            wN = wr * vn
-            zN = etaN + (y - mu) / wr - off
-          } else {
-            val etaC = math.max(math.min(etaN, 30.0), -30.0)
-            val mu = math.exp(etaC)
-            val wr = math.max(mu, 1e-5)
-            wN = wr * vn
-            zN = etaC + (y - mu) / wr - off
-          }
-          val base2 = p + m * (m + 1) / 2
-          a(p + szE - 2) += wN * zN; a(p + szE - 1) += wN
-          var jj = 0
-          while (jj < m) {
-            val ej = eL(jj)
-            val xsj = (x(ej) - ctr(ej)) / scl(ej)
-            val wxj = wN * xsj
-            a(base2 + jj) += wxj * zN
-            a(base2 + m + jj) += wxj
-            val base = p + jj * (jj + 1) / 2
-            var ii = 0
-            while (ii <= jj) {
-              val ei = eL(ii)
-              a(base + ii) += (x(ei) - ctr(ei)) / scl(ei) * wxj
-              ii += 1
-            }
-            jj += 1
-          }
-          a
-        },
-        combOp = (a, b2) => {
-          var i = 0; while (i < a.length) { a(i) += b2(i); i += 1 }; a
-        }, depth = 2)
-      passes += 1
-      bc.destroy()
-      val kkt = Array.tabulate(p)(j => acc(j) / n)
-      val wg = java.util.Arrays.copyOfRange(acc, p, p + szE)
-      (kkt, wg)
-    }
-
-    // gradient of the unpenalized loss at the INIT point (beta = 0,
-    // a0 = a0Init) — the strong-rule seed for the first path point
-    // (for !intercept inits this is NOT b0; one O(p) pass, exact).
-    // With an offset this is ALSO the path input: the null mean
-    // mu_i = g⁻¹(a0 + off_i) varies per row, so the offset-ignoring
-    // covariance b0 would start the path at a lambda where
-    // coefficients are already nonzero (the dense bOff correction)
-    def initGrad(a0i: Double): Array[Double] = {
-      val acc = rows.treeAggregate(new Array[Double](p))(
-        seqOp = (a, r) => {
-          val x = r.x; val y = r.y; val off = r.off; val vn = r.w * norm
-          val (ctr, scl) = bCS.value
-          val eta = a0i + off
-          val mu = if (binom) 1.0 / (1.0 + math.exp(-eta))
-            else math.exp(math.max(math.min(eta, 30.0), -30.0))
-          val resid = vn * (y - mu)
-          var j = 0
-          while (j < p) { a(j) += resid * (x(j) - ctr(j)) / scl(j); j += 1 }
-          a
-        },
-        combOp = (a, b2) => {
-          var i = 0; while (i < a.length) { a(i) += b2(i); i += 1 }; a
-        }, depth = 2)
-      passes += 1
-      Array.tabulate(p)(j => acc(j) / n)
-    }
-
-    // ------------------------------------- ever-candidate set E (indices
-    // only: the weighted Gram block is rebuilt per Newton step, so E
-    // carries no slab state — unlike the gaussian route's gramE)
-    val inE = new Array[Boolean](p)
-    val eIdx = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def extendIdx(newCols: Array[Int]): Unit = {
-      if (newCols.isEmpty) return
-      requireEFits(eIdx.size + newCols.size, "the O(|E|^2) active block")
-      newCols.foreach { j => inE(j) = true; eIdx += j }
-    }
-
-    // ------------------------------------- lambda path + gradient seed
-    var a0 = a0Null
-    // with an intercept and NO offset the init gradient IS b0 (mu_i ==
-    // yBar for both links at the intercept-only init) — skip the seed
-    // pass there; any offset needs the real gradient pass (and it IS
-    // the path input, the dense routes' bOff correction)
-    var grad = if (!hasOffset && params.intercept) b0.clone()
-      else initGrad(a0)
-    val pathB = if (hasOffset) grad else b0
-    val lambdas = if (params.lambda != null) params.lambda
-      else LambdaPath.build(Array(pathB), params.alpha, params.nlambda,
-        minRatio, null)
-    val lmaxData = pathB.map(math.abs).max / math.max(params.alpha, 1e-3)
-
-    // ----------------------------------------------------- path loop
-    val L = lambdas.length
-    val a0Out = Array.ofDim[Double](L, 1)
-    val betaOut = Array.ofDim[Double](L, 1, p)
-    val beta = new Array[Double](p) // standardized coords, warm across l
-    var lamPrev = lmaxData
-    val newtonTol = math.max(params.thresh * 1e-4, 1e-10)
-    val dfGate = new SgdNet.DfGate(params, p)
-    // frozen-weight moments over E at the current (a0, beta) — carried
-    // ACROSS path points (the previous point's last fused pass computed
-    // them at exactly this point); invalidated only when E grows
-    var wg: Array[Double] = null
-    var wgESize = -1
-    var cutL = L
-    var l = 0
-    def actOf(bb: Array[Double]): (Array[Int], Array[Double]) = {
-      val idx = (0 until p).filter(bb(_) != 0.0).toArray
-      (idx, idx.map(bb))
-    }
-    while (l < L) {
-      val lam = lambdas(l)
-      // floored strong-rule start; each KKT re-entry below takes the
-      // violators and every column at or above the same bound
-      val bound = screenBound(params.alpha, lam, lamPrev)
-      extendIdx(screened(grad, beta, inE, bound))
-      val tol = math.max(newtonTol, 1e-12) * math.max(lam, 1.0)
-      var iter = 0
-      var done = false
-      var (wi, wv) = actOf(beta)
-      if (wg == null || wgESize != eIdx.size) {
-        wg = passW(eIdx.toArray, a0, wi, wv); wgESize = eIdx.size
-      }
-      while (iter < 25 && !done) {
-        var stepDone = false
-        var a0n = a0
-        var betaN: Array[Double] = null
-        var kktN: Array[Double] = null
-        var wgNext: Array[Double] = null
-        while (!stepDone) {
-          val eArr = eIdx.toArray
-          val m = eArr.length
-          val base2 = m * (m + 1) / 2
-          val ninv = 1.0 / n
-          val (ra0, rbeta) =
-            if (m == 0) {
-              val zw = wg(base2) * ninv // note: with m = 0, slots collapse
-              val ww = wg(base2 + 1) * ninv
-              (if (params.intercept) zw / ww else a0, Array.empty[Double])
-            } else {
-              val aM = unpackSym(wg, m, ninv)
-              val cM = Array.tabulate(m)(x2 => wg(base2 + x2) * ninv)
-              val xwM = Array.tabulate(m)(x2 => wg(base2 + m + x2) * ninv)
-              val zw = wg(base2 + 2 * m) * ninv
-              val ww = wg(base2 + 2 * m + 1) * ninv
-              val init = Array.tabulate(m)(x2 => beta(eArr(x2)))
-              val r = CoordinateDescent.solve(aM, cM, xwM, zw, ww, lam,
-                params.alpha, params.intercept, init,
-                thresh = newtonTol, maxIter = params.maxit)
-              (r.a0, r.beta)
-            }
-          val bFull = new Array[Double](p)
-          var x2 = 0
-          while (x2 < m) { bFull(eArr(x2)) = rbeta(x2); x2 += 1 }
-          val (ni, nv) = actOf(bFull)
-          val (kkt, wgN) = passFused(eArr, a0, wi, wv, ra0, ni, nv)
-          val back = reentry(kkt, inE, lam * params.alpha + tol, bound)
-          if (back.isEmpty) {
-            a0n = ra0; betaN = bFull; kktN = kkt; wgNext = wgN
-            stepDone = true
-          } else {
-            extendIdx(back)
-            // the fused pass's E-moments are stale (E grew): rebuild the
-            // frozen-weight moments over the grown E and re-solve
-            wg = passW(eIdx.toArray, a0, wi, wv); wgESize = eIdx.size
-          }
-        }
-        var maxD = math.abs(a0n - a0)
-        var j = 0
-        while (j < p) {
-          val d = math.abs(betaN(j) - beta(j)); if (d > maxD) maxD = d
-          j += 1
-        }
-        System.arraycopy(betaN, 0, beta, 0, p)
-        a0 = a0n
-        grad = kktN
-        wg = wgNext
-        val t = actOf(beta); wi = t._1; wv = t._2
-        iter += 1
-        if (maxD < math.max(params.thresh * 1e-2, 1e-8)) done = true
-      }
-      if (!dfGate.admit(j => beta(j) != 0.0)) { cutL = l; l = L }
-      else {
-        for (j <- 0 until p) betaOut(l)(0)(j) = beta(j) / scale(j)
-        a0Out(l)(0) = if (params.intercept)
-          a0 - (0 until p).map(j => betaOut(l)(0)(j) * mean(j)).sum
-        else a0
-        lamPrev = lam
-        l += 1
-      }
-    }
-    require(cutL > 0, "dfmax/pmax exclude every path point")
-    val lambdasT = lambdas.take(cutL)
-    val a0OutT = a0Out.take(cutL)
-    val betaOutT = betaOut.take(cutL)
-
-    // ------------------------- deviance: ONE sparse-coefficient scan
-    // (active-only per path point — the dense deviance pass is O(L·p)
-    // per row, unaffordable at large p)
-    val actIdxL = betaOutT.map(bl => (0 until p).filter(bl(0)(_) != 0.0).toArray)
-    val actValL = actIdxL.zip(betaOutT).map { case (ix, bl) => ix.map(bl(0)) }
-    val a0L = a0OutT.map(_(0))
-    val muNull = if (params.intercept) yBar else 1.0
-    // binomial keeps its closed-form nulldev in the plain regime; any
-    // weights/offset make the null a per-row quantity (binDev(a0Null +
-    // off)·vn — the dense SgdNet.fitIrls forms), so
-    // the scan accumulates it in slot Lc like poisson always has
-    val binNullScan = binom && (weighted || hasOffset)
-    val a0NullD = a0Null
-    val bcPath = sc.broadcast((a0L, actIdxL, actValL))
-    val Lc = cutL
-    val devAcc = rows.treeAggregate(new Array[Double](Lc + 1))(
-      seqOp = (acc, r) => {
-        val x = r.x; val y = r.y; val off = r.off; val vn = r.w * norm
-        val (a0s, ixs, vls) = bcPath.value
-        var l2 = 0
-        while (l2 < Lc) {
-          var eta = a0s(l2) + off
-          val ix = ixs(l2); val vl = vls(l2)
-          var i = 0
-          while (i < ix.length) { eta += vl(i) * x(ix(i)); i += 1 }
-          if (binom) {
-            val mx = math.max(eta, 0.0)
-            acc(l2) += vn * 2.0 *
-              (mx + math.log(math.exp(-mx) + math.exp(eta - mx)) - y * eta)
-          } else {
-            val mu = math.exp(math.max(math.min(eta, 30.0), -30.0))
-            val ylog = if (y > 0) y * math.log(y / mu) else 0.0
-            acc(l2) += vn * 2.0 * (ylog - (y - mu))
-          }
-          l2 += 1
-        }
-        if (!binom) {
-          val mu0 = if (hasOffset)
-            math.exp(math.max(math.min(a0NullD + off, 30.0), -30.0))
-          else muNull
-          val ylog = if (y > 0) y * math.log(y / mu0) else 0.0
-          acc(Lc) += vn * 2.0 * (ylog - (y - mu0))
-        } else if (binNullScan) {
-          val eta0 = a0NullD + off
-          val mx = math.max(eta0, 0.0)
-          acc(Lc) += vn * 2.0 *
-            (mx + math.log(math.exp(-mx) + math.exp(eta0 - mx)) - y * eta0)
-        }
-        acc
-      },
-      combOp = (a, b2) => {
-        var i = 0; while (i <= Lc) { a(i) += b2(i); i += 1 }; a
-      }, depth = 2)
-    passes += 1
-    bcPath.destroy()
-    val nulldev =
-      if (binom && !binNullScan) {
-        val nullP = if (params.intercept) yBar else 0.5
-        -2.0 * n * (SgdNet.safeXLog(yBar, nullP) +
-          SgdNet.safeXLog(1 - yBar, 1 - nullP))
-      } else devAcc(Lc)
-    val devRatio = Array.tabulate(Lc)(l2 =>
-      SgdNetModel.devRatio(devAcc(l2), nulldev))
-
-    bCS.destroy()
-    new SgdNetModel(family, featureCols.toArray, Array(labelCol),
-      classes, lambdasT, a0OutT, betaOutT, nulldev, devRatio, nL, passes,
-      params)
   }
 }

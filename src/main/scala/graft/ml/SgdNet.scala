@@ -1018,11 +1018,9 @@ object SgdNet {
                     gamma: Double = 1.0,
                     weightCol: String = null,
                     offsetCol: String = null): RelaxedPath = {
-    import org.apache.spark.sql.functions.{col, lit}
     require(params.family == "binomial" || params.family == "poisson",
       s"relaxedFitGlm is the IRLS-family route (binomial|poisson), not ${params.family}")
     require(gamma >= 0 && gamma <= 1, "gamma must be in [0, 1]")
-    val binomial = params.family == "binomial"
     val weighted = weightCol != null
     val hasOffset = offsetCol != null
     val model = (weighted, hasOffset) match {
@@ -1035,32 +1033,23 @@ object SgdNet {
         offsetCol, params)
       case (false, false) => fit(df, featureCols, labelCol, params)
     }
-    val p = featureCols.size
-    val yExpr =
-      if (binomial) {
-        val positive = model.classLabels(1)
-        (col(labelCol).cast("string") === positive).cast("double")
-      } else col(labelCol).cast("double")
-    val wExpr = if (weighted) col(weightCol).cast("double") else lit(1.0)
-    val oExpr = if (hasOffset) col(offsetCol).cast("double") else lit(0.0)
-    val rows0 = df.select((featureCols.map(c => col(c).cast("double")) :+
-        yExpr :+ wExpr :+ oExpr): _*)
-      .rdd.map { r =>
-        val x = new Array[Double](p)
-        var j = 0
-        while (j < p) { x(j) = r.getDouble(j); j += 1 }
-        (x, r.getDouble(p), r.getDouble(p + 1), r.getDouble(p + 2))
-      }
-    val rows = (if (weighted)
-        rows0.map { t => require(t._3 >= 0, "weights must be non-negative"); t }
-          .filter(_._3 > 0)
-      else rows0).persist(StorageLevel.MEMORY_AND_DISK)
+    val rows = glmRows(df, featureCols, glmLabel(model, labelCol), weightCol,
+      offsetCol)
     try relaxedGlmRefit(rows, model, params, gamma, hasOffset)
     finally { rows.unpersist(blocking = false); () }
   }
 
+  /** The response column of a fitted binomial/poisson `model`: binomial
+    * as P(label == its second class), poisson as the count. */
+  private[ml] def glmLabel(model: SgdNetModel, labelCol: String): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.col
+    if (model.family == "binomial")
+      (col(labelCol).cast("string") === model.classLabels(1)).cast("double")
+    else col(labelCol).cast("double")
+  }
+
   /** Lockstep unpenalized IRLS refits of a fitted GLM path's active
-    * sets over (x, y, v, off) rows — the [[relaxedFitGlm]] refit stage
+    * sets over [[glmRows]] rows — the [[relaxedFitGlm]] refit stage
     * as a standalone: every cluster pass accumulates only the
     * RESTRICTED per-lambda moment blocks (O(Σ_live |A_l|²) per row,
     * never p²), so the LARGE-P screened penalized paths
@@ -1069,7 +1058,7 @@ object SgdNet {
     * Weights enter RAW (the WLS solves and the null closed forms are
     * invariant to uniform weight scaling, so raw v and sum-to-n
     * normalized vn give identical refits). */
-  private[ml] def relaxedGlmRefit(rows: RDD[(Array[Double], Double, Double, Double)],
+  private[ml] def relaxedGlmRefit(rows: RDD[GlmRow],
                                   model: SgdNetModel, params: SgdNetParams,
                                   gamma: Double, hasOffset: Boolean): RelaxedPath = {
     val binomial = params.family == "binomial"
@@ -1087,22 +1076,22 @@ object SgdNet {
           if (!params.intercept) 0.0
           else if (!hasOffset) {
             val (sy, n) = rows.treeAggregate((0.0, 0.0))(
-              (s, r) => (s._1 + r._3 * r._2, s._2 + r._3),
+              (s, r) => (s._1 + r.w * r.y, s._2 + r.w),
               (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
             val ybar = sy / n
             if (binomial) math.log(ybar / (1 - ybar)) else math.log(ybar)
           } else if (!binomial) {
             // poisson exposure MLE: a0 = ln(Σv·y / Σv·e^off)
             val (sy, se) = rows.treeAggregate((0.0, 0.0))(
-              (s, r) => (s._1 + r._3 * r._2, s._2 + r._3 * math.exp(
-                math.max(math.min(r._4, 30.0), -30.0))),
+              (s, r) => (s._1 + r.w * r.y, s._2 + r.w * math.exp(
+                math.max(math.min(r.off, 30.0), -30.0))),
               (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
             math.log(sy / se)
           } else {
             // binomial offset null: Newton on Σv·σ(a0+off) = Σv·y from
             // the mean-offset-shifted logit (exact for constant offsets)
             val (sy, sv, so) = rows.treeAggregate((0.0, 0.0, 0.0))(
-              (s, r) => (s._1 + r._3 * r._2, s._2 + r._3, s._3 + r._3 * r._4),
+              (s, r) => (s._1 + r.w * r.y, s._2 + r.w, s._3 + r.w * r.off),
               (a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3), depth = 2)
             val ybar = sy / sv
             var a0n = math.log(ybar / (1 - ybar)) - so / sv
@@ -1111,8 +1100,8 @@ object SgdNet {
             while (!doneN && it < 50) {
               val (g, h) = rows.treeAggregate((0.0, 0.0))(
                 (s, r) => {
-                  val mu = 1.0 / (1.0 + math.exp(-(a0n + r._4)))
-                  (s._1 + r._3 * (mu - r._2), s._2 + r._3 * mu * (1.0 - mu))
+                  val mu = 1.0 / (1.0 + math.exp(-(a0n + r.off)))
+                  (s._1 + r.w * (mu - r.y), s._2 + r.w * mu * (1.0 - mu))
                 },
                 (a, b) => (a._1 + b._1, a._2 + b._2), depth = 2)
               if (math.abs(g / sv) < 1e-12 || h <= 0) doneN = true
@@ -1140,8 +1129,8 @@ object SgdNet {
         val bState = sc.broadcast((live, live.map(active(_)),
           live.map(a0R(_)), live.map(bR(_)), offs))
         val acc = rows.treeAggregate(new Array[Double](total))(
-          (s, xy) => {
-            val (x, y, v, off) = xy
+          (s, row) => {
+            val x = row.x; val y = row.y; val v = row.w; val off = row.off
             val (lv, acts, a0s, bs, os) = bState.value
             var i = 0
             while (i < lv.length) {
@@ -1344,44 +1333,113 @@ object SgdNet {
     def off: Double
     def w: Double
     def fold: Int
-    /** `init` + x·b, accumulated left to right. */
-    def eta(init: Double, b: Array[Double]): Double
-    /** Adds this row's w-weighted moments of (x, y) to `g`. */
-    def addTo(g: GramStats): Unit
+    /** `init` + x·β over the nonzero coefficients `c`, accumulated in
+      * column order (dense) or nonzero order (CSR). */
+    def eta(init: Double, c: Coefs): Double
+    /** Adds this row's w-weighted O(p) moments of (x, y) to `m`. */
+    def addTo(m: FoldMoments): Unit
   }
 
   private[ml] final case class GlmRow(x: Array[Double], y: Double,
                                       off: Double, w: Double,
                                       fold: Int) extends IrlsRow {
-    def eta(init: Double, b: Array[Double]): Double = {
+    def eta(init: Double, c: Coefs): Double = {
       var e = init
-      var j = 0
-      while (j < x.length) { e += b(j) * x(j); j += 1 }
+      var i = 0
+      while (i < c.idx.length) { e += c.vals(i) * x(c.idx(i)); i += 1 }
       e
     }
-    def addTo(g: GramStats): Unit = g.addWeighted(x, Array(y), w)
+    def addTo(m: FoldMoments): Unit = {
+      var j = 0
+      while (j < x.length) { m.add(j, x(j), w, y); j += 1 }
+      m.addRow(w, y)
+    }
   }
 
-  /** The CSR twin of [[GlmRow]]: nonzero indices (sorted) and values of x. */
+  /** The CSR twin of [[GlmRow]]: nonzero indices and values of x. */
   private[ml] final case class CsrRow(idx: Array[Int], vals: Array[Double],
                                       y: Double, off: Double, w: Double,
                                       fold: Int) extends IrlsRow {
-    def eta(init: Double, b: Array[Double]): Double = {
+    def eta(init: Double, c: Coefs): Double = {
       var e = init
       var i = 0
-      while (i < idx.length) { e += b(idx(i)) * vals(i); i += 1 }
+      while (i < idx.length) {
+        val s = java.util.Arrays.binarySearch(c.idx, idx(i))
+        if (s >= 0) e += c.vals(s) * vals(i)
+        i += 1
+      }
       e
     }
-    def addTo(g: GramStats): Unit = g.addSparseWeighted(idx, vals, Array(y), w)
+    def addTo(m: FoldMoments): Unit = {
+      var i = 0
+      while (i < idx.length) { m.add(idx(i), vals(i), w, y); i += 1 }
+      m.addRow(w, y)
+    }
   }
 
-  /** One fold's raw-weight moments: the [[GramStats]] of (x, y), Σv and,
-    * when asked for, Σv·e^off (offset clamped to ±30) and Σv·off. */
+  /** The nonzero coefficients of one path point: sorted column indices
+    * and their values. Deviance and scoring passes broadcast these, so
+    * they cost O(|active|) per row and point, not O(p). */
+  private[ml] final case class Coefs(idx: Array[Int], vals: Array[Double]) {
+    def dense(p: Int): Array[Double] = {
+      val b = new Array[Double](p)
+      var i = 0
+      while (i < idx.length) { b(idx(i)) = vals(i); i += 1 }
+      b
+    }
+  }
+
+  private[ml] object Coefs {
+    def of(beta: Array[Double]): Coefs = {
+      val idx = beta.indices.filter(beta(_) != 0.0).toArray
+      Coefs(idx, idx.map(beta))
+    }
+  }
+
+  /** One fold's raw-weight O(p) moments: rows, Σv, Σv·y, per column
+    * Σv·x, Σv·x² and Σv·x·y, and, when asked for, Σv·e^off (offset
+    * clamped to ±30) and Σv·off. */
   private[ml] final class FoldMoments(p: Int) extends Serializable {
-    val g = new GramStats(p, 1)
-    var sw = 0.0; var sExpOff = 0.0; var sOff = 0.0
+    var n = 0L
+    var sw = 0.0; var swy = 0.0; var sExpOff = 0.0; var sOff = 0.0
+    val swx = new Array[Double](p)
+    val swxx = new Array[Double](p)
+    val swxy = new Array[Double](p)
+    @inline def add(j: Int, xj: Double, w: Double, y: Double): Unit = {
+      val wxj = w * xj
+      swx(j) += wxj; swxx(j) += xj * wxj; swxy(j) += wxj * y
+    }
+    def addRow(w: Double, y: Double): Unit = { n += 1; sw += w; swy += w * y }
     def merge(o: FoldMoments): FoldMoments = {
-      g.merge(o.g); sw += o.sw; sExpOff += o.sExpOff; sOff += o.sOff
+      n += o.n; sw += o.sw; swy += o.swy; sExpOff += o.sExpOff; sOff += o.sOff
+      var j = 0
+      while (j < p) {
+        swx(j) += o.swx(j); swxx(j) += o.swxx(j); swxy(j) += o.swxy(j)
+        j += 1
+      }
+      this
+    }
+  }
+
+  /** The zero of a screened pass: one [[EStats]] per active model. */
+  private def estats(F: Int, m: Int, kktP: Int, active: Array[Boolean]): Array[EStats] =
+    Array.tabulate(F)(f => if (active(f)) new EStats(m, kktP) else null)
+
+  private def mergeAll(a: Array[EStats], b: Array[EStats]): Array[EStats] = {
+    var f = 0; while (f < a.length) { if (a(f) != null) a(f).merge(b(f)); f += 1 }; a
+  }
+
+  /** What one screened pass returns for one model: the IRLS moments
+    * over the ever-candidate set E and, when asked for, the full-p KKT
+    * sums with their row total `sr` (CSR rows center after the pass). */
+  private[ml] final class EStats(m: Int, p: Int) extends Serializable {
+    val wg = new WGram(m)
+    val kkt = new Array[Double](p)
+    var sr = 0.0
+    def merge(o: EStats): EStats = {
+      wg.merge(o.wg); sr += o.sr
+      var j = 0
+      while (j < kkt.length) { kkt(j) += o.kkt(j); j += 1 }
       this
     }
   }
@@ -1410,8 +1468,7 @@ object SgdNet {
               s"fold index ${r.fold} outside [0, $nfolds)")
             r.fold
           })
-          r.addTo(m.g)
-          m.sw += r.w
+          r.addTo(m)
           if (offsetSums) {
             m.sExpOff += r.w * math.exp(math.max(math.min(r.off, 30.0), -30.0))
             m.sOff += r.w * r.off
@@ -1439,6 +1496,21 @@ object SgdNet {
                      scale: Array[Double], a0: Double, norm: Double,
                      n: Double): Array[Double]
 
+    /** One screened pass for every `active` model f over the columns
+      * `e` (the ever-candidate set E, which holds every nonzero
+      * coefficient): at η = off + a0(f) + xs_E·bE(f) — bE the
+      * standardized coefficients of E's columns — the [[gram]] moments
+      * restricted to E; and, given `frozen` = (a0', bE'), the full-p KKT
+      * vector of the WLS under the weights of that point,
+      * Σ xs_j·v·norm·w'·(z' − off − a0 − xs_E·bE), not yet divided by
+      * n. Returns (moments over E, KKT vector or null); inactive models
+      * come back null. */
+    def screened(fam: IrlsFamily, mean: Array[Array[Double]],
+                 scale: Array[Array[Double]], norm: Array[Double],
+                 e: Array[Int], a0: Array[Double], bE: Array[Array[Double]],
+                 frozen: (Array[Double], Array[Array[Double]]),
+                 active: Array[Boolean]): Array[(WGram, Array[Double])]
+
     /** One pass of the binomial offset-null Newton for every model f:
       * (Σvn·(y − μ), Σvn·μ(1 − μ)) at η = a0(f) + off, interleaved. */
     def nullNewtonSums(a0: Array[Double], norm: Array[Double]): Array[Double] = {
@@ -1463,22 +1535,26 @@ object SgdNet {
 
     /** One pass: the weight·`norm` deviance over every row at
       * η = off + a0 + x·β of every path point (ORIGINAL scale
-      * coefficients, [L][1] and [L][1][p]). */
-    def deviance(fam: IrlsFamily, a0: Array[Array[Double]],
-                 beta: Array[Array[Array[Double]]], norm: Double): Array[Double] = {
+      * intercepts and nonzero coefficients). */
+    def deviance(fam: IrlsFamily, a0: Array[Double], coefs: Array[Coefs],
+                 norm: Double): Array[Double] = {
       val L = a0.length
-      rdd.treeAggregate(new Array[Double](L))(
+      val bc = rdd.sparkContext.broadcast(coefs)
+      val out = rdd.treeAggregate(new Array[Double](L))(
         seqOp = (acc, r) => {
+          val cs = bc.value
           val vn = r.w * norm
           var l = 0
           while (l < L) {
-            acc(l) += vn * fam.unitDeviance(r.y, r.eta(a0(l)(0) + r.off, beta(l)(0)))
+            acc(l) += vn * fam.unitDeviance(r.y, r.eta(a0(l) + r.off, cs(l)))
             l += 1
           }
           acc
         },
         combOp = (a, b) => { var i = 0; while (i < L) { a(i) += b(i); i += 1 }; a },
         depth = 2)
+      bc.destroy()
+      out
     }
   }
 
@@ -1536,6 +1612,63 @@ object SgdNet {
         combOp = (a, b) => { var i = 0; while (i < p) { a(i) += b(i); i += 1 }; a },
         depth = 2).map(_ / n)
     }
+
+    def screened(fam: IrlsFamily, mean: Array[Array[Double]],
+                 scale: Array[Array[Double]], norm: Array[Double],
+                 e: Array[Int], a0: Array[Double], bE: Array[Array[Double]],
+                 frozen: (Array[Double], Array[Array[Double]]),
+                 active: Array[Boolean]): Array[(WGram, Array[Double])] = {
+      val p = this.p
+      val F = a0.length
+      val m = e.length
+      val kkt = frozen != null
+      val a0F = if (kkt) frozen._1 else null
+      val bc = rdd.sparkContext.broadcast((mean, scale, bE,
+        if (kkt) frozen._2 else null))
+      val out = rdd.treeAggregate(estats(F, m, if (kkt) p else 0, active))(
+        seqOp = (acc, r) => {
+          val (mn, sl, b, bF) = bc.value
+          val xr = r.x; val y = r.y; val off = r.off
+          var f = 0
+          while (f < F) {
+            if (f != r.fold && active(f)) {
+              val mf = mn(f); val sf = sl(f); val bf = b(f)
+              val xs = new Array[Double](m)
+              var etaS = a0(f)
+              var jj = 0
+              while (jj < m) {
+                val j = e(jj)
+                xs(jj) = (xr(j) - mf(j)) / sf(j)
+                etaS += xs(jj) * bf(jj)
+                jj += 1
+              }
+              val vn = r.w * norm(f)
+              val ec = fam.clampEta(etaS + off)
+              val mu = fam.mean(ec)
+              val w0 = fam.weight(mu)
+              acc(f).wg.add(xs, w0 * vn, ec + (y - mu) / w0 - off)
+              if (kkt) {
+                val bz = bF(f)
+                var etaF = a0F(f)
+                jj = 0
+                while (jj < m) { etaF += xs(jj) * bz(jj); jj += 1 }
+                val eF = fam.clampEta(etaF + off)
+                val muF = fam.mean(eF)
+                val wF = fam.weight(muF)
+                val res = wF * vn * (eF + (y - muF) / wF - off - etaS)
+                val k = acc(f).kkt
+                var j = 0
+                while (j < p) { k(j) += (xr(j) - mf(j)) / sf(j) * res; j += 1 }
+              }
+            }
+            f += 1
+          }
+          acc
+        },
+        combOp = mergeAll(_, _), depth = 2)
+      bc.destroy()
+      out.map(s => if (s == null) null else (s.wg, if (kkt) s.kkt else null))
+    }
   }
 
   /** CSR rows. Every pass accumulates UNCENTERED sums over each row's
@@ -1590,11 +1723,14 @@ object SgdNet {
         if (raw(f) == null) null else centered(raw(f), mean(f), scale(f)))
     }
 
+    /** `wg`'s uncentered sums over the columns with these means and
+      * scales, centered and standardized. */
     private def centered(wg: WGram, mean: Array[Double], scale: Array[Double]): WGram = {
-      val std = new WGram(p)
+      val m = mean.length
+      val std = new WGram(m)
       std.sw = wg.sw; std.swz = wg.swz
       var j = 0
-      while (j < p) {
+      while (j < m) {
         std.swx(j) = (wg.swx(j) - mean(j) * wg.sw) / scale(j)
         std.swxz(j) = (wg.swxz(j) - mean(j) * wg.swz) / scale(j)
         var i = 0
@@ -1626,6 +1762,95 @@ object SgdNet {
         combOp = (a, b) => { var i = 0; while (i <= p) { a(i) += b(i); i += 1 }; a },
         depth = 2)
       Array.tabulate(p)(j => (acc(j) - mean(j) * acc(p)) / scale(j) / n)
+    }
+
+    /** O(nnz + k_E²) per row and model, k_E the row's nonzeros inside E:
+      * each row gathers those once, as E slots; the moments and the KKT
+      * sums stay uncentered, and the linear predictor takes the per-pass
+      * scalar a0 − Σ_E m_j·β_j/s_j. */
+    def screened(fam: IrlsFamily, mean: Array[Array[Double]],
+                 scale: Array[Array[Double]], norm: Array[Double],
+                 e: Array[Int], a0: Array[Double], bE: Array[Array[Double]],
+                 frozen: (Array[Double], Array[Array[Double]]),
+                 active: Array[Boolean]): Array[(WGram, Array[Double])] = {
+      val p = this.p
+      val F = a0.length
+      val m = e.length
+      val kkt = frozen != null
+      // (intercept scalar, β/s over E) of each active model at a point
+      def uncentered(a: Array[Double], b: Array[Array[Double]]) = {
+        val bos = Array.tabulate(F)(f =>
+          if (active(f)) Array.tabulate(m)(jj => b(f)(jj) / scale(f)(e(jj))) else null)
+        val c0 = Array.tabulate(F) { f =>
+          var c = a(f)
+          var jj = 0
+          while (active(f) && jj < m) { c -= mean(f)(e(jj)) * bos(f)(jj); jj += 1 }
+          c
+        }
+        (c0, bos)
+      }
+      val (c0, bos) = uncentered(a0, bE)
+      val (c0F, bosF) = if (kkt) uncentered(frozen._1, frozen._2) else (null, null)
+      val slot = Array.fill(p)(-1)
+      e.indices.foreach(jj => slot(e(jj)) = jj)
+      val bc = rdd.sparkContext.broadcast((slot, bos, bosF))
+      val raw = rdd.treeAggregate(estats(F, m, if (kkt) p else 0, active))(
+        seqOp = (acc, r) => {
+          val (sl, bo, boF) = bc.value
+          val idx = r.idx; val vals = r.vals; val y = r.y; val off = r.off
+          var k = 0
+          var cnt = 0
+          while (k < idx.length) { if (sl(idx(k)) >= 0) cnt += 1; k += 1 }
+          val eS = new Array[Int](cnt); val eV = new Array[Double](cnt)
+          k = 0
+          var t = 0
+          while (k < idx.length) {
+            val s = sl(idx(k))
+            if (s >= 0) { eS(t) = s; eV(t) = vals(k); t += 1 }
+            k += 1
+          }
+          var f = 0
+          while (f < F) {
+            if (f != r.fold && active(f)) {
+              val bf = bo(f)
+              var etaS = c0(f)
+              t = 0
+              while (t < cnt) { etaS += eV(t) * bf(eS(t)); t += 1 }
+              val vn = r.w * norm(f)
+              val ec = fam.clampEta(etaS + off)
+              val mu = fam.mean(ec)
+              val w0 = fam.weight(mu)
+              acc(f).wg.addSparse(eS, eV, w0 * vn, ec + (y - mu) / w0 - off)
+              if (kkt) {
+                val bz = boF(f)
+                var etaF = c0F(f)
+                t = 0
+                while (t < cnt) { etaF += eV(t) * bz(eS(t)); t += 1 }
+                val eF = fam.clampEta(etaF + off)
+                val muF = fam.mean(eF)
+                val wF = fam.weight(muF)
+                val res = wF * vn * (eF + (y - muF) / wF - off - etaS)
+                if (res != 0.0) {
+                  val kk = acc(f).kkt
+                  k = 0
+                  while (k < idx.length) { kk(idx(k)) += res * vals(k); k += 1 }
+                  acc(f).sr += res
+                }
+              }
+            }
+            f += 1
+          }
+          acc
+        },
+        combOp = mergeAll(_, _), depth = 2)
+      bc.destroy()
+      Array.tabulate(F) { f =>
+        val s = raw(f)
+        if (s == null) null
+        else (centered(s.wg, e.map(mean(f)), e.map(scale(f))),
+          if (kkt) Array.tabulate(p)(j => (s.kkt(j) - mean(f)(j) * s.sr) / scale(f)(j))
+          else null)
+      }
     }
   }
 
@@ -1766,14 +1991,20 @@ object SgdNet {
     * (every row but fold f's), model `nfolds` the full data; a single
     * fit is `nfolds` = 0, one model. Construction runs one moments pass
     * and, for binomial with an offset, the null-intercept Newton passes;
-    * [[pathB]] adds the full model's λ_max pass when it is read.
+    * [[pathB]] adds the full model's λ_max pass when it is read
+    * ([[passes]] counts them all).
     *
-    * Each model's train moments are total minus its fold, with the raw
-    * weights rescaled to sum to its row count (`norm`, 1.0 unweighted:
-    * moments are linear in the weight, so one raw pass serves every
-    * model). Null intercepts: logit(ȳ) / ln(ȳ) without an offset; with
-    * one, poisson takes the exposure MLE ln(Σv·y / Σv·e^off) and binomial
-    * solves Σv·σ(a0 + off) = Σv·y by a Newton loop over one fold-tiled
+    * The moments pass keeps O(p) numbers per fold (Σv·x, Σv·x², Σv·x·y,
+    * Σv·y, Σv, rows and the offset sums), so setup runs at any p; the
+    * Gram is the caller's: the full one per IRLS pass ([[gram]]) or the
+    * one over an ever-candidate set ([[screened]]). Each model's train
+    * moments are total minus its fold, with the raw weights rescaled to
+    * sum to its row count (`norm`, 1.0 unweighted: moments are linear
+    * in the weight, so one raw pass serves every model), then centered
+    * and standardized as [[SufficientStats.standardize]] does. Null
+    * intercepts: logit(ȳ) / ln(ȳ) without an offset; with one, poisson
+    * takes the exposure MLE ln(Σv·y / Σv·e^off) and binomial solves
+    * Σv·σ(a0 + off) = Σv·y by a Newton loop over one fold-tiled
     * scalar-pair pass per step, from logit(ȳ) − mean(off) (the root for
     * a constant offset). Every model's train set must hold positive
     * poisson counts, or both binomial classes. */
@@ -1786,37 +2017,59 @@ object SgdNet {
       "penaltyFactor must have one non-negative entry per feature")
     /** Index of the full-data model; there are `full + 1` models. */
     val full: Int = nfolds
+    /** Data passes run by setup so far. */
+    var passes: Int = 1
     /** Raw-weight moments of each fold (of all rows outside a CV). */
     val folds: Array[FoldMoments] = rows.moments(nfolds, offsetSums = hasOffset)
-    if (nfolds > 0) CvSgdNet.requireNonEmptyFolds(folds.map(_.g.n).toIndexedSeq, nfolds)
+    if (nfolds > 0) CvSgdNet.requireNonEmptyFolds(folds.map(_.n).toIndexedSeq, nfolds)
     private val total = folds.foldLeft(new FoldMoments(p))(_.merge(_))
-    if (weighted) require(total.g.n > 0, "the response (y) is empty.")
+    if (weighted) require(total.n > 0, "the response (y) is empty.")
     /** Rows in the whole input. */
-    val nObs: Long = total.g.n
+    val nObs: Long = total.n
     private def heldOut(f: Int): Option[FoldMoments] =
       if (f < nfolds) Some(folds(f)) else None
-    /** Train rows, the weight multiplier and the standardized train
-      * moments of each model. */
+    /** Train rows and the weight multiplier of each model. */
     val n: Array[Double] = Array.tabulate(full + 1)(f =>
-      (nObs - heldOut(f).fold(0L)(_.g.n)).toDouble)
+      (nObs - heldOut(f).fold(0L)(_.n)).toDouble)
     val norm: Array[Double] = Array.tabulate(full + 1)(f =>
       if (weighted) n(f) / (total.sw - heldOut(f).fold(0.0)(_.sw)) else 1.0)
-    val st: Array[StdStats] = Array.tabulate(full + 1) { f =>
-      val tr = new GramStats(p, 1).merge(total.g)
-      heldOut(f).foreach(h => tr.subtract(h.g))
-      if (weighted) tr.scaleWeights(norm(f))
-      SufficientStats.standardize(tr, params.standardize, params.intercept)
+    /** Model f's train sum of a moment, weights rescaled, over n(f). */
+    private def trainMean(f: Int, of: FoldMoments => Double): Double = {
+      val t = of(total) - heldOut(f).fold(0.0)(of)
+      (if (weighted) t * norm(f) else t) / n(f)
     }
+    private def trainMeans(f: Int, of: FoldMoments => Array[Double]): Array[Double] = {
+      val t = of(total).clone()
+      heldOut(f).foreach { h => val o = of(h); var j = 0; while (j < p) { t(j) -= o(j); j += 1 } }
+      t.map(v => (if (weighted) v * norm(f) else v) / n(f))
+    }
+    /** Weighted train means of x and y, and the population sd of x. */
+    val xMean: Array[Array[Double]] = Array.tabulate(full + 1)(trainMeans(_, _.swx))
+    val yMean: Array[Double] = Array.tabulate(full + 1)(trainMean(_, _.swy))
     private val where = if (nfolds > 0) " in every train fold" else ""
-    st.foreach { s =>
-      val yBar = s.yMean(0) // weighted mean of y
+    yMean.foreach { yBar =>
       if (fam == Poisson) require(yBar > 0, s"poisson response must contain positive counts$where")
       else require(yBar > 0 && yBar < 1, s"binomial response must contain both classes$where")
     }
-    val mean: Array[Array[Double]] = st.map(s =>
-      if (params.intercept) s.xMean else new Array[Double](p))
-    val scale: Array[Array[Double]] = st.map(s =>
-      if (params.standardize) s.xSd else Array.fill(p)(1.0))
+    val xSd: Array[Array[Double]] = Array.tabulate(full + 1) { f =>
+      val sq = trainMeans(f, _.swxx)
+      Array.tabulate(p) { j =>
+        val sd = math.sqrt(math.max(sq(j) - xMean(f)(j) * xMean(f)(j), 0.0))
+        if (sd > 0) sd else 1.0
+      }
+    }
+    val mean: Array[Array[Double]] = xMean.map(m =>
+      if (params.intercept) m else new Array[Double](p))
+    val scale: Array[Array[Double]] = xSd.map(s =>
+      if (params.standardize) s else Array.fill(p)(1.0))
+    /** Each model's standardized null covariance (1/n)<xs_j, y>, y
+      * centered iff intercept. */
+    val b: Array[Array[Double]] = Array.tabulate(full + 1) { f =>
+      val xy = trainMeans(f, _.swxy)
+      val yc = if (params.intercept) yMean(f) else 0.0
+      Array.tabulate(p)(j => (xy(j) - mean(f)(j) * yMean(f) - yc * xMean(f)(j) +
+        mean(f)(j) * yc) / scale(f)(j))
+    }
     /** Box limits on each model's standardized scale (null = none). */
     val bounds: Array[(Array[Double], Array[Double])] =
       scale.map(s => boundsStd(params, s, 1.0))
@@ -1824,7 +2077,7 @@ object SgdNet {
       def trainSum(f: Int, of: FoldMoments => Double): Double =
         (of(total) - heldOut(f).fold(0.0)(of)) * norm(f)
       val a0 = Array.tabulate(full + 1) { f =>
-        val yBar = st(f).yMean(0)
+        val yBar = yMean(f)
         if (!params.intercept) 0.0
         else if (fam == Poisson) {
           if (hasOffset) math.log(yBar * n(f) / trainSum(f, _.sExpOff))
@@ -1837,6 +2090,7 @@ object SgdNet {
         var done = false
         while (it < 25 && !done) {
           val s = rows.nullNewtonSums(a0.clone(), norm)
+          passes += 1
           var mx = 0.0
           for (f <- a0.indices) {
             val step = s(2 * f) / s(2 * f + 1)
@@ -1871,10 +2125,38 @@ object SgdNet {
         Array(pfZeroPathGradient(p, n(full), pf, params.intercept,
           a0Init = a0Null(full), thresh = params.thresh, maxit = params.maxit,
           gramAt = gramAt(full), userLo = bounds(full)._1, userUp = bounds(full)._2))
-      else if (hasOffset)
+      else if (hasOffset) {
+        passes += 1
         Array(rows.nullGradient(fam, mean(full), scale(full), a0Null(full),
           norm(full), n(full)))
-      else st(full).b
+      } else Array(b(full))
+    }
+
+    /** Model f's loss gradient at its null (β = 0, a0Null(f)), without a
+      * pass when the null mean μ0 is constant (no offset):
+      * (1/n)Σ v·norm·(y − μ0)·xs_j, which is [[b]] with an intercept. With
+      * an offset only the full model's is known ([[pathB]]'s pass). */
+    def nullGradient(f: Int): Array[Double] =
+      if (hasOffset) {
+        require(f == full, "with an offset only the full model's null gradient is computed")
+        pathB(0)
+      } else if (params.intercept) b(f)
+      else {
+        val mu0 = fam.mean(fam.clampEta(a0Null(f)))
+        val x = xMean(f)
+        Array.tabulate(p)(j => (b(f)(j) - mu0 * x(j) / scale(f)(j)))
+      }
+
+    /** One screened pass (see [[IrlsRows.screened]]); the KKT vectors
+      * come back divided by each model's n. */
+    def screened(e: Array[Int], a0: Array[Double], bE: Array[Array[Double]],
+                 frozen: (Array[Double], Array[Array[Double]]),
+                 active: Array[Boolean]): Array[(WGram, Array[Double])] = {
+      val out = rows.screened(fam, mean, scale, norm, e, a0, bE, frozen, active)
+      Array.tabulate(full + 1) { f =>
+        if (out(f) == null || out(f)._2 == null) out(f)
+        else (out(f)._1, out(f)._2.map(_ / n(f)))
+      }
     }
 
     /** The λ path at `alpha`: the caller's, or built from [[pathB]]. */
@@ -1890,6 +2172,13 @@ object SgdNet {
       (b, if (params.intercept) a0 - (0 until p).map(j => b(j) * mean(f)(j)).sum else a0)
     }
 
+    /** [[original]] for the standardized nonzero coefficients `c`. */
+    def original(f: Int, c: Coefs, a0: Double): (Coefs, Double) = {
+      val b = Coefs(c.idx, c.idx.indices.map(i => c.vals(i) / scale(f)(c.idx(i))).toArray)
+      (b, if (params.intercept) a0 - b.idx.indices.map(i => b.vals(i) * mean(f)(b.idx(i))).sum
+        else a0)
+    }
+
     /** The full-data model of a path (ORIGINAL scale [L][1] and
       * [L][1][p] coefficients) with its deviance pass: the null
       * deviance is closed form for unweighted binomial without an
@@ -1902,13 +2191,15 @@ object SgdNet {
               betaOut: Array[Array[Array[Double]]], passes: Int): SgdNetModel = {
       val L = lambdas.length
       val closedNull = fam == Binomial && !weighted && !hasOffset
+      val a0s = a0Out.map(_(0))
+      val coefs = betaOut.map(bl => Coefs.of(bl(0)))
       val devs =
-        if (closedNull) rows.deviance(fam, a0Out, betaOut, norm(full))
-        else rows.deviance(fam, a0Out :+ Array(a0Null(full)),
-          betaOut :+ Array(new Array[Double](p)), norm(full))
+        if (closedNull) rows.deviance(fam, a0s, coefs, norm(full))
+        else rows.deviance(fam, a0s :+ a0Null(full),
+          coefs :+ Coefs(Array.emptyIntArray, Array.emptyDoubleArray), norm(full))
       val nulldev =
         if (closedNull) {
-          val yBar = st(full).yMean(0)
+          val yBar = yMean(full)
           val nullP = if (params.intercept) yBar else 0.5
           -2.0 * n(full) * (safeXLog(yBar, nullP) + safeXLog(1 - yBar, 1 - nullP))
         } else devs(L)
@@ -2486,11 +2777,7 @@ object SgdNet {
         fitSparseWeighted(df, idxCol, valCol, dim, labelCol, weightCol, params)
       else fitSparse(df, idxCol, valCol, dim, labelCol, params)
     val p = dim
-    val yExpr =
-      if (binomial) {
-        val positive = model.classLabels(1)
-        (col(labelCol).cast("string") === positive).cast("double")
-      } else col(labelCol).cast("double")
+    val yExpr = glmLabel(model, labelCol)
     val wExpr = if (weighted) col(weightCol).cast("double") else lit(1.0)
     val oExpr = if (hasOffset) col(offsetCol).cast("double") else lit(0.0)
     val rows0 = df.select(col(idxCol), col(valCol).cast("array<double>"),

@@ -128,6 +128,14 @@ class LargePSpec extends SparkSpec {
     // extension passes: comfortably linear in the path length
     assert(big.npasses >= 2 && big.npasses <= 1 + 2 * 10 + 8,
       s"npasses = ${big.npasses}")
+    // the GLM routes count every data pass too: the setup moments, at
+    // least one screened pass per point, re-entry rebuilds and the
+    // deviance pass
+    val glm = LargeP.fitBinomial(glmData, names, "yb",
+      SgdNetParams(family = "binomial", alpha = 1.0, nlambda = 10,
+        thresh = 1e-9, maxit = 100000))
+    assert(glm.npasses >= 2 + glm.lambda.length &&
+      glm.npasses <= 2 + 6 * glm.lambda.length, s"GLM npasses = ${glm.npasses}")
   }
 
   test("weights and offset through the screened gaussian route") {
@@ -783,6 +791,23 @@ class LargePSpec extends SparkSpec {
         SgdNetParams(family = "binomial",
           penaltyFactor = Array.fill(p)(1.0)))
     }
+    // every positive row in fold 0 leaves fold 0's train set one class
+    val oneClass = when(col("yb") === 1.0, lit(0))
+      .otherwise(lit(1) + pmod(col("rid"), lit(3)))
+    val e1 = intercept[IllegalArgumentException] {
+      LargeP.cvBinomial(glmData, names, "yb",
+        SgdNetParams(family = "binomial", nlambda = 3), nfolds = 4,
+        foldCol = oneClass)
+    }
+    assert(e1.getMessage.contains("both classes in every train fold"),
+      e1.getMessage)
+    // a fold index outside [0, nfolds) fails in the moments pass
+    val e2 = intercept[Exception] {
+      LargeP.cvBinomial(glmData, names, "yb",
+        SgdNetParams(family = "binomial", nlambda = 3), nfolds = 4,
+        foldCol = pmod(col("rid"), lit(5)))
+    }
+    assert(e2.getMessage.contains("fold index 4 outside [0, 4)"), e2.getMessage)
     // the regime the route exists for: the shared-pass CV holds
     // (nfolds+1)·p²/2 weighted-Gram doubles and refuses at the cap;
     // the batched screened CV returns its exact answers
