@@ -552,25 +552,11 @@ object CvSgdNet {
       offsetCol, fold), dim)
   }
 
-  /** Builds the rows and the `SgdNet.IrlsSetup` of an IRLS CV (one
-    * moments pass for every fold model and the full-data model), runs
-    * `body` on them with the class labels, and releases the rows. */
-  private[ml] def withIrlsSetup[T](df: DataFrame, labelCol: String,
-                               params: SgdNetParams, nfolds: Int,
-                               weighted: Boolean, hasOffset: Boolean,
-                               rowsOf: Column => SgdNet.IrlsRows)(
-      body: (SgdNet.IrlsSetup, Array[String]) => T): T = {
-    val (fam, classes, yCol) = SgdNet.glmResponse(df, labelCol, params.family)
-    val rows = rowsOf(yCol)
-    try body(new SgdNet.IrlsSetup(rows, fam, params, nfolds, weighted, hasOffset), classes)
-    finally rows.unpersist()
-  }
-
   /** The one binomial/poisson CV path, behind [[fit]],
     * [[fitWeighted]]/[[fitWeightedMulti]], [[fitWithOffset]],
     * [[fitSparse]] and [[fitSparseWithOffset]], with or without weights
     * and offset, dense or CSR. All k fold-models advance TOGETHER: each
-    * IRLS round is ONE fold-tiled `IrlsRows.gram` pass for every
+    * IRLS round is ONE fold-tiled `IrlsSetup.gram` pass for every
     * unconverged model (a row trains every model but its own fold's),
     * and the FULL-data model rides the same passes as virtual fold k,
     * so CV costs about one fit's worth of data passes, not k+1 of them.
@@ -588,7 +574,7 @@ object CvSgdNet {
                          featureNames: Array[String],
                          rowsOf: Column => SgdNet.IrlsRows,
                          paths: (SgdNet.IrlsSetup, SgdNetParams) => FoldPaths = foldPaths): Seq[CvPath] =
-    withIrlsSetup(df, labelCol, params, nfolds, weighted, hasOffset, rowsOf) {
+    SgdNet.withIrlsSetup(df, labelCol, params, nfolds, weighted, hasOffset, rowsOf) {
       (s, classes) =>
         alphas.map { a =>
           val pa = params.copy(alpha = a)
@@ -665,8 +651,9 @@ object CvSgdNet {
     * scored at η = a0(f)(c) + off + x·β(f)(c) for every column c, by the
     * model trained without it, the row's own offset included (glmnet
     * newoffset). Only the nonzero coefficients are broadcast and read,
-    * so a row costs O(columns·|active|). One pass for Σv·err/Σv with
-    * raw weights, or the rank AUC per (fold, column) through
+    * so a dense row costs O(columns·|active|) and a CSR row
+    * O(columns·nnz·log|active|) (see `SgdNet.Coefs`). One pass for
+    * Σv·err/Σv with raw weights, or the rank AUC per (fold, column) through
     * [[aucPerGroup]] (v-weighted when weighted; AUC is invariant to the
     * monotone link, so η ranks directly and never saturates). Returns
     * [nfolds][columns]. */
@@ -4308,7 +4295,7 @@ object CvSgdNet {
                             weighted: Boolean, hasOffset: Boolean,
                             names: Array[String],
                             rowsOf: Column => SgdNet.IrlsRows): RelaxedCvResult =
-    withIrlsSetup(df, labelCol, params, nfolds, weighted, hasOffset, rowsOf) {
+    SgdNet.withIrlsSetup(df, labelCol, params, nfolds, weighted, hasOffset, rowsOf) {
       (s, classes) =>
         val p = s.p
         val F = s.full + 1

@@ -2137,7 +2137,7 @@ object LargeP {
                      params: SgdNetParams, weightCol: String, offsetCol: String,
                      rowsOf: org.apache.spark.sql.Column => SgdNet.IrlsRows): SgdNetModel = {
     requireGlmContract(params, names.length)
-    CvSgdNet.withIrlsSetup(df, labelCol, params, 0, weightCol != null,
+    SgdNet.withIrlsSetup(df, labelCol, params, 0, weightCol != null,
         offsetCol != null, rowsOf) { (s, classes) =>
       val fp = screenedIrls(s, params)
       s.model(names, labelCol, classes, params, fp.lambdas,

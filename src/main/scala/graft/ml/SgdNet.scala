@@ -1379,7 +1379,8 @@ object SgdNet {
 
   /** The nonzero coefficients of one path point: sorted column indices
     * and their values. Deviance and scoring passes broadcast these, so
-    * they cost O(|active|) per row and point, not O(p). */
+    * a dense row costs O(|active|) per point, not O(p), and a CSR row
+    * O(nnz·log|active|): one binary search per nonzero. */
   private[ml] final case class Coefs(idx: Array[Int], vals: Array[Double]) {
     def dense(p: Int): Array[Double] = {
       val b = new Array[Double](p)
@@ -1479,32 +1480,27 @@ object SgdNet {
         depth = 2)
     }
 
-    /** One IRLS pass for every `active` model f: at η = off + a0(f) +
-      * xs·β(f) on model f's standardization (`mean(f)`, `scale(f)`), the
-      * moments of the working response z − off with the row weight
-      * times `norm(f)` folded into the IRLS weight — so each solve fits
-      * exactly a0 + xs·β. Inactive models come back null. */
-    def gram(fam: IrlsFamily, mean: Array[Array[Double]],
-             scale: Array[Array[Double]], norm: Array[Double],
-             beta: Array[Array[Double]], a0: Array[Double],
-             active: Array[Boolean]): Array[WGram]
-
     /** (1/n)·Σ xs_j·v·norm·(y − μ) over every row at the null
       * η = off + a0: the gradient λ_max reads when the null mean varies
-      * with the offset (full-data model). */
+      * with the offset (full-data model). Not [[screened]]'s KKT vector
+      * at β = 0: that reads w'·(z' − η), which leaves y − μ at the last
+      * ulp, and by w'·(clamp(η) − η) once a poisson η passes ±30. */
     def nullGradient(fam: IrlsFamily, mean: Array[Double],
                      scale: Array[Double], a0: Double, norm: Double,
                      n: Double): Array[Double]
 
-    /** One screened pass for every `active` model f over the columns
+    /** The one IRLS pass, for every `active` model f over the columns
       * `e` (the ever-candidate set E, which holds every nonzero
-      * coefficient): at η = off + a0(f) + xs_E·bE(f) — bE the
-      * standardized coefficients of E's columns — the [[gram]] moments
-      * restricted to E; and, given `frozen` = (a0', bE'), the full-p KKT
-      * vector of the WLS under the weights of that point,
-      * Σ xs_j·v·norm·w'·(z' − off − a0 − xs_E·bE), not yet divided by
-      * n. Returns (moments over E, KKT vector or null); inactive models
-      * come back null. */
+      * coefficient; all p columns in order for the full Gram): at
+      * η = a0(f) + off + xs_E·bE(f) on model f's standardization
+      * (`mean(f)`, `scale(f)`) — bE the standardized coefficients of E's
+      * columns — the moments over E of the working response z − off,
+      * with the row weight times `norm(f)` folded into the IRLS weight,
+      * so each solve fits exactly a0 + xs_E·bE; and, given `frozen` =
+      * (a0', bE'), the full-p KKT vector of the WLS under the weights of
+      * that point, Σ xs_j·v·norm·w'·(z' − off − a0 − xs_E·bE), not yet
+      * divided by n. Returns (moments over E, KKT vector or null);
+      * inactive models come back null. */
     def screened(fam: IrlsFamily, mean: Array[Array[Double]],
                  scale: Array[Array[Double]], norm: Array[Double],
                  e: Array[Int], a0: Array[Double], bE: Array[Array[Double]],
@@ -1561,42 +1557,6 @@ object SgdNet {
   private[ml] final case class DenseRows(rdd: RDD[GlmRow], p: Int) extends IrlsRows {
     type R = GlmRow
 
-    def gram(fam: IrlsFamily, mean: Array[Array[Double]],
-             scale: Array[Array[Double]], norm: Array[Double],
-             beta: Array[Array[Double]], a0: Array[Double],
-             active: Array[Boolean]): Array[WGram] = {
-      val p = this.p
-      val F = a0.length
-      rdd.treeAggregate(Array.tabulate(F)(f => if (active(f)) new WGram(p) else null))(
-        seqOp = (acc, r) => {
-          val xr = r.x; val y = r.y; val off = r.off; val v = r.w
-          var f = 0
-          while (f < F) {
-            if (f != r.fold && active(f)) {
-              val m = mean(f); val s = scale(f); val b = beta(f)
-              val xs = new Array[Double](p)
-              var j = 0
-              var eta = a0(f) + off
-              while (j < p) {
-                xs(j) = (xr(j) - m(j)) / s(j)
-                eta += xs(j) * b(j)
-                j += 1
-              }
-              val e = fam.clampEta(eta)
-              val mu = fam.mean(e)
-              val w0 = fam.weight(mu)
-              // the frequency weight folds into the IRLS weight
-              acc(f).add(xs, w0 * (v * norm(f)), e + (y - mu) / w0 - off)
-            }
-            f += 1
-          }
-          acc
-        },
-        combOp = (a, b) => {
-          var f = 0; while (f < F) { if (a(f) != null) a(f).merge(b(f)); f += 1 }; a
-        }, depth = 2)
-    }
-
     def nullGradient(fam: IrlsFamily, mean: Array[Double],
                      scale: Array[Double], a0: Double, norm: Double,
                      n: Double): Array[Double] = {
@@ -1634,18 +1594,19 @@ object SgdNet {
             if (f != r.fold && active(f)) {
               val mf = mn(f); val sf = sl(f); val bf = b(f)
               val xs = new Array[Double](m)
-              var etaS = a0(f)
+              var eta = a0(f) + off
               var jj = 0
               while (jj < m) {
                 val j = e(jj)
                 xs(jj) = (xr(j) - mf(j)) / sf(j)
-                etaS += xs(jj) * bf(jj)
+                eta += xs(jj) * bf(jj)
                 jj += 1
               }
               val vn = r.w * norm(f)
-              val ec = fam.clampEta(etaS + off)
+              val ec = fam.clampEta(eta)
               val mu = fam.mean(ec)
               val w0 = fam.weight(mu)
+              // the frequency weight folds into the IRLS weight
               acc(f).wg.add(xs, w0 * vn, ec + (y - mu) / w0 - off)
               if (kkt) {
                 val bz = bF(f)
@@ -1655,7 +1616,7 @@ object SgdNet {
                 val eF = fam.clampEta(etaF + off)
                 val muF = fam.mean(eF)
                 val wF = fam.weight(muF)
-                val res = wF * vn * (eF + (y - muF) / wF - off - etaS)
+                val res = wF * vn * (eF + (y - muF) / wF - eta)
                 val k = acc(f).kkt
                 var j = 0
                 while (j < p) { k(j) += (xr(j) - mf(j)) / sf(j) * res; j += 1 }
@@ -1672,7 +1633,7 @@ object SgdNet {
   }
 
   /** CSR rows. Every pass accumulates UNCENTERED sums over each row's
-    * nonzeros only (O(nnz²) per row for the gram) and centers and
+    * nonzeros only (O(nnz²) per row for the full Gram) and centers and
     * standardizes algebraically after the pass, so the sparse matrix is
     * never densified:
     *   Σw·xs_i·xs_j = (Σw·x_i·x_j − m_i·Σw·x_j − m_j·Σw·x_i + m_i·m_j·Σw)/(s_i·s_j)
@@ -1680,48 +1641,6 @@ object SgdNet {
     * a0 − Σ_j m_j·β_j/s_j, O(nnz) per row. */
   private[ml] final case class CsrRows(rdd: RDD[CsrRow], p: Int) extends IrlsRows {
     type R = CsrRow
-
-    def gram(fam: IrlsFamily, mean: Array[Array[Double]],
-             scale: Array[Array[Double]], norm: Array[Double],
-             beta: Array[Array[Double]], a0: Array[Double],
-             active: Array[Boolean]): Array[WGram] = {
-      val p = this.p
-      val F = a0.length
-      val bOverS = Array.tabulate(F)(f =>
-        if (active(f)) Array.tabulate(p)(j => beta(f)(j) / scale(f)(j)) else null)
-      val c0 = Array.tabulate(F) { f =>
-        var c = a0(f)
-        var j = 0
-        while (active(f) && j < p) { c -= mean(f)(j) * bOverS(f)(j); j += 1 }
-        c
-      }
-      val bc = rdd.sparkContext.broadcast(bOverS)
-      val raw = rdd.treeAggregate(Array.tabulate(F)(f => if (active(f)) new WGram(p) else null))(
-        seqOp = (acc, r) => {
-          val idx = r.idx; val vals = r.vals; val y = r.y; val off = r.off; val v = r.w
-          val bos = bc.value
-          var f = 0
-          while (f < F) {
-            if (f != r.fold && active(f)) {
-              val bf = bos(f)
-              var eta = c0(f) + off
-              var i = 0
-              while (i < idx.length) { eta += vals(i) * bf(idx(i)); i += 1 }
-              val e = fam.clampEta(eta)
-              val mu = fam.mean(e)
-              val w0 = fam.weight(mu)
-              acc(f).addSparse(idx, vals, w0 * (v * norm(f)), e + (y - mu) / w0 - off)
-            }
-            f += 1
-          }
-          acc
-        },
-        combOp = (a, b) => {
-          var f = 0; while (f < F) { if (a(f) != null) a(f).merge(b(f)); f += 1 }; a
-        }, depth = 2)
-      Array.tabulate(F)(f =>
-        if (raw(f) == null) null else centered(raw(f), mean(f), scale(f)))
-    }
 
     /** `wg`'s uncentered sums over the columns with these means and
       * scales, centered and standardized. */
@@ -1813,11 +1732,11 @@ object SgdNet {
           while (f < F) {
             if (f != r.fold && active(f)) {
               val bf = bo(f)
-              var etaS = c0(f)
+              var eta = c0(f) + off
               t = 0
-              while (t < cnt) { etaS += eV(t) * bf(eS(t)); t += 1 }
+              while (t < cnt) { eta += eV(t) * bf(eS(t)); t += 1 }
               val vn = r.w * norm(f)
-              val ec = fam.clampEta(etaS + off)
+              val ec = fam.clampEta(eta)
               val mu = fam.mean(ec)
               val w0 = fam.weight(mu)
               acc(f).wg.addSparse(eS, eV, w0 * vn, ec + (y - mu) / w0 - off)
@@ -1829,7 +1748,7 @@ object SgdNet {
                 val eF = fam.clampEta(etaF + off)
                 val muF = fam.mean(eF)
                 val wF = fam.weight(muF)
-                val res = wF * vn * (eF + (y - muF) / wF - off - etaS)
+                val res = wF * vn * (eF + (y - muF) / wF - eta)
                 if (res != 0.0) {
                   val kk = acc(f).kkt
                   k = 0
@@ -1962,14 +1881,12 @@ object SgdNet {
   private def fitDenseGlm(df: DataFrame, featureCols: Seq[String],
                           labelCol: String, params: SgdNetParams,
                           weightCol: String = null,
-                          offsetCol: String = null): SgdNetModel = {
-    val (fam, classes, yCol) = glmResponse(df, labelCol, params.family)
-    val rows = DenseRows(glmRows(df, featureCols, yCol, weightCol, offsetCol),
-      featureCols.size)
-    try fitIrls(rows, fam, featureCols.toArray, labelCol, classes, params,
-      weighted = weightCol != null, hasOffset = offsetCol != null)
-    finally rows.unpersist()
-  }
+                          offsetCol: String = null): SgdNetModel =
+    withIrlsSetup(df, labelCol, params, 0, weightCol != null, offsetCol != null,
+      y => DenseRows(glmRows(df, featureCols, y, weightCol, offsetCol),
+        featureCols.size)) { (s, classes) =>
+      fitIrls(s, featureCols.toArray, labelCol, classes, params)
+    }
 
   /** Sparse (CSR) binomial/poisson fit behind [[fitSparse]],
     * [[fitSparseWeighted]] and [[fitSparseWithOffset]]; feature names
@@ -1977,12 +1894,24 @@ object SgdNet {
   private def fitCsrGlm(df: DataFrame, idxCol: String, valCol: String,
                         dim: Int, labelCol: String, params: SgdNetParams,
                         weightCol: String = null,
-                        offsetCol: String = null): SgdNetModel = {
+                        offsetCol: String = null): SgdNetModel =
+    withIrlsSetup(df, labelCol, params, 0, weightCol != null, offsetCol != null,
+      y => CsrRows(csrRows(df, idxCol, valCol, y, weightCol, offsetCol), dim)) {
+      (s, classes) =>
+        fitIrls(s, Array.tabulate(dim)(j => s"V$j"), labelCol, classes, params)
+    }
+
+  /** Builds the rows (given the response column) and the [[IrlsSetup]]
+    * of a binomial/poisson fit (`nfolds` = 0) or CV, runs `body` on them
+    * with the class labels, and releases the rows. */
+  private[ml] def withIrlsSetup[T](df: DataFrame, labelCol: String,
+                                   params: SgdNetParams, nfolds: Int,
+                                   weighted: Boolean, hasOffset: Boolean,
+                                   rowsOf: org.apache.spark.sql.Column => IrlsRows)(
+      body: (IrlsSetup, Array[String]) => T): T = {
     val (fam, classes, yCol) = glmResponse(df, labelCol, params.family)
-    val rows = CsrRows(csrRows(df, idxCol, valCol, yCol, weightCol, offsetCol),
-      dim)
-    try fitIrls(rows, fam, Array.tabulate(dim)(j => s"V$j"), labelCol, classes,
-      params, weighted = weightCol != null, hasOffset = offsetCol != null)
+    val rows = rowsOf(yCol)
+    try body(new IrlsSetup(rows, fam, params, nfolds, weighted, hasOffset), classes)
     finally rows.unpersist()
   }
 
@@ -2104,11 +2033,12 @@ object SgdNet {
       a0
     }
 
-    /** One fold-tiled IRLS pass (see [[IrlsRows.gram]]) at every
-      * active model's (β, a0). */
+    /** One fold-tiled IRLS pass at every active model's (β, a0): the
+      * full p × p Gram, [[IrlsRows.screened]] over all p columns. */
     def gram(beta: Array[Array[Double]], a0: Array[Double],
              active: Array[Boolean]): Array[WGram] =
-      rows.gram(fam, mean, scale, norm, beta, a0, active)
+      rows.screened(fam, mean, scale, norm, Array.range(0, p), a0, beta, null,
+        active).map(o => if (o == null) null else o._1)
 
     /** One IRLS pass for model `m` alone at (β, a0). */
     def gramAt(m: Int)(beta: Array[Double], a0: Double): WGram =
@@ -2262,12 +2192,10 @@ object SgdNet {
     * A `dfmax`/`pmax` violation stops the path and drops that point.
     * `npasses` counts the Newton passes plus the deviance pass; the
     * moments, null-intercept and λ_max passes are setup. */
-  private def fitIrls(rows: IrlsRows, fam: IrlsFamily,
-                      featureNames: Array[String], labelCol: String,
-                      classes: Array[String], params: SgdNetParams,
-                      weighted: Boolean, hasOffset: Boolean): SgdNetModel = {
-    val s = new IrlsSetup(rows, fam, params, nfolds = 0, weighted, hasOffset)
-    val p = rows.p
+  private def fitIrls(s: IrlsSetup, featureNames: Array[String],
+                      labelCol: String, classes: Array[String],
+                      params: SgdNetParams): SgdNetModel = {
+    val p = s.p
     val n = s.n(0)
     val (loStd, upStd) = s.bounds(0)
     val lambdas = s.lambdas(params.alpha)
